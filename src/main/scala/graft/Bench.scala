@@ -80,16 +80,12 @@ object Bench {
     // printed line carries the headline numbers plus as many of the
     // SLOWEST queries as fit a hard 1500-char cap.
     def fmt(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
-    def jq(s: String): String = "\"" + s.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-    } + "\""
     val total = results.map(_._2).sum
     // detail file: full class+message per failed query; printed line:
     // names only (21 full messages would blow the driver's 2000-char tail)
-    val errFull = errors.map { case (k, v) => s"${jq(k)}: ${jq(v)}" }
+    val errFull = errors.map { case (k, v) => s"${Verify.q(k)}: ${Verify.q(v)}" }
       .mkString("{", ",", "}")
-    val errNames = errors.keys.map(jq).mkString("[", ",", "]")
+    val errNames = errors.keys.map(Verify.q).mkString("[", ",", "]")
     val loadAfter = loadavg()
     def line(entries: Seq[(String, Double)], omitted: Int,
         errs: String): String = {

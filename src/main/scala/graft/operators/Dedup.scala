@@ -106,20 +106,18 @@ object Dedup extends QueryFamily {
     * stays constant as the corpus grows instead of linear (pairs
     * quadratic). Plane b is identical at every fan-out (prefix
     * property), so widening the knob refines existing buckets rather
-    * than reshuffling them.
+    * than reshuffling them — so the table is computed once at the
+    * 30-plane maximum and a fan-out reads its prefix.
     */
-  private val lshSignsCache = new java.util.concurrent.ConcurrentHashMap[
-    Int, IndexedSeq[IndexedSeq[Int]]]()
-  private def lshSigns(planes: Int): IndexedSeq[IndexedSeq[Int]] =
-    lshSignsCache.computeIfAbsent(planes, _ => {
-      val md = java.security.MessageDigest.getInstance("MD5")
-      (0 until planes).map { b =>
-        (0 until 64).map { j =>
-          val h = md.digest(s"lsh:$b:$j".getBytes("UTF-8"))
-          if ((h(0) & 1) == 1) 1 else -1
-        }
+  private lazy val lshSigns: IndexedSeq[IndexedSeq[Int]] = {
+    val md = java.security.MessageDigest.getInstance("MD5")
+    (0 until 30).map { b =>
+      (0 until 64).map { j =>
+        val h = md.digest(s"lsh:$b:$j".getBytes("UTF-8"))
+        if ((h(0) & 1) == 1) 1 else -1
       }
-    })
+    }
+  }
 
   /** Sign-LSH bucket expression over a DOUBLE vector (one bit per
     * hyperplane, 2^planes buckets); `elem(j)` renders the engine's
@@ -127,7 +125,7 @@ object Dedup extends QueryFamily {
     */
   private[graft] def lshBucketExpr(elem: Int => String, planes: Int = 4): String = {
     require(planes >= 1 && planes <= 30, s"bad planes=$planes")
-    val bits = lshSigns(planes).zipWithIndex.map { case (signs, b) =>
+    val bits = lshSigns.take(planes).zipWithIndex.map { case (signs, b) =>
       val proj = signs.zipWithIndex.map { case (sg, j) =>
         (if (sg > 0) " + " else " - ") + elem(j + 1)
       }.mkString
@@ -316,35 +314,16 @@ object Dedup extends QueryFamily {
       .select("doc_a", "doc_b")
   }
 
-  private val genChoice =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
-  private val corpusCount =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-
-  /** Drop all memoized corpus statistics (generator choices, approximate
-    * corpus counts backing `auto` fan-out knobs). The memos assume a
-    * corpus's SHAPE is stable under its path; a long-lived session that
-    * rewrites data under the same path should clear (or pin the knobs —
-    * `spark.graft.dedup.candidateGen` / explicit integer fan-outs — to
-    * skip the statistics jobs entirely).
-    */
-  def clearGenChoiceCache(): Unit = { genChoice.clear(); corpusCount.clear() }
-
   /** Approximate corpus size (HLL `approx_count_distinct` over the id
-    * column), memoized per corpus key — the O(1)-row statistics job
-    * behind every `auto` fan-out knob, run at most once per corpus per
-    * JVM (the `candidateGen` pattern: a concurrent duplicate computation
-    * is harmless, putIfAbsent keeps the first answer).
+    * column) — the O(1)-row statistics job behind every `auto` fan-out
+    * knob, memoized per (context, name, dir) in [[graft.Artifacts]]:
+    * run once per corpus, and again only when the files under `dir`
+    * change.
     */
-  private[graft] def approxCorpusCount(d: DataFrame, idCol: String, key: String): Long = {
-    val cached = corpusCount.get(key)
-    if (cached != null) cached.longValue
-    else {
-      val n = d.agg(approx_count_distinct(col(idCol))).head().getLong(0)
-      val prev = corpusCount.putIfAbsent(key, n)
-      if (prev != null) prev.longValue else n
-    }
-  }
+  private[graft] def approxCorpusCount(d: DataFrame, idCol: String,
+      name: String, dir: String): Long =
+    graft.Artifacts.get(d.sparkSession.sparkContext, s"dedup.corpusCount.$name", dir)(
+      d.agg(approx_count_distinct(col(idCol))).head().getLong(0))
 
   /** Fan-out width for a corpus of ~n rows and a target LSH bucket
     * population: ceil(log2(n / target)) clamped to [floor, cap] — 2^w
@@ -374,12 +353,12 @@ object Dedup extends QueryFamily {
     s.conf.getOption("spark.graft.dedup.targetBucket").map(_.toLong).getOrElse(64L)
 
   private def resolveFanout(s: SparkSession, confKey: String, fixture: Int,
-      cap: Int, key: String)(corpus: => (DataFrame, String)): Int =
+      cap: Int, name: String, dir: String)(corpus: => (DataFrame, String)): Int =
     s.conf.getOption(confKey) match {
       case None => fixture
       case Some("auto") =>
         val (d, idCol) = corpus
-        autoWidth(approxCorpusCount(d, idCol, key), targetBucket(s), fixture, cap)
+        autoWidth(approxCorpusCount(d, idCol, name, dir), targetBucket(s), fixture, cap)
       case Some(v) => v.toInt
     }
 
@@ -399,45 +378,38 @@ object Dedup extends QueryFamily {
     *    multiplicity (22x the blocked volume at sf0.1, measured) loses
     *    to simply enumerating the block — and most blocked pairs are
     *    TRUE matches there, so no exact generator can prune much anyway.
-    * The choice reads two O(1)-row statistics jobs, memoized per corpus
-    * (the shape doesn't change between calls): prefix wins when
+    * The choice reads two O(1)-row statistics jobs, memoized per
+    * (context, name, dir) in [[graft.Artifacts]] — recomputed only when
+    * the files under `dir` change: prefix wins when
     * vocab > pbar^2 * nblocks — expected prefix-join pairs
     * ~(ndocs*pbar)^2/(2*vocab) vs blocked pairs ~ndocs^2/(2*nblocks).
     * HLL estimates suffice: a wrong choice costs time, never rows —
     * both generators are exact supersets of the qualifying pairs.
     * `spark.graft.dedup.candidateGen=prefix|blocked|auto` (default auto)
-    * pins a generator and skips the statistics jobs entirely — the
-    * escape hatch when the memo is stale (see [[clearGenChoiceCache]])
-    * or the operator knows the corpus shape.
+    * pins a generator and skips the statistics jobs entirely — for an
+    * operator who knows the corpus shape.
     */
   private[graft] def candidatePairs(enc: DataFrame, meta: DataFrame,
-      num: Int, den: Int, key: String): DataFrame = {
+      num: Int, den: Int, name: String, dir: String): DataFrame = {
     val usePrefix: Boolean = enc.sparkSession.conf
       .getOption("spark.graft.dedup.candidateGen").getOrElse("auto") match {
       case "prefix"  => true
       case "blocked" => false
       case "auto" =>
-        val cached = genChoice.get(key)
-        if (cached != null) cached.booleanValue
-        else {
-          // the two statistics jobs run OUTSIDE the map update (a Spark
-          // job inside computeIfAbsent would block the bin for its whole
-          // duration); a concurrent duplicate computation is harmless —
-          // putIfAbsent keeps the first answer and both are identical
+        graft.Artifacts.get(enc.sparkSession.sparkContext,
+            s"dedup.candidateGen.$name", dir) {
           val m = meta.agg(
             avg(expr(s"sz - (($num * CAST(sz AS BIGINT) + ${den - 1}) DIV $den) + 1")),
             approx_count_distinct(concat_ws(":", col("lang"), col("bucket")))).head()
           // empty corpus: avg over zero rows is null — either generator
           // emits zero pairs; take the blocked path without the vocab job
-          val choice: Boolean = !m.isNullAt(0) && {
+          !m.isNullAt(0) && {
             val pbar = m.getDouble(0)
             val nblocks = m.getLong(1)
             val vocab = enc.select(explode(col("codes")).as("code"))
               .agg(approx_count_distinct(col("code"))).head().getLong(0)
             vocab.toDouble > pbar * pbar * nblocks
           }
-          val prev = genChoice.putIfAbsent(key, choice)
-          if (prev != null) prev.booleanValue else choice
         }
       case other => throw new IllegalArgumentException(
         s"spark.graft.dedup.candidateGen=$other: expected prefix|blocked|auto")
@@ -521,8 +493,9 @@ object Dedup extends QueryFamily {
     val span = hi - lo + 1
     def cut(i: Int): Long = lo - 1 + span * i / k
     val meta = docMeta(docs)
-    // 4 verify passes x 2 attach legs each — encode-pass pin gated (encodePinner)
-    val enc = encodePinner(s)(tokenCodes(s, dir))
+    // 4 verify passes x 2 attach legs each read the encode pass
+    // unpinned (see q_dedup_near)
+    val enc = tokenCodes(s, dir)
     val dropped = (1 to k).map { i =>
       val delta = meta.where(col("doc_id") > cut(i - 1) && col("doc_id") <= cut(i))
       val store = meta.where(col("doc_id") <= cut(i))
@@ -581,18 +554,15 @@ object Dedup extends QueryFamily {
     */
   // Postings-ordered signature table — (doc_id, lang, ord, sz) with
   // `ord` the doc's distinct tokens as (df, t) structs sorted
-  // rarest-first — MEMOIZED per (session OBJECT, dir) and pinned
-  // (localCheckpoint via passPinner): containment plus both graph edge
-  // tiers all start from it, and its two shuffles (df count, per-doc
+  // rarest-first — MEMOIZED per (session, dir) in graft.Artifacts and
+  // pinned (localCheckpoint via passPinner): containment plus both graph
+  // edge tiers all start from it, and its two shuffles (df count, per-doc
   // fold) are layout work that must run once, not once per caller.
   // Everything the generators need derives from it without touching the
   // corpus again: the full postings explode its arrays, the token
   // arrays re-sort them lexically.
-  private val postingsMemo =
-    new graft.SessionMemo[(SparkSession, String), DataFrame](_._1)
-
   private def rarestOrdered(s: SparkSession, dir: String): DataFrame =
-    postingsMemo.getOrBuild((s, dir))(_ => {
+    graft.Artifacts.get(s, "dedup.postings", dir) {
       val tok = Tables(s, dir, "documents")
         .select(col("doc_id"), col("lang"),
           explode(array_distinct(split(col("text"), " "))).as("t"))
@@ -601,7 +571,7 @@ object Dedup extends QueryFamily {
         .groupBy("doc_id", "lang")
         .agg(array_sort(collect_list(struct(col("df"), col("t")))).as("ord"),
           count(lit(1)).as("sz")))
-    })
+    }
 
   private[graft] def langBlockedTokenPairs(
       s: SparkSession, dir: String, ordered: Boolean,
@@ -654,25 +624,6 @@ object Dedup extends QueryFamily {
       .select("da", "db", "ta", "tb")
   }
 
-  /** Pin wrapper for the per-invocation verify ENCODE pass (the r20
-    * ab9c195 sites). The quiet-box r21 A/B reversed r20's contended-window
-    * finding: at fixture scale the pin LOSES ~12% on the 6-key set
-    * (pinned 9.61/8.36 s vs unpinned 8.17/7.86 s; q_dedup_near 0.76-0.92
-    * vs 0.68-0.69, minhash 1.95-2.06 vs 1.70-1.75) — the per-token md5
-    * encode is cheap enough there that recomputing it inside each fused
-    * consumer pipeline beats a localCheckpoint materialization barrier.
-    * At 100 TB the trade reverses (the encode pass is a full corpus
-    * scan + tokenize, re-run 2-8x per invocation without the pin — §2.4
-    * repeated layout work), so the pin stays available behind
-    * spark.graft.dedup.pinEncode=true; the default keeps the
-    * measured-faster local form. The memoized structural pins
-    * (postingsMemo/edgesMemo/pq codebooks) are NOT gated — those are
-    * shared across queries, not re-built per invocation. */
-  private def encodePinner(s: SparkSession): DataFrame => DataFrame =
-    if (s.conf.getOption("spark.graft.dedup.pinEncode").exists(_.toBoolean))
-      passPinner(s)
-    else identity
-
   /** Convergence bit from an Observation attached to an EAGERLY pinned
     * pass: localCheckpoint/checkpoint runs through Dataset.withAction, so
     * the CollectMetrics result is published to the listener bus by the
@@ -693,18 +644,7 @@ object Dedup extends QueryFamily {
     if (!reliable) df => df.localCheckpoint()
     else {
       if (s.sparkContext.getCheckpointDir.isEmpty) {
-        val p = java.nio.file.Files.createTempDirectory("graft_ckpt_")
-        Runtime.getRuntime.addShutdownHook(new Thread(() => {
-          import java.nio.file.{Files, Path}
-          import java.util.Comparator
-          if (Files.exists(p)) {
-            val walk = Files.walk(p)
-            try walk.sorted(Comparator.reverseOrder[Path]())
-              .forEach(f => Files.deleteIfExists(f))
-            finally walk.close()
-          }
-        }))
-        s.sparkContext.setCheckpointDir(p.toString)
+        s.sparkContext.setCheckpointDir(graft.Artifacts.root(s, "ckpt"))
       }
       df => df.checkpoint()
     }
@@ -717,28 +657,25 @@ object Dedup extends QueryFamily {
     * predicate sits alone in a filter (no projection for CollapseProject
     * to re-inline it into) and runs once per pair.
     *
-    * MEMOIZED per (session OBJECT, dir) and pinned, like the postings
-    * table it feeds from (r14 verdict: the three consumers each re-ran
+    * MEMOIZED per (session, dir) in graft.Artifacts and pinned, like the
+    * postings table it feeds from (r14 verdict: the three consumers each re-ran
     * the full candidates+verify pipeline, ~2s apiece at sf0.01 — and at
     * 100 TB the near-dup edge set is exactly the artifact you
     * materialize once and share).
     */
-  private[graft] val edgesMemo =
-    new graft.SessionMemo[(SparkSession, String), DataFrame](_._1)
-
   private def nearDupEdges(s: SparkSession, dir: String): DataFrame =
-    edgesMemo.getOrBuild((s, dir))(_ => {
+    graft.Artifacts.get(s, "dedup.nearEdges", dir) {
       graft.functions.SortedJaccardGe.register(s)
       val meta = docMeta(Tables(s, dir, "documents"))
       val enc = tokenCodes(s, dir)
-      val pairs = candidatePairs(enc, meta, 4, 5, s"near:$dir")
+      val pairs = candidatePairs(enc, meta, 4, 5, "near", dir)
       val ca = enc.select(col("doc_id").as("doc_a"), col("codes").as("ca"))
       val cb = enc.select(col("doc_id").as("doc_b"), col("codes").as("cb"))
       passPinner(s)(pairs.join(ca.hint("shuffle_hash"), "doc_a")
         .join(cb.hint("shuffle_hash"), "doc_b")
         .where(expr("sorted_jaccard_ge(ca, cb, 0.8D)").isNotNull)
         .select(col("doc_a"), col("doc_b")))
-    })
+    }
 
   // ---- Product-quantization plumbing, shared by q_sim_pq (sample
   // codebook), q_sim_pq_trained (subspace-wise Lloyd's codebook) and
@@ -771,15 +708,10 @@ object Dedup extends QueryFamily {
     * engines can state, instead of the usual re-seed-random. Scale: the
     * codebook is 8x16 rows (broadcast); assignment is map-side under it;
     * the update is one narrow (s, k, pos) shuffle — training never
-    * collects a vector to the driver.
+    * collects a vector to the driver. `dir` is the corpus `sub` derives
+    * from (it keys the memoized seed check).
     */
-  /** Completed seed-count validations, keyed (session, analyzed-plan
-    * semantic hash of `sub`, ksub) — Unit-valued: this memoizes that a
-    * fail-loud check PASSED, never data. */
-  private val seedChecks =
-    new graft.SessionMemo[(SparkSession, Int, Int), Unit](_._1)
-
-  private def pqCodebook(sub: DataFrame, trained: Boolean,
+  private def pqCodebook(sub: DataFrame, dir: String, trained: Boolean,
       ksub: Int = 16): DataFrame = {
     val cb0 = sub.where(col("vec_id").between(10, 9 + ksub))
       .select(col("s"), (col("vec_id") - 10).as("k"), col("sv").as("cent"))
@@ -790,15 +722,16 @@ object Dedup extends QueryFamily {
     // eager driver-blocking Spark job, and pqCodebook is re-entered on
     // every serve of the UNTRAINED paths (Bench invokes each key 3x) —
     // so the VALIDATION (a per-(session, input-plan, ksub) fact about
-    // the corpus, not a query result) memoizes; the first serve still
+    // the corpus, not a query result) memoizes — Unit-valued: it records
+    // that a fail-loud check PASSED, never data; the first serve still
     // fails loudly on a short corpus (r19 ADVICE item 2).
-    seedChecks.getOrBuild(
-      (sub.sparkSession, sub.queryExecution.analyzed.semanticHash(), ksub))(_ => {
-        val nSeed = cb0.select("k").distinct().count()
-        require(nSeed == ksub,
-          s"PQ codebook needs $ksub seed vectors (vec_id 10..${9 + ksub}); " +
-            s"fixture seeds only $nSeed — candidate corpus too small")
-      })
+    graft.Artifacts.get(sub.sparkSession,
+        s"dedup.pqSeedCheck.${sub.queryExecution.analyzed.semanticHash()}.$ksub", dir) {
+      val nSeed = cb0.select("k").distinct().count()
+      require(nSeed == ksub,
+        s"PQ codebook needs $ksub seed vectors (vec_id 10..${9 + ksub}); " +
+          s"fixture seeds only $nSeed — candidate corpus too small")
+    }
     if (!trained) cb0
     else {
       val tr = sub.where(col("vec_id") >= 10)
@@ -824,14 +757,6 @@ object Dedup extends QueryFamily {
     }
   }
 
-  // TRAINED codebooks are memoized + pinned per (session, dir, kind) —
-  // each has two consumers (trained: q_sim_pq_trained + q_sim_recall_pq;
-  // residual: q_sim_ivfpq + q_sim_recall_pq), and a Lloyd's round is the
-  // expensive half of each query. 8×16 rows per pin; the sample codebook
-  // is a bare filter and stays a live plan.
-  private val builtCodebooks =
-    new graft.SessionMemo[(SparkSession, String, String), DataFrame](_._1)
-
   /** The full ADC serving pipeline against either codebook →
     * (probe_id, rank, neighbor_id, adc_dist), top-5 per probe,
     * unordered (callers sort for presentation). Candidates score as 8
@@ -839,10 +764,15 @@ object Dedup extends QueryFamily {
     * and probe distance tables both broadcast (PlanSpec-pinned). */
   private def pqAdcRanked(s: SparkSession, dir: String, trained: Boolean): DataFrame = {
     val sub = pqSubvectors(s, dir)
+    // TRAINED codebooks are memoized + pinned per (session, dir, kind) —
+    // each has two consumers (trained: q_sim_pq_trained + q_sim_recall_pq;
+    // residual: q_sim_ivfpq + q_sim_recall_pq), and a Lloyd's round is the
+    // expensive half of each query. 8×16 rows per pin; the sample codebook
+    // is a bare filter and stays a live plan.
     val cb =
-      if (!trained) pqCodebook(sub, trained = false)
-      else builtCodebooks.getOrBuild((s, dir, "trained"))(
-        _ => passPinner(s)(pqCodebook(sub, trained = true)))
+      if (!trained) pqCodebook(sub, dir, trained = false)
+      else graft.Artifacts.get(s, "dedup.pqCodebook.trained", dir)(
+        passPinner(s)(pqCodebook(sub, dir, trained = true)))
     val dist = sub.join(broadcast(cb), "s").withColumn("d", expr(pqSqd))
     val codes = dist.where(col("vec_id") >= 10)
       .groupBy("vec_id", "s")
@@ -900,9 +830,8 @@ object Dedup extends QueryFamily {
       .select(col("vec_id"), col("k"), col("x.s").as("s"), col("x.sv").as("sv"))
     // the residual codebook: the SAME subspace-wise Lloyd's trainer as
     // q_sim_pq_trained, fed residual rows (kc to keep the coarse k apart)
-    val rcb = builtCodebooks.getOrBuild(
-        (s, dir, if (ksub == 16) "residual" else s"residual$ksub"))(
-        _ => passPinner(s)(pqCodebook(rsub.select("vec_id", "s", "sv"),
+    val rcb = graft.Artifacts.get(s, s"dedup.pqCodebook.residual$ksub", dir)(
+        passPinner(s)(pqCodebook(rsub.select("vec_id", "s", "sv"), dir,
           trained = true, ksub)))
       .withColumnRenamed("k", "kc")
     val rdist = rsub.join(broadcast(rcb), "s").withColumn("d", expr(pqSqd))
@@ -1218,12 +1147,14 @@ object Dedup extends QueryFamily {
       val meta = docMeta(Tables(s, dir, "documents"))
       // enc feeds the candidate generator AND both verify attach legs,
       // which join on DIFFERENT keys (doc_a / doc_b) — no exchange
-      // reuse, so left declarative the per-token md5 encode pass runs
-      // 2-3x per invocation; pinning it once is a 100 TB trade gated
-      // behind spark.graft.dedup.pinEncode (see encodePinner — the
-      // quiet-box r21 A/B measured the pin as a fixture-scale loss)
-      val enc = encodePinner(s)(tokenCodes(s, dir))
-      jaccardVerify(candidatePairs(enc, meta, 4, 5, s"near:$dir"), enc, 0.8)
+      // reuse, so the per-token md5 encode pass runs 2-3x per
+      // invocation. It stays declarative: a quiet-box A/B measured a
+      // localCheckpoint pin of it ~12% slower on the 6-key dedup set
+      // (recomputing the cheap encode inside each fused consumer beats a
+      // materialization barrier at fixture scale; at 100 TB, where the
+      // encode is a full corpus scan, the trade would reverse)
+      val enc = tokenCodes(s, dir)
+      jaccardVerify(candidatePairs(enc, meta, 4, 5, "near", dir), enc, 0.8)
     }),
 
     // Containment dedup — the asymmetric metric Jaccard misses: a short
@@ -1262,7 +1193,7 @@ object Dedup extends QueryFamily {
       val docs = Tables(s, dir, "documents")
       val cut = docs.selectExpr("(4 * max(doc_id)) DIV 5 AS c").head().getLong(0)
       val meta = docMeta(docs)
-      val enc = encodePinner(s)(tokenCodes(s, dir))
+      val enc = tokenCodes(s, dir)
       val pairs = incrementalCandidates(meta.where(col("doc_id") > cut), meta, 4, 5)
       jaccardVerify(pairs, enc, 0.8)
     }),
@@ -1302,10 +1233,9 @@ object Dedup extends QueryFamily {
         s"minhashBands=$nBands must divide minhashPerms=$perms into equal bands")
       val d = Tables(s, dir, "documents").select(col("doc_id"), col("lang"),
         array_sort(array_distinct(split(col("text"), " "))).as("toks"))
-      // verify's two attach legs join on different keys — encode-pass
-      // pin gated behind spark.graft.dedup.pinEncode (see q_dedup_near)
-      jaccardVerify(minhashCandidates(d, perms, nBands),
-        encodePinner(s)(tokenCodes(s, dir)), 0.8)
+      // verify's two attach legs join on different keys and read the
+      // encode pass unpinned (see q_dedup_near)
+      jaccardVerify(minhashCandidates(d, perms, nBands), tokenCodes(s, dir), 0.8)
     }),
 
     // The generalized banding, oracle-pinned at NON-fixture parameters
@@ -1317,8 +1247,7 @@ object Dedup extends QueryFamily {
       graft.functions.SortedJaccardGe.register(s)
       val d = Tables(s, dir, "documents").select(col("doc_id"), col("lang"),
         array_sort(array_distinct(split(col("text"), " "))).as("toks"))
-      jaccardVerify(minhashCandidates(d, 12, 3),
-        encodePinner(s)(tokenCodes(s, dir)), 0.8)
+      jaccardVerify(minhashCandidates(d, 12, 3), tokenCodes(s, dir), 0.8)
     }),
 
     // Candidate-quality gate for the approximate dedup paths — the
@@ -1378,7 +1307,7 @@ object Dedup extends QueryFamily {
       val bits = s.conf.getOption("spark.graft.dedup.simhashBits") match {
         case None => 16
         case Some("auto") =>
-          val n = approxCorpusCount(Tables(s, dir, "documents"), "doc_id", s"docs:$dir")
+          val n = approxCorpusCount(Tables(s, dir, "documents"), "doc_id", "docs", dir)
           bands * autoWidth(n, targetBucket(s), math.max(1, 16 / bands), 64 / bands)
         case Some(v) => v.toInt
       }
@@ -1418,12 +1347,12 @@ object Dedup extends QueryFamily {
       graft.functions.SortedJaccardGe.register(s)
       graft.functions.TrigramCodes.register(s)
       // grams feeds the candidate generator and both verify attach
-      // legs — trigram-encode pin gated behind spark.graft.dedup.pinEncode
-      val grams = encodePinner(s)(Tables(s, dir, "documents")
-        .selectExpr("doc_id", "trigram_codes(text) AS codes"))
+      // legs, unpinned like q_dedup_near's encode pass
+      val grams = Tables(s, dir, "documents")
+        .selectExpr("doc_id", "trigram_codes(text) AS codes")
       val meta = Tables(s, dir, "documents").selectExpr("doc_id", "lang",
         "n_chars DIV 100 AS bucket", "size(trigram_codes(text)) AS sz")
-      jaccardVerify(candidatePairs(grams, meta, 3, 5, s"ngram:$dir"), grams, 0.6)
+      jaccardVerify(candidatePairs(grams, meta, 3, 5, "ngram", dir), grams, 0.6)
     }),
 
     // Embedding near-dup: cosine >= 0.3 inside the same TWO-LEVEL block
@@ -1444,7 +1373,7 @@ object Dedup extends QueryFamily {
     "q_dedup_cosine" -> ((s, dir) => {
       graft.functions.VecDot.register(s)
       val planes = resolveFanout(s, "spark.graft.dedup.cosinePlanes",
-        fixture = 4, cap = 24, key = s"emb:$dir")(
+        fixture = 4, cap = 24, name = "emb", dir = dir)(
         (Tables(s, dir, "embeddings"), "vec_id"))
       val e = Tables(s, dir, "embeddings").select(col("vec_id"), col("label"),
         transform(col("embedding"), x => x.cast("double")).as("v"))
@@ -1618,7 +1547,7 @@ object Dedup extends QueryFamily {
       // recall trades off smoothly); the declared fixture fan-out is 4,
       // and lshPlanes=auto derives it from the memoized corpus count
       val planes = resolveFanout(s, "spark.graft.sim.lshPlanes",
-        fixture = 4, cap = 24, key = s"emb:$dir")(
+        fixture = 4, cap = 24, name = "emb", dir = dir)(
         (Tables(s, dir, "embeddings"), "vec_id"))
       val bucket = lshBucketExpr(j => s"element_at(v, $j)", planes)
       val e = Tables(s, dir, "embeddings").select(col("vec_id"),

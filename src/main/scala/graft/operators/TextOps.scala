@@ -44,17 +44,14 @@ object TextOps extends QueryFamily {
   private[operators] def kmeansCentroidRow(s: SparkSession, dir: String): DataFrame =
     kmeansPipeline(s, dir)._1
 
-  // The trained 1-row centroid array is memoized + pinned per (session,
-  // dir) — the nearDupEdges pattern: four consumers (q_cluster_kmeans,
-  // q_dedup_semantic, q_sim_ivf_trained, q_sim_ivfpq) share ONE 2-pass
-  // Lloyd's build instead of re-deriving it inside every query DAG (and
-  // inside every broadcast that references the centroid row). The
-  // ASSIGNMENT stays a live plan in each consumer — it is one map-side
-  // broadcast argmin, and pinning it would hide the very shapes PlanSpec
-  // pins.
-  private val builtCentroids =
-    new graft.SessionMemo[(SparkSession, String), DataFrame](_._1)
-
+  // The trained 1-row centroid array is memoized (graft.Artifacts) +
+  // pinned per (session, dir) — the nearDupEdges pattern: four consumers
+  // (q_cluster_kmeans, q_dedup_semantic, q_sim_ivf_trained, q_sim_ivfpq)
+  // share ONE 2-pass Lloyd's build instead of re-deriving it inside every
+  // query DAG (and inside every broadcast that references the centroid
+  // row). The ASSIGNMENT stays a live plan in each consumer — it is one
+  // map-side broadcast argmin, and pinning it would hide the very shapes
+  // PlanSpec pins.
   private def kmeansPipeline(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
     val e = Tables(s, dir, "embeddings").select(col("vec_id"),
       expr("transform(embedding, x -> " +
@@ -77,11 +74,11 @@ object TextOps extends QueryFamily {
         .groupBy("k")
         .agg(expr("transform(array_sort(collect_list(struct(pos, c))), " +
           "p -> p.c)").as("cv"))
-    val c1row = builtCentroids.getOrBuild((s, dir))(_ => {
+    val c1row = graft.Artifacts.get(s, "text.kmeansCentroids", dir) {
       val c0 = e.where(col("vec_id") < 8)
         .select(col("vec_id").as("k"), col("fx").as("cv"))
       Dedup.passPinner(s)(centRow(update(assign(centRow(c0)))))
-    })
+    }
     (c1row, assign(c1row))
   }
 
@@ -224,16 +221,14 @@ object TextOps extends QueryFamily {
     * runs once; `words` is pinned first so the corpus is scanned
     * exactly once across all four rounds. */
   // The budget-EM chain is a TRAINED ARTIFACT (like the PQ codebooks):
-  // memoized per (session, dir) so Bench's repeated invocations and the
-  // spec's re-reads serve the one build instead of re-running four
-  // Viterbi rounds and re-pinning eight localCheckpoints per call — at
-  // 100 TB the trained tokenizer is exactly what you materialize once.
-  private val budgetChains = new graft.SessionMemo[(SparkSession, String),
-    Seq[(DataFrame, DataFrame, DataFrame)]](_._1)
-
+  // memoized per (session, dir, budget) in graft.Artifacts so Bench's
+  // repeated invocations and the spec's re-reads serve the one build
+  // instead of re-running four Viterbi rounds and re-pinning eight
+  // localCheckpoints per call — at 100 TB the trained tokenizer is
+  // exactly what you materialize once.
   private[graft] def unigramBudgetChain(s: SparkSession, dir: String,
       budget: Int = 16): Seq[(DataFrame, DataFrame, DataFrame)] =
-    budgetChains.getOrBuild((s, dir))(_ =>
+    graft.Artifacts.get(s, s"text.unigramBudgetChain.$budget", dir)(
       buildUnigramBudgetChain(s, dir, budget))
 
   private def buildUnigramBudgetChain(s: SparkSession, dir: String,

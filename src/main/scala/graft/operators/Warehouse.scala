@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Dets, QueryFamily, Tables}
+import graft.{Artifacts, Dets, QueryFamily, Tables}
 import graft.sinks.Writers
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -40,103 +40,36 @@ import Dets._
   *    range join to union + carry-forward (one shuffle, no interval
   *    explosion).
   *
-  * Layout writes are memoized per (session, fixture dir): Verify pays
-  * them once; Bench's 3 timed runs amortize to the read-only path.
+  * Layout writes are memoized per (context, fixture dir) in
+  * [[graft.Artifacts]]: Verify pays them once; Bench's 3 timed runs
+  * amortize to the read-only path.
   */
 object Warehouse extends QueryFamily {
 
-  // Keyed per (dir, tag) — NOT per session (r15 fix). These layouts are
-  // a property of the DATA: every session derives byte-identical files
-  // from the same fixtures into the same per-JVM scratch path, so the
-  // session-keyed memo of r13/r14 was both a leak (it held SparkSession
-  // references, motivating SessionMemo's whole cap/evict machinery here)
-  // and a RACE: a second session re-ran the mode=overwrite write into
-  // the shared path while a sibling session's read was mid-scan
-  // (FAILED_READ_FILE.FILE_NOT_EXIST, surfaced by the r15 no-thrash
-  // spec running the layout queries on a fresh session under parallel
-  // suites). Session state this is not: the metastore table
-  // (q_hive_table) and the disk layouts are shared by every session on
-  // the context, and a stopped writer's parquet stays valid. Values are
-  // Unit — the map holds no session reference, so nothing can leak and
-  // no cap is needed.
-  private val written =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), Unit]()
+  /** Build a layout once per (context, dir, tag) — from ANY session, not
+    * per session (r15 fix). A layout is a property of the DATA: every
+    * session on the context would write the same files, and a per-session
+    * memo re-ran the write while a sibling session's scan was mid-read
+    * (FAILED_READ_FILE.FILE_NOT_EXIST). The write goes into a fresh
+    * [[Artifacts.root]], which is returned; a rebuild after the files
+    * under `dir` change lands in a new root, so it never overwrites files
+    * an earlier DataFrame still reads. */
+  private def layout(s: SparkSession, dir: String, tag: String)(
+      write: String => Unit): String =
+    Artifacts.get(s.sparkContext, s"warehouse.$tag", dir) {
+      val root = Artifacts.root(s, tag)
+      write(root)
+      root
+    }
 
-  // Observable per-key build counts for the no-thrash spec (r14 verdict
-  // #4: the old clear-all overflow re-ran every layout once the map
-  // crossed the cap). Keyed (not a global counter) so parallel suites'
-  // own first builds can't race the assertion.
-  private[graft] val layoutBuilds =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), java.lang.Long]()
-
-  /** Run `body` once per (dir, tag) per JVM; later calls — from ANY
-    * session — are no-ops. computeIfAbsent serializes the one build,
-    * same as the double-checked lock it replaces. */
-  private def once(s: SparkSession, dir: String, tag: String)(body: => Unit): Unit =
-    written.computeIfAbsent((dir, tag), _ => {
-      layoutBuilds.merge((dir, tag), 1L, (a, b) => a + b)
-      body
-    })
-
-  // Per-JVM root (like GraftSession's metastore dir): `once` memoizes per
-  // process, so two concurrent drivers (Verify + Bench, parallel test
-  // JVMs) must not share mode=overwrite scratch paths — a reader in one
-  // process could see the other's half-written layout.
-  private lazy val scratchRoot: String = {
-    val p = java.nio.file.Files.createTempDirectory("graft_scratch_")
-    // deleteOnExit only removes an EMPTY dir; the layouts written under
-    // the root need a recursive sweep or every JVM leaks a scratch tree
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      import java.nio.file.{Files, Path}
-      import java.util.Comparator
-      if (Files.exists(p)) {
-        val walk = Files.walk(p)
-        try walk.sorted(Comparator.reverseOrder[Path]())
-          .forEach(f => Files.deleteIfExists(f))
-        finally walk.close()
-      }
-    }))
-    p.toString
-  }
-
-  private def scratch(name: String, dir: String): String =
-    java.nio.file.Paths.get(scratchRoot,
-      s"graft_${name}_${dir.replaceAll("[^A-Za-z0-9.]", "_")}").toString
-
-  /** Metastore table names embed the fixture dir, mirroring scratch():
-    * once() is keyed per (dir, tag) but the catalog is JVM-shared, so a
-    * dir-independent table name would let a second fixture dir's build
-    * overwrite the first's table while the first dir's later calls still
-    * hit the memo and silently read the wrong dir's rows. (Dots are the
-    * db.table separator, so the sanitizer here is stricter than
-    * scratch()'s.) */
+  /** Metastore table names embed the fixture dir: layouts are memoized
+    * per (dir, tag) but the catalog is JVM-shared, so a dir-independent
+    * table name would let a second fixture dir's build overwrite the
+    * first's table while the first dir's later calls still hit the memo
+    * and silently read the wrong dir's rows. (Dots are the db.table
+    * separator, so every other character is sanitized.) */
   private[graft] def msName(name: String, dir: String): String =
     s"${name}_${dir.replaceAll("[^A-Za-z0-9]", "_").toLowerCase}"
-
-  /** The q_sink_compacted before/after layout roots, for the spec that
-    * pins the premise (the fragmented layout really is fragmented).
-    */
-  private[graft] def compactionPaths(dir: String): (String, String) =
-    (scratch("frag", dir), scratch("compacted", dir))
-
-  /** The q_scan_zorder layout root, for ZOrderSpec's file-level skipping
-    * proof. */
-  private[graft] def zorderPath(dir: String): String = scratch("zorder", dir)
-
-  /** The q_scan_manifest layout roots (data, manifest), for
-    * ManifestSkipSpec's pruning proof. */
-  private[graft] def manifestPaths(dir: String): (String, String) =
-    (scratch("mdata", dir), scratch("manifest", dir))
-
-  /** The q_scan_timetravel versioned-table root, for LakeSpec's
-    * file-sharing proof. Layout: `files/b=<bucket>` immutable data dirs
-    * plus `snapshots/v=<N>` manifest-list parquets of (path) rows. */
-  private[graft] def timeTravelRoot(dir: String): String = scratch("ttable", dir)
-
-  /** The q_scan_deletevector layout roots (data, delete vector), for
-    * LakeSpec's merge-on-read proof. */
-  private[graft] def deleteVectorPaths(dir: String): (String, String) =
-    (scratch("pddata", dir), scratch("pddv", dir))
 
   /** Builds the versioned table once per (dir): orders hash-clustered
     * into 4 immutable bucket files (o_orderkey % 4), then THREE snapshot
@@ -147,9 +80,8 @@ object Warehouse extends QueryFamily {
     * Iceberg/Delta snapshot shape: a commit writes a new manifest list
     * over immutable files, and time travel is choosing which manifest to
     * plan from. */
-  private def timeTravelLayout(s: SparkSession, dir: String): String = {
-    val root = timeTravelRoot(dir)
-    once(s, dir, "ttable") {
+  private[graft] def timeTravelLayout(s: SparkSession, dir: String): String =
+    layout(s, dir, "ttable") { root =>
       import s.implicits._
       val base = Tables(s, dir, "orders")
         .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
@@ -163,8 +95,6 @@ object Warehouse extends QueryFamily {
           .coalesce(1).write.mode("overwrite").parquet(s"$root/snapshots/v=$v")
       snap(0, Seq(0, 1)); snap(1, Seq(0, 1, 2, 3)); snap(2, Seq(0, 2, 3))
     }
-    root
-  }
 
   /** Builds the merge-on-read layout once per (dir): orders clustered
     * into one file per bucket (o_orderkey % 8) with a PERSISTED row
@@ -175,10 +105,11 @@ object Warehouse extends QueryFamily {
     * (bucket, pos) rows. The data files are never rewritten — at 100 TB
     * this is the difference between rewriting a TB-scale file to delete
     * ten rows and writing a KB-scale vector beside it. */
-  private def deleteVectorLayout(s: SparkSession, dir: String): (String, String) = {
+  private[graft] def deleteVectorLayout(s: SparkSession,
+      dir: String): (String, String) = {
     import org.apache.spark.sql.expressions.Window
-    val (dataPath, dvPath) = deleteVectorPaths(dir)
-    once(s, dir, "posdel") {
+    val root = layout(s, dir, "posdel") { root =>
+      val (dataPath, dvPath) = (s"$root/data", s"$root/dv")
       Tables(s, dir, "orders")
         .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
           col("o_orderstatus"), (col("o_orderkey") % 8).as("bucket"))
@@ -192,12 +123,8 @@ object Warehouse extends QueryFamily {
         .select("bucket", "pos")
         .coalesce(1).write.mode("overwrite").parquet(dvPath)
     }
-    (dataPath, dvPath)
+    (s"$root/data", s"$root/dv")
   }
-
-  /** The q_scan_bloomskip index root, for BloomSkipSpec. */
-  private[graft] def bloomIndexPath(dir: String): String =
-    scratch("bloomidx", dir)
 
   /** The bloom positions expression, shared by the index BUILD and the
     * PROBE so they cannot drift: k = 3 positions in an m = 2¹⁷-bit
@@ -226,8 +153,7 @@ object Warehouse extends QueryFamily {
     * the only file-skipping signal). */
   private def bloomIndexLayout(s: SparkSession, dir: String): (String, String) = {
     val (dataPath, _) = manifestLayout(s, dir)
-    val idxPath = bloomIndexPath(dir)
-    once(s, dir, "bloomidx") {
+    val idxPath = layout(s, dir, "bloomidx") { idxPath =>
       s.read.parquet(dataPath)
         .select(input_file_name().as("file"), col("o_custkey"))
         .distinct()
@@ -295,14 +221,6 @@ object Warehouse extends QueryFamily {
     (keys, selected, total)
   }
 
-  /** The q_lake_compact versioned root, for LakeSpec's compaction
-    * proofs. Layout: `files/b=<bucket>` immutable data dirs (bucket and
-    * pos as in-file columns), `dv/v2` the positional delete vector,
-    * `rw/b=<bucket>` the compaction rewrites, `snapshots/v=<N>`
-    * manifest lists of (path, kind) rows, `filestats` the per-file
-    * (path, md5, n_bytes) recorded at v2-publish time. */
-  private[graft] def dvCompactRoot(dir: String): String = scratch("dvcomp", dir)
-
   /** Builds the DV-compaction lineage once per (dir) — the close-out of
     * the lake tier's maintenance loop (what Warehouse's merge-on-read
     * comment promised): v2 is a MERGE-ON-READ snapshot (8 immutable
@@ -322,11 +240,17 @@ object Warehouse extends QueryFamily {
     * the rewrite is ONE job partitioned by the affected buckets, each
     * task streaming one file minus its KB-scale vector slice — the
     * per-bucket loop here mirrors that task structure at fixture
-    * scale. */
-  private def dvCompactLayout(s: SparkSession, dir: String): String = {
+    * scale.
+    *
+    * Layout (also read by LakeSpec's compaction proofs):
+    * `files/b=<bucket>` immutable data dirs (bucket and pos as in-file
+    * columns), `dv/v2` the positional delete vector, `rw/b=<bucket>`
+    * the compaction rewrites, `snapshots/v=<N>` manifest lists of
+    * (path, kind) rows, `filestats` the per-file (path, md5, n_bytes)
+    * recorded at v2-publish time. */
+  private[graft] def dvCompactLayout(s: SparkSession, dir: String): String = {
     import org.apache.spark.sql.expressions.Window
-    val root = dvCompactRoot(dir)
-    once(s, dir, "dvcomp") {
+    layout(s, dir, "dvcomp") { root =>
       val base = Tables(s, dir, "orders")
         .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
           col("o_orderstatus"), (col("o_orderkey") % 8).as("bucket"))
@@ -386,16 +310,16 @@ object Warehouse extends QueryFamily {
         .toDF("path", "kind")
         .coalesce(1).write.mode("overwrite").parquet(s"$root/snapshots/v=3")
     }
-    root
   }
 
   /** Builds the manifest-tracked layout once per (dir): orders
     * range-clustered on o_orderkey into 16 files, plus a MANIFEST table
     * of per-file (min_key, max_key, n_rows) — the Iceberg/Delta
     * data-skipping shape, persisted beside the data at write time. */
-  private def manifestLayout(s: SparkSession, dir: String): (String, String) = {
-    val (dataPath, manPath) = manifestPaths(dir)
-    once(s, dir, "manifest") {
+  private[graft] def manifestLayout(s: SparkSession,
+      dir: String): (String, String) = {
+    val root = layout(s, dir, "manifest") { root =>
+      val (dataPath, manPath) = (s"$root/data", s"$root/manifest")
       Tables(s, dir, "orders")
         .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderdate",
           "o_orderpriority")
@@ -413,7 +337,52 @@ object Warehouse extends QueryFamily {
         .coalesce(1)
         .write.mode("overwrite").parquet(manPath)
     }
-    (dataPath, manPath)
+    (s"$root/data", s"$root/manifest")
+  }
+
+  /** documents laid out as lang=<v>/ dirs — q_scan_partitioned's scan
+    * and q_scan_dpp's fact side. */
+  private def partsLayout(s: SparkSession, dir: String): String =
+    layout(s, dir, "parts") { path =>
+      Writers.writePartitioned(
+        Tables(s, dir, "documents").select("doc_id", "lang", "source", "n_chars"),
+        path, Seq("lang"))
+    }
+
+  /** The q_scan_zorder layout (also read by ZOrderSpec's file-level
+    * skipping proof). */
+  private[graft] def zorderLayout(s: SparkSession, dir: String): String =
+    layout(s, dir, "zorder") { path =>
+      val tsMicros = expr("unix_micros(CAST(ts AS TIMESTAMP))")
+      val ev = Tables(s, dir, "events")
+      val stats = ev.agg(
+        min("user_id").as("u0"), max("user_id").as("u1"),
+        min(tsMicros).as("t0"), max(tsMicros).as("t1"))
+      ev.crossJoin(broadcast(stats))
+        .withColumn("zv", graft.functions.ZOrder.zval(
+          graft.functions.ZOrder.quant16(col("user_id"), col("u0"), col("u1")),
+          graft.functions.ZOrder.quant16(tsMicros, col("t0"), col("t1"))))
+        .repartitionByRange(16, col("zv"))
+        .sortWithinPartitions("zv")
+        .select("event_id", "user_id", "ts", "event_type", "value", "props")
+        .write.mode("overwrite").parquet(path)
+    }
+
+  /** The q_sink_compacted (fragmented, compacted) layouts — the
+    * fragmented one kept for the spec that pins the premise. */
+  private[graft] def compactionLayout(s: SparkSession,
+      dir: String): (String, String) = {
+    val root = layout(s, dir, "compacted") { root =>
+      Tables(s, dir, "documents").select("doc_id", "lang", "n_chars")
+        .repartition(24)
+        .write.mode("overwrite").partitionBy("lang").parquet(s"$root/frag")
+      s.read.parquet(s"$root/frag")
+        .repartition(col("lang"))
+        .write.mode("overwrite")
+        .option("maxRecordsPerFile", 1000)
+        .partitionBy("lang").parquet(s"$root/compacted")
+    }
+    (s"$root/frag", s"$root/compacted")
   }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -422,7 +391,7 @@ object Warehouse extends QueryFamily {
     // mode=overwrite so replays are idempotent.
     "q_hive_table" -> ((s, dir) => {
       val t = s"graft.${msName("orders_ms", dir)}"
-      once(s, dir, "hive_orders") {
+      Artifacts.get(s.sparkContext, "warehouse.hive_orders", dir) {
         s.sql("CREATE DATABASE IF NOT EXISTS graft")
         Tables(s, dir, "orders")
           .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderdate", "o_orderpriority")
@@ -438,13 +407,7 @@ object Warehouse extends QueryFamily {
     // Partition-pruned scan: documents laid out as lang=<v>/ dirs; the
     // lang filter never touches the other languages' files.
     "q_scan_partitioned" -> ((s, dir) => {
-      val path = scratch("parts", dir)
-      once(s, dir, "parts") {
-        Writers.writePartitioned(
-          Tables(s, dir, "documents").select("doc_id", "lang", "source", "n_chars"),
-          path, Seq("lang"))
-      }
-      s.read.parquet(path)
+      s.read.parquet(partsLayout(s, dir))
         .where(col("lang") === "en")
         .groupBy("source")
         .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"))
@@ -462,23 +425,7 @@ object Warehouse extends QueryFamily {
     // sort orders. ZOrderSpec proves the skipping premise file-by-file;
     // correctness here is the 2-D range read's result itself.
     "q_scan_zorder" -> ((s, dir) => {
-      val path = zorderPath(dir)
-      once(s, dir, "zorder") {
-        val tsMicros = expr("unix_micros(CAST(ts AS TIMESTAMP))")
-        val ev = Tables(s, dir, "events")
-        val stats = ev.agg(
-          min("user_id").as("u0"), max("user_id").as("u1"),
-          min(tsMicros).as("t0"), max(tsMicros).as("t1"))
-        ev.crossJoin(broadcast(stats))
-          .withColumn("zv", graft.functions.ZOrder.zval(
-            graft.functions.ZOrder.quant16(col("user_id"), col("u0"), col("u1")),
-            graft.functions.ZOrder.quant16(tsMicros, col("t0"), col("t1"))))
-          .repartitionByRange(16, col("zv"))
-          .sortWithinPartitions("zv")
-          .select("event_id", "user_id", "ts", "event_type", "value", "props")
-          .write.mode("overwrite").parquet(path)
-      }
-      s.read.parquet(path)
+      s.read.parquet(zorderLayout(s, dir))
         .where(col("user_id").between(1, 2) &&
           col("ts") >= tsLit("2024-01-10") && col("ts") < tsLit("2024-01-14"))
         .select("event_id", "user_id", "ts", "event_type", "value")
@@ -698,8 +645,7 @@ object Warehouse extends QueryFamily {
     // schema-inference pass reads the data twice and types drift). The
     // oracle reads the original parquet: the round-trip must be lossless.
     "q_scan_csv" -> ((s, dir) => {
-      val path = scratch("csv", dir)
-      once(s, dir, "csv") {
+      val path = layout(s, dir, "csv") { path =>
         Tables(s, dir, "customer")
           .select("c_custkey", "c_name", "c_acctbal", "c_mktsegment")
           .write.mode("overwrite").option("header", "true").csv(path)
@@ -717,8 +663,7 @@ object Warehouse extends QueryFamily {
     // explicit schema (inference costs a second pass and guesses types),
     // timestamps round-tripped through ISO-8601 strings.
     "q_scan_json" -> ((s, dir) => {
-      val path = scratch("json", dir)
-      once(s, dir, "json") {
+      val path = layout(s, dir, "json") { path =>
         Tables(s, dir, "orders")
           .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus")
           .write.mode("overwrite").json(path)
@@ -753,8 +698,7 @@ object Warehouse extends QueryFamily {
     // dir / an object-store prefix); only the scratch-fixture setup is
     // local-mode-bound, the binaryFile READ under test is cluster-safe.
     "q_scan_binaryfile" -> ((s, dir) => {
-      val path = scratch("binfiles", dir)
-      once(s, dir, "binfiles") {
+      val path = layout(s, dir, "binfiles") { path =>
         java.nio.file.Files.createDirectories(java.nio.file.Paths.get(path))
         Tables(s, dir, "documents").select("doc_id", "text")
           .foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
@@ -793,19 +737,7 @@ object Warehouse extends QueryFamily {
     // maxRecordsPerFile ignored) fails the hash gate, not just a spec.
     // sum_chars guards content: compaction must move every row, once.
     "q_sink_compacted" -> ((s, dir) => {
-      val frag = scratch("frag", dir)
-      val compacted = scratch("compacted", dir)
-      once(s, dir, "compacted") {
-        Tables(s, dir, "documents").select("doc_id", "lang", "n_chars")
-          .repartition(24)
-          .write.mode("overwrite").partitionBy("lang").parquet(frag)
-        s.read.parquet(frag)
-          .repartition(col("lang"))
-          .write.mode("overwrite")
-          .option("maxRecordsPerFile", 1000)
-          .partitionBy("lang").parquet(compacted)
-      }
-      s.read.parquet(compacted)
+      s.read.parquet(compactionLayout(s, dir)._2)
         // projected before the aggregate: input_file_name() is
         // non-deterministic and may not sit inside an agg function
         .withColumn("fname", input_file_name())
@@ -819,8 +751,7 @@ object Warehouse extends QueryFamily {
     // ORC source: the other columnar warehouse format; same
     // read-back-must-equal-parquet contract.
     "q_scan_orc" -> ((s, dir) => {
-      val path = scratch("orc", dir)
-      once(s, dir, "orc") {
+      val path = layout(s, dir, "orc") { path =>
         Tables(s, dir, "supplier")
           .select("s_suppkey", "s_name", "s_nationkey", "s_acctbal")
           .write.mode("overwrite").orc(path)
@@ -838,8 +769,7 @@ object Warehouse extends QueryFamily {
     // pipeline adds fields mid-history. Batch membership is
     // deterministic (custkey parity) so the oracle can rebuild the view.
     "q_scan_evolution" -> ((s, dir) => {
-      val path = scratch("evo", dir)
-      once(s, dir, "evo") {
+      val path = layout(s, dir, "evo") { path =>
         val c = Tables(s, dir, "customer")
         c.where(col("c_custkey") % 2 === 1)
           .select("c_custkey", "c_name", "c_mktsegment")
@@ -864,14 +794,7 @@ object Warehouse extends QueryFamily {
     // At 100 TB this is the star-join pattern: the dim filter decides
     // which of thousands of date/lang partitions the fact scan touches.
     "q_scan_dpp" -> ((s, dir) => {
-      val path = scratch("parts", dir)
-      val dimPath = scratch("dppdim", dir)
-      once(s, dir, "parts") {
-        Writers.writePartitioned(
-          Tables(s, dir, "documents").select("doc_id", "lang", "source", "n_chars"),
-          path, Seq("lang"))
-      }
-      once(s, dir, "dppdim") {
+      val dimPath = layout(s, dir, "dppdim") { dimPath =>
         // the dim must be a real scan: a literal Seq folds to a
         // LocalTableScan at plan time and the pruning rule sees no
         // filterable dim side
@@ -880,7 +803,7 @@ object Warehouse extends QueryFamily {
           ("es", "east"), ("zh", "east")).toDF("lang", "grp")
           .coalesce(1).write.mode("overwrite").parquet(dimPath)
       }
-      s.read.parquet(path)
+      s.read.parquet(partsLayout(s, dir))
         .join(s.read.parquet(dimPath), "lang")
         .where(col("grp") === "west")
         .groupBy("lang")
@@ -978,7 +901,7 @@ object Warehouse extends QueryFamily {
     // shuffles. The only exchange left in the plan is the final agg's.
     "q_join_bucketed" -> ((s, dir) => {
       val (tOrd, tCus) = (msName("graft_b_orders", dir), msName("graft_b_customer", dir))
-      once(s, dir, "buckets") {
+      Artifacts.get(s.sparkContext, "warehouse.buckets", dir) {
         Writers.writeBucketed(
           Tables(s, dir, "orders").select("o_orderkey", "o_custkey", "o_totalprice"),
           tOrd, 8, Seq("o_custkey"))

@@ -1,6 +1,6 @@
 package graft.search
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
 import graft.sinks.AliasedIndex
@@ -119,11 +119,14 @@ object InvertedIndex {
     * delta's segment stages CONCURRENTLY (guide §2.6 — the stagings are
     * disjoint-input jobs that each leave most cores idle, so the later
     * jobs' tasks back-fill the earlier jobs' tails), then the meta
-    * versions publish sequentially in the given order. Commit semantics
-    * are IDENTICAL to calling [[append]] once per delta: each delta still
+    * versions publish sequentially in the given order. Each delta still
     * gets its own segment and its own incremental lexicon/globals fold,
-    * the publish flips stay last and ordered, and a crash leaves only
-    * invisible orphans ([[vacuum]] reclaims) plus a fully-committed
+    * and the publish flips stay last and ordered — the same commits as
+    * calling [[append]] once per delta. Failure differs from that loop:
+    * if any delta's concurrent staging fails, NOTHING publishes (the
+    * failure is rethrown after every staging settles; the staged
+    * segments are invisible orphans [[vacuum]] reclaims), whereas a
+    * crash or failure during the publishes leaves a fully-committed
     * prefix of the deltas — never a half-indexed corpus.
     */
   def appendAll(spark: SparkSession, root: String,
@@ -151,10 +154,9 @@ object InvertedIndex {
     * committed manifest names). */
   private def stageSegment(rootP: Path, docs: DataFrame,
       segName: String): Unit = {
-    val staging = Files.createTempDirectory(rootP, s".building-$segName-")
     val post = postingsOf(docs)
     val ds = docstatsOf(docs)
-    try {
+    AliasedIndex.stage(rootP, segName) { staging =>
       // the two segment files are independent jobs over disjoint inputs —
       // submit them together so the second back-fills the first's idle
       // cores (graft.Par); each is tiny relative to the cluster
@@ -163,10 +165,6 @@ object InvertedIndex {
         () => post.repartition(col("tok")).sortWithinPartitions("tok", "doc_id")
           .write.parquet(s"$staging/postings"),
         () => ds.write.parquet(s"$staging/docstats"))
-      Files.move(staging, rootP.resolve(segName), StandardCopyOption.ATOMIC_MOVE)
-    } catch {
-      case scala.util.control.NonFatal(e) =>
-        AliasedIndex.deleteRecursively(staging); throw e
     }
   }
 
@@ -282,18 +280,13 @@ object InvertedIndex {
     val prevDir = currentMeta(root)
     val next = segDirs(rootP).lastOption.fold(1)(_._1 + 1)
     val segName = f"seg-$next%05d"
-    val staging = Files.createTempDirectory(rootP, s".building-$segName-")
-    try {
+    AliasedIndex.stage(rootP, segName) { staging =>
       // independent merged-segment files — overlap, as in append
       graft.Par.run(
         () => postings(spark, root)
           .repartition(col("tok")).sortWithinPartitions("tok", "doc_id")
           .write.parquet(s"$staging/postings"),
         () => docstats(spark, root).write.parquet(s"$staging/docstats"))
-      Files.move(staging, rootP.resolve(segName), StandardCopyOption.ATOMIC_MOVE)
-    } catch {
-      case scala.util.control.NonFatal(e) =>
-        AliasedIndex.deleteRecursively(staging); throw e
     }
     AliasedIndex.publish(metaRoot(root)) { dir =>
       graft.Par.run(

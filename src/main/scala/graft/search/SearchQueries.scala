@@ -1,7 +1,7 @@
 package graft.search
 
 
-import graft.{QueryFamily, Tables}
+import graft.{Artifacts, QueryFamily, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -22,34 +22,23 @@ import org.apache.spark.sql.functions._
   */
 object SearchQueries extends QueryFamily {
 
-  // per-invocation unique root (graft.Scratch) — see ViewQueries.freshRoot
-  private def freshRoot(tag: String, dir: String): String =
-    graft.Scratch.freshRoot(tag)
-
   private def docs(s: SparkSession, dir: String): DataFrame =
     Tables(s, dir, "documents").select("doc_id", "text")
 
   /** One base index per (session, fixture dir), built exactly once and
     * never mutated — the real lifecycle (build once, serve many) for the
-    * read-only queries. `computeIfAbsent` makes concurrent invocations
-    * block on a single build instead of racing (the root itself is still
-    * invocation-unique via Scratch, so no OTHER process can touch it);
-    * queries that MUTATE the index (delete, append/compact/vacuum) keep
-    * per-invocation roots, and the build path stays covered by them and
-    * by SearchSpec.
+    * read-only queries. [[graft.Artifacts]] makes concurrent invocations
+    * block on a single build instead of racing (the root itself is
+    * invocation-unique, so no OTHER process can touch it); queries that
+    * MUTATE the index (delete, append/compact/vacuum) keep per-invocation
+    * roots, and the build path stays covered by them and by SearchSpec.
     */
-  // Keyed on the SparkSession OBJECT, not identityHashCode — see
-  // GraphOps.builtGraphs for why the hash scheme is collision-unsafe.
-  private val sharedRoots =
-    new graft.SessionMemo[(SparkSession, String), String](_._1)
-
   private def sharedIndex(s: SparkSession, dir: String): String =
-    sharedRoots.getOrBuild(
-      (s, dir))(_ => {
-        val root = graft.Scratch.freshRoot("q_search_shared")
-        InvertedIndex.build(s, root, docs(s, dir))
-        root
-      })
+    Artifacts.get(s, "search.sharedIndex", dir) {
+      val root = Artifacts.root(s, "q_search_shared")
+      InvertedIndex.build(s, root, docs(s, dir))
+      root
+    }
 
   /** The serve-side contract: answered from index artifacts only. */
   /** The BM25 oracle's CTE chain through per-(doc, term) scores `sc` —
@@ -267,7 +256,7 @@ object SearchQueries extends QueryFamily {
     // corpus (the oracle recomputes exactly that), certifying that the
     // delete retired both the docs AND their df/avgdl contributions.
     "q_search_delete" -> ((s, dir) => {
-      val root = freshRoot("q_search_delete", dir)
+      val root = Artifacts.root(s, "q_search_delete")
       val d = docs(s, dir)
       InvertedIndex.build(s, root, d)
       InvertedIndex.delete(s, root, d.where("doc_id % 5 = 0").select("doc_id"))
@@ -282,7 +271,7 @@ object SearchQueries extends QueryFamily {
     // incremental lexicon fold and the manifest flip lose nothing, and
     // that compaction is pure data movement.
     "q_search_incremental" -> ((s, dir) => {
-      val root = freshRoot("q_search_incremental", dir)
+      val root = Artifacts.root(s, "q_search_incremental")
       val d = docs(s, dir)
       // the three deltas' segment stagings are mutually independent jobs;
       // only the lexicon/globals folds are serial by contract — appendAll

@@ -71,18 +71,9 @@ object AliasedIndex {
     Files.createDirectories(rootP)
     val next = versions(rootP).lastOption.fold(1)(_._1 + 1)
     val name = f"v-$next%05d"
-    // hidden staging dir: a writer CRASH leaves only hidden junk, never a
-    // visible version; a writer that FAILS (including the losing side of
-    // the racing-publishers move) cleans its staging up entirely
-    val staging = Files.createTempDirectory(rootP, s".building-$name-")
-    val versionDir = rootP.resolve(name)
-    try {
-      write(staging.toString)
-      Files.move(staging, versionDir, StandardCopyOption.ATOMIC_MOVE)
-    } catch {
-      case scala.util.control.NonFatal(e) =>
-        cleanupQuietly(e, () => deleteRecursively(staging)); throw e
-    }
+    // the losing side of the racing-publishers move fails in stage() and
+    // cleans its staging up entirely
+    val versionDir = stage(rootP, name)(write)
     // alias flip: tmp pointer file + atomic rename over `current`
     val tmp = Files.createTempFile(rootP, ".current-", ".tmp")
     try {
@@ -95,6 +86,23 @@ object AliasedIndex {
     }
     gc(rootP, keep)
     versionDir.toString
+  }
+
+  /** Write `rootP/name` via `write(dir)` into a hidden staging dir that
+    * is renamed into place only after `write` returns: a writer CRASH
+    * leaves only hidden junk, never a visible `name`; a writer that FAILS
+    * cleans its staging up entirely. */
+  private[graft] def stage(rootP: Path, name: String)(write: String => Unit): Path = {
+    val staging = Files.createTempDirectory(rootP, s".building-$name-")
+    val target = rootP.resolve(name)
+    try {
+      write(staging.toString)
+      Files.move(staging, target, StandardCopyOption.ATOMIC_MOVE)
+    } catch {
+      case scala.util.control.NonFatal(e) =>
+        cleanupQuietly(e, () => deleteRecursively(staging)); throw e
+    }
+    target
   }
 
   /** Run cleanup for a failed operation without losing the root cause:

@@ -90,10 +90,12 @@ object IncrementalView {
     * delta's PARTIAL aggregation — the O(delta) half of a refresh —
     * materializes CONCURRENTLY (guide §2.6: independent jobs back-fill
     * each other's idle cores), then the O(state) merge+publish commits
-    * run sequentially in the given order. Commit semantics are IDENTICAL
-    * to calling [[refresh]] once per delta: same per-delta folds, same
-    * atomic publishes, and a crash leaves a fully-committed prefix.
-    * Deltas must not depend on the view's own state — watermark-tracked
+    * run sequentially in the given order — the same per-delta folds and
+    * atomic publishes as calling [[refresh]] once per delta. Failure
+    * differs from that loop: if any delta's concurrent partial
+    * aggregation fails, NOTHING commits (the failure is rethrown after
+    * every branch settles), whereas a crash or failure during the
+    * commits leaves a fully-committed prefix. Deltas must not depend on the view's own state — watermark-tracked
     * pulls do ([[refreshTracked]] stays serial by contract); plain,
     * signed and CDC deltas don't.
     */

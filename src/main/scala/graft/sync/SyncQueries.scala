@@ -122,7 +122,7 @@ object SyncQueries extends QueryFamily {
     // and the doc bodies they carried — so a green row certifies the
     // shed docs keep their full delivery context for replay.
     "q_sync_dlq" -> ((s, dir) => {
-      val base = graft.Scratch.freshRoot("q_sync_dlq")
+      val base = graft.Artifacts.root(s, "q_sync_dlq")
       val job = fullJob.copy(name = "orders_dlq",
         deadLetter = Some(graft.sinks.DeadLetterPolicy(s"$base/dlq", budget = 5000)))
       SyncRunner.run(s, dir, job,
@@ -147,7 +147,7 @@ object SyncQueries extends QueryFamily {
     // own listing); at 100 TB the index side would be the real index's
     // per-shard stats API — the comparison plan is unchanged.
     "q_sync_reconcile" -> ((s, dir) => {
-      val base = graft.Scratch.freshRoot("q_sync_reconcile")
+      val base = graft.Artifacts.root(s, "q_sync_reconcile")
       val job = fullJob.copy(name = "orders_reconcile")
       SyncRunner.run(s, dir, job, graft.sinks.FileBulkClient(s"$base/idx"))
       val lost = java.nio.file.Paths.get(

@@ -1,6 +1,6 @@
 package graft.sync
 
-import graft.{Dets, QueryFamily}
+import graft.{Artifacts, Dets, QueryFamily}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -11,18 +11,15 @@ import org.apache.spark.sql.functions._
   * oracle recomputes the same aggregate DIRECTLY over the corpus. A green
   * row therefore certifies the central claim of incremental maintenance:
   * folding the data in pieces equals scanning it whole.
+  *
+  * Each invocation folds into a fresh [[Artifacts.root]]: the verify and
+  * bench harnesses call a query repeatedly — possibly from overlapping
+  * JVMs — and re-folding a delta onto another invocation's surviving
+  * state would double-count (the one way an incremental view can
+  * silently rot). Build-from-empty under a unique root keeps each run
+  * self-contained and byte-deterministic.
   */
 object ViewQueries extends QueryFamily {
-
-  /** Fresh per-invocation view root ([[graft.Scratch]]): the verify and
-    * bench harnesses call a query repeatedly — possibly from overlapping
-    * JVMs — and re-folding a delta onto another invocation's surviving
-    * state would double-count (the one way an incremental view can
-    * silently rot). Build-from-empty under a unique root keeps each run
-    * self-contained and byte-deterministic.
-    */
-  private def freshRoot(tag: String, dir: String): String =
-    graft.Scratch.freshRoot(tag)
 
   /** orders reshaped to view inputs: exact-decimal measure (double sums
     * are order-dependent; DECIMAL(12,2) folds identically in any order
@@ -44,33 +41,26 @@ object ViewQueries extends QueryFamily {
     * where both serve keys (status, priority); finalize + rewrite both
     * serve keys (status). The fold still runs through the real refresh
     * machinery (so folding-in-pieces == one-shot stays certified), it
-    * just runs once per (session, dir, keys); after the build the state
-    * is immutable, so concurrent invocations can't race it
-    * (computeIfAbsent serializes the one build). Queries that exercise
+    * just runs once per (session, dir, keys) — again after the files
+    * under `dir` change; after the build the state is immutable, so
+    * concurrent invocations can't race it ([[Artifacts]] serializes the
+    * one build). Queries that exercise
     * DIFFERENT maintenance machinery (signed retraction, tracked
     * watermark pulls, join-source deltas) keep per-invocation roots.
     */
-  // Keyed on the SparkSession OBJECT (identity equality), not its
-  // identityHashCode — same rationale as GraphOps.builtGraphs: a hash
-  // collision between two sessions in one JVM would hand session B the
-  // folded state owned by (possibly stopped) session A.
-  private[graft] val sharedStates =
-    new graft.SessionMemo[(SparkSession, String, String), String](_._1)
-
-  private def sharedFold(s: SparkSession, dir: String,
+  private[graft] def sharedFold(s: SparkSession, dir: String,
       keys: Seq[String]): String =
-    sharedStates.getOrBuild(
-      (s, dir, keys.mkString(",")))(_ => {
-        val root = graft.Scratch.freshRoot("q_view_shared")
-        val o = ordersSrc(s, dir)
-        val v = IncrementalView.ViewDef(keys, "total")
-        // the two deltas' partial aggregations overlap (refreshAll);
-        // commits stay sequential — fold semantics unchanged
-        IncrementalView.refreshAll(s, root, Seq(
-          o.where(s"o_orderdate <= $cutoff"),
-          o.where(s"o_orderdate > $cutoff")), v)
-        root
-      })
+    Artifacts.get(s, s"view.sharedFold.${keys.mkString(",")}", dir) {
+      val root = Artifacts.root(s, "q_view_shared")
+      val o = ordersSrc(s, dir)
+      val v = IncrementalView.ViewDef(keys, "total")
+      // the two deltas' partial aggregations overlap (refreshAll);
+      // commits stay sequential — fold semantics unchanged
+      IncrementalView.refreshAll(s, root, Seq(
+        o.where(s"o_orderdate <= $cutoff"),
+        o.where(s"o_orderdate > $cutoff")), v)
+      root
+    }
 
   /** Served state → the oracle-checked shape. mv_s2 stays internal: its
     * decimal-product precision rules differ across engines (Spark caps
@@ -121,7 +111,7 @@ object ViewQueries extends QueryFamily {
     // IncrementalViewSpec pins the lossless-union claim exactly
     // (folded estimate == one-shot estimate).
     "q_view_distinct" -> ((s, dir) => {
-      val root = freshRoot("q_view_distinct", dir)
+      val root = Artifacts.root(s, "q_view_distinct")
       val src = s.read.parquet(s"$dir/events.parquet")
         .select(col("event_type"), col("user_id"), col("ts"))
       val cuts = Seq("1970-01-01", "2024-01-11", "2024-01-21", "2100-01-01")
@@ -164,7 +154,7 @@ object ViewQueries extends QueryFamily {
     // that never saw the tombstoned rows — count and sum are invertible,
     // and the retractable view structurally carries nothing that isn't.
     "q_view_retract" -> ((s, dir) => {
-      val root = freshRoot("q_view_retract", dir)
+      val root = Artifacts.root(s, "q_view_retract")
       val o = ordersSrc(s, dir)
       val v = IncrementalView.ViewDef(Seq("priority"), "total",
         retractable = true)
@@ -184,7 +174,7 @@ object ViewQueries extends QueryFamily {
     // asserted in-query, like q_view_rewrite). One fold, one state
     // scan, N measures — not N single-measure views.
     "q_view_multi" -> ((s, dir) => {
-      val root = freshRoot("q_view_multi", dir)
+      val root = Artifacts.root(s, "q_view_multi")
       val li = s.read.parquet(s"$dir/lineitem.parquet").select(
         col("l_returnflag").as("rflag"), col("l_linestatus").as("lstatus"),
         Dets.money(col("l_quantity")).as("qty"),
@@ -224,7 +214,7 @@ object ViewQueries extends QueryFamily {
     // served state must equal the oracle's direct aggregate over the
     // new snapshot.
     "q_view_cdc" -> ((s, dir) => {
-      val root = freshRoot("q_view_cdc", dir)
+      val root = Artifacts.root(s, "q_view_cdc")
       val v = IncrementalView.ViewDef(Seq("status"), "total",
         retractable = true)
       val prev = ordersSrc(s, dir).where(s"o_orderdate <= $cutoff")
@@ -335,7 +325,7 @@ object ViewQueries extends QueryFamily {
     // nightly maintenance joins only the delta partitions to the
     // broadcast-sized dim.
     "q_view_join" -> ((s, dir) => {
-      val root = freshRoot("q_view_join", dir)
+      val root = Artifacts.root(s, "q_view_join")
       val orders = s.read.parquet(s"$dir/orders.parquet").select(
         col("o_custkey"), col("o_orderstatus").as("status"),
         Dets.money(col("o_totalprice")).as("total"), col("o_orderdate"))
@@ -374,7 +364,7 @@ object ViewQueries extends QueryFamily {
     // unchanged source is a no-op (empty delta — no rewrite, no advance).
     // Every row folds exactly once, so serving equals the direct scan.
     "q_view_tracked" -> ((s, dir) => {
-      val root = freshRoot("q_view_tracked", dir)
+      val root = Artifacts.root(s, "q_view_tracked")
       val o = ordersSrc(s, dir)
       val v = IncrementalView.ViewDef(Seq("status"), "total")
       IncrementalView.refreshTracked(s, root,

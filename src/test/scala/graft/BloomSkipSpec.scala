@@ -22,7 +22,7 @@ class BloomSkipSpec extends AnyFunSuite {
     // advice found the old `a && b || a` assert vacuous; de-morganing
     // it surfaced that numeric-sortedness was never the contract)
     assert(keys.distinct == keys, s"duplicate probe keys: $keys")
-    val (dataPath, _) = operators.Warehouse.manifestPaths(sf0001)
+    val (dataPath, _) = operators.Warehouse.manifestLayout(spark, sf0001)
     // ground truth: which files actually hold the probe keys
     val truth = spark.read.parquet(dataPath)
       .where(col("o_custkey").isin(keys: _*))
@@ -44,7 +44,7 @@ class BloomSkipSpec extends AnyFunSuite {
   test("the premise holds: range clustering cannot serve the custkey lookup") {
     SparkEntry.queries("q_scan_bloomskip")(spark, sf0001).collect() // build
     val (keys, _, total) = operators.Warehouse.bloomPlan(spark, sf0001)
-    val (dataPath, _) = operators.Warehouse.manifestPaths(sf0001)
+    val (dataPath, _) = operators.Warehouse.manifestLayout(spark, sf0001)
     // per-file custkey min/max: a zone-map prune keeps a file when any
     // probe key falls inside its [min, max] — count how many files
     // min/max COULD skip for ALL three keys

@@ -37,20 +37,20 @@ class DedupRecallSpec extends AnyFunSuite {
 
   // r14 verdict #5: the near-dup edge set is memoized per (session, dir)
   // — its three consumers (cluster, retention, recall) must share ONE
-  // pinned build, not re-run candidates+verify apiece. Identity of the
-  // memoized DataFrame across all three runs is the counter: getOrBuild
-  // can only return the same object if no rebuild happened.
+  // pinned build, not re-run candidates+verify apiece. The registry's
+  // build count is the counter; a private copy of the fixture keeps other
+  // suites' builds out of it.
   test("nearDupEdges builds once across cluster/retention/recall") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_edges_once")
+    Tables.names.foreach(t => java.nio.file.Files.copy(
+      java.nio.file.Paths.get(sf0001, s"$t.parquet"), dir.resolve(s"$t.parquet")))
     val s = spark.newSession()
-    SparkEntry.queries("q_dedup_cluster")(s, sf0001).collect()
-    val snap1 = graft.operators.Dedup.edgesMemo.snapshot
-      .collect { case ((ss, d), df) if (ss eq s) && d == sf0001 => df }
-    assert(snap1.size == 1, s"expected one edge-set build, got ${snap1.size}")
-    SparkEntry.queries("q_dedup_retention")(s, sf0001).collect()
-    SparkEntry.queries("q_dedup_recall")(s, sf0001).collect()
-    val snap2 = graft.operators.Dedup.edgesMemo.snapshot
-      .collect { case ((ss, d), df) if (ss eq s) && d == sf0001 => df }
-    assert(snap2.size == 1 && (snap2.head eq snap1.head),
+    SparkEntry.queries("q_dedup_cluster")(s, dir.toString).collect()
+    assert(Artifacts.builds("dedup.nearEdges", dir.toString) == 1,
+      "expected one edge-set build")
+    SparkEntry.queries("q_dedup_retention")(s, dir.toString).collect()
+    SparkEntry.queries("q_dedup_recall")(s, dir.toString).collect()
+    assert(Artifacts.builds("dedup.nearEdges", dir.toString) == 1,
       "edge set was rebuilt by a later consumer")
   }
 }

@@ -292,4 +292,34 @@ class IncrementalViewSpec extends AnyFunSuite {
     assert(folded == oneShot,
       s"delta-folded estimates diverged from one-shot: $folded vs $oneShot")
   }
+
+  // graft.Par batch failure: the concurrent prepare/stage stage settles
+  // before any commit, so one failing delta aborts the WHOLE batch — the
+  // published version (view state and index meta) stays what it was
+  test("refreshAll / appendAll: a failing concurrent delta publishes nothing") {
+    def failing(df: DataFrame, id: String): DataFrame =
+      df.where(assert_true(col(id) < 0, lit("injected delta failure")).isNull)
+    val v = ViewDef(Seq("status"), "total")
+    val root = freshRoot("parfail")
+    IncrementalView.refresh(spark, root, orders.where("o_orderdate <= TIMESTAMP '1997-06-01'"), v)
+    val (current, rows) = (graft.sinks.AliasedIndex.resolve(root),
+      IncrementalView.read(spark, root).collect().toSet)
+    intercept[Exception](IncrementalView.refreshAll(spark, root,
+      Seq(orders.where("o_orderdate > TIMESTAMP '1997-06-01'"), failing(orders, "o_orderkey")), v))
+    assert(graft.sinks.AliasedIndex.resolve(root) == current && versionDirs(root).size == 1,
+      "a failed batch published a view version")
+    assert(IncrementalView.read(spark, root).collect().toSet == rows)
+
+    val idx = freshRoot("parfail_idx")
+    val docs = spark.read.parquet(s"${TestSpark.sf0001}/documents.parquet")
+      .select(col("doc_id"), col("text"))
+    graft.search.InvertedIndex.append(spark, idx, docs.where("doc_id % 2 = 0"))
+    val meta = graft.sinks.AliasedIndex.resolve(s"$idx/meta")
+    val lex = graft.search.InvertedIndex.lexicon(spark, idx).collect().toSet
+    intercept[Exception](graft.search.InvertedIndex.appendAll(spark, idx, Seq(
+      docs.where("doc_id % 2 = 1"), failing(docs, "doc_id"))))
+    assert(graft.sinks.AliasedIndex.resolve(s"$idx/meta") == meta,
+      "a failed batch published an index meta version")
+    assert(graft.search.InvertedIndex.lexicon(spark, idx).collect().toSet == lex)
+  }
 }

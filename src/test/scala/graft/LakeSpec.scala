@@ -23,7 +23,7 @@ class LakeSpec extends AnyFunSuite {
 
   test("time travel: commits share immutable files; a delete is metadata-only") {
     SparkEntry.queries("q_scan_timetravel")(spark, sf0001).collect() // build
-    val root = operators.Warehouse.timeTravelRoot(sf0001)
+    val root = operators.Warehouse.timeTravelLayout(spark, sf0001)
     val (v0, v1, v2) = (snapPaths(root, 0), snapPaths(root, 1), snapPaths(root, 2))
     // the append commit (v1) kept every v0 file; the delete commit (v2)
     // dropped exactly bucket 1 from v1's list
@@ -66,7 +66,7 @@ class LakeSpec extends AnyFunSuite {
   test("delete vector: one file per bucket, O(deleted) state, broadcast anti-join") {
     val df = SparkEntry.queries("q_scan_deletevector")(spark, sf0001)
     df.collect() // build
-    val (dataPath, dvPath) = operators.Warehouse.deleteVectorPaths(sf0001)
+    val (dataPath, dvPath) = operators.Warehouse.deleteVectorLayout(spark, sf0001)
     // the positional coordinate (bucket, pos) is honest: one data file
     // per bucket, so bucket IS the file id
     val files = spark.read.parquet(dataPath)
@@ -97,7 +97,7 @@ class LakeSpec extends AnyFunSuite {
 
   test("compaction: untouched files ride through byte-identical") {
     SparkEntry.queries("q_lake_compact")(spark, sf0001).collect() // build
-    val root = operators.Warehouse.dvCompactRoot(sf0001)
+    val root = operators.Warehouse.dvCompactLayout(spark, sf0001)
     val m2 = compactManifest(root, 2); val m3 = compactManifest(root, 3)
     val shared = m2.collect { case (p, "data") => p }.toSet
       .intersect(m3.map(_._1).toSet)
@@ -120,7 +120,7 @@ class LakeSpec extends AnyFunSuite {
 
   test("compaction: snapshot isolation — v2 merge-on-read survives the commit") {
     val served = SparkEntry.queries("q_lake_compact")(spark, sf0001).collect()
-    val root = operators.Warehouse.dvCompactRoot(sf0001)
+    val root = operators.Warehouse.dvCompactLayout(spark, sf0001)
     val m2 = compactManifest(root, 2)
     val dv = spark.read.parquet(m2.collect { case (p, "delete") => p }.head)
     // re-plan v2 from its own manifest AFTER the compaction commit: the
@@ -139,7 +139,7 @@ class LakeSpec extends AnyFunSuite {
 
   test("compaction: rewritten files carry zero tombstoned positions") {
     SparkEntry.queries("q_lake_compact")(spark, sf0001).collect() // build
-    val root = operators.Warehouse.dvCompactRoot(sf0001)
+    val root = operators.Warehouse.dvCompactLayout(spark, sf0001)
     val m2 = compactManifest(root, 2); val m3 = compactManifest(root, 3)
     val rewritten = m3.map(_._1).toSet
       .diff(m2.collect { case (p, "data") => p }.toSet)
@@ -170,7 +170,7 @@ class LakeSpec extends AnyFunSuite {
 
   test("compaction: the v2 -> v3 diff is a file swap with no logical row delta") {
     val served = SparkEntry.queries("q_lake_compact")(spark, sf0001).collect()
-    val root = operators.Warehouse.dvCompactRoot(sf0001)
+    val root = operators.Warehouse.dvCompactLayout(spark, sf0001)
     val m2 = compactManifest(root, 2); val m3 = compactManifest(root, 3)
     val d2 = m2.collect { case (p, "data") => p }.toSet
     val d3 = m3.map(_._1).toSet

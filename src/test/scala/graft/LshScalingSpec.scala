@@ -137,14 +137,17 @@ class LshScalingSpec extends AnyFunSuite {
 
   test("auto fan-out picks the fixture width on a small corpus, wider on a large one") {
     val target = 64L
-    val nS = Dedup.approxCorpusCount(synthDocs(1000), "doc_id", "lshspec:auto:small")
-    val nB = Dedup.approxCorpusCount(synthDocs(64000), "doc_id", "lshspec:auto:big")
+    // in-memory corpora: their memo key dir is an empty temp dir
+    val dir = java.nio.file.Files.createTempDirectory("graft_lshspec").toString
+    val nS = Dedup.approxCorpusCount(synthDocs(1000), "doc_id", "lshspec:auto:small", dir)
+    val nB = Dedup.approxCorpusCount(synthDocs(64000), "doc_id", "lshspec:auto:big", dir)
     val wS = Dedup.autoWidth(nS, target, 4, 16)
     val wB = Dedup.autoWidth(nB, target, 4, 16)
     assert(wS == 4, s"~1000/64 buckets floor at the fixture width, got $wS")
     assert(wB >= 9 && wB <= 11, s"~64000/64 buckets need ~10 bits, got $wB")
-    // memoized: the same key answers from cache (identical value)
-    assert(Dedup.approxCorpusCount(synthDocs(1000), "doc_id", "lshspec:auto:small") == nS)
+    // memoized: the same key answers from cache (identical value, no rebuild)
+    assert(Dedup.approxCorpusCount(synthDocs(1000), "doc_id", "lshspec:auto:small", dir) == nS)
+    assert(Artifacts.builds("dedup.corpusCount.lshspec:auto:small", dir) == 1)
     // the cap wins over the derivation, the floor over a tiny corpus
     assert(Dedup.autoWidth(1L << 40, target, 4, 16) == 16)
     assert(Dedup.autoWidth(1, target, 4, 16) == 4)

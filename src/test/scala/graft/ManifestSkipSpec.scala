@@ -16,7 +16,7 @@ class ManifestSkipSpec extends AnyFunSuite {
 
   test("manifest covers the layout: 16 files, disjoint-ish ranges, full row count") {
     SparkEntry.queries("q_scan_manifest")(spark, sf0001).collect() // build
-    val (dataPath, manPath) = operators.Warehouse.manifestPaths(sf0001)
+    val (dataPath, manPath) = operators.Warehouse.manifestLayout(spark, sf0001)
     val man = spark.read.parquet(manPath).collect()
     assert(man.length == 16, s"expected 16 manifest entries, got ${man.length}")
     val total = man.map(_.getAs[Long]("n_rows")).sum
@@ -38,7 +38,7 @@ class ManifestSkipSpec extends AnyFunSuite {
 
   test("the band query prunes most files and the scan proves it") {
     val df = SparkEntry.queries("q_scan_manifest")(spark, sf0001)
-    val (_, manPath) = operators.Warehouse.manifestPaths(sf0001)
+    val (_, manPath) = operators.Warehouse.manifestLayout(spark, sf0001)
     val man = spark.read.parquet(manPath).collect()
     val maxKey = man.map(_.getAs[Long]("max_key")).max
     val (lo, hi) = (maxKey / 10, maxKey / 5)
@@ -55,7 +55,7 @@ class ManifestSkipSpec extends AnyFunSuite {
   test("pruning is sound: manifest-pruned result == full-scan result") {
     val pruned = SparkEntry.queries("q_scan_manifest")(spark, sf0001)
       .collect().map(_.toString).toSeq
-    val (dataPath, manPath) = operators.Warehouse.manifestPaths(sf0001)
+    val (dataPath, manPath) = operators.Warehouse.manifestLayout(spark, sf0001)
     val maxKey = spark.read.parquet(manPath)
       .agg(max("max_key")).head.getLong(0)
     val full = spark.read.parquet(dataPath)

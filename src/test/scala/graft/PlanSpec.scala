@@ -707,7 +707,7 @@ class PlanSpec extends AnyFunSuite {
     // the in-query require already certifies inputFiles ⊆ selection;
     // here pin the magnitude: a 10% key band over 16 range-clustered
     // files reads at most a quarter of the layout
-    val (dataPath, _) = operators.Warehouse.manifestPaths(sf0001)
+    val (dataPath, _) = operators.Warehouse.manifestLayout(spark, sf0001)
     val all = spark.read.parquet(dataPath).inputFiles.length
     assert(all == 16, s"expected 16 layout files, got $all")
     assert(df.inputFiles.length <= 4,

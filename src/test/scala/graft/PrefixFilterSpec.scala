@@ -40,7 +40,7 @@ class PrefixFilterSpec extends AnyFunSuite {
     val blocked = blockedCount
     val viaPrefix = Dedup.prefixCandidates(tokenEnc, meta, 4, 5).count()
     assert(viaPrefix < blocked, s"prefix: $viaPrefix !< $blocked")
-    val adaptive = Dedup.candidatePairs(tokenEnc, meta, 4, 5, "spec:near").count()
+    val adaptive = Dedup.candidatePairs(tokenEnc, meta, 4, 5, "spec:near", sf0001).count()
     assert(adaptive < blocked, s"adaptive: $adaptive !< $blocked")
     // candidate count can never go below the TRUE pair count, and this
     // fixture is adversarial for rarity ordering (31-token vocabulary, so
@@ -58,7 +58,7 @@ class PrefixFilterSpec extends AnyFunSuite {
     assert(near.count() > 0, "fixture should contain at least one near-dup pair")
     for ((cand, tag) <- Seq(
         (Dedup.prefixCandidates(tokenEnc, meta, 4, 5), "prefix"),
-        (Dedup.candidatePairs(tokenEnc, meta, 4, 5, "spec:near2"), "adaptive"))) {
+        (Dedup.candidatePairs(tokenEnc, meta, 4, 5, "spec:near2", sf0001), "adaptive"))) {
       assert(near.join(cand, Seq("doc_a", "doc_b"), "left_anti").isEmpty,
         s"a verified near-dup pair was absent from the $tag candidate set")
     }
@@ -67,7 +67,7 @@ class PrefixFilterSpec extends AnyFunSuite {
   test("chooser: blocked path on the degenerate fixture, prefix on Zipfian vocab") {
     // fixture: 31-word vocab << pbar^2 * nblocks -> blocked path, whose
     // plan has no Generate (explode) stage
-    val fixturePlan = Dedup.candidatePairs(tokenEnc, meta, 4, 5, "spec:near3")
+    val fixturePlan = Dedup.candidatePairs(tokenEnc, meta, 4, 5, "spec:near3", sf0001)
       .queryExecution.optimizedPlan.toString
     assert(!fixturePlan.contains("Generate"),
       s"expected size-pruned block join on fixture vocab:\n${fixturePlan.take(1200)}")
@@ -80,7 +80,9 @@ class PrefixFilterSpec extends AnyFunSuite {
       "array_sort(transform(sequence(0, 19), j -> id * 20 + j)) AS codes")
     val zm = zipf.select("doc_id", "lang", "bucket", "sz")
     val ze = zipf.select("doc_id", "codes")
-    val zipfPlan = Dedup.candidatePairs(ze, zm, 4, 5, "spec:zipf")
+    // an in-memory corpus: its memo key dir is an empty temp dir
+    val zipfDir = java.nio.file.Files.createTempDirectory("graft_zipf").toString
+    val zipfPlan = Dedup.candidatePairs(ze, zm, 4, 5, "spec:zipf", zipfDir)
       .queryExecution.optimizedPlan.toString
     assert(zipfPlan.contains("Generate"),
       s"expected prefix path on Zipfian vocab:\n${zipfPlan.take(1200)}")
@@ -88,17 +90,17 @@ class PrefixFilterSpec extends AnyFunSuite {
 
   test("candidateGen conf pins either generator; rows identical; cache clears") {
     val confKey = "spark.graft.dedup.candidateGen"
-    def rows(tag: String) = Dedup.candidatePairs(tokenEnc, meta, 4, 5, s"spec:conf$tag")
+    def rows(tag: String) = Dedup.candidatePairs(tokenEnc, meta, 4, 5, s"spec:conf$tag", sf0001)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     try {
       spark.conf.set(confKey, "prefix")
       val viaPrefix = rows("P")
-      val prefixPlan = Dedup.candidatePairs(tokenEnc, meta, 4, 5, "spec:confP")
+      val prefixPlan = Dedup.candidatePairs(tokenEnc, meta, 4, 5, "spec:confP", sf0001)
         .queryExecution.optimizedPlan.toString
       assert(prefixPlan.contains("Generate"), "conf=prefix must force the prefix path")
       spark.conf.set(confKey, "blocked")
       val viaBlocked = rows("B")
-      val blockedPlan = Dedup.candidatePairs(tokenEnc, meta, 4, 5, "spec:confB")
+      val blockedPlan = Dedup.candidatePairs(tokenEnc, meta, 4, 5, "spec:confB", sf0001)
         .queryExecution.optimizedPlan.toString
       assert(!blockedPlan.contains("Generate"), "conf=blocked must force the block join")
       // both generators are exact supersets of the qualifying pairs; on
@@ -111,12 +113,32 @@ class PrefixFilterSpec extends AnyFunSuite {
       spark.conf.set(confKey, "bogus")
       intercept[IllegalArgumentException](rows("X"))
     } finally spark.conf.unset(confKey)
-    // cache invalidation: a cleared memo recomputes (observable as a fresh
-    // choice under a key the chooser already decided)
-    Dedup.clearGenChoiceCache()
-    val fresh = Dedup.candidatePairs(tokenEnc, meta, 4, 5, "spec:near3")
-      .queryExecution.optimizedPlan.toString
-    assert(!fresh.contains("Generate"), "recomputed choice must match corpus shape")
+    // the memoized choice clears when the corpus under its dir is
+    // rewritten: a copy of the fixture (blocked path) is overwritten in
+    // place with a huge-vocabulary corpus, and the same key must switch
+    // to the prefix path instead of serving the stale choice
+    val dir = java.nio.file.Files.createTempDirectory("graft_gen_rewrite")
+    val docs = dir.resolve("documents.parquet")
+    java.nio.file.Files.copy(java.nio.file.Paths.get(sf0001, "documents.parquet"), docs)
+    def plan(): String = {
+      val d = spark.read.parquet(docs.toString)
+      val m = d.selectExpr("doc_id", "lang", "n_chars DIV 50 AS bucket",
+        "size(array_distinct(split(text, ' '))) AS sz")
+      val e = d.selectExpr("doc_id", "array_sort(transform(array_distinct(" +
+        "split(text, ' ')), t -> CAST(conv(substr(md5(t), 1, 15), 16, 10) AS BIGINT))) AS codes")
+      Dedup.candidatePairs(e, m, 4, 5, "spec:rewrite", dir.toString)
+        .queryExecution.optimizedPlan.toString
+    }
+    assert(!plan().contains("Generate"), "fixture copy must take the blocked path")
+    assert(!plan().contains("Generate"))
+    assert(Artifacts.builds("dedup.candidateGen.spec:rewrite", dir.toString) == 1)
+    val staged = dir.resolve("staged").toString
+    spark.range(400).selectExpr("id AS doc_id", "'en' AS lang", "100 AS n_chars",
+        "concat_ws(' ', transform(sequence(0, 19), j -> concat('t', id * 20 + j))) AS text")
+      .coalesce(1).write.parquet(staged)
+    graft.sinks.AliasedIndex.deleteRecursively(docs)
+    java.nio.file.Files.move(java.nio.file.Paths.get(staged), docs)
+    assert(plan().contains("Generate"), "rewritten corpus served the stale generator choice")
   }
 
   test("q_dedup_cosine two-level block bounds within-block pairs") {

@@ -1,19 +1,25 @@
 package graft
 
-import scala.jdk.CollectionConverters._
+import java.nio.file.{Files, Paths}
+
+import org.apache.spark.SparkContext
+import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import graft.sync.ViewQueries
 
-/** The shared-fold memos key on the SparkSession OBJECT, not its
-  * identityHashCode — a hash collision between two sessions in one JVM
-  * must never hand one session another's folded state (the a93901d
-  * rationale, delivered to every memo in r13). This spec certifies the
-  * ViewQueries instance of the pattern with two live sessions: each
-  * gets its own state root, and both serve the correct (identical)
-  * result from their own fold.
+/** The [[Artifacts]] registry's guarantees. Session-owned entries key on
+  * the SparkSession OBJECT, not its identityHashCode — a hash collision
+  * between two sessions in one JVM must never hand one session another's
+  * folded state. Retention is bounded (stopped sweep, session cap without
+  * thrash), builds run once per key and retry after a failure, a rewrite
+  * under the keyed dir rebuilds, and scratch roots outlive their context
+  * only until the next access notices it stopped.
   */
 class SessionKeyedMemoSpec extends AnyFunSuite {
   import TestSpark._
+
+  private def tempDir(tag: String): String =
+    Files.createTempDirectory(s"graft_artifacts_$tag").toString
 
   test("two sessions fold into two distinct view-state roots, same served rows") {
     val s2 = spark.newSession()
@@ -21,13 +27,11 @@ class SessionKeyedMemoSpec extends AnyFunSuite {
     val r1 = q(spark, sf0001).collect().map(_.toString).toSeq
     val r2 = q(s2, sf0001).collect().map(_.toString).toSeq
     assert(r1 == r2, "the two sessions' served states disagree")
-    val roots = ViewQueries.sharedStates.snapshot.collect {
-      case ((s, dir, keys), root)
-          if dir == sf0001 && keys == "status,priority" &&
-            ((s eq spark) || (s eq s2)) => (s, root)
-    }.toMap
-    assert(roots.size == 2, s"expected a memo entry per session, got $roots")
-    assert(roots(spark) != roots(s2), "sessions share a fold root")
+    val keys = Seq("status", "priority")
+    val (root1, root2) =
+      (ViewQueries.sharedFold(spark, sf0001, keys), ViewQueries.sharedFold(s2, sf0001, keys))
+    assert(root1 != root2, "sessions share a fold root")
+    assert(ViewQueries.sharedFold(s2, sf0001, keys) == root2, "a session's fold was rebuilt")
   }
 
   // r13 ADVICE: the memos must not retain state forever. Stopping the
@@ -35,83 +39,127 @@ class SessionKeyedMemoSpec extends AnyFunSuite {
   // sweep runs against an injected probe; the overflow cap against real
   // newSession() clones (the churn pattern the advice names).
   test("memo evicts stopped sessions and caps live-session churn") {
-    val dead = scala.collection.mutable.Set.empty[org.apache.spark.sql.SparkSession]
-    val memo = new SessionMemo[(org.apache.spark.sql.SparkSession, Int), String](
-      _._1, cap = 100, stopped = dead.contains)
-    val s2 = spark.newSession()
-    memo.getOrBuild((spark, 1))(_ => "a")
-    memo.getOrBuild((s2, 2))(_ => "b")
-    assert(memo.liveSize == 2)
-    dead += s2 // "s2 stopped"
-    assert(memo.liveSize == 1, "stopped session's entry not swept")
-    assert(memo.get((spark, 1)).contains("a"), "live session's entry lost")
-    assert(memo.get((s2, 2)).isEmpty)
+    val dead = scala.collection.mutable.Set.empty[SparkContext]
+    val reg = new Artifacts(dead.contains, cap = 100)
+    val dir = tempDir("sweep")
+    reg.get(spark, "a", dir)("a")
+    reg.get(spark.sparkContext, "b", dir)("b")
+    assert(reg.liveSize == 2)
+    dead += spark.sparkContext // "the context stopped"
+    assert(reg.liveSize == 0, "stopped context's entries not swept")
 
-    val capped = new SessionMemo[(org.apache.spark.sql.SparkSession, Int), String](_._1, cap = 3)
-    (1 to 10).foreach { i =>
-      capped.getOrBuild((spark.newSession(), i))(_ => s"v$i")
-    }
+    val capped = new Artifacts(_.isStopped, cap = 3)
+    (1 to 10).foreach(i => capped.get(spark.newSession(), s"k$i", dir)(s"v$i"))
     assert(capped.liveSize <= 3,
       s"cap did not bound session churn: ${capped.liveSize} entries live")
-    // a capped-out memo still memoizes going forward
-    val k = (spark, 99)
-    assert(capped.getOrBuild(k)(_ => "fresh") == "fresh")
-    assert(capped.get(k).contains("fresh"))
+    // context-owned entries are not counted against the session cap
+    capped.get(spark.sparkContext, "ctx", dir)("c")
+    (11 to 20).foreach(i => capped.get(spark.newSession(), s"k$i", dir)(s"v$i"))
+    assert(capped.get(spark.sparkContext, "ctx", dir)("rebuilt") == "c")
+    // a capped-out registry still memoizes going forward
+    assert(capped.get(spark, "fresh", dir)("fresh") == "fresh")
+    assert(capped.get(spark, "fresh", dir)("again") == "fresh")
   }
 
   // r14 verdict #4: the cap bounds SESSIONS, not entries — one session
-  // holding more entries than the cap (Warehouse.written: 11 once-tags
-  // vs old cap 8) must never thrash. The old `if (size > cap) clear()`
-  // wholesale-cleared on every access past the cap and re-ran idempotent
-  // layout writes.
+  // holding more entries than the cap (the Warehouse's 14 layout tags vs
+  // a cap of 8) must never thrash.
   test("one session's full tag set never rebuilds under the cap") {
     var builds = 0
-    val memo = new SessionMemo[(org.apache.spark.sql.SparkSession, String), Unit](
-      _._1, cap = 2)
+    val reg = new Artifacts(_.isStopped, cap = 2)
+    val dir = tempDir("thrash")
     val tags = (1 to 11).map(i => s"tag$i")
-    tags.foreach(t => memo.getOrBuild((spark, t))(_ => builds += 1))
-    tags.foreach(t => memo.getOrBuild((spark, t))(_ => builds += 1))
+    tags.foreach(t => reg.get(spark, t, dir)(builds += 1))
+    tags.foreach(t => reg.get(spark, t, dir)(builds += 1))
     assert(builds == 11, s"expected 11 builds (one per tag), got $builds")
     // churn from clone sessions evicts oldest-touched CLONES, not the
     // session that keeps getting accessed between them
     (1 to 5).foreach { i =>
-      memo.getOrBuild((spark.newSession(), s"x$i"))(_ => ())
-      memo.getOrBuild((spark, "tag1"))(_ => builds += 1)
+      reg.get(spark.newSession(), s"x$i", dir)(())
+      reg.get(spark, "tag1", dir)(builds += 1)
     }
-    tags.foreach(t => memo.getOrBuild((spark, t))(_ => builds += 1))
+    tags.foreach(t => reg.get(spark, t, dir)(builds += 1))
     assert(builds == 11, "clone-session churn evicted the active session's tags")
   }
 
+  test("one build per key, a failed build retries, a rewritten dir rebuilds") {
+    val reg = new Artifacts(_.isStopped, cap = 8)
+    val dir = tempDir("fingerprint")
+    val f = Paths.get(dir, "part.txt")
+    Files.writeString(f, "v1")
+    var attempts = 0
+    def build(): Int = { // fails once, like a transient job failure
+      attempts += 1
+      if (attempts == 1) throw new IllegalStateException("transient")
+      attempts
+    }
+    intercept[IllegalStateException](reg.get(spark, "x", dir)(build()))
+    assert(reg.get(spark, "x", dir)(build()) == 2, "failed build was not retried")
+    assert(reg.get(spark, "x", dir)(build()) == 2, "unchanged dir rebuilt")
+    assert(reg.builds("x", dir) == 2) // the failed attempt and the retry
+    Files.writeString(f, "v2 longer")
+    assert(reg.get(spark, "x", dir)(build()) == 3, "rewritten dir served a stale value")
+    // concurrent callers of one key share one build
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    val calls = (1 to 8).map(_ => Future(
+      reg.get(spark, "slow", dir) { Thread.sleep(200); new Object }))
+    assert(calls.map(Await.result(_, scala.concurrent.duration.Duration(60, "s")))
+      .distinct.size == 1)
+    assert(reg.builds("slow", dir) == 1)
+  }
+
+  test("scratch roots are fresh, and deleted only after their context stops") {
+    val dead = scala.collection.mutable.Set.empty[SparkContext]
+    val reg = new Artifacts(dead.contains, cap = 8)
+    val (a, b) = (reg.root(spark, "t"), reg.root(spark, "t"))
+    assert(a != b, "root() handed out the same directory twice")
+    Files.createDirectories(Paths.get(a))
+    Files.writeString(Paths.get(a, "f"), "x")
+    reg.get(spark, "touch", a)(()) // an access while the context runs
+    assert(Files.exists(Paths.get(a, "f")), "root deleted while its context runs")
+    dead += spark.sparkContext
+    reg.liveSize // the next access sweeps
+    assert(!Files.exists(Paths.get(a).getParent), "stopped context's roots survived")
+  }
+
+  test("registerAll keeps a session's temp views on its latest fixture dir") {
+    val s = spark.newSession()
+    def orders(dir: String): Long = {
+      Tables.registerAll(s, dir)
+      s.sql("SELECT count(*) FROM orders").head().getLong(0)
+    }
+    val sf001 = sf0001.replace("sf0.001", "sf0.01")
+    val (a, b) = (orders(sf0001), orders(sf001))
+    assert(a != b, "the two fixture scales should differ")
+    assert(orders(sf0001) == a, "views stayed on the previous dir")
+  }
+
   // The Warehouse end-to-end pin (r14 verdict #4 + the r15 race it
-  // exposed): the layout queries run twice on a FRESH session — which
+  // exposed): the layout queries run twice on FRESH sessions — which
   // under the old (session, dir, tag) keying re-ran every mode=overwrite
   // layout write into the shared scratch path (thrash, plus
-  // FAILED_READ_FILE races against parallel readers). Layouts are now
-  // once per (dir, tag) per JVM: no tag this run touches may build more
-  // than once, from any session.
+  // FAILED_READ_FILE races against parallel readers). Layouts are owned
+  // by the context: no tag this run touches may build more than once,
+  // from any session.
   test("Warehouse: layout tags build at most once per JVM, any session") {
     val warehouseKeys = Seq(
       "q_hive_table", "q_scan_partitioned", "q_scan_zorder", "q_scan_csv",
       "q_scan_json", "q_scan_binaryfile", "q_sink_compacted", "q_scan_orc",
       "q_scan_evolution", "q_scan_dpp", "q_join_bucketed", "q_scan_manifest",
       "q_scan_timetravel", "q_scan_deletevector")
-    // the distinct once-tags the keys above build (dpp shares "parts"
-    // with partitioned); parallel suites may build OTHER tags for the
-    // same dir in this JVM, so the pin is subset + never-rebuilt, not
-    // an exact census
-    val expected = Set("hive_orders", "parts", "zorder", "csv", "json",
+    // the distinct layout tags the keys above build (dpp shares "parts"
+    // with partitioned)
+    val expected = Seq("hive_orders", "parts", "zorder", "csv", "json",
       "binfiles", "compacted", "orc", "evo", "dppdim", "buckets",
       "manifest", "ttable", "posdel")
-    val s = spark.newSession()
-    def runAll(sess: org.apache.spark.sql.SparkSession): Unit =
+    def runAll(sess: SparkSession): Unit =
       warehouseKeys.foreach(k => SparkEntry.queries(k)(sess, sf0001).collect())
-    runAll(s)
+    runAll(spark.newSession())
     runAll(spark.newSession()) // a second fresh session must also be all hits
-    val counts = graft.operators.Warehouse.layoutBuilds.asScala
-      .collect { case ((d, tag), n) if d == sf0001 => tag -> n.longValue }
-      .toMap
-    assert(expected.subsetOf(counts.keySet),
-      s"missing layout tags: ${expected.diff(counts.keySet)}")
+    val counts = expected.map(t => t -> Artifacts.builds(s"warehouse.$t", sf0001)).toMap
+    val missing = counts.filter(_._2 == 0L)
+    assert(missing.isEmpty, s"missing layout tags: ${missing.keys}")
     val rebuilt = counts.filter(_._2 > 1L)
     assert(rebuilt.isEmpty, s"layouts rebuilt: $rebuilt — memo thrash or session re-keying")
   }

@@ -58,7 +58,7 @@ class SourcesSpec extends AnyFunSuite {
     // fragmented, and compaction strictly reduced the file count while
     // keeping every file under the 1000-record roll threshold
     SparkEntry.queries("q_sink_compacted")(spark, sf0001).collect()
-    val (frag, compacted) = graft.operators.Warehouse.compactionPaths(sf0001)
+    val (frag, compacted) = graft.operators.Warehouse.compactionLayout(spark, sf0001)
     def parquets(root: String): Seq[java.nio.file.Path] = {
       val s = java.nio.file.Files.walk(java.nio.file.Paths.get(root))
       try {

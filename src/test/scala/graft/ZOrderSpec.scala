@@ -39,11 +39,11 @@ class ZOrderSpec extends AnyFunSuite {
   }
 
   test("z-order layout prunes files on BOTH dimensions; linear sort only on its own") {
-    // building the layout is the query's `once` side effect
+    // building the layout is the query's memoized side effect
     val served = SparkEntry.queries("q_scan_zorder")(spark, sf0001)
     assert(served.count() > 0)
 
-    val (zn, zu, zt) = overlaps(operators.Warehouse.zorderPath(sf0001))
+    val (zn, zu, zt) = overlaps(operators.Warehouse.zorderLayout(spark, sf0001))
     assert(zn >= 8, s"expected a multi-file layout, got $zn files")
     assert(zu <= zn / 2, s"z-order: user band hits $zu of $zn files — no skipping")
     assert(zt <= zn / 2, s"z-order: time window hits $zt of $zn files — no skipping")
@@ -61,16 +61,7 @@ class ZOrderSpec extends AnyFunSuite {
       assert(lu >= ln - 1, s"linear layout unexpectedly prunes user band: $lu of $ln")
       assert(lt <= ln / 2, s"linear layout must prune its own sort column: $lt of $ln")
       assert(zu < lu, "z-order must beat linear sort on the non-sort dimension")
-    } finally {
-      // one full events copy per run — sweep it (Warehouse.scratchRoot
-      // documents the same leak for its own root)
-      import java.nio.file.{Files, Path}
-      import java.util.Comparator
-      val walk = Files.walk(linDir)
-      try walk.sorted(Comparator.reverseOrder[Path]())
-        .forEach(f => Files.deleteIfExists(f))
-      finally walk.close()
-    }
+    } finally graft.sinks.AliasedIndex.deleteRecursively(linDir) // one events copy per run
   }
 
   test("q_scan_zorder pushes both range predicates into the parquet scan") {
