@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{Dets, QueryFamily, Tables}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import Dets._
@@ -200,6 +200,25 @@ object Dedup extends QueryFamily {
     once.select("doc_a", "doc_b", "sim_a", "sim_b")
   }
 
+  /** SimHash near-dup pairs (hamming <= 3 within a language) at
+    * signature width `bits` over `bands` pigeonhole bands:
+    * (doc_a, doc_b, sim_a, hamming), sorted. */
+  private def simhashPairs(s: SparkSession, dir: String, bits: Int, bands: Int): DataFrame = {
+    val d = Tables(s, dir, "documents").select(col("doc_id"), col("lang"),
+      array_distinct(split(col("text"), " ")).as("toks"))
+    simhashCandidates(simhashSignatures(d, bits), bits, bands)
+      .withColumn("hamming", expr("CAST(bit_count(sim_a ^ sim_b) AS BIGINT)"))
+      .where(col("hamming") <= 3)
+      .select(col("doc_a"), col("doc_b"), col("sim_a"), col("hamming"))
+      .orderBy("doc_a", "doc_b")
+  }
+
+  /** (doc_id, lang, toks): each document's sorted distinct token set —
+    * the MinHash input. */
+  private def sortedToks(s: SparkSession, dir: String): DataFrame =
+    Tables(s, dir, "documents").select(col("doc_id"), col("lang"),
+      array_sort(array_distinct(split(col("text"), " "))).as("toks"))
+
   /** Exactly-once MinHash-LSH candidate pairs over `d(doc_id, lang,
     * toks)`: `perms`-hash signature (one md5 per token, MinHashSig),
     * split into `bands` disjoint bands of perms/bands rows each, pairs
@@ -236,23 +255,24 @@ object Dedup extends QueryFamily {
       .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
   }
 
-  /** Two-level-blocked cosine pairs over `e(vec_id, label, v)`: self-join
-    * within (label, sign-LSH bucket of `planes` hyperplanes), cosine
-    * computed once per surviving pair. Requires VecDot registered.
+  /** Embedding near-dup pairs with cosine >= 0.3 over [[vectors]]:
+    * self-join within (label, sign-LSH bucket of `planes` hyperplanes),
+    * cosine computed once per surviving pair, rounded for presentation.
     * Within-block pair volume is N²/(labels · 2^planes) for a balanced
     * corpus — `planes` is the knob that keeps it linear when scaled with
     * log2(N).
     */
-  private[graft] def cosinePairs(e: DataFrame, planes: Int): DataFrame = {
-    val bucket = lshBucketExpr(j => s"element_at(v, $j)", planes)
-    val b = e
-      .withColumn("norm", expr("sqrt(vec_dot(v, v))"))
-      .withColumn("bucket", expr(bucket))
+  private def cosinePairs(s: SparkSession, dir: String, planes: Int): DataFrame = {
+    val b = vectors(s, dir)
+      .withColumn("bucket", expr(lshBucketExpr(j => s"element_at(v, $j)", planes)))
     b.as("a").join(b.as("b"),
         col("a.label") === col("b.label") && col("a.bucket") === col("b.bucket") &&
         col("a.vec_id") < col("b.vec_id"))
       .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"),
         (expr("vec_dot(a.v, b.v)") / (col("a.norm") * col("b.norm"))).as("cos"))
+      .where(col("cos") >= 0.3)
+      .select(col("vec_a"), col("vec_b"), round(col("cos"), 4).as("cos_sim"))
+      .orderBy("vec_a", "vec_b")
   }
 
   /** Prefix-filtered candidate pairs (AllPairs/PPJoin) for Jaccard >=
@@ -295,21 +315,36 @@ object Dedup extends QueryFamily {
       .groupBy("doc_id")
       .agg(array_sort(collect_list(struct(col("df"), col("code")))).as("ord"),
         count(lit(1)).as("sz"))
-    val prefix = ordered
-      .withColumn("p", col("sz") - expr(s"($num * sz + ${den - 1}) DIV $den") + 1)
-      .select(col("doc_id"), col("sz"),
-        posexplode(expr("slice(ord, 1, CAST(p AS INT))")).as(Seq("pos", "pc")))
-      .select(col("doc_id"), col("sz"), col("pos"), col("pc.code").as("code"))
       .join(meta.drop("sz").hint("shuffle_hash"), "doc_id")
-    val a = prefix.select(col("doc_id").as("doc_a"), col("lang").as("la"),
-      col("bucket").as("ba"), col("sz").as("sza"), col("pos").as("ia"), col("code"))
-    val b = prefix.select(col("doc_id").as("doc_b"), col("lang").as("lb"),
-      col("bucket").as("bb"), col("sz").as("szb"), col("pos").as("ib"), col("code"))
-    a.join(b.hint("shuffle_hash"), Seq("code"))
+    prefixJoin(ordered, "code", Seq("lang", "bucket"),
+      col("sz") - expr(s"($num * sz + ${den - 1}) DIV $den") + 1,
+      expr(s"($num * (sza + szb) + ${num + den - 1}) DIV ${num + den}"))
+  }
+
+  /** The PPJoin core both prefix-filtered generators share: over
+    * `ordered` rows (doc_id, sz, ord, blocks…) — `ord` the doc's tokens
+    * as structs sorted rarest-first, field `tok` the token — slice each
+    * doc's first `p` tokens (docs with p < 1 post nothing), posexplode
+    * them with their 0-based positions, self-join on (blocks, token),
+    * keep copies passing the positional bound min(sza-ia, szb-ib) >=
+    * `bound`, and collapse the copies a pair shares to one (doc_a,
+    * doc_b) with doc_a < doc_b. The self-join is pinned shuffle_hash:
+    * the prefix table is corpus-size at 100 TB.
+    */
+  private def prefixJoin(ordered: DataFrame, tok: String, blocks: Seq[String],
+      p: Column, bound: Column): DataFrame = {
+    val keep = Seq("doc_id", "sz") ++ blocks
+    val prefix = ordered.withColumn("p", p).where(col("p") >= 1)
+      .select(keep.map(col) :+
+        posexplode(expr("slice(ord, 1, CAST(p AS INT))")).as(Seq("pos", "pc")): _*)
+      .select(keep.map(col) ++ Seq(col("pos"), col(s"pc.$tok").as(tok)): _*)
+    def side(id: String, sz: String, i: String) = prefix.select(
+      Seq(col("doc_id").as(id), col("sz").as(sz), col("pos").as(i), col(tok)) ++
+        blocks.map(col): _*)
+    side("doc_a", "sza", "ia").join(side("doc_b", "szb", "ib").hint("shuffle_hash"),
+        blocks :+ tok)
       .where(col("doc_a") < col("doc_b") &&
-        col("la") === col("lb") && col("ba") === col("bb") &&
-        least(col("sza") - col("ia"), col("szb") - col("ib")) >=
-          expr(s"($num * (sza + szb) + ${num + den - 1}) DIV ${num + den}"))
+        least(col("sza") - col("ia"), col("szb") - col("ib")) >= bound)
       .groupBy("doc_a", "doc_b").agg(count(lit(1)).as("n_shared"))
       .select("doc_a", "doc_b")
   }
@@ -341,24 +376,22 @@ object Dedup extends QueryFamily {
     math.min(cap, math.max(floor, w))
   }
 
+  /** The target LSH bucket population every `auto` fan-out aims for. */
+  private val TargetBucket = 64L
+
   /** Resolve a fan-out conf knob: unset → the declared fixture value
     * (oracle-pinned); an integer → pinned explicitly; `auto` → derived
     * from the memoized approximate corpus count via [[autoWidth]] — the
     * scale-safe default an operator can set fleet-wide without knowing
-    * each corpus's size. The target bucket population is
-    * `spark.graft.dedup.targetBucket` (default 64).
+    * each corpus's size.
     */
-  /** The one source of truth for the `auto` target bucket population. */
-  private def targetBucket(s: SparkSession): Long =
-    s.conf.getOption("spark.graft.dedup.targetBucket").map(_.toLong).getOrElse(64L)
-
   private def resolveFanout(s: SparkSession, confKey: String, fixture: Int,
       cap: Int, name: String, dir: String)(corpus: => (DataFrame, String)): Int =
     s.conf.getOption(confKey) match {
       case None => fixture
       case Some("auto") =>
         val (d, idCol) = corpus
-        autoWidth(approxCorpusCount(d, idCol, name, dir), targetBucket(s), fixture, cap)
+        autoWidth(approxCorpusCount(d, idCol, name, dir), TargetBucket, fixture, cap)
       case Some(v) => v.toInt
     }
 
@@ -384,51 +417,29 @@ object Dedup extends QueryFamily {
     * vocab > pbar^2 * nblocks — expected prefix-join pairs
     * ~(ndocs*pbar)^2/(2*vocab) vs blocked pairs ~ndocs^2/(2*nblocks).
     * HLL estimates suffice: a wrong choice costs time, never rows —
-    * both generators are exact supersets of the qualifying pairs.
-    * `spark.graft.dedup.candidateGen=prefix|blocked|auto` (default auto)
-    * pins a generator and skips the statistics jobs entirely — for an
-    * operator who knows the corpus shape.
+    * both generators are exact supersets of the qualifying pairs. The
+    * blocked path is [[incrementalCandidates]] with the whole corpus as
+    * its delta.
     */
   private[graft] def candidatePairs(enc: DataFrame, meta: DataFrame,
       num: Int, den: Int, name: String, dir: String): DataFrame = {
-    val usePrefix: Boolean = enc.sparkSession.conf
-      .getOption("spark.graft.dedup.candidateGen").getOrElse("auto") match {
-      case "prefix"  => true
-      case "blocked" => false
-      case "auto" =>
-        graft.Artifacts.get(enc.sparkSession.sparkContext,
-            s"dedup.candidateGen.$name", dir) {
-          val m = meta.agg(
-            avg(expr(s"sz - (($num * CAST(sz AS BIGINT) + ${den - 1}) DIV $den) + 1")),
-            approx_count_distinct(concat_ws(":", col("lang"), col("bucket")))).head()
-          // empty corpus: avg over zero rows is null — either generator
-          // emits zero pairs; take the blocked path without the vocab job
-          !m.isNullAt(0) && {
-            val pbar = m.getDouble(0)
-            val nblocks = m.getLong(1)
-            val vocab = enc.select(explode(col("codes")).as("code"))
-              .agg(approx_count_distinct(col("code"))).head().getLong(0)
-            vocab.toDouble > pbar * pbar * nblocks
-          }
-        }
-      case other => throw new IllegalArgumentException(
-        s"spark.graft.dedup.candidateGen=$other: expected prefix|blocked|auto")
+    val usePrefix = graft.Artifacts.get(enc.sparkSession.sparkContext,
+        s"dedup.candidateGen.$name", dir) {
+      val m = meta.agg(
+        avg(expr(s"sz - (($num * CAST(sz AS BIGINT) + ${den - 1}) DIV $den) + 1")),
+        approx_count_distinct(concat_ws(":", col("lang"), col("bucket")))).head()
+      // empty corpus: avg over zero rows is null — either generator
+      // emits zero pairs; take the blocked path without the vocab job
+      !m.isNullAt(0) && {
+        val pbar = m.getDouble(0)
+        val nblocks = m.getLong(1)
+        val vocab = enc.select(explode(col("codes")).as("code"))
+          .agg(approx_count_distinct(col("code"))).head().getLong(0)
+        vocab.toDouble > pbar * pbar * nblocks
+      }
     }
     if (usePrefix) prefixCandidates(enc, meta, num, den)
-    else {
-      val a = meta.select(col("doc_id").as("doc_a"), col("lang").as("la"),
-        col("bucket").as("ba"), col("sz").as("sza"))
-      val b = meta.select(col("doc_id").as("doc_b"), col("lang").as("lb"),
-        col("bucket").as("bb"), col("sz").as("szb"))
-      // both sides are one-row-per-doc (corpus-size at 100 TB): pin the
-      // shuffle join AQE's fixture-size broadcast would otherwise replace
-      a.join(b.hint("shuffle_hash"),
-          col("la") === col("lb") && col("ba") === col("bb") &&
-          col("doc_a") < col("doc_b") &&
-          col("sza") * den >= col("szb") * num &&
-          col("szb") * den >= col("sza") * num)
-        .select("doc_a", "doc_b")
-    }
+    else incrementalCandidates(meta, meta, num, den)
   }
 
   /** Candidate pairs for INCREMENTAL dedup: a new batch (`delta`) arriving
@@ -508,16 +519,27 @@ object Dedup extends QueryFamily {
       .orderBy("doc_id")
   }
 
-  /** Checkpoint strategy for the CC loop. localCheckpoint (the default)
-    * pins each pass's blocks in EXECUTOR memory/disk — fast, but
-    * non-reliable: the truncated lineage is not recomputable, so at
-    * 100 TB one executor loss mid-loop kills the whole job. Setting
-    * spark.graft.cluster.reliableCheckpoint=true switches every pass to
-    * a reliable checkpoint() under the SparkContext checkpoint dir —
-    * on a real cluster point that at HDFS/S3; for single-JVM runs a tmp
-    * dir is provisioned (and swept at JVM exit) if none is set. Costs
-    * one round-trip write per pass, buys executor-loss survival.
-    */
+  // Postings-ordered signature table — (doc_id, lang, ord, sz) with
+  // `ord` the doc's distinct tokens as (df, t) structs sorted
+  // rarest-first — MEMOIZED per (session, dir) in graft.Artifacts and
+  // pinned (localCheckpoint via passPinner): containment plus both graph
+  // edge tiers all start from it, and its two shuffles (df count, per-doc
+  // fold) are layout work that must run once, not once per caller.
+  // Everything the generators need derives from it without touching the
+  // corpus again: the full postings explode its arrays, the token
+  // arrays re-sort them lexically.
+  private def rarestOrdered(s: SparkSession, dir: String): DataFrame =
+    graft.Artifacts.get(s, "dedup.postings", dir) {
+      val tok = Tables(s, dir, "documents")
+        .select(col("doc_id"), col("lang"),
+          explode(array_distinct(split(col("text"), " "))).as("t"))
+      val dfreq = tok.groupBy("lang", "t").agg(count(lit(1)).as("df"))
+      passPinner(s)(tok.join(dfreq.hint("shuffle_hash"), Seq("lang", "t"))
+        .groupBy("doc_id", "lang")
+        .agg(array_sort(collect_list(struct(col("df"), col("t")))).as("ord"),
+          count(lit(1)).as("sz")))
+    }
+
   /** Same-lang doc pairs with distinct-sorted token arrays attached —
     * the SHARED candidate construction for the whole-token-set metrics
     * (containment here, the similarity graph in GraphOps). Candidates
@@ -552,27 +574,6 @@ object Dedup extends QueryFamily {
     * RareTokenCandidatesSpec pins pair-set equality against the naive
     * lang-block join on the fixtures and the no-broadcast plan shape.
     */
-  // Postings-ordered signature table — (doc_id, lang, ord, sz) with
-  // `ord` the doc's distinct tokens as (df, t) structs sorted
-  // rarest-first — MEMOIZED per (session, dir) in graft.Artifacts and
-  // pinned (localCheckpoint via passPinner): containment plus both graph
-  // edge tiers all start from it, and its two shuffles (df count, per-doc
-  // fold) are layout work that must run once, not once per caller.
-  // Everything the generators need derives from it without touching the
-  // corpus again: the full postings explode its arrays, the token
-  // arrays re-sort them lexically.
-  private def rarestOrdered(s: SparkSession, dir: String): DataFrame =
-    graft.Artifacts.get(s, "dedup.postings", dir) {
-      val tok = Tables(s, dir, "documents")
-        .select(col("doc_id"), col("lang"),
-          explode(array_distinct(split(col("text"), " "))).as("t"))
-      val dfreq = tok.groupBy("lang", "t").agg(count(lit(1)).as("df"))
-      passPinner(s)(tok.join(dfreq.hint("shuffle_hash"), Seq("lang", "t"))
-        .groupBy("doc_id", "lang")
-        .agg(array_sort(collect_list(struct(col("df"), col("t")))).as("ord"),
-          count(lit(1)).as("sz")))
-    }
-
   private[graft] def langBlockedTokenPairs(
       s: SparkSession, dir: String, ordered: Boolean,
       minShared: Int = 1): DataFrame = {
@@ -599,24 +600,9 @@ object Dedup extends QueryFamily {
         a.join(b.hint("shuffle_hash"), Seq("lang", "t"))
           .where(col("da") =!= col("db") && col("sza") <= col("szb"))
           .select("da", "db")
-      } else {
-        val prefix = ord
-          .withColumn("p", col("sz") - lit(minShared) + 1)
-          .where(col("p") >= 1)
-          .select(col("doc_id"), col("lang"), col("sz"),
-            posexplode(expr("slice(ord, 1, CAST(p AS INT))")).as(Seq("pos", "pc")))
-          .select(col("doc_id"), col("lang"), col("sz"), col("pos"),
-            col("pc.t").as("t"))
-        val a = prefix.select(col("doc_id").as("da"), col("lang"),
-          col("sz").as("sza"), col("pos").as("ia"), col("t"))
-        val b = prefix.select(col("doc_id").as("db"), col("lang"),
-          col("sz").as("szb"), col("pos").as("ib"), col("t"))
-        a.join(b.hint("shuffle_hash"), Seq("lang", "t"))
-          .where(col("da") < col("db") &&
-            least(col("sza") - col("ia"), col("szb") - col("ib")) >= minShared)
-          .groupBy("da", "db").agg(count(lit(1)))
-          .select("da", "db")
-      }
+      } else prefixJoin(ord, "t", Seq("lang"), col("sz") - lit(minShared) + 1,
+          lit(minShared))
+        .select(col("doc_a").as("da"), col("doc_b").as("db"))
     val ta = d.select(col("doc_id").as("da"), col("toks").as("ta"))
     val tb = d.select(col("doc_id").as("db"), col("toks").as("tb"))
     pairs.join(ta.hint("shuffle_hash"), "da")
@@ -638,6 +624,18 @@ object Dedup extends QueryFamily {
       Some(row.getAs[Long]("n_changed") == 0L)
     } catch { case _: java.util.concurrent.TimeoutException => None }
 
+  /** Checkpoint strategy for every pinned artifact (the CC loop's
+    * passes, postings, near-dup edges, trained codebooks and centroids).
+    * localCheckpoint (the default) pins blocks in EXECUTOR memory/disk —
+    * fast, but non-reliable: the truncated lineage is not recomputable,
+    * so at 100 TB one executor loss mid-loop kills the whole job. Setting
+    * spark.graft.cluster.reliableCheckpoint=true switches every pin to
+    * a reliable checkpoint() under the SparkContext checkpoint dir —
+    * on a real cluster point that at HDFS/S3; for single-JVM runs a
+    * scratch dir is provisioned (deleted when the context stops) if none
+    * is set. Costs one round-trip write per pin, buys executor-loss
+    * survival.
+    */
   private[operators] def passPinner(s: SparkSession): DataFrame => DataFrame = {
     val reliable = s.conf.getOption("spark.graft.cluster.reliableCheckpoint")
       .exists(_.toBoolean)
@@ -677,25 +675,109 @@ object Dedup extends QueryFamily {
         .select(col("doc_a"), col("doc_b")))
     }
 
+  // ---- ANN probe ranking, shared by every q_sim_* key: probes are the
+  // vectors with vec_id < 10, candidates the rest, and the (small) probe
+  // side broadcasts against the candidates. ----
+
+  /** (vec_id, label, v, norm): the embedding corpus as DOUBLE vectors
+    * with their L2 norms — the one vector load of the cosine kernels
+    * (registers vec_dot). */
+  private def vectors(s: SparkSession, dir: String): DataFrame = {
+    graft.functions.VecDot.register(s)
+    Tables(s, dir, "embeddings").select(col("vec_id"), col("label"),
+      transform(col("embedding"), x => x.cast("double")).as("v"))
+      .withColumn("norm", norm("v"))
+  }
+
+  /** L2 norm of DOUBLE-vector column `v`. */
+  private def norm(v: String): Column = expr(s"sqrt(vec_dot($v, $v))")
+
+  /** Cosine of probe vector `p` and candidate vector `c` from their
+    * norms, rounded to the sim family's 4-dp score grid. */
+  private def cosine(p: String, c: String, pn: String, cn: String): Column =
+    round(expr(s"vec_dot($p, $c)") / (col(pn) * col(cn)), 4)
+
+  /** A probe's candidates ordered by `by`, ties on candidate id `id`. */
+  private def perProbe(by: Column, id: String = "neighbor_id") =
+    Window.partitionBy("probe_id").orderBy(by, col(id))
+
+  /** The top-k tail every ANN key ends in: rank each probe's candidates
+    * by `by` (score descending for cosine, `adc_dist` ascending for
+    * ADC; ties on `id`), keep the first `k`, and emit (probe_id, rank
+    * BIGINT, neighbor_id, `value`) — sorted by (probe_id, rank) unless
+    * the caller keeps composing.
+    */
+  private def topK(scored: DataFrame, k: Int, by: Column, value: String,
+      id: String = "neighbor_id", sorted: Boolean = true): DataFrame = {
+    val top = scored.withColumn("rank", row_number().over(perProbe(by, id)))
+      .where(col("rank") <= k)
+      .select(col("probe_id"), big(col("rank")).as("rank"),
+        if (id == "neighbor_id") col(id) else col(id).as("neighbor_id"), col(value))
+    if (sorted) top.orderBy("probe_id", "rank") else top
+  }
+
+  /** Every (candidate, probe) pair with its exact cosine `score` — one
+    * broadcast cross join: q_sim_topk's input and the recall keys'
+    * ground truth. */
+  private def exactScores(s: SparkSession, dir: String): DataFrame = {
+    val e = vectors(s, dir)
+    val probes = e.where(col("vec_id") < 10)
+      .select(col("vec_id").as("probe_id"), col("v").as("pv"), col("norm").as("pnorm"))
+    e.where(col("vec_id") >= 10)
+      .select(col("vec_id").as("neighbor_id"), col("v").as("cv"), col("norm").as("cnorm"))
+      .crossJoin(broadcast(probes))
+      .withColumn("score", cosine("pv", "cv", "pnorm", "cnorm"))
+  }
+
+  /** The exact cosine top-5 as (probe_id, neighbor_id) — what the PQ
+    * recall keys grade each approximate path against. */
+  private def exactTopK(s: SparkSession, dir: String): DataFrame =
+    exactScores(s, dir)
+      .withColumn("rnk", row_number().over(perProbe(col("score").desc)))
+      .where(col("rnk") <= 5)
+      .select("probe_id", "neighbor_id")
+
+  /** Per-probe recall of `exact` (probe_id, neighbor_id) against each
+    * graded (flag, output, set): every set left-joins as a 1L `flag`
+    * column, then one row per probe with n_exact and each set's hit
+    * count under its output name. */
+  private def gradeHits(exact: DataFrame,
+      graded: (String, String, DataFrame)*): DataFrame = {
+    val keys = Seq("probe_id", "neighbor_id")
+    graded.foldLeft(exact) { case (acc, (flag, _, set)) =>
+      acc.join(set.select(col("probe_id"), col("neighbor_id"), lit(1L).as(flag)),
+        keys, "left")
+    }.groupBy("probe_id")
+      .agg(count(lit(1)).as("n_exact"), graded.map { case (flag, out, _) =>
+        sum(coalesce(col(flag), lit(0L))).as(out) }: _*)
+      .orderBy("probe_id")
+  }
+
+  /** Each probe's `nprobe` nearest coarse centroids as struct `pc` (d,
+    * k`fields`) beside probe_id, from the k-means assignment `av` and
+    * centroid row `cents` (TextOps.kmeansAssign / kmeansCentroidRow) —
+    * integer squared distances, (d, k) order, the centroid row
+    * broadcast. `fields` adds struct members computed per centroid `c`.
+    */
+  private def nearestCentroids(av: DataFrame, cents: DataFrame, nprobe: Int,
+      fields: String = ""): DataFrame =
+    av.where(col("vec_id") < 10)
+      .crossJoin(broadcast(cents))
+      .select(col("vec_id").as("probe_id"), explode(expr(
+        s"slice(array_sort(transform(cents, c -> struct(" +
+          s"${TextOps.intSqd("fx", "c.cv")} AS d, c.k AS k$fields))), 1, $nprobe)")).as("pc"))
+
   // ---- Product-quantization plumbing, shared by q_sim_pq (sample
   // codebook), q_sim_pq_trained (subspace-wise Lloyd's codebook) and
   // q_sim_recall_pq (both graded against the exact top-5). ----
 
   /** (vec_id, s, sv): the fixed-point corpus split into 8 8-dim
     * subvectors, one row per (vector, subspace). */
-  private def pqSubvectors(s: SparkSession, dir: String): DataFrame = {
-    val e = Tables(s, dir, "embeddings").select(col("vec_id"),
-      expr("transform(embedding, x -> " +
-        "CAST(floor(CAST(x AS DOUBLE) * 1000.0D + 0.5D) AS BIGINT))").as("fx"))
-    e.select(col("vec_id"), explode(expr(
+  private def pqSubvectors(s: SparkSession, dir: String): DataFrame =
+    TextOps.fixedPointVectors(s, dir).select(col("vec_id"), explode(expr(
         "transform(sequence(0, 7), s -> " +
           "struct(s AS s, slice(fx, s * 8 + 1, 8) AS sv))")).as("x"))
       .select(col("vec_id"), col("x.s").as("s"), col("x.sv").as("sv"))
-  }
-
-  /** Exact-integer squared distance between a subvector and a centroid. */
-  private val pqSqd = "aggregate(zip_with(sv, cent, (a, b) -> (a - b) * (a - b)), " +
-    "CAST(0 AS BIGINT), (acc, x) -> acc + x)"
 
   /** The ksub-centroid-per-subspace codebook (s, k, cent), 16 (4-bit
     * codes) unless a caller asks for more. trained=false: the first ksub
@@ -737,8 +819,7 @@ object Dedup extends QueryFamily {
       val tr = sub.where(col("vec_id") >= 10)
       // sv is constant per (vec_id, s) group, so first() carries it
       // through the argmin without a second join back to tr
-      val asg = tr.join(broadcast(cb0), "s")
-        .withColumn("d", expr(pqSqd))
+      val asg = subspaceDists(tr, cb0)
         .groupBy("vec_id", "s")
         .agg(min(struct(col("d"), col("k"))).as("m"), first(col("sv")).as("sv"))
         .select(col("s"), col("m.k").as("k"), col("sv"))
@@ -757,11 +838,47 @@ object Dedup extends QueryFamily {
     }
   }
 
+  // The ADC serve chain flat PQ and IVFADC share: subspace distances
+  // to a broadcast codebook, per-candidate argmin codes, per-probe
+  // distance tables, the 8-lookup ADC sum, and the top-5 tail.
+
+  /** `rows` (…, s, sv) joined to every codeword of the broadcast
+    * codebook `cb` (s, code, cent), with the exact integer squared
+    * distance `d`. */
+  private def subspaceDists(rows: DataFrame, cb: DataFrame): DataFrame =
+    rows.join(broadcast(cb), "s").withColumn("d", expr(TextOps.intSqd("sv", "cent")))
+
+  /** Per-candidate PQ codes from `dist`: the (d, code)-argmin codeword
+    * per (vec_id, s), folded into one s-ordered `codes` array per
+    * vector; `carry` columns (constant per vector) ride along. */
+  private def pqCodes(dist: DataFrame, code: String, carry: String*): DataFrame = {
+    def carried = carry.map(c => first(col(c)).as(c))
+    val out = carried :+ expr(
+      s"transform(array_sort(collect_list(struct(s, m.$code AS $code))), x -> x.$code)")
+      .as("codes")
+    dist.groupBy("vec_id", "s")
+      .agg(min(struct(col("d"), col(code))).as("m"), carried: _*)
+      .groupBy("vec_id")
+      .agg(out.head, out.tail: _*)
+  }
+
+  /** One flattened (s, code)-ordered distance table `dta` per `by` group
+    * of the probe rows in `dist`. */
+  private def distTables(dist: DataFrame, code: String, by: Column*): DataFrame =
+    dist.groupBy(by: _*).agg(expr(
+      s"transform(array_sort(collect_list(struct(s, $code, d))), x -> x.d)").as("dta"))
+
+  /** The ADC distance: 8 lookups into `dta`, subspace s strided by the
+    * codebook size `ksub` — zero per-candidate vector math. */
+  private def adcDist(ksub: Int): Column = expr(
+    "aggregate(sequence(0, 7), CAST(0 AS BIGINT), (acc, s) -> " +
+      s"acc + element_at(dta, CAST(s * $ksub + " +
+      "element_at(codes, CAST(s + 1 AS INT)) + 1 AS INT)))")
+
   /** The full ADC serving pipeline against either codebook →
     * (probe_id, rank, neighbor_id, adc_dist), top-5 per probe,
-    * unordered (callers sort for presentation). Candidates score as 8
-    * integer table lookups — zero per-candidate vector math; codebook
-    * and probe distance tables both broadcast (PlanSpec-pinned). */
+    * unordered (callers sort for presentation). Codebook and probe
+    * distance tables both broadcast (PlanSpec-pinned). */
   private def pqAdcRanked(s: SparkSession, dir: String, trained: Boolean): DataFrame = {
     val sub = pqSubvectors(s, dir)
     // TRAINED codebooks are memoized + pinned per (session, dir, kind) —
@@ -773,27 +890,11 @@ object Dedup extends QueryFamily {
       if (!trained) pqCodebook(sub, dir, trained = false)
       else graft.Artifacts.get(s, "dedup.pqCodebook.trained", dir)(
         passPinner(s)(pqCodebook(sub, dir, trained = true)))
-    val dist = sub.join(broadcast(cb), "s").withColumn("d", expr(pqSqd))
-    val codes = dist.where(col("vec_id") >= 10)
-      .groupBy("vec_id", "s")
-      .agg(min(struct(col("d"), col("k"))).as("m"))
-      .groupBy("vec_id")
-      .agg(expr("transform(array_sort(collect_list(struct(s, m.k AS k))), " +
-        "x -> x.k)").as("codes"))
-    val dtv = dist.where(col("vec_id") < 10)
-      .groupBy(col("vec_id").as("probe_id"))
-      .agg(expr("transform(array_sort(collect_list(struct(s, k, d))), " +
-        "x -> x.d)").as("dta"))
-    val adc = "aggregate(sequence(0, 7), CAST(0 AS BIGINT), (acc, s) -> " +
-      "acc + element_at(dta, CAST(s * 16 + " +
-      "element_at(codes, CAST(s + 1 AS INT)) + 1 AS INT)))"
-    val w = Window.partitionBy("probe_id").orderBy(col("adc_dist"), col("vec_id"))
-    codes.crossJoin(broadcast(dtv))
-      .withColumn("adc_dist", expr(adc))
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= 5)
-      .select(col("probe_id"), big(col("rank")).as("rank"),
-        col("vec_id").as("neighbor_id"), col("adc_dist"))
+    val dist = subspaceDists(sub, cb)
+    val codes = pqCodes(dist.where(col("vec_id") >= 10), "k")
+    val dtv = distTables(dist.where(col("vec_id") < 10), "k", col("vec_id").as("probe_id"))
+    topK(codes.crossJoin(broadcast(dtv)).withColumn("adc_dist", adcDist(16)),
+      5, col("adc_dist"), "adc_dist", id = "vec_id", sorted = false)
   }
 
   /** IVFADC (FAISS's IVF+PQ production serving layout): PQ on RESIDUALS
@@ -834,51 +935,23 @@ object Dedup extends QueryFamily {
         passPinner(s)(pqCodebook(rsub.select("vec_id", "s", "sv"), dir,
           trained = true, ksub)))
       .withColumnRenamed("k", "kc")
-    val rdist = rsub.join(broadcast(rcb), "s").withColumn("d", expr(pqSqd))
-    val codes = rdist
-      .groupBy("vec_id", "s")
-      .agg(min(struct(col("d"), col("kc"))).as("m"), first(col("k")).as("k"))
-      .groupBy("vec_id")
-      .agg(first(col("k")).as("k"),
-        expr("transform(array_sort(collect_list(struct(s, m.kc AS kc))), " +
-          "x -> x.kc)").as("codes"))
+    val codes = pqCodes(subspaceDists(rsub, rcb), "kc", "k")
     // probe side: nprobe=2 nearest coarse buckets, one residual distance
     // TABLE per (probe, bucket) — the probe's residual depends on the
     // bucket's own centroid
-    val sqd64 = "aggregate(zip_with(fx, c.cv, (a, b) -> (a - b) * (a - b)), " +
-      "CAST(0 AS BIGINT), (acc, x) -> acc + x)"
-    val psub = av.where(col("vec_id") < 10)
-      .crossJoin(broadcast(centRow))
-      .select(col("vec_id").as("probe_id"), explode(expr(
-        s"slice(array_sort(transform(cents, c -> struct($sqd64 AS d, c.k AS k, " +
-          s"zip_with(fx, c.cv, (a, b) -> a - b) AS rp))), 1, $nprobe)")).as("pcx"))
-      .select(col("probe_id"), col("pcx.k").as("k"), explode(subspaces("pcx.rp")).as("x"))
+    val psub = nearestCentroids(av, centRow, nprobe,
+        ", zip_with(fx, c.cv, (a, b) -> a - b) AS rp")
+      .select(col("probe_id"), col("pc.k").as("k"), explode(subspaces("pc.rp")).as("x"))
       .select(col("probe_id"), col("k"), col("x.s").as("s"), col("x.sv").as("sv"))
-    val ptab = psub.join(broadcast(rcb), "s").withColumn("d", expr(pqSqd))
-      .groupBy("probe_id", "k")
-      .agg(expr("transform(array_sort(collect_list(struct(s, kc, d))), " +
-        "x -> x.d)").as("dta"))
-    val adc = "aggregate(sequence(0, 7), CAST(0 AS BIGINT), (acc, s) -> " +
-      s"acc + element_at(dta, CAST(s * $ksub + " +
-      "element_at(codes, CAST(s + 1 AS INT)) + 1 AS INT)))"
-    val w = Window.partitionBy("probe_id").orderBy(col("adc_dist"), col("neighbor_id"))
-    codes.withColumnRenamed("vec_id", "neighbor_id")
-      .join(broadcast(ptab), "k") // the IVF prune: equi-join on the bucket
-      .withColumn("adc_dist", expr(adc))
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= 5)
-      .select(col("probe_id"), big(col("rank")).as("rank"),
-        col("neighbor_id"), col("adc_dist"))
+    val ptab = distTables(subspaceDists(psub, rcb), "kc", col("probe_id"), col("k"))
+    // the IVF prune: equi-join on the bucket
+    topK(codes.withColumnRenamed("vec_id", "neighbor_id").join(broadcast(ptab), "k")
+      .withColumn("adc_dist", adcDist(ksub)), 5, col("adc_dist"), "adc_dist", sorted = false)
   }
 
-  /** DuckDB mirror of [[ivfAdcRanked]], assuming fxCte's `e` and the
-    * kmeans chain's `c1`/`a2` are in scope: residual subvectors, the
-    * residual Lloyd's codebook (identical arithmetic to pqOracleChain's
-    * trained branch), per-(probe, bucket) distance tables, the
-    * bucket-equi-joined ADC, ending in rkivf (probe_id, neighbor_id,
-    * adc_dist, rank). */
-  /** The nprobe-INDEPENDENT half: residual subvectors and the trained
-    * residual codebook chain, ending in rcvec&lt;sfx&gt; (candidate codes)
+  /** The nprobe-INDEPENDENT half of the IVFADC oracle: residual
+    * subvectors and the trained residual codebook chain, ending in
+    * rcvec&lt;sfx&gt; (candidate codes)
     * + rcb&lt;sfx&gt; (the codebook) — shared by every nprobe
     * instantiation. `ksub` sizes the codebook (16 = the 4-bit default;
     * q_sim_pq_bits runs a 256-entry 8-bit variant beside it, so every
@@ -894,30 +967,21 @@ object Dedup extends QueryFamily {
       "rsub AS (SELECT vec_id, k, s, rfx[s*8+1 : s*8+8] AS sv " +
       "FROM rcand, range(8) t(s)), "
     head +
-    s"rcb0$sfx AS (SELECT vec_id - 10 AS kc, s, sv AS cent FROM rsub " +
-    s"WHERE vec_id BETWEEN 10 AND ${9 + ksub}), " +
-    s"ra1$sfx AS (SELECT t.vec_id, t.s, c.kc, t.sv FROM rsub t " +
-    s"JOIN rcb0$sfx c ON t.s = c.s " +
-    "QUALIFY row_number() OVER (PARTITION BY t.vec_id, t.s ORDER BY " +
-    "list_sum([ (t.sv[i+1] - c.cent[i+1]) * (t.sv[i+1] - c.cent[i+1]) " +
-    "for i in range(8) ]), c.kc) = 1), " +
-    s"rs1$sfx AS (SELECT s, kc, pos, sum(x) AS sx, count(*) AS n FROM " +
-    "(SELECT s, kc, unnest(sv) AS x, generate_subscripts(sv, 1) - 1 AS pos " +
-    s"FROM ra1$sfx) GROUP BY s, kc, pos), " +
-    s"rc1$sfx AS (SELECT s, kc, " +
-    "list(CAST(floor(CAST(sx AS DOUBLE) / n + 0.5) AS BIGINT) ORDER BY pos) " +
-    s"AS newc FROM rs1$sfx GROUP BY s, kc), " +
-    s"rcb$sfx AS (SELECT c0x.s, c0x.kc, coalesce(c1x.newc, c0x.cent) AS cent " +
-    s"FROM rcb0$sfx c0x LEFT JOIN rc1$sfx c1x ON c0x.s = c1x.s AND c0x.kc = c1x.kc), " +
+    lloydCtes("r", sfx, "kc", seeds = "rsub", train = "rsub", ksub, "x") + ", " +
     s"rdist$sfx AS (SELECT r.vec_id, r.k, r.s, cb.kc, " +
-    "list_sum([ (r.sv[i+1] - cb.cent[i+1]) * (r.sv[i+1] - cb.cent[i+1]) " +
-    s"for i in range(8) ]) AS d FROM rsub r JOIN rcb$sfx cb ON r.s = cb.s), " +
+    s"${TextOps.sqdDuck("r.sv", "cb.cent", 8)} AS d FROM rsub r JOIN rcb$sfx cb ON r.s = cb.s), " +
     s"rcvec$sfx AS (SELECT vec_id, k, list(kc ORDER BY s) AS codes FROM " +
     s"(SELECT vec_id, k, s, kc FROM rdist$sfx " +
     "QUALIFY row_number() OVER (PARTITION BY vec_id, s ORDER BY d, kc) = 1) " +
     "GROUP BY vec_id, k)"
   }
 
+  /** DuckDB mirror of [[ivfAdcRanked]], assuming fxCte's `e` and the
+    * kmeans chain's `c1`/`a2` are in scope: residual subvectors, the
+    * residual Lloyd's codebook (identical arithmetic to pqOracleChain's
+    * trained branch), per-(probe, bucket) distance tables, the
+    * bucket-equi-joined ADC, ending in rkivf (probe_id, neighbor_id,
+    * adc_dist, rank). */
   private def ivfpqOracleChain: String =
     ivfpqCodebookCtes() + ", " + ivfpqServeCtes("", 2)
 
@@ -932,25 +996,62 @@ object Dedup extends QueryFamily {
     * rkivf&lt;sfx&gt;. */
   private def ivfpqServeCtes(sfx: String, nprobe: Int,
       cbSfx: String = "", ksub: Int = 16): String =
-    s"ppc$sfx AS (SELECT e.vec_id AS probe_id, c1.k, " +
-    "[e.fx[i+1] - c1.cv[i+1] for i in range(64)] AS rp FROM e, c1 " +
-    "WHERE e.vec_id < 10 " +
-    "QUALIFY row_number() OVER (PARTITION BY e.vec_id ORDER BY " +
-    "list_sum([ (e.fx[i+1] - c1.cv[i+1]) * (e.fx[i+1] - c1.cv[i+1]) " +
-    s"for i in range(64) ]), c1.k) <= $nprobe), " +
-    s"psub$sfx AS (SELECT probe_id, k, s, rp[s*8+1 : s*8+8] AS sv " +
+    nearestDuck(s"ppc$sfx", nprobe, ", [e.fx[i+1] - c1.cv[i+1] for i in range(64)] AS rp") +
+    s", psub$sfx AS (SELECT probe_id, k, s, rp[s*8+1 : s*8+8] AS sv " +
     s"FROM ppc$sfx, range(8) t(s)), " +
     s"pdist$sfx AS (SELECT p.probe_id, p.k, p.s, cb.kc, " +
-    "list_sum([ (p.sv[i+1] - cb.cent[i+1]) * (p.sv[i+1] - cb.cent[i+1]) " +
-    s"for i in range(8) ]) AS d FROM psub$sfx p JOIN rcb$cbSfx cb ON p.s = cb.s), " +
+    s"${TextOps.sqdDuck("p.sv", "cb.cent", 8)} AS d FROM psub$sfx p JOIN rcb$cbSfx cb ON p.s = cb.s), " +
     s"ptab$sfx AS (SELECT probe_id, k, list(d ORDER BY s, kc) AS dta " +
     s"FROM pdist$sfx GROUP BY probe_id, k), " +
-    s"iscored$sfx AS (SELECT p.probe_id, c.vec_id AS neighbor_id, " +
+    s"iscored$sfx AS (SELECT p.probe_id, c.vec_id AS neighbor_id, ${adcDuck(ksub)} " +
+    s"FROM rcvec$cbSfx c JOIN ptab$sfx p ON c.k = p.k), " +
+    adcRankDuck(s"rkivf$sfx", s"iscored$sfx")
+
+  /** DuckDB mirror of [[nearestCentroids]]: CTE `name` (probe_id, k
+    * `fields`) — each probe's `nprobe` nearest k-means centroids `c1`
+    * by integer squared distance, (d, k) order; fxCte's `e` in scope. */
+  private def nearestDuck(name: String, nprobe: Int, fields: String = ""): String =
+    s"$name AS (SELECT e.vec_id AS probe_id, c1.k$fields FROM e, c1 " +
+    "WHERE e.vec_id < 10 " +
+    "QUALIFY row_number() OVER (PARTITION BY e.vec_id ORDER BY " +
+    s"${TextOps.sqdDuck("e.fx", "c1.cv", 64)}, c1.k) <= $nprobe)"
+
+  /** DuckDB mirror of [[adcDist]]: probe table `p.dta`, candidate codes
+    * `c.codes`. */
+  private def adcDuck(ksub: Int): String =
     s"CAST(list_sum([ p.dta[s*$ksub + c.codes[s+1] + 1] for s in range(8) ]) " +
-    s"AS BIGINT) AS adc_dist FROM rcvec$cbSfx c JOIN ptab$sfx p ON c.k = p.k), " +
-    s"rkivf$sfx AS (SELECT probe_id, neighbor_id, adc_dist, " +
+    "AS BIGINT) AS adc_dist"
+
+  /** CTE `name`: the ADC rows of `from` ranked per probe by (adc_dist,
+    * neighbor_id) — the DuckDB side of the ADC top-k tail. */
+  private def adcRankDuck(name: String, from: String): String =
+    s"$name AS (SELECT probe_id, neighbor_id, adc_dist, " +
     "CAST(row_number() OVER (PARTITION BY probe_id " +
-    s"ORDER BY adc_dist, neighbor_id) AS BIGINT) AS rank FROM iscored$sfx)"
+    s"ORDER BY adc_dist, neighbor_id) AS BIGINT) AS rank FROM $from)"
+
+  /** DuckDB mirror of [[pqCodebook]]: the seed codebook `<p>cb0<sfx>`
+    * (vec_id 10..9+ksub of `seeds`, codeword column `code`), one Lloyd's
+    * round over `train` — (d, code) argmin, floor(sum/n + 0.5) update
+    * mean, empty clusters keep their seed — ending in `<p>cb<sfx>` (s,
+    * code, cent). `ax` suffixes the final join aliases c0/c1 (the IVF
+    * chain already has a kmeans CTE named c1). */
+  private def lloydCtes(p: String, sfx: String, code: String, seeds: String,
+      train: String, ksub: Int, ax: String): String =
+    s"${p}cb0$sfx AS (SELECT vec_id - 10 AS $code, s, sv AS cent FROM $seeds " +
+    s"WHERE vec_id BETWEEN 10 AND ${9 + ksub}), " +
+    s"${p}a1$sfx AS (SELECT t.vec_id, t.s, c.$code, t.sv FROM $train t " +
+    s"JOIN ${p}cb0$sfx c ON t.s = c.s " +
+    "QUALIFY row_number() OVER (PARTITION BY t.vec_id, t.s ORDER BY " +
+    s"${TextOps.sqdDuck("t.sv", "c.cent", 8)}, c.$code) = 1), " +
+    s"${p}s1$sfx AS (SELECT s, $code, pos, sum(x) AS sx, count(*) AS n FROM " +
+    s"(SELECT s, $code, unnest(sv) AS x, generate_subscripts(sv, 1) - 1 AS pos " +
+    s"FROM ${p}a1$sfx) GROUP BY s, $code, pos), " +
+    s"${p}c1$sfx AS (SELECT s, $code, " +
+    "list(CAST(floor(CAST(sx AS DOUBLE) / n + 0.5) AS BIGINT) ORDER BY pos) " +
+    s"AS newc FROM ${p}s1$sfx GROUP BY s, $code), " +
+    s"${p}cb$sfx AS (SELECT c0$ax.s, c0$ax.$code, coalesce(c1$ax.newc, c0$ax.cent) AS cent " +
+    s"FROM ${p}cb0$sfx c0$ax LEFT JOIN ${p}c1$sfx c1$ax " +
+    s"ON c0$ax.s = c1$ax.s AND c0$ax.$code = c1$ax.$code)"
 
   /** DuckDB mirror of [[pqSubvectors]]: fixed-point vectors e (the
     * TextOps-shared fxCte), per-subspace slices sub, the candidate
@@ -972,38 +1073,19 @@ object Dedup extends QueryFamily {
       if (!trained)
         s"cb$sfx AS (SELECT vec_id - 10 AS k, s, sv AS cent FROM sub " +
         "WHERE vec_id BETWEEN 10 AND 25)"
-      else
-        s"cb0$sfx AS (SELECT vec_id - 10 AS k, s, sv AS cent FROM sub " +
-        "WHERE vec_id BETWEEN 10 AND 25), " +
-        s"a1$sfx AS (SELECT t.vec_id, t.s, c.k, t.sv FROM tr t " +
-        s"JOIN cb0$sfx c ON t.s = c.s " +
-        "QUALIFY row_number() OVER (PARTITION BY t.vec_id, t.s ORDER BY " +
-        "list_sum([ (t.sv[i+1] - c.cent[i+1]) * (t.sv[i+1] - c.cent[i+1]) " +
-        "for i in range(8) ]), c.k) = 1), " +
-        s"s1$sfx AS (SELECT s, k, pos, sum(x) AS sx, count(*) AS n FROM " +
-        "(SELECT s, k, unnest(sv) AS x, generate_subscripts(sv, 1) - 1 AS pos " +
-        s"FROM a1$sfx) GROUP BY s, k, pos), " +
-        s"c1$sfx AS (SELECT s, k, " +
-        "list(CAST(floor(CAST(sx AS DOUBLE) / n + 0.5) AS BIGINT) ORDER BY pos) " +
-        s"AS newc FROM s1$sfx GROUP BY s, k), " +
-        s"cb$sfx AS (SELECT c0.s, c0.k, coalesce(c1.newc, c0.cent) AS cent " +
-        s"FROM cb0$sfx c0 LEFT JOIN c1$sfx c1 ON c0.s = c1.s AND c0.k = c1.k)"
+      else lloydCtes("", sfx, "k", seeds = "sub", train = "tr", 16, "")
     cb + ", " +
     s"dist$sfx AS (SELECT c.vec_id, c.s, cb.k, " +
-    "list_sum([ (c.sv[i+1] - cb.cent[i+1]) * (c.sv[i+1] - cb.cent[i+1]) " +
-    s"for i in range(8) ]) AS d FROM sub c JOIN cb$sfx cb ON c.s = cb.s), " +
+    s"${TextOps.sqdDuck("c.sv", "cb.cent", 8)} AS d FROM sub c JOIN cb$sfx cb ON c.s = cb.s), " +
     s"codes$sfx AS (SELECT vec_id, s, k AS code FROM dist$sfx WHERE vec_id >= 10 " +
     "QUALIFY row_number() OVER (PARTITION BY vec_id, s ORDER BY d, k) = 1), " +
     s"cvec$sfx AS (SELECT vec_id, list(code ORDER BY s) AS codes " +
     s"FROM codes$sfx GROUP BY vec_id), " +
     s"dtv$sfx AS (SELECT vec_id AS probe_id, list(d ORDER BY s, k) AS dta " +
     s"FROM dist$sfx WHERE vec_id < 10 GROUP BY vec_id), " +
-    s"scored$sfx AS (SELECT p.probe_id, c.vec_id AS neighbor_id, " +
-    "CAST(list_sum([ p.dta[s*16 + c.codes[s+1] + 1] for s in range(8) ]) " +
-    s"AS BIGINT) AS adc_dist FROM cvec$sfx c, dtv$sfx p), " +
-    s"rk$sfx AS (SELECT probe_id, neighbor_id, adc_dist, CAST(row_number() OVER " +
-    s"(PARTITION BY probe_id ORDER BY adc_dist, neighbor_id) AS BIGINT) AS rank " +
-    s"FROM scored$sfx)"
+    s"scored$sfx AS (SELECT p.probe_id, c.vec_id AS neighbor_id, ${adcDuck(16)} " +
+    s"FROM cvec$sfx c, dtv$sfx p), " +
+    adcRankDuck(s"rk$sfx", s"scored$sfx")
   }
 
   /** Verify stage shared by the Jaccard dedup paths: attach each side's
@@ -1210,32 +1292,21 @@ object Dedup extends QueryFamily {
     // 0.8. Approximate by design: a >=0.8 pair missed by every band is
     // absent — the oracle runs the identical two-stage pipeline at the
     // FIXTURE parameters (8 permutations, 2 bands x 4 rows), so outputs
-    // still hash-match. The knobs are spark.graft.dedup.minhashPerms /
-    // minhashBands (rows-per-band = perms/bands): background band
-    // collisions for a pair of Jaccard j happen with probability j^rows
-    // per band, so rows is the corpus fan-out knob — rows ∝ log N keeps
-    // candidate volume ~linear where the compile-time 4-row band pins
-    // collision odds forever (pairs ~N²·E[j⁴]). Hash i is identical at
-    // every width (prefix property), so widening perms extends each
-    // signature, never reshuffles it. BANDING RECALL is the price: a
-    // true pair at threshold t survives with 1-(1-t^rows)^bands (t=0.8,
-    // 4 rows, 2 bands → 65%) — deeper rows need MORE bands to hold
-    // recall, which is why both knobs are exposed rather than a single
-    // width.
+    // still hash-match. Rows-per-band (perms/bands) is the corpus fan-out
+    // lever: background band collisions for a pair of Jaccard j happen
+    // with probability j^rows per band, so rows ∝ log N keeps candidate
+    // volume ~linear where a fixed 4-row band pins collision odds
+    // forever (pairs ~N²·E[j⁴]). Hash i is identical at every width
+    // (prefix property), so widening perms extends each signature, never
+    // reshuffles it. BANDING RECALL is the price: a true pair at
+    // threshold t survives with 1-(1-t^rows)^bands (t=0.8, 4 rows, 2
+    // bands → 65%) — deeper rows need MORE bands to hold recall;
+    // q_dedup_minhash_banded runs the wider (12, 3) setting and
+    // q_dedup_recall grades both. Verify's two attach legs join on
+    // different keys and read the encode pass unpinned (see q_dedup_near).
     "q_dedup_minhash" -> ((s, dir) => {
       graft.functions.SortedJaccardGe.register(s)
-      graft.functions.MinHashSig.register(s)
-      val perms = s.conf.getOption("spark.graft.dedup.minhashPerms")
-        .map(_.toInt).getOrElse(8)
-      val nBands = s.conf.getOption("spark.graft.dedup.minhashBands")
-        .map(_.toInt).getOrElse(2)
-      require(nBands >= 1 && perms % nBands == 0,
-        s"minhashBands=$nBands must divide minhashPerms=$perms into equal bands")
-      val d = Tables(s, dir, "documents").select(col("doc_id"), col("lang"),
-        array_sort(array_distinct(split(col("text"), " "))).as("toks"))
-      // verify's two attach legs join on different keys and read the
-      // encode pass unpinned (see q_dedup_near)
-      jaccardVerify(minhashCandidates(d, perms, nBands), tokenCodes(s, dir), 0.8)
+      jaccardVerify(minhashCandidates(sortedToks(s, dir), 8, 2), tokenCodes(s, dir), 0.8)
     }),
 
     // The generalized banding, oracle-pinned at NON-fixture parameters
@@ -1245,9 +1316,7 @@ object Dedup extends QueryFamily {
     // hash-checked. Recall at t=0.8 rises to 1-(1-0.8^4)^3 ≈ 80%.
     "q_dedup_minhash_banded" -> ((s, dir) => {
       graft.functions.SortedJaccardGe.register(s)
-      val d = Tables(s, dir, "documents").select(col("doc_id"), col("lang"),
-        array_sort(array_distinct(split(col("text"), " "))).as("toks"))
-      jaccardVerify(minhashCandidates(d, 12, 3), tokenCodes(s, dir), 0.8)
+      jaccardVerify(minhashCandidates(sortedToks(s, dir), 12, 3), tokenCodes(s, dir), 0.8)
     }),
 
     // Candidate-quality gate for the approximate dedup paths — the
@@ -1264,8 +1333,7 @@ object Dedup extends QueryFamily {
     // the end, the fact-sized work is hash joins + counts.
     "q_dedup_recall" -> ((s, dir) => {
       graft.functions.SortedJaccardGe.register(s)
-      val d = Tables(s, dir, "documents").select(col("doc_id"), col("lang"),
-        array_sort(array_distinct(split(col("text"), " "))).as("toks"))
+      val d = sortedToks(s, dir)
       val truth = nearDupEdges(s, dir)
       def graded(name: String, perms: Int, bands: Int): DataFrame = {
         // cand feeds two consumers (n_cand + the hit join) — left
@@ -1298,7 +1366,7 @@ object Dedup extends QueryFamily {
     // constant as the corpus grows instead of N/16 (pairs ~N²/512) — the
     // signature's prefix property keeps narrow-width outputs unchanged.
     // simhashBits=auto derives the per-band width from the memoized
-    // approximate corpus count (ceil(log2(N/targetBucket)) per band,
+    // approximate corpus count (ceil(log2(N/64)) per band,
     // floored at the fixture width) — scale-safety without knowing N.
     "q_dedup_simhash" -> ((s, dir) => {
       val bands = s.conf.getOption("spark.graft.dedup.simhashBands")
@@ -1308,16 +1376,10 @@ object Dedup extends QueryFamily {
         case None => 16
         case Some("auto") =>
           val n = approxCorpusCount(Tables(s, dir, "documents"), "doc_id", "docs", dir)
-          bands * autoWidth(n, targetBucket(s), math.max(1, 16 / bands), 64 / bands)
+          bands * autoWidth(n, TargetBucket, math.max(1, 16 / bands), 64 / bands)
         case Some(v) => v.toInt
       }
-      val d = Tables(s, dir, "documents").select(col("doc_id"), col("lang"),
-        array_distinct(split(col("text"), " ")).as("toks"))
-      simhashCandidates(simhashSignatures(d, bits), bits, bands)
-        .withColumn("hamming", expr("CAST(bit_count(sim_a ^ sim_b) AS BIGINT)"))
-        .where(col("hamming") <= 3)
-        .select(col("doc_a"), col("doc_b"), col("sim_a"), col("hamming"))
-        .orderBy("doc_a", "doc_b")
+      simhashPairs(s, dir, bits, bands)
     }),
 
     // The corpus-scaled signature width, oracle-pinned at a NON-fixture
@@ -1326,15 +1388,7 @@ object Dedup extends QueryFamily {
     // values per band, fewer false candidates — is hash-checked, and the
     // prefix property is visible in the data (sim_a's low 16 bits equal
     // q_dedup_simhash's signature doc for doc).
-    "q_dedup_simhash_wide" -> ((s, dir) => {
-      val d = Tables(s, dir, "documents").select(col("doc_id"), col("lang"),
-        array_distinct(split(col("text"), " ")).as("toks"))
-      simhashCandidates(simhashSignatures(d, 24), 24, 4)
-        .withColumn("hamming", expr("CAST(bit_count(sim_a ^ sim_b) AS BIGINT)"))
-        .where(col("hamming") <= 3)
-        .select(col("doc_a"), col("doc_b"), col("sim_a"), col("hamming"))
-        .orderBy("doc_a", "doc_b")
-    }),
+    "q_dedup_simhash_wide" -> ((s, dir) => simhashPairs(s, dir, 24, 4)),
 
     // Character 3-gram Jaccard >= 0.6 inside (lang, n_chars/100) blocks.
     // Shape matters here: the blocked self-join emits id-only pairs (no
@@ -1369,55 +1423,23 @@ object Dedup extends QueryFamily {
     // across buckets is absent — and the oracle runs the identical
     // two-stage pipeline, so outputs hash-match.
     // cosinePlanes=auto derives planes from the memoized approximate
-    // corpus count (the candidateGen pattern) — same prefix property.
-    "q_dedup_cosine" -> ((s, dir) => {
-      graft.functions.VecDot.register(s)
-      val planes = resolveFanout(s, "spark.graft.dedup.cosinePlanes",
+    // corpus count (the candidatePairs statistics pattern) — same prefix property.
+    "q_dedup_cosine" -> ((s, dir) =>
+      cosinePairs(s, dir, resolveFanout(s, "spark.graft.dedup.cosinePlanes",
         fixture = 4, cap = 24, name = "emb", dir = dir)(
-        (Tables(s, dir, "embeddings"), "vec_id"))
-      val e = Tables(s, dir, "embeddings").select(col("vec_id"), col("label"),
-        transform(col("embedding"), x => x.cast("double")).as("v"))
-      cosinePairs(e, planes)
-        .where(col("cos") >= 0.3)
-        .select(col("vec_a"), col("vec_b"), round(col("cos"), 4).as("cos_sim"))
-        .orderBy("vec_a", "vec_b")
-    }),
+        (Tables(s, dir, "embeddings"), "vec_id")))),
 
     // The corpus-scaled sign-LSH fan-out, oracle-pinned at a NON-fixture
     // parameter (6 hyperplanes = 64 buckets): both engines inline the
     // identical first-6-planes literals (prefix property — planes 0-3
     // are exactly q_dedup_cosine's), so the widened blocking is
     // hash-checked end to end.
-    "q_dedup_cosine_wide" -> ((s, dir) => {
-      graft.functions.VecDot.register(s)
-      val e = Tables(s, dir, "embeddings").select(col("vec_id"), col("label"),
-        transform(col("embedding"), x => x.cast("double")).as("v"))
-      cosinePairs(e, 6)
-        .where(col("cos") >= 0.3)
-        .select(col("vec_a"), col("vec_b"), round(col("cos"), 4).as("cos_sim"))
-        .orderBy("vec_a", "vec_b")
-    }),
+    "q_dedup_cosine_wide" -> ((s, dir) => cosinePairs(s, dir, 6)),
 
     // Similarity search: brute-force cosine top-5 for 10 probe vectors
     // against all the rest; probe side broadcasts.
-    "q_sim_topk" -> ((s, dir) => {
-      graft.functions.VecDot.register(s)
-      val e = Tables(s, dir, "embeddings").select(col("vec_id"),
-        transform(col("embedding"), x => x.cast("double")).as("v"))
-        .withColumn("norm", expr("sqrt(vec_dot(v, v))"))
-      val probes = e.where(col("vec_id") < 10)
-        .select(col("vec_id").as("probe_id"), col("v").as("pv"), col("norm").as("pnorm"))
-      val cands = e.where(col("vec_id") >= 10)
-        .select(col("vec_id").as("neighbor_id"), col("v").as("cv"), col("norm").as("cnorm"))
-      val dot = "vec_dot(pv, cv)"
-      val w = Window.partitionBy("probe_id").orderBy(col("score").desc, col("neighbor_id"))
-      cands.crossJoin(broadcast(probes))
-        .withColumn("score", round(expr(dot) / (col("pnorm") * col("cnorm")), 4))
-        .withColumn("rank", row_number().over(w))
-        .where(col("rank") <= 5)
-        .select(col("probe_id"), big(col("rank")).as("rank"), col("neighbor_id"), col("score"))
-        .orderBy("probe_id", "rank")
-    }),
+    "q_sim_topk" -> ((s, dir) =>
+      topK(exactScores(s, dir), 5, col("score").desc, "score")),
 
     // Dedup clustering: connected components over the near-dup pair graph
     // (the same Jaccard >= 0.8 edges as q_dedup_near), labeling
@@ -1541,7 +1563,6 @@ object Dedup extends QueryFamily {
     // plain left-assoc add/subtract chains — bit-identical in both
     // engines and fully codegen'd (no interpreted lambda per row).
     "q_sim_lsh" -> ((s, dir) => {
-      graft.functions.VecDot.register(s)
       // scanned fraction per probe is ~1/2^planes — at corpus scale set
       // spark.graft.sim.lshPlanes (prefix property: wider refines, so
       // recall trades off smoothly); the declared fixture fan-out is 4,
@@ -1549,23 +1570,15 @@ object Dedup extends QueryFamily {
       val planes = resolveFanout(s, "spark.graft.sim.lshPlanes",
         fixture = 4, cap = 24, name = "emb", dir = dir)(
         (Tables(s, dir, "embeddings"), "vec_id"))
-      val bucket = lshBucketExpr(j => s"element_at(v, $j)", planes)
-      val e = Tables(s, dir, "embeddings").select(col("vec_id"),
-        transform(col("embedding"), x => x.cast("double")).as("v"))
-        .withColumn("norm", expr("sqrt(vec_dot(v, v))"))
-        .withColumn("bucket", expr(bucket))
+      val e = vectors(s, dir)
+        .withColumn("bucket", expr(lshBucketExpr(j => s"element_at(v, $j)", planes)))
       val probes = e.where(col("vec_id") < 10)
         .select(col("vec_id").as("probe_id"), col("bucket").as("pbucket"),
           col("v").as("pv"), col("norm").as("pnorm"))
-      val w = Window.partitionBy("probe_id").orderBy(col("score").desc, col("vec_id"))
-      e.where(col("vec_id") >= 10)
-        .join(broadcast(probes), col("bucket") === col("pbucket"))
-        .withColumn("score", round(expr("vec_dot(pv, v)") / (col("pnorm") * col("norm")), 4))
-        .withColumn("rank", row_number().over(w))
-        .where(col("rank") <= 3)
-        .select(col("probe_id"), big(col("rank")).as("rank"),
-          col("vec_id").as("neighbor_id"), col("score"))
-        .orderBy("probe_id", "rank")
+      topK(e.where(col("vec_id") >= 10)
+          .join(broadcast(probes), col("bucket") === col("pbucket"))
+          .withColumn("score", cosine("pv", "v", "pnorm", "norm")),
+        3, col("score").desc, "score", id = "vec_id")
     }),
 
     // Int8-quantized similarity: per-vector symmetric scalar quantization
@@ -1575,23 +1588,16 @@ object Dedup extends QueryFamily {
     // dequantize. floor(x/s*127 + 0.5) is bit-identical across engines,
     // unlike round() on arbitrary doubles.
     "q_sim_quantized" -> ((s, dir) => {
-      graft.functions.VecDot.register(s)
-      val e = Tables(s, dir, "embeddings").select(col("vec_id"),
-        transform(col("embedding"), x => x.cast("double")).as("v"))
+      val e = vectors(s, dir)
         .withColumn("sc", greatest(expr("array_max(transform(v, x -> abs(x)))"), lit(1e-9)))
         .withColumn("q", expr("transform(v, x -> CAST(floor(x / sc * 127.0D + 0.5D) AS DOUBLE))"))
       val probes = e.where(col("vec_id") < 10)
         .select(col("vec_id").as("probe_id"), col("sc").as("psc"), col("q").as("pq"))
-      val w = Window.partitionBy("probe_id").orderBy(col("score").desc, col("vec_id"))
-      e.where(col("vec_id") >= 10)
-        .crossJoin(broadcast(probes))
-        .withColumn("score",
-          round(expr("vec_dot(pq, q)") * col("psc") / 127.0 * col("sc") / 127.0, 4))
-        .withColumn("rank", row_number().over(w))
-        .where(col("rank") <= 3)
-        .select(col("probe_id"), big(col("rank")).as("rank"),
-          col("vec_id").as("neighbor_id"), col("score"))
-        .orderBy("probe_id", "rank")
+      topK(e.where(col("vec_id") >= 10)
+          .crossJoin(broadcast(probes))
+          .withColumn("score",
+            round(expr("vec_dot(pq, q)") * col("psc") / 127.0 * col("sc") / 127.0, 4)),
+        3, col("score").desc, "score", id = "vec_id")
     }),
 
     // Two-stage coarse-to-fine retrieval (the Matryoshka / MRL serving
@@ -1610,62 +1616,40 @@ object Dedup extends QueryFamily {
     // is what makes this the standard serving layout. The oracle pins
     // the exact two-stage algorithm, not a recall claim.
     "q_sim_mrl" -> ((s, dir) => {
-      graft.functions.VecDot.register(s)
-      val e = Tables(s, dir, "embeddings").select(col("vec_id"),
-        transform(col("embedding"), x => x.cast("double")).as("v"))
-      val pre = e.select(col("vec_id"), slice(col("v"), 1, 16).as("p8"))
-        .withColumn("norm8", expr("sqrt(vec_dot(p8, p8))"))
+      val full = vectors(s, dir)
+      val pre = full.select(col("vec_id"), slice(col("v"), 1, 16).as("p8"))
+        .withColumn("norm8", norm("p8"))
       val probes8 = pre.where(col("vec_id") < 10)
         .select(col("vec_id").as("probe_id"), col("p8").as("pp8"),
           col("norm8").as("pnorm8"))
-      val wc = Window.partitionBy("probe_id")
-        .orderBy(col("cscore").desc, col("neighbor_id"))
       val cands = pre.where(col("vec_id") >= 10)
         .select(col("vec_id").as("neighbor_id"), col("p8").as("cp8"),
           col("norm8").as("cnorm8"))
         .crossJoin(broadcast(probes8))
-        .withColumn("cscore",
-          round(expr("vec_dot(pp8, cp8)") / (col("pnorm8") * col("cnorm8")), 4))
-        .withColumn("crank", row_number().over(wc))
+        .withColumn("cscore", cosine("pp8", "cp8", "pnorm8", "cnorm8"))
+        .withColumn("crank", row_number().over(perProbe(col("cscore").desc)))
         .where(col("crank") <= 64)
         .select("probe_id", "neighbor_id")
-      val full = e.withColumn("norm", expr("sqrt(vec_dot(v, v))"))
       val pv = full.select(col("vec_id").as("probe_id"), col("v").as("pv"),
         col("norm").as("pnorm"))
       val cv = full.select(col("vec_id").as("neighbor_id"), col("v").as("cv"),
         col("norm").as("cnorm"))
-      val wf = Window.partitionBy("probe_id")
-        .orderBy(col("score").desc, col("neighbor_id"))
-      cands.join(cv, "neighbor_id").join(broadcast(pv), "probe_id")
-        .withColumn("score",
-          round(expr("vec_dot(pv, cv)") / (col("pnorm") * col("cnorm")), 4))
-        .withColumn("rank", row_number().over(wf))
-        .where(col("rank") <= 5)
-        .select(col("probe_id"), big(col("rank")).as("rank"),
-          col("neighbor_id"), col("score"))
-        .orderBy("probe_id", "rank")
+      topK(cands.join(cv, "neighbor_id").join(broadcast(pv), "probe_id")
+          .withColumn("score", cosine("pv", "cv", "pnorm", "cnorm")),
+        5, col("score").desc, "score")
     }),
 
     // IVF-style ANN: search only the probe's coarse cluster (label) — the
     // partition-pruned scale path; top-3 per probe.
     "q_sim_ivf" -> ((s, dir) => {
-      graft.functions.VecDot.register(s)
-      val e = Tables(s, dir, "embeddings").select(col("vec_id"), col("label"),
-        transform(col("embedding"), x => x.cast("double")).as("v"))
-        .withColumn("norm", expr("sqrt(vec_dot(v, v))"))
+      val e = vectors(s, dir)
       val probes = e.where(col("vec_id") < 10)
         .select(col("vec_id").as("probe_id"), col("label").as("plabel"),
           col("v").as("pv"), col("norm").as("pnorm"))
-      val dot = "vec_dot(pv, v)"
-      val w = Window.partitionBy("probe_id").orderBy(col("score").desc, col("vec_id"))
-      e.join(broadcast(probes),
-          col("label") === col("plabel") && col("vec_id") =!= col("probe_id"))
-        .withColumn("score", round(expr(dot) / (col("pnorm") * col("norm")), 4))
-        .withColumn("rank", row_number().over(w))
-        .where(col("rank") <= 3)
-        .select(col("probe_id"), big(col("rank")).as("rank"),
-          col("vec_id").as("neighbor_id"), col("score"))
-        .orderBy("probe_id", "rank")
+      topK(e.join(broadcast(probes),
+            col("label") === col("plabel") && col("vec_id") =!= col("probe_id"))
+          .withColumn("score", cosine("pv", "v", "pnorm", "norm")),
+        3, col("score").desc, "score", id = "vec_id")
     }),
 
     // IVF with a TRAINED coarse quantizer — the real IVF-Flat recipe
@@ -1680,37 +1664,21 @@ object Dedup extends QueryFamily {
     // integer centroid distances with (d, k) tiebreak pick the probe
     // buckets; the rescore is the sim family's round(·,4)+id total order.
     "q_sim_ivf_trained" -> ((s, dir) => {
-      graft.functions.VecDot.register(s)
       val av = TextOps.kmeansAssign(s, dir)
-      val cents = TextOps.kmeansCentroidRow(s, dir)
-      val sqd = "aggregate(zip_with(fx, c.cv, (a, b) -> (a - b) * (a - b)), " +
-        "CAST(0 AS BIGINT), (acc, x) -> acc + x)"
-      val probeClusters = av.where(col("vec_id") < 10)
-        .crossJoin(broadcast(cents))
-        .select(col("vec_id").as("probe_id"), explode(expr(
-          s"slice(array_sort(transform(cents, c -> struct($sqd AS d, c.k AS k))), 1, 2)")).as("pc"))
+      val probeClusters = nearestCentroids(av, TextOps.kmeansCentroidRow(s, dir), 2)
         .select(col("probe_id"), col("pc.k").as("k"))
       val cand = av.where(col("vec_id") >= 10)
         .select(col("vec_id").as("neighbor_id"), col("k"))
-      val e = Tables(s, dir, "embeddings").select(col("vec_id"),
-        transform(col("embedding"), x => x.cast("double")).as("v"))
-        .withColumn("norm", expr("sqrt(vec_dot(v, v))"))
+      val e = vectors(s, dir)
       val pv = e.where(col("vec_id") < 10).select(col("vec_id").as("probe_id"),
         col("v").as("pv"), col("norm").as("pnorm"))
       val cv = e.where(col("vec_id") >= 10).select(col("vec_id").as("neighbor_id"),
         col("v").as("cv"), col("norm").as("cnorm"))
-      val w = Window.partitionBy("probe_id")
-        .orderBy(col("score").desc, col("neighbor_id"))
-      cand.join(broadcast(probeClusters), "k")
-        .join(cv, "neighbor_id")
-        .join(broadcast(pv), "probe_id")
-        .withColumn("score",
-          round(expr("vec_dot(pv, cv)") / (col("pnorm") * col("cnorm")), 4))
-        .withColumn("rank", row_number().over(w))
-        .where(col("rank") <= 3)
-        .select(col("probe_id"), big(col("rank")).as("rank"),
-          col("neighbor_id"), col("score"))
-        .orderBy("probe_id", "rank")
+      topK(cand.join(broadcast(probeClusters), "k")
+          .join(cv, "neighbor_id")
+          .join(broadcast(pv), "probe_id")
+          .withColumn("score", cosine("pv", "cv", "pnorm", "cnorm")),
+        3, col("score").desc, "score")
     }),
 
     // Product-quantization ANN (Jegou-style PQ with asymmetric distance
@@ -1754,41 +1722,11 @@ object Dedup extends QueryFamily {
     // top-5 — recall@5 as oracle-checked integers, the same contract
     // q_sim_recall applies to LSH/IVF/MRL. One broadcast cross join for
     // the exact ranking plus the two (broadcast-only) ADC chains.
-    "q_sim_recall_pq" -> ((s, dir) => {
-      graft.functions.VecDot.register(s)
-      val e = Tables(s, dir, "embeddings").select(col("vec_id"),
-        transform(col("embedding"), x => x.cast("double")).as("v"))
-        .withColumn("norm", expr("sqrt(vec_dot(v, v))"))
-      val probes = e.where(col("vec_id") < 10)
-        .select(col("vec_id").as("probe_id"), col("v").as("pv"),
-          col("norm").as("pnorm"))
-      val w = Window.partitionBy("probe_id")
-        .orderBy(col("score").desc, col("neighbor_id"))
-      val exact = e.where(col("vec_id") >= 10)
-        .select(col("vec_id").as("neighbor_id"), col("v").as("cv"),
-          col("norm").as("cnorm"))
-        .crossJoin(broadcast(probes))
-        .withColumn("score",
-          round(expr("vec_dot(pv, cv)") / (col("pnorm") * col("cnorm")), 4))
-        .withColumn("rnk", row_number().over(w))
-        .where(col("rnk") <= 5)
-        .select("probe_id", "neighbor_id")
-      val p5 = pqAdcRanked(s, dir, trained = false)
-        .select(col("probe_id"), col("neighbor_id"), lit(1L).as("h_s"))
-      val t5 = pqAdcRanked(s, dir, trained = true)
-        .select(col("probe_id"), col("neighbor_id"), lit(1L).as("h_t"))
-      val i5 = ivfAdcRanked(s, dir)
-        .select(col("probe_id"), col("neighbor_id"), lit(1L).as("h_i"))
-      exact.join(p5, Seq("probe_id", "neighbor_id"), "left")
-        .join(t5, Seq("probe_id", "neighbor_id"), "left")
-        .join(i5, Seq("probe_id", "neighbor_id"), "left")
-        .groupBy("probe_id")
-        .agg(count(lit(1)).as("n_exact"),
-          sum(coalesce(col("h_s"), lit(0L))).as("pq_hits"),
-          sum(coalesce(col("h_t"), lit(0L))).as("pq_trained_hits"),
-          sum(coalesce(col("h_i"), lit(0L))).as("ivfpq_hits"))
-        .orderBy("probe_id")
-    }),
+    "q_sim_recall_pq" -> ((s, dir) =>
+      gradeHits(exactTopK(s, dir),
+        ("h_s", "pq_hits", pqAdcRanked(s, dir, trained = false)),
+        ("h_t", "pq_trained_hits", pqAdcRanked(s, dir, trained = true)),
+        ("h_i", "ivfpq_hits", ivfAdcRanked(s, dir)))),
 
     // The IVFADC recall/cost CURVE — the knob ledger behind every "set
     // nprobe" tuning decision: the SAME residual codebook served at
@@ -1806,53 +1744,15 @@ object Dedup extends QueryFamily {
     // One shared trainer (memoized residual codebook), three
     // broadcast-only serve chains.
     "q_sim_recall_curve" -> ((s, dir) => {
-      graft.functions.VecDot.register(s)
-      val e = Tables(s, dir, "embeddings").select(col("vec_id"),
-        transform(col("embedding"), x => x.cast("double")).as("v"))
-        .withColumn("norm", expr("sqrt(vec_dot(v, v))"))
-      val probes = e.where(col("vec_id") < 10)
-        .select(col("vec_id").as("probe_id"), col("v").as("pv"),
-          col("norm").as("pnorm"))
-      val w = Window.partitionBy("probe_id")
-        .orderBy(col("score").desc, col("neighbor_id"))
-      val exact = e.where(col("vec_id") >= 10)
-        .select(col("vec_id").as("neighbor_id"), col("v").as("cv"),
-          col("norm").as("cnorm"))
-        .crossJoin(broadcast(probes))
-        .withColumn("score",
-          round(expr("vec_dot(pv, cv)") / (col("pnorm") * col("cnorm")), 4))
-        .withColumn("rnk", row_number().over(w))
-        .where(col("rnk") <= 5)
-        .select("probe_id", "neighbor_id")
-      val sqd64 = "aggregate(zip_with(fx, c.cv, (a, b) -> (a - b) * (a - b)), " +
-        "CAST(0 AS BIGINT), (acc, x) -> acc + x)"
       val av = TextOps.kmeansAssign(s, dir)
+      val cents = TextOps.kmeansCentroidRow(s, dir)
       val cands = av.where(col("vec_id") >= 10)
         .select(col("vec_id").as("neighbor_id"), col("k"))
-      def candFlag(nprobe: Int, name: String) = cands.join(broadcast(
-        av.where(col("vec_id") < 10)
-          .crossJoin(broadcast(TextOps.kmeansCentroidRow(s, dir)))
-          .select(col("vec_id").as("probe_id"), explode(expr(
-            s"slice(array_sort(transform(cents, c -> struct($sqd64 AS d, " +
-              s"c.k AS k))), 1, $nprobe)")).as("pc"))
-          .select(col("probe_id"), col("pc.k").as("k"))), "k")
-        .select(col("probe_id"), col("neighbor_id"), lit(1L).as(name))
-      def adcFlag(nprobe: Int, name: String) = ivfAdcRanked(s, dir, nprobe)
-        .select(col("probe_id"), col("neighbor_id"), lit(1L).as(name))
-      val keys = Seq("probe_id", "neighbor_id")
-      exact
-        .join(candFlag(1, "c1"), keys, "left").join(adcFlag(1, "h1"), keys, "left")
-        .join(candFlag(2, "c2"), keys, "left").join(adcFlag(2, "h2"), keys, "left")
-        .join(candFlag(4, "c4"), keys, "left").join(adcFlag(4, "h4"), keys, "left")
-        .groupBy("probe_id")
-        .agg(count(lit(1)).as("n_exact"),
-          sum(coalesce(col("c1"), lit(0L))).as("cand_np1"),
-          sum(coalesce(col("h1"), lit(0L))).as("hits_np1"),
-          sum(coalesce(col("c2"), lit(0L))).as("cand_np2"),
-          sum(coalesce(col("h2"), lit(0L))).as("hits_np2"),
-          sum(coalesce(col("c4"), lit(0L))).as("cand_np4"),
-          sum(coalesce(col("h4"), lit(0L))).as("hits_np4"))
-        .orderBy("probe_id")
+      def probed(nprobe: Int) = cands.join(broadcast(nearestCentroids(av, cents, nprobe)
+        .select(col("probe_id"), col("pc.k").as("k"))), "k")
+      gradeHits(exactTopK(s, dir), Seq(1, 2, 4).flatMap(n => Seq(
+        (s"c$n", s"cand_np$n", probed(n)),
+        (s"h$n", s"hits_np$n", ivfAdcRanked(s, dir, n)))): _*)
     }),
 
     // The CODEBOOK-BITS point q_sim_recall_curve's saturation argues
@@ -1870,37 +1770,10 @@ object Dedup extends QueryFamily {
     // cost is IDENTICAL (8 table lookups either way; only the
     // broadcast table is 16× wider), which is exactly why codebook
     // bits is the knob that buys recall without touching serve cost.
-    "q_sim_pq_bits" -> ((s, dir) => {
-      graft.functions.VecDot.register(s)
-      val e = Tables(s, dir, "embeddings").select(col("vec_id"),
-        transform(col("embedding"), x => x.cast("double")).as("v"))
-        .withColumn("norm", expr("sqrt(vec_dot(v, v))"))
-      val probes = e.where(col("vec_id") < 10)
-        .select(col("vec_id").as("probe_id"), col("v").as("pv"),
-          col("norm").as("pnorm"))
-      val w = Window.partitionBy("probe_id")
-        .orderBy(col("score").desc, col("neighbor_id"))
-      val exact = e.where(col("vec_id") >= 10)
-        .select(col("vec_id").as("neighbor_id"), col("v").as("cv"),
-          col("norm").as("cnorm"))
-        .crossJoin(broadcast(probes))
-        .withColumn("score",
-          round(expr("vec_dot(pv, cv)") / (col("pnorm") * col("cnorm")), 4))
-        .withColumn("rnk", row_number().over(w))
-        .where(col("rnk") <= 5)
-        .select("probe_id", "neighbor_id")
-      val keys = Seq("probe_id", "neighbor_id")
-      val b4 = ivfAdcRanked(s, dir, nprobe = 2, ksub = 16)
-        .select(col("probe_id"), col("neighbor_id"), lit(1L).as("h4"))
-      val b8 = ivfAdcRanked(s, dir, nprobe = 2, ksub = 256)
-        .select(col("probe_id"), col("neighbor_id"), lit(1L).as("h8"))
-      exact.join(b4, keys, "left").join(b8, keys, "left")
-        .groupBy("probe_id")
-        .agg(count(lit(1)).as("n_exact"),
-          sum(coalesce(col("h4"), lit(0L))).as("hits_4bit"),
-          sum(coalesce(col("h8"), lit(0L))).as("hits_8bit"))
-        .orderBy("probe_id")
-    }),
+    "q_sim_pq_bits" -> ((s, dir) =>
+      gradeHits(exactTopK(s, dir),
+        ("h4", "hits_4bit", ivfAdcRanked(s, dir, nprobe = 2, ksub = 16)),
+        ("h8", "hits_8bit", ivfAdcRanked(s, dir, nprobe = 2, ksub = 256)))),
 
     // ANN quality gate: recall@5 of the three approximate paths against
     // the exact answer, oracle-checked as integer hit counts. For each
@@ -1930,30 +1803,22 @@ object Dedup extends QueryFamily {
     // SimRecallSpec pins hits_k64 ≥ hits_k8 (expansion theorem) and
     // the scalar replay.
     "q_sim_filtered" -> ((s, dir) => {
-      graft.functions.VecDot.register(s)
-      val e = Tables(s, dir, "embeddings").select(col("vec_id"),
-        transform(col("embedding"), x => x.cast("double")).as("v"))
-        .withColumn("norm", expr("sqrt(vec_dot(v, v))"))
+      val e = vectors(s, dir)
         .withColumn("p16", slice(col("v"), 1, 16))
-        .withColumn("norm16", expr("sqrt(vec_dot(p16, p16))"))
+        .withColumn("norm16", norm("p16"))
       val probes = e.where(col("vec_id") < 10).select(
         col("vec_id").as("probe_id"), col("v").as("pv"), col("norm").as("pnorm"),
         col("p16").as("pp16"), col("norm16").as("pnorm16"))
-      val wExact = Window.partitionBy("probe_id")
-        .orderBy(col("score").desc, col("neighbor_id"))
-      val wExactRun = wExact.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val wCoarse = Window.partitionBy("probe_id")
-        .orderBy(col("cscore").desc, col("neighbor_id"))
+      val wExactRun = perProbe(col("score").desc)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
       e.where(col("vec_id") >= 10)
         .select(col("vec_id").as("neighbor_id"), col("v"), col("norm"),
           col("p16"), col("norm16"))
         .crossJoin(broadcast(probes))
         .withColumn("keep", expr("neighbor_id % 3 = probe_id % 3"))
-        .withColumn("score",
-          round(expr("vec_dot(pv, v)") / (col("pnorm") * col("norm")), 4))
-        .withColumn("cscore",
-          round(expr("vec_dot(pp16, p16)") / (col("pnorm16") * col("norm16")), 4))
-        .withColumn("crank", row_number().over(wCoarse))
+        .withColumn("score", cosine("pv", "v", "pnorm", "norm"))
+        .withColumn("cscore", cosine("pp16", "p16", "pnorm16", "norm16"))
+        .withColumn("crank", row_number().over(perProbe(col("cscore").desc)))
         // filtered ranks as RUNNING CONDITIONAL SUMS over the one exact
         // ordering — rank among survivors without a second scan
         .withColumn("rankF",
@@ -1973,32 +1838,22 @@ object Dedup extends QueryFamily {
     }),
 
     "q_sim_recall" -> ((s, dir) => {
-      graft.functions.VecDot.register(s)
-      val bucket = lshBucketExpr(j => s"element_at(v, $j)", 4)
-      val e = Tables(s, dir, "embeddings").select(col("vec_id"), col("label"),
-        transform(col("embedding"), x => x.cast("double")).as("v"))
-        .withColumn("norm", expr("sqrt(vec_dot(v, v))"))
-        .withColumn("bucket", expr(bucket))
+      val e = vectors(s, dir)
+        .withColumn("bucket", expr(lshBucketExpr(j => s"element_at(v, $j)", 4)))
         .withColumn("p16", slice(col("v"), 1, 16))
-        .withColumn("norm16", expr("sqrt(vec_dot(p16, p16))"))
+        .withColumn("norm16", norm("p16"))
       val probes = e.where(col("vec_id") < 10).select(
         col("vec_id").as("probe_id"), col("label").as("plabel"),
         col("bucket").as("pbucket"), col("v").as("pv"), col("norm").as("pnorm"),
         col("p16").as("pp16"), col("norm16").as("pnorm16"))
-      val wExact = Window.partitionBy("probe_id")
-        .orderBy(col("score").desc, col("neighbor_id"))
-      val wCoarse = Window.partitionBy("probe_id")
-        .orderBy(col("cscore").desc, col("neighbor_id"))
       e.where(col("vec_id") >= 10)
         .select(col("vec_id").as("neighbor_id"), col("label"), col("bucket"),
           col("v"), col("norm"), col("p16"), col("norm16"))
         .crossJoin(broadcast(probes))
-        .withColumn("score",
-          round(expr("vec_dot(pv, v)") / (col("pnorm") * col("norm")), 4))
-        .withColumn("cscore",
-          round(expr("vec_dot(pp16, p16)") / (col("pnorm16") * col("norm16")), 4))
-        .withColumn("rank", row_number().over(wExact))
-        .withColumn("crank", row_number().over(wCoarse))
+        .withColumn("score", cosine("pv", "v", "pnorm", "norm"))
+        .withColumn("cscore", cosine("pp16", "p16", "pnorm16", "norm16"))
+        .withColumn("rank", row_number().over(perProbe(col("score").desc)))
+        .withColumn("crank", row_number().over(perProbe(col("cscore").desc)))
         .where(col("rank") <= 5)
         .groupBy("probe_id")
         .agg(count(lit(1)).as("n_exact"),
@@ -2112,6 +1967,41 @@ object Dedup extends QueryFamily {
 
   private val jaccDuck = "CAST(len(list_intersect(a.toks, b.toks)) AS DOUBLE) / " +
     "(len(a.toks) + len(b.toks) - len(list_intersect(a.toks, b.toks)))"
+
+  /** The near-dup oracles' `d` CTE: distinct token lists in (lang,
+    * n_chars/50) blocks. */
+  private val nearD = "d AS (SELECT doc_id, lang, n_chars // 50 AS bucket, " +
+    "list_distinct(string_split(text, ' ')) AS toks FROM documents)"
+
+  /** In-block Jaccard self-join over `d`: pairs ordered by `op` on
+    * doc_id with Jaccard >= `thresh`. */
+  private def inBlockJaccard(op: String = "<", thresh: String = "0.8"): String =
+    "FROM d a JOIN d b ON a.lang = b.lang AND a.bucket = b.bucket " +
+    s"AND a.doc_id $op b.doc_id WHERE $jaccDuck >= $thresh"
+
+  /** DuckDB mirror of [[exactTopK]]: CTE `ex` (probe_id, neighbor_id). */
+  private val exactTopKDuck = "ex AS (SELECT probe_id, neighbor_id FROM " +
+    "(SELECT p.vec_id AS probe_id, c.vec_id AS neighbor_id, " +
+    "row_number() OVER (PARTITION BY p.vec_id ORDER BY " +
+    "round(list_cosine_similarity(CAST(p.embedding AS DOUBLE[]), " +
+    "CAST(c.embedding AS DOUBLE[])), 4) DESC, c.vec_id) AS rnk " +
+    "FROM embeddings p, embeddings c WHERE p.vec_id < 10 AND c.vec_id >= 10) " +
+    "WHERE rnk <= 5)"
+
+  /** DuckDB mirror of [[gradeHits]] over `ex`: per probe, n_exact and
+    * one BIGINT hit count per (alias, output, (probe_id, neighbor_id)
+    * subquery), each subquery left-joined under its alias. */
+  private def gradeHitsDuck(graded: (String, String, String)*): String =
+    "SELECT ex.probe_id, count(*) AS n_exact, " +
+    graded.map { case (a, out, _) =>
+      s"CAST(sum(CASE WHEN $a.neighbor_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS $out"
+    }.mkString(", ") + " FROM ex " +
+    graded.map { case (a, _, sub) =>
+      s"LEFT JOIN ($sub) $a ON ex.probe_id = $a.probe_id AND ex.neighbor_id = $a.neighbor_id "
+    }.mkString + "GROUP BY ex.probe_id ORDER BY ex.probe_id"
+
+  /** An ADC ranking CTE's top 5 as a (probe_id, neighbor_id) subquery. */
+  private def top5(rk: String): String = s"SELECT probe_id, neighbor_id FROM $rk WHERE rank <= 5"
 
   /** The MinHash-LSH candidate-pair CTE chain at (`perms`, `bands`),
     * names suffixed with `sfx` so several knob settings can coexist in
@@ -2231,34 +2121,25 @@ object Dedup extends QueryFamily {
       "CAST(sum(clen) AS BIGINT) AS bytes_unique " +
       "FROM fpg GROUP BY lang ORDER BY lang"),
 
-    "q_dedup_near" -> ("WITH d AS (SELECT doc_id, lang, n_chars // 50 AS bucket, " +
-      "list_distinct(string_split(text, ' ')) AS toks FROM documents) " +
-      "SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, " +
-      s"$jaccDuck AS jacc " +
-      "FROM d a JOIN d b ON a.lang = b.lang AND a.bucket = b.bucket AND a.doc_id < b.doc_id " +
-      s"WHERE $jaccDuck >= 0.8 ORDER BY doc_a, doc_b"),
+    "q_dedup_near" -> (s"WITH $nearD " +
+      s"SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, $jaccDuck AS jacc " +
+      s"${inBlockJaccard()} ORDER BY doc_a, doc_b"),
 
     // the full recompute filtered to delta-touching pairs: with an
     // id-suffix delta, a pair touches the delta iff its max id (doc_b)
     // is past the cut — same integer cut math as the Spark side
-    "q_dedup_incremental" -> ("WITH d AS (SELECT doc_id, lang, n_chars // 50 AS bucket, " +
-      "list_distinct(string_split(text, ' ')) AS toks FROM documents) " +
-      "SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, " +
-      s"$jaccDuck AS jacc " +
-      "FROM d a JOIN d b ON a.lang = b.lang AND a.bucket = b.bucket AND a.doc_id < b.doc_id " +
-      s"WHERE $jaccDuck >= 0.8 " +
+    "q_dedup_incremental" -> (s"WITH $nearD " +
+      s"SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, $jaccDuck AS jacc " +
+      s"${inBlockJaccard()} " +
       "AND b.doc_id > (SELECT (4 * max(doc_id)) // 5 FROM documents) " +
       "ORDER BY doc_a, doc_b"),
 
     // the one-shot batch answer for first-copy-wins: survive iff no
     // smaller-id near-dup anywhere in the corpus (dropped docs still
     // drop others — the signature store is grow-only on the Spark side)
-    "q_dedup_ingest" -> ("WITH d AS (SELECT doc_id, lang, n_chars // 50 AS bucket, " +
-      "list_distinct(string_split(text, ' ')) AS toks FROM documents) " +
+    "q_dedup_ingest" -> (s"WITH $nearD " +
       "SELECT doc_id FROM documents WHERE doc_id NOT IN (" +
-      "SELECT b.doc_id FROM d a JOIN d b " +
-      "ON a.lang = b.lang AND a.bucket = b.bucket AND a.doc_id < b.doc_id " +
-      s"WHERE $jaccDuck >= 0.8) ORDER BY doc_id"),
+      s"SELECT b.doc_id ${inBlockJaccard()}) ORDER BY doc_id"),
 
     "q_dedup_containment" ->
       ("WITH d AS (SELECT doc_id, lang, " +
@@ -2271,11 +2152,8 @@ object Dedup extends QueryFamily {
         "GROUP BY a.doc_id ORDER BY doc_id"),
 
     "q_dedup_recall" ->
-      ("WITH d AS (SELECT doc_id, lang, n_chars // 50 AS bucket, " +
-        "list_distinct(string_split(text, ' ')) AS toks FROM documents), " +
-        "truth AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b " +
-        "FROM d a JOIN d b ON a.lang = b.lang AND a.bucket = b.bucket " +
-        s"AND a.doc_id < b.doc_id WHERE $jaccDuck >= 0.8), " +
+      (s"WITH $nearD, " +
+        s"truth AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b ${inBlockJaccard()}), " +
         minhashCandSql(8, 2, "82") + ", " + minhashCandSql(12, 3, "123") + " " +
         "SELECT * FROM (" +
         "SELECT 'minhash_12x3' AS modality, " +
@@ -2298,10 +2176,8 @@ object Dedup extends QueryFamily {
     "q_dedup_ngram" -> ("WITH d AS (SELECT doc_id, lang, n_chars // 100 AS bucket, " +
       "list_distinct([substr(text, i, 3) for i in generate_series(1, CAST(length(text) AS INT) - 2)]) AS toks " +
       "FROM documents) " +
-      "SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, " +
-      s"$jaccDuck AS jacc " +
-      "FROM d a JOIN d b ON a.lang = b.lang AND a.bucket = b.bucket AND a.doc_id < b.doc_id " +
-      s"WHERE $jaccDuck >= 0.6 ORDER BY doc_a, doc_b"),
+      s"SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, $jaccDuck AS jacc " +
+      s"${inBlockJaccard(thresh = "0.6")} ORDER BY doc_a, doc_b"),
 
     "q_dedup_cosine" -> cosineOracle(4),
     "q_dedup_cosine_wide" -> cosineOracle(6),
@@ -2314,21 +2190,15 @@ object Dedup extends QueryFamily {
       "FROM embeddings p, embeddings c WHERE p.vec_id < 10 AND c.vec_id >= 10) " +
       "WHERE rank <= 5 ORDER BY probe_id, rank"),
 
-    "q_dedup_cluster" -> ("WITH RECURSIVE d AS (SELECT doc_id, lang, n_chars // 50 AS bucket, " +
-      "list_distinct(string_split(text, ' ')) AS toks FROM documents), " +
-      "e AS (SELECT a.doc_id AS src, b.doc_id AS dst FROM d a JOIN d b " +
-      "ON a.lang = b.lang AND a.bucket = b.bucket AND a.doc_id <> b.doc_id " +
-      s"WHERE $jaccDuck >= 0.8), " +
+    "q_dedup_cluster" -> (s"WITH RECURSIVE $nearD, " +
+      s"e AS (SELECT a.doc_id AS src, b.doc_id AS dst ${inBlockJaccard("<>")}), " +
       "r(id, lbl) AS (SELECT doc_id, doc_id FROM documents " +
       "UNION SELECT e.src, r.lbl FROM r JOIN e ON e.dst = r.id) " +
       "SELECT id AS doc_id, min(lbl) AS component, (id = min(lbl)) AS is_canonical " +
       "FROM r GROUP BY id ORDER BY doc_id"),
 
-    "q_dedup_retention" -> ("WITH d AS (SELECT doc_id, lang, n_chars // 50 AS bucket, " +
-      "list_distinct(string_split(text, ' ')) AS toks FROM documents), " +
-      "p AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b FROM d a JOIN d b " +
-      "ON a.lang = b.lang AND a.bucket = b.bucket AND a.doc_id < b.doc_id " +
-      s"WHERE $jaccDuck >= 0.8), " +
+    "q_dedup_retention" -> (s"WITH $nearD, " +
+      s"p AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b ${inBlockJaccard()}), " +
       "q AS (SELECT doc_id, CAST(len(toks) AS BIGINT) AS n_dist FROM d), " +
       "e AS (SELECT doc_a AS doc_id, doc_b AS partner FROM p " +
       "UNION ALL SELECT doc_b, doc_a FROM p), " +
@@ -2398,9 +2268,7 @@ object Dedup extends QueryFamily {
     // in (c1 centroids, a2 assignment); probe buckets are the same
     // integer-distance (d, k) top-2, rescore the same round(·,4) ranking
     "q_sim_ivf_trained" -> (s"WITH ${TextOps.kmeansAssignCtes}, " +
-      "pc AS (SELECT e.vec_id AS probe_id, c1.k FROM e, c1 WHERE e.vec_id < 10 " +
-      "QUALIFY row_number() OVER (PARTITION BY e.vec_id ORDER BY " +
-      "list_sum([ (e.fx[i+1] - c1.cv[i+1]) * (e.fx[i+1] - c1.cv[i+1]) for i in range(64) ]), c1.k) <= 2), " +
+      nearestDuck("pc", 2) + ", " +
       "cand AS (SELECT vec_id AS neighbor_id, k FROM a2 WHERE vec_id >= 10), " +
       "ev AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings), " +
       "scored AS (SELECT pc.probe_id, cand.neighbor_id, " +
@@ -2438,26 +2306,9 @@ object Dedup extends QueryFamily {
       s"${TextOps.kmeansChainCtes}, " +
       s"${pqOracleChain("_s", trained = false)}, " +
       s"${pqOracleChain("_t", trained = true)}, " +
-      s"$ivfpqOracleChain, " +
-      "ex AS (SELECT probe_id, neighbor_id FROM " +
-      "(SELECT p.vec_id AS probe_id, c.vec_id AS neighbor_id, " +
-      "row_number() OVER (PARTITION BY p.vec_id ORDER BY " +
-      "round(list_cosine_similarity(CAST(p.embedding AS DOUBLE[]), " +
-      "CAST(c.embedding AS DOUBLE[])), 4) DESC, c.vec_id) AS rnk " +
-      "FROM embeddings p, embeddings c WHERE p.vec_id < 10 AND c.vec_id >= 10) " +
-      "WHERE rnk <= 5) " +
-      "SELECT ex.probe_id, count(*) AS n_exact, " +
-      "CAST(sum(CASE WHEN rs.neighbor_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS pq_hits, " +
-      "CAST(sum(CASE WHEN rt.neighbor_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS pq_trained_hits, " +
-      "CAST(sum(CASE WHEN ri.neighbor_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS ivfpq_hits " +
-      "FROM ex " +
-      "LEFT JOIN (SELECT probe_id, neighbor_id FROM rk_s WHERE rank <= 5) rs " +
-      "ON ex.probe_id = rs.probe_id AND ex.neighbor_id = rs.neighbor_id " +
-      "LEFT JOIN (SELECT probe_id, neighbor_id FROM rk_t WHERE rank <= 5) rt " +
-      "ON ex.probe_id = rt.probe_id AND ex.neighbor_id = rt.neighbor_id " +
-      "LEFT JOIN (SELECT probe_id, neighbor_id FROM rkivf WHERE rank <= 5) ri " +
-      "ON ex.probe_id = ri.probe_id AND ex.neighbor_id = ri.neighbor_id " +
-      "GROUP BY ex.probe_id ORDER BY ex.probe_id"),
+      s"$ivfpqOracleChain, $exactTopKDuck " +
+      gradeHitsDuck(("rs", "pq_hits", top5("rk_s")),
+        ("rt", "pq_trained_hits", top5("rk_t")), ("ri", "ivfpq_hits", top5("rkivf")))),
 
     // the curve: ONE shared residual-codebook chain, three suffixed
     // nprobe serve chains, the shared exact ranking, three left joins
@@ -2465,38 +2316,11 @@ object Dedup extends QueryFamily {
       s"${ivfpqCodebookCtes()}, " +
       s"${ivfpqServeCtes("_n1", 1)}, " +
       s"${ivfpqServeCtes("_n2", 2)}, " +
-      s"${ivfpqServeCtes("_n4", 4)}, " +
-      "ex AS (SELECT probe_id, neighbor_id FROM " +
-      "(SELECT p.vec_id AS probe_id, c.vec_id AS neighbor_id, " +
-      "row_number() OVER (PARTITION BY p.vec_id ORDER BY " +
-      "round(list_cosine_similarity(CAST(p.embedding AS DOUBLE[]), " +
-      "CAST(c.embedding AS DOUBLE[])), 4) DESC, c.vec_id) AS rnk " +
-      "FROM embeddings p, embeddings c WHERE p.vec_id < 10 AND c.vec_id >= 10) " +
-      "WHERE rnk <= 5) " +
-      "SELECT ex.probe_id, count(*) AS n_exact, " +
-      "CAST(sum(CASE WHEN cd1.neighbor_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS cand_np1, " +
-      "CAST(sum(CASE WHEN r1.neighbor_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS hits_np1, " +
-      "CAST(sum(CASE WHEN cd2.neighbor_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS cand_np2, " +
-      "CAST(sum(CASE WHEN r2.neighbor_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS hits_np2, " +
-      "CAST(sum(CASE WHEN cd4.neighbor_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS cand_np4, " +
-      "CAST(sum(CASE WHEN r4.neighbor_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS hits_np4 " +
-      "FROM ex " +
-      "LEFT JOIN (SELECT p.probe_id, a2.vec_id AS neighbor_id FROM ppc_n1 p " +
-      "JOIN a2 ON a2.k = p.k WHERE a2.vec_id >= 10) cd1 " +
-      "ON ex.probe_id = cd1.probe_id AND ex.neighbor_id = cd1.neighbor_id " +
-      "LEFT JOIN (SELECT probe_id, neighbor_id FROM rkivf_n1 WHERE rank <= 5) r1 " +
-      "ON ex.probe_id = r1.probe_id AND ex.neighbor_id = r1.neighbor_id " +
-      "LEFT JOIN (SELECT p.probe_id, a2.vec_id AS neighbor_id FROM ppc_n2 p " +
-      "JOIN a2 ON a2.k = p.k WHERE a2.vec_id >= 10) cd2 " +
-      "ON ex.probe_id = cd2.probe_id AND ex.neighbor_id = cd2.neighbor_id " +
-      "LEFT JOIN (SELECT probe_id, neighbor_id FROM rkivf_n2 WHERE rank <= 5) r2 " +
-      "ON ex.probe_id = r2.probe_id AND ex.neighbor_id = r2.neighbor_id " +
-      "LEFT JOIN (SELECT p.probe_id, a2.vec_id AS neighbor_id FROM ppc_n4 p " +
-      "JOIN a2 ON a2.k = p.k WHERE a2.vec_id >= 10) cd4 " +
-      "ON ex.probe_id = cd4.probe_id AND ex.neighbor_id = cd4.neighbor_id " +
-      "LEFT JOIN (SELECT probe_id, neighbor_id FROM rkivf_n4 WHERE rank <= 5) r4 " +
-      "ON ex.probe_id = r4.probe_id AND ex.neighbor_id = r4.neighbor_id " +
-      "GROUP BY ex.probe_id ORDER BY ex.probe_id"),
+      s"${ivfpqServeCtes("_n4", 4)}, $exactTopKDuck " +
+      gradeHitsDuck(Seq(1, 2, 4).flatMap(n => Seq(
+        (s"cd$n", s"cand_np$n", s"SELECT p.probe_id, a2.vec_id AS neighbor_id FROM ppc_n$n p " +
+          "JOIN a2 ON a2.k = p.k WHERE a2.vec_id >= 10"),
+        (s"r$n", s"hits_np$n", top5(s"rkivf_n$n")))): _*)),
 
     // both codebook chains re-derived (the shared rcand/rsub residual
     // rows, then a 16- and a 256-seed Lloyd's round), two suffixed
@@ -2505,23 +2329,8 @@ object Dedup extends QueryFamily {
       s"${ivfpqCodebookCtes()}, " +
       s"${ivfpqCodebookCtes("_b8", 256)}, " +
       s"${ivfpqServeCtes("_k4", 2)}, " +
-      s"${ivfpqServeCtes("_k8", 2, "_b8", 256)}, " +
-      "ex AS (SELECT probe_id, neighbor_id FROM " +
-      "(SELECT p.vec_id AS probe_id, c.vec_id AS neighbor_id, " +
-      "row_number() OVER (PARTITION BY p.vec_id ORDER BY " +
-      "round(list_cosine_similarity(CAST(p.embedding AS DOUBLE[]), " +
-      "CAST(c.embedding AS DOUBLE[])), 4) DESC, c.vec_id) AS rnk " +
-      "FROM embeddings p, embeddings c WHERE p.vec_id < 10 AND c.vec_id >= 10) " +
-      "WHERE rnk <= 5) " +
-      "SELECT ex.probe_id, count(*) AS n_exact, " +
-      "CAST(sum(CASE WHEN r4.neighbor_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS hits_4bit, " +
-      "CAST(sum(CASE WHEN r8.neighbor_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS hits_8bit " +
-      "FROM ex " +
-      "LEFT JOIN (SELECT probe_id, neighbor_id FROM rkivf_k4 WHERE rank <= 5) r4 " +
-      "ON ex.probe_id = r4.probe_id AND ex.neighbor_id = r4.neighbor_id " +
-      "LEFT JOIN (SELECT probe_id, neighbor_id FROM rkivf_k8 WHERE rank <= 5) r8 " +
-      "ON ex.probe_id = r8.probe_id AND ex.neighbor_id = r8.neighbor_id " +
-      "GROUP BY ex.probe_id ORDER BY ex.probe_id"),
+      s"${ivfpqServeCtes("_k8", 2, "_b8", 256)}, $exactTopKDuck " +
+      gradeHitsDuck(("r4", "hits_4bit", top5("rkivf_k4")), ("r8", "hits_8bit", top5("rkivf_k8")))),
 
     // identical exact/coarse rankings (round(·,4) + id tiebreak) and the
     // identical inlined 4-plane bucket literals; hits are integer counts

@@ -53,17 +53,13 @@ object TextOps extends QueryFamily {
   // map-side broadcast argmin, and pinning it would hide the very shapes
   // PlanSpec pins.
   private def kmeansPipeline(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    val e = Tables(s, dir, "embeddings").select(col("vec_id"),
-      expr("transform(embedding, x -> " +
-        "CAST(floor(CAST(x AS DOUBLE) * 1000.0D + 0.5D) AS BIGINT))").as("fx"))
+    val e = fixedPointVectors(s, dir)
     def centRow(c: DataFrame): DataFrame =
       c.agg(expr("array_sort(collect_list(struct(k, cv)))").as("cents"))
-    val sqd = "aggregate(zip_with(fx, c.cv, (a, b) -> (a - b) * (a - b)), " +
-      "CAST(0 AS BIGINT), (acc, x) -> acc + x)"
     def assign(cents: DataFrame): DataFrame =
       e.crossJoin(broadcast(cents))
-        .withColumn("m",
-          expr(s"array_min(transform(cents, c -> struct($sqd AS d, c.k AS k)))"))
+        .withColumn("m", expr(
+          s"array_min(transform(cents, c -> struct(${intSqd("fx", "c.cv")} AS d, c.k AS k)))"))
         .select(col("vec_id"), col("fx"), col("m.k").as("k"), col("m.d").as("d"))
     def update(a: DataFrame): DataFrame =
       a.select(col("k"), posexplode(col("fx")).as(Seq("pos", "x")))
@@ -81,6 +77,25 @@ object TextOps extends QueryFamily {
     }
     (c1row, assign(c1row))
   }
+
+  /** (vec_id, fx): the embedding corpus in exact fixed point, fx =
+    * floor(1000x + 0.5) per element — the input of every integer vector
+    * kernel (k-means, PQ), bit-identical in both engines (fxCte). */
+  private[operators] def fixedPointVectors(s: SparkSession, dir: String): DataFrame =
+    Tables(s, dir, "embeddings").select(col("vec_id"),
+      expr("transform(embedding, x -> " +
+        "CAST(floor(CAST(x AS DOUBLE) * 1000.0D + 0.5D) AS BIGINT))").as("fx"))
+
+  /** Exact-integer squared distance between two BIGINT arrays (Spark
+    * SQL) — the one distance of every fixed-point kernel: k-means
+    * assignment, nearest-centroid probing, PQ encoding. */
+  private[operators] def intSqd(a: String, b: String): String =
+    s"aggregate(zip_with($a, $b, (a, b) -> (a - b) * (a - b)), " +
+      "CAST(0 AS BIGINT), (acc, x) -> acc + x)"
+
+  /** DuckDB mirror of [[intSqd]] over the first `n` elements. */
+  private[operators] def sqdDuck(a: String, b: String, n: Int): String =
+    s"list_sum([ ($a[i+1] - $b[i+1]) * ($a[i+1] - $b[i+1]) for i in range($n) ])"
 
   /** The BPE base table: corpus word counts with each word rendered as a
     * '<c><c>…' delimited symbol string — the ONLY corpus-scale pass of
@@ -1903,14 +1918,14 @@ object TextOps extends QueryFamily {
     "c0 AS (SELECT vec_id AS k, fx AS cv FROM e WHERE vec_id < 8), " +
     "a1 AS (SELECT e.vec_id, c0.k, e.fx FROM e, c0 " +
     "QUALIFY row_number() OVER (PARTITION BY e.vec_id ORDER BY " +
-    "list_sum([ (e.fx[i+1] - c0.cv[i+1]) * (e.fx[i+1] - c0.cv[i+1]) for i in range(64) ]), c0.k) = 1), " +
+    s"${sqdDuck("e.fx", "c0.cv", 64)}, c0.k) = 1), " +
     "s1 AS (SELECT k, pos, sum(x) AS sx, count(*) AS n FROM " +
     "(SELECT k, unnest(fx) AS x, generate_subscripts(fx, 1) - 1 AS pos FROM a1) " +
     "GROUP BY k, pos), " +
     "c1 AS (SELECT k, list(CAST(floor(CAST(sx AS DOUBLE) / n + 0.5) AS BIGINT) ORDER BY pos) AS cv " +
     "FROM s1 GROUP BY k), " +
     "a2 AS (SELECT e.vec_id, c1.k, " +
-    "list_sum([ (e.fx[i+1] - c1.cv[i+1]) * (e.fx[i+1] - c1.cv[i+1]) for i in range(64) ]) AS d " +
+    s"${sqdDuck("e.fx", "c1.cv", 64)} AS d " +
     "FROM e, c1 " +
     "QUALIFY row_number() OVER (PARTITION BY e.vec_id ORDER BY d, c1.k) = 1)"
 

@@ -75,17 +75,28 @@ object AliasedIndex {
     // cleans its staging up entirely
     val versionDir = stage(rootP, name)(write)
     // alias flip: tmp pointer file + atomic rename over `current`
-    val tmp = Files.createTempFile(rootP, ".current-", ".tmp")
+    writeAtomically(rootP.resolve("current"), name.getBytes("UTF-8"))
+    gc(rootP, keep)
+    versionDir.toString
+  }
+
+  /** Replace `target` with `bytes` atomically: write a hidden tmp file in
+    * the target's directory, then ATOMIC_MOVE it over the target —
+    * readers see the old bytes or the new ones, never a torn file. On
+    * failure the tmp file is deleted and the original exception thrown
+    * (a cleanup failure is suppressed onto it); the target keeps its old
+    * bytes.
+    */
+  def writeAtomically(target: Path, bytes: Array[Byte]): Unit = {
+    val tmp = Files.createTempFile(target.getParent, s".${target.getFileName}-", ".tmp")
     try {
-      Files.writeString(tmp, name)
-      Files.move(tmp, rootP.resolve("current"),
+      Files.write(tmp, bytes)
+      Files.move(tmp, target,
         StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
     } catch {
       case scala.util.control.NonFatal(e) =>
         cleanupQuietly(e, () => Files.deleteIfExists(tmp)); throw e
     }
-    gc(rootP, keep)
-    versionDir.toString
   }
 
   /** Write `rootP/name` via `write(dir)` into a hidden staging dir that

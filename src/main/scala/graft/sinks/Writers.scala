@@ -109,25 +109,15 @@ trait BulkClient extends Serializable {
   */
 case class FileBulkClient(dir: String, gen: Option[Int] = None) extends BulkClient {
   override def send(shard: Int, batchIdx: Int, docs: Seq[BulkDoc]): Seq[DocOutcome] = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
+    import java.nio.file.{Files, Paths}
     val base = gen.fold(Paths.get(dir))(g => Paths.get(dir, f"gen=$g%04d"))
     val d = base.resolve(f"shard=$shard%05d")
     Files.createDirectories(d)
-    val tmp = Files.createTempFile(d, s".batch-$batchIdx-", ".tmp")
-    try {
-      val body = docs.map {
-        case BulkDoc(id, Some(doc)) => s"""{"_id":"$id","doc":$doc}"""
-        case BulkDoc(id, None)      => s"""{"_id":"$id","delete":true}"""
-      }.mkString("", "\n", "\n")
-      Files.write(tmp, body.getBytes("UTF-8"))
-      Files.move(tmp, d.resolve(f"batch-$batchIdx%06d.jsonl"),
-        StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
-    } catch {
-      case NonFatal(e) => // suppress a cleanup failure, keep the cause
-        try Files.deleteIfExists(tmp)
-        catch { case NonFatal(c) => e.addSuppressed(c) }
-        throw e
-    }
+    val body = docs.map {
+      case BulkDoc(id, Some(doc)) => s"""{"_id":"$id","doc":$doc}"""
+      case BulkDoc(id, None)      => s"""{"_id":"$id","delete":true}"""
+    }.mkString("", "\n", "\n")
+    AliasedIndex.writeAtomically(d.resolve(f"batch-$batchIdx%06d.jsonl"), body.getBytes("UTF-8"))
     docs.map(b => DocOutcome(b.id, ok = true))
   }
 }

@@ -286,21 +286,4 @@ object StreamDemo {
       .start()
     q.processAllAvailable(); q.stop()
   }
-
-  def main(args: Array[String]): Unit = {
-    val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val work = java.nio.file.Files.createTempDirectory("graft_stream").toString
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    stage(spark, sfDir, work)
-    println(s"windowed rows: ${windowedCounts(spark, work).count()}")
-    println(s"dedup rows:    ${dedup(spark, work).count()}")
-    println(s"closed sessions: ${sessions(spark, work).count()}")
-    spark.stop()
-  }
 }

@@ -119,11 +119,8 @@ class DedupGate(val storeRoot: String, thresh: Double = 0.8,
     // the marker is the commit point, so it must APPEAR atomically: a
     // torn plain write would wedge (or worse, misdirect) every future
     // recover(); stage-and-rename is atomic on a POSIX dir
-    val stage = java.nio.file.Paths.get(storeRoot, MarkerName + ".stage")
-    java.nio.file.Files.write(stage, upTo.toString.getBytes("UTF-8"))
-    java.nio.file.Files.move(stage,
-      java.nio.file.Paths.get(storeRoot, MarkerName),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    graft.sinks.AliasedIndex.writeAtomically(
+      java.nio.file.Paths.get(storeRoot, MarkerName), upTo.toString.getBytes("UTF-8"))
     finishCompaction(upTo)
   }
 

@@ -1,6 +1,6 @@
 package graft.sync
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -218,10 +218,8 @@ object Rollover {
       (ledger + (key -> g)).toSeq.sortBy(_._1).foreach {
         case (b, gen) => node.put(b.toString, gen)
       }
-      val tmp = Files.createTempFile(cur, ".ledger-", ".tmp")
-      Files.writeString(tmp, mapper.writerWithDefaultPrettyPrinter().writeValueAsString(node))
-      Files.move(tmp, cur.resolve(LedgerFile),
-        StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
+      AliasedIndex.writeAtomically(cur.resolve(LedgerFile),
+        mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(node))
       g
     })
   }
@@ -255,13 +253,10 @@ object Rollover {
     node.put("alias", alias)
     val arr = node.putArray("indices")
     indices.foreach(arr.add)
-    val body = mapper.writerWithDefaultPrettyPrinter().writeValueAsString(node)
     val root = Paths.get(familyRoot)
     Files.createDirectories(root)
-    val tmp = Files.createTempFile(root, ".alias-", ".tmp")
-    Files.writeString(tmp, body)
-    Files.move(tmp, root.resolve("alias.json"),
-      StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
+    AliasedIndex.writeAtomically(root.resolve("alias.json"),
+      mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(node))
   }
 
   /** Retention: drop every period index whose period suffix sorts

@@ -1,6 +1,6 @@
 package graft.sync
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
 
 /** Durable per-job watermark state for tracked incremental syncs — the
   * "last synced value" bookkeeping every scan-based sync tool keeps
@@ -30,18 +30,6 @@ final class WatermarkStore(root: String) {
   }
 
   /** Durably record `wmLit` as `job`'s watermark (atomic replace). */
-  def set(job: String, wmLit: String): Unit = {
-    val f = fileFor(job)
-    val tmp = Files.createTempFile(f.getParent, s".wm-$job-", ".tmp")
-    try {
-      Files.writeString(tmp, wmLit)
-      Files.move(tmp, f,
-        StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
-    } catch {
-      case scala.util.control.NonFatal(e) =>
-        try Files.deleteIfExists(tmp)
-        catch { case scala.util.control.NonFatal(c) => e.addSuppressed(c) }
-        throw e
-    }
-  }
+  def set(job: String, wmLit: String): Unit =
+    graft.sinks.AliasedIndex.writeAtomically(fileFor(job), wmLit.getBytes("UTF-8"))
 }

@@ -14,7 +14,7 @@ object SlowTest extends Tag("graft.SlowTest")
   * TIME version of LshScalingSpec's candidate-count proofs. A synthetic
   * Zipfian corpus (the 100 TB text reality the fixture's degenerate
   * 31-word vocabulary can't model) is generated once at N and 4N; the
-  * declared queries run with the scale-safe knobs (`candidateGen=auto`
+  * declared queries run with the scale-safe choices (the candidate rule
   * picks prefix filtering, `simhashBits=auto` widens the signature) and
   * the measured ratio must stay far under the ~16x a quadratic plan
   * pays for 4x the rows. Bounds are deliberately generous (ratio < 8,

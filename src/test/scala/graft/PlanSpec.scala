@@ -343,8 +343,15 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("q_sim_topk broadcasts the probe side") {
-    assert(plan("q_sim_topk").contains("BroadcastNestedLoopJoin") ||
-      plan("q_sim_topk").contains("BroadcastExchange"))
+    // every key ranked by the shared probe top-k kernel
+    for (k <- Seq("q_sim_topk", "q_sim_lsh", "q_sim_quantized", "q_sim_mrl",
+        "q_sim_ivf", "q_sim_ivf_trained", "q_sim_filtered", "q_sim_recall",
+        "q_sim_pq", "q_sim_pq_trained", "q_sim_ivfpq", "q_sim_recall_pq",
+        "q_sim_recall_curve", "q_sim_pq_bits")) {
+      val p = plan(k)
+      assert(p.contains("BroadcastNestedLoopJoin") || p.contains("BroadcastExchange"),
+        s"$k: ${p.take(2000)}")
+    }
   }
 
   test("q_dedup_ngram stays in whole-stage codegen through the custom expression") {

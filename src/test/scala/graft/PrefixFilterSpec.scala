@@ -88,31 +88,23 @@ class PrefixFilterSpec extends AnyFunSuite {
       s"expected prefix path on Zipfian vocab:\n${zipfPlan.take(1200)}")
   }
 
-  test("candidateGen conf pins either generator; rows identical; cache clears") {
-    val confKey = "spark.graft.dedup.candidateGen"
-    def rows(tag: String) = Dedup.candidatePairs(tokenEnc, meta, 4, 5, s"spec:conf$tag", sf0001)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    try {
-      spark.conf.set(confKey, "prefix")
-      val viaPrefix = rows("P")
-      val prefixPlan = Dedup.candidatePairs(tokenEnc, meta, 4, 5, "spec:confP", sf0001)
-        .queryExecution.optimizedPlan.toString
-      assert(prefixPlan.contains("Generate"), "conf=prefix must force the prefix path")
-      spark.conf.set(confKey, "blocked")
-      val viaBlocked = rows("B")
-      val blockedPlan = Dedup.candidatePairs(tokenEnc, meta, 4, 5, "spec:confB", sf0001)
-        .queryExecution.optimizedPlan.toString
-      assert(!blockedPlan.contains("Generate"), "conf=blocked must force the block join")
-      // both generators are exact supersets of the qualifying pairs; on
-      // identical input their candidate SETS may differ, but the verified
-      // pairs must not — assert through the verify stage
-      val near = SparkEntry.queries("q_dedup_near")(spark, sf0001)
-        .select("doc_a", "doc_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(near.subsetOf(viaPrefix) && near.subsetOf(viaBlocked),
-        "a forced generator lost qualifying pairs")
-      spark.conf.set(confKey, "bogus")
-      intercept[IllegalArgumentException](rows("X"))
-    } finally spark.conf.unset(confKey)
+  test("each generator called directly: plan shape, no lost pairs; cache clears") {
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val prefix = Dedup.prefixCandidates(tokenEnc, meta, 4, 5)
+    assert(prefix.queryExecution.optimizedPlan.toString.contains("Generate"),
+      "the prefix generator must explode prefixes")
+    val m = meta
+    val blocked = Dedup.incrementalCandidates(m, m, 4, 5)
+    assert(!blocked.queryExecution.optimizedPlan.toString.contains("Generate"),
+      "the blocked generator must be a plain block join")
+    // both generators are exact supersets of the qualifying pairs; on
+    // identical input their candidate SETS may differ, but the verified
+    // pairs must not — assert through the verify stage
+    val near = rows(SparkEntry.queries("q_dedup_near")(spark, sf0001)
+      .select("doc_a", "doc_b"))
+    assert(near.subsetOf(rows(prefix)) && near.subsetOf(rows(blocked)),
+      "a generator lost qualifying pairs")
     // the memoized choice clears when the corpus under its dir is
     // rewritten: a copy of the fixture (blocked path) is overwritten in
     // place with a huge-vocabulary corpus, and the same key must switch
