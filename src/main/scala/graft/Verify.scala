@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -23,18 +23,35 @@ object Verify {
     if (selected.isEmpty) sys.error(
       s"[verify] filter ${filter.mkString(",")} matched 0 of ${SparkEntry.queries.size} queries")
     println(s"[verify] running ${selected.size}/${SparkEntry.queries.size} queries")
-    selected.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-    }
+    dumpAll(spark, sfDir, outDir, selected.toSeq)
     val json = SparkEntry.oracleSql
       .filter { case (k, _) => selected.contains(k) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+  }
+
+  /** Runs each query into `$outDir/$name` parquet, deleting that dump
+    * first: a key that fails (even while its plan is being built) leaves
+    * no previous run's output behind for a compare to pass on. The
+    * failures — name, exception class and message — go to
+    * `$outDir/verify_failed.json` (`[]` when none); returns their names. */
+  private[graft] def dumpAll(spark: SparkSession, sfDir: String, outDir: String,
+      queries: Seq[(String, (SparkSession, String) => DataFrame)]): Seq[String] = {
+    val failed = queries.flatMap { case (name, fn) =>
+      try {
+        graft.sinks.AliasedIndex.deleteRecursively(Paths.get(outDir, name))
+        fn(spark, sfDir).coalesce(1).write.parquet(s"$outDir/$name")
+        None
+      } catch { case e: Throwable =>
+        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        Some(name -> e)
+      }
+    }
+    Files.writeString(Paths.get(outDir, "verify_failed.json"), failed.map { case (n, e) =>
+      s"""{"name":${q(n)},"error":${q(e.getClass.getName)},"message":${q(String.valueOf(e.getMessage))}}"""
+    }.mkString("[", ",", "]"))
+    failed.map(_._1)
   }
 
   /** JSON string literal of `s`: escapes backslash, quote and ALL control

@@ -118,7 +118,7 @@ object MediaPipeline {
 
   /** Decoded-and-hashed in one pass: (w, h, ahash_hi, ahash_lo). Same
     * block bounds, threshold, and packing as the SQL hash stage
-    * ([[ahashOf]] — which q_multimodal_ahash keeps demonstrating and the
+    * ([[pixelAhash]] — which q_multimodal_ahash keeps demonstrating and the
     * oracle keeps pinning); fused here because the hash is 8 integer ops
     * per pixel, and at millions of images the SQL formulation's per-block
     * array materializations (3 arrays × 64 blocks × row) cost ~25× the
@@ -126,38 +126,52 @@ object MediaPipeline {
     */
   case class Hashed(w: Int, h: Int, ahash_hi: Long, ahash_lo: Long)
 
-  private def ahashOfImage(bytes: Array[Byte]): Hashed = {
-    val d = decodeImage(bytes)
-    if (d == null) return null
-    val (w, h) = (d.w, d.h)
-    val sums = new Array[Long](64)
-    val counts = new Array[Long](64)
+  /** Bits 0..63 of `bit` packed into two non-negative BIGINTs (hi = bits
+    * 63..32, lo = 31..0) so neither engine touches the sign bit. */
+  private def packBits(bit: Int => Boolean): (Long, Long) = {
+    var hi = 0L; var lo = 0L
+    var k = 0
+    while (k < 64) {
+      if (bit(k)) { if (k >= 32) hi |= 1L << (k - 32) else lo |= 1L << k }
+      k += 1
+    }
+    (hi, lo)
+  }
+
+  /** (sums, counts, total) of luma per cell of an n×n block grid — pixel
+    * (x, y) in cell (y·n div h)·n + x·n div w — in one allocation-free pass. */
+  private def blockSums(d: Decoded, n: Int): (Array[Long], Array[Long], Long) = {
+    val sums = new Array[Long](n * n)
+    val counts = new Array[Long](n * n)
     var total = 0L
     var y = 0
-    while (y < h) {
-      val by = y * 8 / h
+    while (y < d.h) {
+      val row = y * n / d.h * n
       var x = 0
-      while (x < w) {
-        val k = by * 8 + x * 8 / w
-        val v = d.luma(y * w + x)
+      while (x < d.w) {
+        val k = row + x * n / d.w
+        val v = d.luma(y * d.w + x)
         sums(k) += v; counts(k) += 1; total += v
         x += 1
       }
       y += 1
     }
-    val np = w.toLong * h
-    var hi = 0L; var lo = 0L
-    var k = 0
-    while (k < 64) {
-      if (sums(k) * np > total * counts(k)) {
-        if (k >= 32) hi |= 1L << (k - 32) else lo |= 1L << k
-      }
-      k += 1
-    }
-    Hashed(w, h, hi, lo)
+    (sums, counts, total)
   }
 
-  val decodeAhash = udf((bytes: Array[Byte]) => ahashOfImage(bytes))
+  /** The 8×8 block-mean aHash: bit k sets iff block k's luma sum
+    * cross-multiplies above the global mean (sum_k·w·h > total·n_k). */
+  private def ahashBits(d: Decoded): (Long, Long) = {
+    val (sums, counts, total) = blockSums(d, 8)
+    val np = d.w.toLong * d.h
+    packBits(k => sums(k) * np > total * counts(k))
+  }
+
+  val decodeAhash = udf((bytes: Array[Byte]) => {
+    val d = decodeImage(bytes)
+    if (d == null) null
+    else { val (hi, lo) = ahashBits(d); Hashed(d.w, d.h, hi, lo) }
+  })
 
   /** A media table derived deterministically from the documents fixture:
     * content = utf-8 bytes of text, kind alternates image/audio, metadata
@@ -181,22 +195,14 @@ object MediaPipeline {
   val decodeFeatures = udf((bytes: Array[Byte]) => {
     val bins = new Array[Float](16)
     val img = decodeImage(bytes)
-    if (img != null) {
-      var i = 0
-      while (i < img.luma.length) {
-        bins((img.luma(i) / 1000L).toInt >> 4) += 1f
-        i += 1
-      }
-      val n = math.max(1, img.luma.length).toFloat
-      var b = 0
-      while (b < 16) { bins(b) /= n; b += 1 }
-    } else if (bytes != null) {
-      var i = 0
+    var i = 0
+    if (img != null)
+      while (i < img.luma.length) { bins((img.luma(i) / 1000L).toInt >> 4) += 1f; i += 1 }
+    else if (bytes != null)
       while (i < bytes.length) { bins((bytes(i) & 0xff) >> 4) += 1f; i += 1 }
-      val n = math.max(1, bytes.length).toFloat
-      var b = 0
-      while (b < 16) { bins(b) /= n; b += 1 }
-    }
+    val n = math.max(1, i).toFloat
+    var b = 0
+    while (b < 16) { bins(b) /= n; b += 1 }
     bins
   })
 
@@ -252,23 +258,27 @@ object MediaPipeline {
   private def beHex(e: String, n: Int): String =
     s"lpad(hex($e), ${2 * n}, '0')"
 
-  /** Canonical RIFF/WAVE hex (little-endian fields) over (doc_id, text);
-    * shared by the BMP/WAV and PNG/WAV blob families.
+  /** Canonical 16-bit PCM RIFF/WAVE hex (little-endian fields) over a
+    * row carrying doc_id and the data length `__len`: rate 8000·(1 +
+    * doc_id % 5), 1 or 2 channels from doc_id (`stereoIds`) or mono.
     */
-  private def wavHex(div: String, payloadHex: String): String = {
+  private def wavHex(div: String, payloadHex: String,
+      stereoIds: Boolean = true): String = {
     def le(e: String, n: Int) = leHex(e, n, div)
-    val L = "__len"
     val rate = "8000 * (1 + doc_id % 5)"
     val ch = s"1 + (doc_id $div 3) % 2"
+    val (chans, byteRate, align) =
+      if (stereoIds) (ch, s"($rate) * ($ch) * 2", s"($ch) * 2")
+      else ("1", s"($rate) * 2", "2")
     Seq(
       "'52494646'",                  // "RIFF"
-      le(s"36 + $L", 4),             // chunk size
+      le("36 + __len", 4),           // chunk size
       "'57415645'", "'666D7420'",    // "WAVE", "fmt "
       le("16", 4), le("1", 2),       // fmt size, PCM
-      le(ch, 2), le(rate, 4),        // channels, sample rate
-      le(s"($rate) * ($ch) * 2", 4), // byte rate
-      le(s"($ch) * 2", 2), le("16", 2), // block align, bits
-      "'64617461'", le(L, 4),        // "data", data length
+      le(chans, 2), le(rate, 4),     // channels, sample rate
+      le(byteRate, 4),               // byte rate
+      le(align, 2), le("16", 2),     // block align, bits
+      "'64617461'", le("__len", 4),  // "data", data length
       payloadHex).mkString("concat(", ", ", ")")
   }
 
@@ -302,22 +312,27 @@ object MediaPipeline {
     * (sample rate/channels derived from the id); payload = utf-8 text.
     */
   private def headeredHex(div: String, payloadHex: String): String = {
-    def le(e: String, n: Int) = leHex(e, n, div)
-    val L = "__len"
-    val bmp = Seq(
-      "'424D'",                      // "BM"
-      le(s"54 + $L", 4),             // file size
-      "'00000000'", le("54", 4),     // reserved, pixel offset
-      le("40", 4),                   // DIB header size
-      le("16 + doc_id % 1000", 4),   // width
-      le(s"16 + (doc_id * 7) % 1000", 4), // height
-      le("1", 2), le("24", 2),       // planes, bpp
-      le("0", 4), le(L, 4),          // compression, image size
-      le("2835", 4), le("2835", 4),  // x/y pixels-per-metre
-      le("0", 4), le("0", 4),        // palette sizes
-      payloadHex).mkString("concat(", ", ", ")")
+    val bmp = (bmpHeaderHex(div, "16 + doc_id % 1000",
+      "16 + (doc_id * 7) % 1000", "__len") :+ payloadHex).mkString("concat(", ", ", ")")
     val wav = wavHex(div, payloadHex)
     s"CASE WHEN doc_id % 2 = 0 THEN $bmp ELSE $wav END"
+  }
+
+  /** The 54-byte 24-bpp BMP header as little-endian hex fields over the
+    * width, height and pixel-data-length exprs `w`, `h`, `dlen`. */
+  private def bmpHeaderHex(div: String, w: String, h: String,
+      dlen: String): Seq[String] = {
+    def le(e: String, n: Int) = leHex(e, n, div)
+    Seq(
+      "'424D'",                      // "BM"
+      le(s"54 + $dlen", 4),          // file size
+      "'00000000'", le("54", 4),     // reserved, pixel offset
+      le("40", 4),                   // DIB header size
+      le(w, 4), le(h, 4),            // dimensions (positive h: bottom-up)
+      le("1", 2), le("24", 2),       // planes, bpp
+      le("0", 4), le(dlen, 4),       // BI_RGB, image size
+      le("2835", 4), le("2835", 4),  // x/y pixels-per-metre
+      le("0", 4), le("0", 4))        // palette sizes
   }
 
   /** The mixed-endianness blob family: even ids PNG (big-endian), odd
@@ -332,11 +347,45 @@ object MediaPipeline {
     * everything else from `content` alone.
     */
   def headeredBlobs(spark: SparkSession, sfDir: String): DataFrame =
+    textBlobs(spark, sfDir, headeredHex)
+
+  /** (media_id, content) blobs wrapping each document's utf-8 text in
+    * the container `hexOf(div, payloadHex)` builds. */
+  private def textBlobs(spark: SparkSession, sfDir: String,
+      hexOf: (String, String) => String): DataFrame =
     Tables(spark, sfDir, "documents")
       .selectExpr("doc_id", "octet_length(text) AS __len",
         "hex(encode(text, 'UTF-8')) AS __payload")
       .selectExpr("doc_id AS media_id",
-        s"unhex(${headeredHex("DIV", "__payload")}) AS content")
+        s"unhex(${hexOf("DIV", "__payload")}) AS content")
+
+  /** The `WITH name AS (...)` DuckDB CTE constructing the same text blobs
+    * through a real BLOB (unhex -> hex), as (media_id, h). */
+  private def textBlobsDuck(name: String,
+      hexOf: (String, String) => String): String =
+    s"WITH $name AS (SELECT doc_id AS media_id, " +
+      s"hex(unhex(${hexOf("//", "hex(encode(text))")})) AS h FROM (SELECT doc_id, text, " +
+      s"octet_length(encode(text)) AS __len FROM documents))"
+
+  /** A header-profile query: construct -> binary -> `parse`-from-bytes. */
+  private def profile(spark: SparkSession, sfDir: String,
+      hexOf: (String, String) => String,
+      parse: (String, String, String => String) => Seq[String]): DataFrame =
+    textBlobs(spark, sfDir, hexOf)
+      .selectExpr("media_id", "hex(content) AS __h",
+        "CAST(octet_length(content) AS BIGINT) AS __n")
+      .selectExpr("media_id" +: parse("__h", "__n", sparkInt): _*)
+      .orderBy("media_id")
+
+  /** The DuckDB oracle of [[profile]]: identical construct + parse, through
+    * a real BLOB so the round trip is certified on both engines. */
+  private def profileOracle(hexOf: (String, String) => String,
+      parse: (String, String, String => String) => Seq[String]): String = {
+    val cols = parse("h", "CAST(octet_length(unhex(h)) AS BIGINT)", duckInt)
+      .map(_.replace(" DIV ", " // "))
+    s"${textBlobsDuck("b", hexOf)} " +
+      s"SELECT media_id, ${cols.mkString(", ")} FROM b ORDER BY media_id"
+  }
 
   /** Little-endian field parse out of hex string `h` at 1-based BYTE
     * offset `off`, `n` bytes; `toInt` wraps the big-endian hex digits
@@ -381,26 +430,11 @@ object MediaPipeline {
       s"CASE WHEN $isWav THEN (${f(41, 4)}) * 1000 DIV (${f(29, 4)}) END AS duration_ms")
   }
 
-  /** The header-profile query: construct -> binary -> parse-from-bytes. */
+  /** Header parsing from BYTES: the BMP/WAV header profile. */
   def headerProfile(spark: SparkSession, sfDir: String): DataFrame =
-    headeredBlobs(spark, sfDir)
-      .selectExpr("media_id", "hex(content) AS __h",
-        "CAST(octet_length(content) AS BIGINT) AS __n")
-      .selectExpr("media_id" +: parseCols("__h", "__n", sparkInt): _*)
-      .orderBy("media_id")
+    profile(spark, sfDir, headeredHex, parseCols)
 
-  /** The DuckDB oracle: identical construct + parse, through a real BLOB
-    * (unhex -> hex) so the round trip is certified on both engines.
-    */
-  def headerOracleSql: String = {
-    val hexExpr = headeredHex("//", "hex(encode(text))")
-    val cols = parseCols("h", "CAST(octet_length(unhex(h)) AS BIGINT)", duckInt)
-      .map(_.replace(" DIV ", " // "))
-    s"WITH b AS (SELECT doc_id AS media_id, " +
-      s"hex(unhex($hexExpr)) AS h FROM (SELECT doc_id, text, " +
-      s"octet_length(encode(text)) AS __len FROM documents)) " +
-      s"SELECT media_id, ${cols.mkString(", ")} FROM b ORDER BY media_id"
-  }
+  def headerOracleSql: String = profileOracle(headeredHex, parseCols)
 
   /** Decode-free perceptual-style content fingerprint (the aHash shape)
     * over each blob's PAYLOAD bytes: the payload splits into 16 equal
@@ -454,10 +488,8 @@ object MediaPipeline {
   /** DuckDB mirror of [[byteFingerprint]]: identical construct, payload
     * slice, block bounds (integer division), byte sums, and the same
     * cross-multiplied threshold. */
-  def byteFingerprintOracleSql: String = {
-    val hexExpr = headeredHex("//", "hex(encode(text))")
-    s"WITH blob AS (SELECT doc_id AS media_id, hex(unhex($hexExpr)) AS h " +
-      "FROM (SELECT doc_id, text, octet_length(encode(text)) AS __len FROM documents)), " +
+  def byteFingerprintOracleSql: String =
+    textBlobsDuck("blob", headeredHex) + ", " +
       "m AS (SELECT media_id, " +
       "CASE WHEN substr(h, 1, 4) = '424D' THEN 'image' ELSE 'audio' END AS kind, " +
       "CASE WHEN substr(h, 1, 4) = '424D' THEN substr(h, 109) ELSE substr(h, 89) END AS ph, " +
@@ -476,22 +508,12 @@ object MediaPipeline {
       "THEN 1 << s.b ELSE 0 END) AS BIGINT) AS fp " +
       "FROM sums s JOIN tot t USING (media_id) " +
       "GROUP BY s.media_id, s.kind, s.L ORDER BY s.media_id"
-  }
 
   // ---- Real pixel aHash: valid BMPs -> ImageIO decode -> 8x8 block
   // threshold hash, oracle-checked against the arithmetic pixel grid ----
 
   private def chan(e: String) = s"($e) % 256"
 
-  /** Genuinely VALID 24-bpp BMPs — not just valid headers: w×h in 8..16
-    * derived from doc_id, per-channel pixel bytes integer formulas of
-    * (doc_id, x, y), rows stored bottom-up with 4-byte padding, file and
-    * image sizes exact. Built from codegen'd hex built-ins like the other
-    * blob families, so construction itself is an engine-checked query
-    * shape; the JDK's own BMP reader decodes these back to the SAME
-    * integer pixel grid (MediaPipelineSpec pins decode == construction
-    * against the formulas, the oracle pins it cross-engine).
-    */
   /** Valid-BMP hex assembly over a row carrying (w, h, pad, dlen) plus
     * whatever the channel exprs reference: 54-byte header with exact
     * size fields, bottom-up rows (image row y = h-1 stored first),
@@ -500,18 +522,7 @@ object MediaPipeline {
     * repeats it — a third of the per-pixel string churn). */
   private def bmpHex(chanB: String, chanG: String, chanR: String,
       pixelHex: String = null): String = {
-    def le(e: String, n: Int) = leHex(e, n, "DIV")
-    val header = Seq(
-      "'424D'",                       // "BM"
-      le("54 + dlen", 4),             // file size
-      "'00000000'", le("54", 4),      // reserved, pixel offset
-      le("40", 4),                    // DIB header size
-      le("w", 4), le("h", 4),         // dimensions (positive h: bottom-up)
-      le("1", 2), le("24", 2),        // planes, bpp
-      le("0", 4), le("dlen", 4),      // BI_RGB, image size
-      le("2835", 4), le("2835", 4),   // x/y pixels-per-metre
-      le("0", 4), le("0", 4)          // palette sizes
-    ).mkString("concat(", ", ", ")")
+    val header = bmpHeaderHex("DIV", "w", "h", "dlen").mkString("concat(", ", ", ")")
     val perPixel = if (pixelHex != null) pixelHex else "concat(" +
       s"lpad(hex($chanB), 2, '0'), " +
       s"lpad(hex($chanG), 2, '0'), " +
@@ -523,50 +534,76 @@ object MediaPipeline {
     s"concat($header, $px)"
   }
 
-  /** Adds the shared BMP geometry columns (w, h in 8..16 from doc_id,
-    * row padding, pixel-data length) to a frame carrying doc_id. */
-  private def withBmpGeometry(df: DataFrame): DataFrame = df
-    .withColumn("w", expr("8 + doc_id % 9"))
-    .withColumn("h", expr("8 + (doc_id * 3) % 9"))
+  /** Adds the BMP geometry columns (w, h — by default in 8..16 from
+    * doc_id — row padding, pixel-data length) to a frame carrying doc_id. */
+  private def withBmpGeometry(df: DataFrame, w: String = "8 + doc_id % 9",
+      h: String = "8 + (doc_id * 3) % 9"): DataFrame = df
+    .withColumn("w", expr(w))
+    .withColumn("h", expr(h))
     .withColumn("pad", expr("(4 - (w * 3) % 4) % 4"))
     .withColumn("dlen", expr("(w * 3 + pad) * h"))
 
-  def validBmpBlobs(spark: SparkSession, sfDir: String): DataFrame =
-    withBmpGeometry(Tables(spark, sfDir, "documents").select(col("doc_id")))
-      .selectExpr("doc_id AS media_id",
-        s"unhex(${bmpHex(chan("doc_id + 7 * x + 13 * y"),
-          chan("3 * doc_id + 11 * x + 5 * y"),
-          chan("5 * doc_id + 3 * x + 17 * y"))}) AS content")
+  /** (media_id, content) BMPs over `base`'s rows: the three channel
+    * formulas of (doc_id, x, y), each wrapped by `ch`. */
+  private def rgbBmpBlobs(base: DataFrame, mediaId: String,
+      ch: String => String): DataFrame =
+    withBmpGeometry(base)
+      .selectExpr(s"$mediaId AS media_id",
+        s"unhex(${bmpHex(ch("doc_id + 7 * x + 13 * y"),
+          ch("3 * doc_id + 11 * x + 5 * y"),
+          ch("5 * doc_id + 3 * x + 17 * y"))}) AS content")
 
-  /** The REAL pixel average-hash over the valid BMPs: decode to the luma
-    * grid (the family's one UDF — ImageIO is a JVM call), then an 8×8
-    * block mean-threshold in pure codegen'd array arithmetic. Pixel x
-    * belongs to block (8x) div w (ditto y/h), so block i covers
-    * x ∈ [(i·w+7) div 8, ((i+1)·w+7) div 8) — the same integer bounds the
-    * oracle's pixel→block assignment inverts; every block is nonempty
-    * because w,h ≥ 8. Bit k (= by·8+bx) sets iff the block's luma sum
-    * cross-multiplies above the global mean (sum_k·w·h > total·n_k — no
-    * division, no rounding boundary), packed into two non-negative
-    * BIGINTs (hi = bits 63..32, lo = 31..0) so neither engine touches the
-    * sign bit. MAP-ONLY end to end: no shuffle until the output ordering,
-    * which is the shape that survives a billion images.
+  /** Genuinely VALID 24-bpp BMPs — not just valid headers: w×h in 8..16
+    * derived from doc_id, per-channel pixel bytes integer formulas of
+    * (doc_id, x, y), rows stored bottom-up with 4-byte padding, file and
+    * image sizes exact. Built from codegen'd hex built-ins like the other
+    * blob families, so construction itself is an engine-checked query
+    * shape; the JDK's own BMP reader decodes these back to the SAME
+    * integer pixel grid (MediaPipelineSpec pins decode == construction
+    * against the formulas, the oracle pins it cross-engine).
     */
-  /** The decode + hash stages shared by q_multimodal_ahash and the
-    * perceptual dedup: blobs (media_id, content) → decoded luma grid →
-    * (media_id, w, h, ahash_hi, ahash_lo), unordered. */
-  private def ahashOf(blobs: DataFrame): DataFrame = {
-    def bound(idx: String, dim: String) = s"((($idx) * $dim + 7) DIV 8)"
-    val ys = bound("k DIV 8", "h"); val ye = bound("(k DIV 8) + 1", "h")
-    val xs = bound("k % 8", "w"); val xe = bound("(k % 8) + 1", "w")
-    val sumK = s"aggregate(flatten(transform(sequence($ys, $ye - 1), y -> " +
-      s"transform(sequence($xs, $xe - 1), x -> " +
-      "element_at(luma, CAST(y * w + x + 1 AS INT))))), " +
-      "CAST(0 AS BIGINT), (a, v) -> a + v)"
-    val nK = s"(($ye) - ($ys)) * (($xe) - ($xs))"
+  def validBmpBlobs(spark: SparkSession, sfDir: String): DataFrame =
+    rgbBmpBlobs(Tables(spark, sfDir, "documents").select(col("doc_id")),
+      "doc_id", chan)
+
+  /** blobs (media_id, content) → (media_id, w, h, luma) through the
+    * [[decodeLuma]] UDF — the decode stage of the SQL pixel keys. */
+  private def lumaOf(blobs: DataFrame): DataFrame =
     blobs
       .withColumn("d", decodeLuma(col("content")))
       .selectExpr("media_id", "CAST(d.w AS BIGINT) AS w",
         "CAST(d.h AS BIGINT) AS h", "d.luma AS luma")
+
+  /** (luma sum, pixel count) SQL exprs of cell k of an n×n block grid over
+    * (w, h, luma). Pixel x belongs to column (n·x) div w (ditto y/h), so
+    * column i covers x ∈ [(i·w+n−1) div n, ((i+1)·w+n−1) div n) — the
+    * same integer bounds the oracles' pixel→block floor mapping inverts;
+    * every cell is nonempty because w, h ≥ 8 ≥ n. */
+  private def blockSumExprs(n: Int): (String, String) = {
+    def bound(idx: String, dim: String) = s"((($idx) * $dim + ${n - 1}) DIV $n)"
+    val ys = bound(s"k DIV $n", "h"); val ye = bound(s"(k DIV $n) + 1", "h")
+    val xs = bound(s"k % $n", "w"); val xe = bound(s"(k % $n) + 1", "w")
+    (s"aggregate(flatten(transform(sequence($ys, $ye - 1), y -> " +
+      s"transform(sequence($xs, $xe - 1), x -> " +
+      "element_at(luma, CAST(y * w + x + 1 AS INT))))), " +
+      "CAST(0 AS BIGINT), (a, v) -> a + v)",
+      s"(($ye) - ($ys)) * (($xe) - ($xs))")
+  }
+
+  /** The REAL pixel average-hash over the valid BMPs: decode to the luma
+    * grid (the family's one UDF — ImageIO is a JVM call), then an 8×8
+    * block mean-threshold in pure codegen'd array arithmetic
+    * ([[blockSumExprs]]). Bit k (= by·8+bx) sets iff the block's luma sum
+    * cross-multiplies above the global mean (sum_k·w·h > total·n_k — no
+    * division, no rounding boundary), packed into two non-negative
+    * BIGINTs (hi = bits 63..32, lo = 31..0) so neither engine touches the
+    * sign bit. MAP-ONLY end to end: no shuffle until the output ordering,
+    * which is the shape that survives a billion images. [[decodeAhash]]
+    * is the same hash fused into the decode UDF (spec-pinned identical).
+    */
+  def pixelAhash(spark: SparkSession, sfDir: String): DataFrame = {
+    val (sumK, nK) = blockSumExprs(8)
+    lumaOf(validBmpBlobs(spark, sfDir))
       .withColumn("total", expr("aggregate(luma, CAST(0 AS BIGINT), (a, v) -> a + v)"))
       .withColumn("np", expr("w * h"))
       .withColumn("blocks", expr("transform(sequence(0, 63), k -> " +
@@ -576,16 +613,14 @@ object MediaPipeline {
           "(a, b) -> a + shiftleft(CAST(1 AS BIGINT), CAST(b.k - 32 AS INT))) AS ahash_hi",
         "aggregate(filter(blocks, b -> b.hot AND b.k < 32), CAST(0 AS BIGINT), " +
           "(a, b) -> a + shiftleft(CAST(1 AS BIGINT), CAST(b.k AS INT))) AS ahash_lo")
+      .orderBy("media_id")
   }
-
-  def pixelAhash(spark: SparkSession, sfDir: String): DataFrame =
-    ahashOf(validBmpBlobs(spark, sfDir)).orderBy("media_id")
 
   /** REAL pixel downscaling — the resize stage that was previously only
     * the stub-analog histogram re-bin: each decoded image reduces to a
     * 4×4 block-mean luma thumbnail (the first stage of every thumbnail /
     * preview / coarse-vision pipeline). Same integer block bounds as the
-    * aHash ((i·dim+3) div 4, nonempty since w,h ≥ 8 > 4); each cell is
+    * aHash ([[blockSumExprs]] at n = 4); each cell is
     * the FLOOR of its block's luma sum over its pixel count — exact
     * integer division, identical cross-engine. Served as a
     * comma-joined string of the 16 exact integers (row-major) plus
@@ -593,18 +628,8 @@ object MediaPipeline {
     * MAP-ONLY until the output ordering.
     */
   def pixelThumb(spark: SparkSession, sfDir: String): DataFrame = {
-    def bound(idx: String, dim: String) = s"((($idx) * $dim + 3) DIV 4)"
-    val ys = bound("k DIV 4", "h"); val ye = bound("(k DIV 4) + 1", "h")
-    val xs = bound("k % 4", "w"); val xe = bound("(k % 4) + 1", "w")
-    val sumK = s"aggregate(flatten(transform(sequence($ys, $ye - 1), y -> " +
-      s"transform(sequence($xs, $xe - 1), x -> " +
-      "element_at(luma, CAST(y * w + x + 1 AS INT))))), " +
-      "CAST(0 AS BIGINT), (a, v) -> a + v)"
-    val nK = s"(($ye) - ($ys)) * (($xe) - ($xs))"
-    validBmpBlobs(spark, sfDir)
-      .withColumn("d", decodeLuma(col("content")))
-      .selectExpr("media_id", "CAST(d.w AS BIGINT) AS w",
-        "CAST(d.h AS BIGINT) AS h", "d.luma AS luma")
+    val (sumK, nK) = blockSumExprs(4)
+    lumaOf(validBmpBlobs(spark, sfDir))
       .withColumn("cells", expr(
         s"transform(sequence(0, 15), k -> ($sumK) DIV ($nK))"))
       .selectExpr("media_id", "w", "h",
@@ -613,17 +638,54 @@ object MediaPipeline {
       .orderBy("media_id")
   }
 
+  /** DuckDB luma of pixel (xx.x, yy.y) under the three channel formulas
+    * of [[rgbBmpBlobs]] and [[videoBlob]]: content seed `seed`, each
+    * channel plus `drift`, % `mod`. */
+  private def lumaDuck(seed: String, mod: Int, drift: String = ""): String =
+    s"299 * ((5 * $seed + 3 * xx.x + 17 * yy.y$drift) % $mod) + " +
+      s"587 * ((3 * $seed + 11 * xx.x + 5 * yy.y$drift) % $mod) + " +
+      s"114 * (($seed + 7 * xx.x + 13 * yy.y$drift) % $mod)"
+
+  /** The [[rgbBmpBlobs]] pixel grid as the DuckDB CTE `g` (`id`, w, h, y,
+    * x, luma + `extra`) over geometry CTE `src` — NO bytes, NO decode. */
+  private def lumaGridDuck(id: String, src: String, mod: Int,
+      extra: String = ""): String =
+    s"g AS (SELECT $id, w, h, yy.y AS y, xx.x AS x, " +
+      s"${lumaDuck("doc_id", mod)}$extra AS luma " +
+      // DuckDB's range() takes no lateral column args; w,h <= 16 by
+      // construction, so a fixed 16x16 grid filtered per doc is exact
+      s"FROM $src, range(16) yy(y), range(16) xx(x) " +
+      s"WHERE yy.y < $src.h AND xx.x < $src.w), "
+
+  /** [[validBmpBlobs]]' geometry `d` and luma grid `g`. */
+  private def validBmpGridDuck: String =
+    "WITH d AS (SELECT doc_id, 8 + doc_id % 9 AS w, 8 + (doc_id * 3) % 9 AS h FROM documents), " +
+      lumaGridDuck("doc_id", "d", 256)
+
+  /** DuckDB twin of [[packBits]]: bits k (an expr) where `cond` holds,
+    * summed as shifted ones into BIGINT columns `hi` and `lo`. */
+  private def packDuck(cond: String, k: String, hi: String, lo: String): String =
+    s"CAST(sum(CASE WHEN $cond AND $k >= 32 " +
+      s"THEN (CAST(1 AS BIGINT) << CAST($k - 32 AS INT)) ELSE 0 END) AS BIGINT) AS $hi, " +
+      s"CAST(sum(CASE WHEN $cond AND $k < 32 " +
+      s"THEN (CAST(1 AS BIGINT) << CAST($k AS INT)) ELSE 0 END) AS BIGINT) AS $lo"
+
+  /** DuckDB twin of [[ahashBits]] over luma grid `g` keyed by `id`: (CTEs
+    * `blk`, `tot`; SELECT of blk.`id``as`, w, h, ahash_hi, ahash_lo). */
+  private def ahashDuck(id: String, as: String): (String, String) = (
+    s"blk AS (SELECT $id, w, h, (y * 8) // h AS by, (x * 8) // w AS bx, " +
+      "CAST(sum(luma) AS BIGINT) AS sum_k, count(*) AS n_k " +
+      s"FROM g GROUP BY $id, w, h, (y * 8) // h, (x * 8) // w), " +
+      s"tot AS (SELECT $id, CAST(sum(luma) AS BIGINT) AS total FROM g GROUP BY $id)",
+    s"SELECT blk.$id$as, w, h, " +
+      packDuck("sum_k * (w * h) > total * n_k", "by * 8 + bx", "ahash_hi", "ahash_lo") +
+      s" FROM blk JOIN tot ON blk.$id = tot.$id GROUP BY blk.$id, w, h")
+
   /** DuckDB mirror of [[pixelThumb]] from the arithmetic pixel grid —
     * same block mapping ((x·4)//w), same floor division, same CSV join
     * order; a pass certifies the REAL decode feeds the resize too. */
   def thumbOracleSql: String =
-    "WITH d AS (SELECT doc_id, 8 + doc_id % 9 AS w, 8 + (doc_id * 3) % 9 AS h FROM documents), " +
-      "g AS (SELECT doc_id, w, h, yy.y AS y, xx.x AS x, " +
-      "299 * ((5 * doc_id + 3 * xx.x + 17 * yy.y) % 256) + " +
-      "587 * ((3 * doc_id + 11 * xx.x + 5 * yy.y) % 256) + " +
-      "114 * ((doc_id + 7 * xx.x + 13 * yy.y) % 256) AS luma " +
-      "FROM d, range(16) yy(y), range(16) xx(x) " +
-      "WHERE yy.y < d.h AND xx.x < d.w), " +
+    validBmpGridDuck +
       "blk AS (SELECT doc_id, w, h, (y * 4) // h AS by, (x * 4) // w AS bx, " +
       "CAST(sum(luma) AS BIGINT) // count(*) AS m " +
       "FROM g GROUP BY doc_id, w, h, (y * 4) // h, (x * 4) // w) " +
@@ -640,27 +702,10 @@ object MediaPipeline {
     * deeper). Same luma weights, same pixel→block floor mapping, same
     * cross-multiplied threshold, same hi/lo packing.
     */
-  def ahashOracleSql: String =
-    "WITH d AS (SELECT doc_id, 8 + doc_id % 9 AS w, 8 + (doc_id * 3) % 9 AS h FROM documents), " +
-      "g AS (SELECT doc_id, w, h, yy.y AS y, xx.x AS x, " +
-      "299 * ((5 * doc_id + 3 * xx.x + 17 * yy.y) % 256) + " +
-      "587 * ((3 * doc_id + 11 * xx.x + 5 * yy.y) % 256) + " +
-      "114 * ((doc_id + 7 * xx.x + 13 * yy.y) % 256) AS luma " +
-      // DuckDB's range() takes no lateral column args; w,h <= 16 by
-      // construction, so a fixed 16x16 grid filtered per doc is exact
-      "FROM d, range(16) yy(y), range(16) xx(x) " +
-      "WHERE yy.y < d.h AND xx.x < d.w), " +
-      "blk AS (SELECT doc_id, w, h, (y * 8) // h AS by, (x * 8) // w AS bx, " +
-      "CAST(sum(luma) AS BIGINT) AS sum_k, count(*) AS n_k " +
-      "FROM g GROUP BY doc_id, w, h, (y * 8) // h, (x * 8) // w), " +
-      "tot AS (SELECT doc_id, CAST(sum(luma) AS BIGINT) AS total FROM g GROUP BY doc_id) " +
-      "SELECT blk.doc_id AS media_id, w, h, " +
-      "CAST(sum(CASE WHEN sum_k * (w * h) > total * n_k AND by * 8 + bx >= 32 " +
-      "THEN (CAST(1 AS BIGINT) << CAST(by * 8 + bx - 32 AS INT)) ELSE 0 END) AS BIGINT) AS ahash_hi, " +
-      "CAST(sum(CASE WHEN sum_k * (w * h) > total * n_k AND by * 8 + bx < 32 " +
-      "THEN (CAST(1 AS BIGINT) << CAST(by * 8 + bx AS INT)) ELSE 0 END) AS BIGINT) AS ahash_lo " +
-      "FROM blk JOIN tot ON blk.doc_id = tot.doc_id " +
-      "GROUP BY blk.doc_id, w, h ORDER BY media_id"
+  def ahashOracleSql: String = {
+    val (ctes, hash) = ahashDuck("doc_id", " AS media_id")
+    s"$validBmpGridDuck$ctes $hash ORDER BY media_id"
+  }
 
   // ---- Perceptual near-dup image dedup: aHash + banded Hamming join ----
 
@@ -675,14 +720,9 @@ object MediaPipeline {
   def imageVariantBlobs(spark: SparkSession, sfDir: String): DataFrame = {
     val delta = "(CASE WHEN variant = 1 THEN 17 + (CASE WHEN doc_id % 3 = 0 " +
       "AND x * 4 < w THEN 40 ELSE 0 END) ELSE 0 END)"
-    def ch(f: String) = s"(($f) % 190 + $delta)"
     val base = Tables(spark, sfDir, "documents").select(col("doc_id"))
       .select(col("doc_id"), explode(expr("array(0, 1)")).as("variant"))
-    withBmpGeometry(base)
-      .selectExpr("doc_id * 2 + variant AS media_id",
-        s"unhex(${bmpHex(ch("doc_id + 7 * x + 13 * y"),
-          ch("3 * doc_id + 11 * x + 5 * y"),
-          ch("5 * doc_id + 3 * x + 17 * y"))}) AS content")
+    rgbBmpBlobs(base, "doc_id * 2 + variant", f => s"(($f) % 190 + $delta)")
   }
 
   /** Near-duplicate IMAGE pairs over real decoded pixels — the
@@ -724,34 +764,31 @@ object MediaPipeline {
     bandedHammingPairs(hashed).orderBy("media_a", "media_b")
   }
 
-  /** The banded-Hamming join KERNEL over a hashed table (media_id, w,
-    * h, ahash_hi, ahash_lo) — factored so SkewSpec can drive it with a
-    * pathological corpus: the one 100 TB hazard of every banded scheme
-    * is a HOT BAND (a monochrome-heavy corpus piles into one (band,
-    * value) bucket and candidate volume there is n²). The bucket join
-    * is a plain equi-join, so the production answer is AQE's skew-join
-    * split — SkewSpec pins skew=true firing on a synthetic hot band
-    * with pair counts unchanged (the q_join_interval precedent). */
-  private[graft] def bandedHammingPairs(hashed: DataFrame,
-      radius: Int = 4): DataFrame = {
+  /** The banded-Hamming join KERNEL over a hashed table (media_id, the
+    * `meta` prefilter columns, the `hi`/`lo` hash halves) — shared by the
+    * image and audio near-dup keys, and factored so SkewSpec can drive it
+    * with a pathological corpus: the one 100 TB hazard of every banded
+    * scheme is a HOT BAND (a monochrome-heavy corpus piles into one
+    * (band, value) bucket and candidate volume there is n²). The bucket
+    * join is a plain equi-join, so the production answer is AQE's
+    * skew-join split — SkewSpec pins skew=true firing on a synthetic hot
+    * band with pair counts unchanged (the q_join_interval precedent). */
+  private[graft] def bandedHammingPairs(hashed: DataFrame, radius: Int = 4,
+      meta: Seq[String] = Seq("w", "h"), hi: String = "ahash_hi",
+      lo: String = "ahash_lo"): DataFrame = {
     val bandArr = "array(" +
-      "struct(0 AS bi, ahash_lo % 65536 AS bv), " +
-      "struct(1 AS bi, ahash_lo DIV 65536 AS bv), " +
-      "struct(2 AS bi, ahash_hi % 65536 AS bv), " +
-      "struct(3 AS bi, ahash_hi DIV 65536 AS bv))"
+      s"struct(0 AS bi, $lo % 65536 AS bv), " +
+      s"struct(1 AS bi, $lo DIV 65536 AS bv), " +
+      s"struct(2 AS bi, $hi % 65536 AS bv), " +
+      s"struct(3 AS bi, $hi DIV 65536 AS bv))"
+    val cols = ("media_id" +: meta :+ hi :+ lo).map(col)
     val bands = hashed
-      .select(col("media_id"), col("w"), col("h"),
-        col("ahash_hi"), col("ahash_lo"), explode(expr(bandArr)).as("b"))
-      .select(col("media_id"), col("w"), col("h"),
-        col("ahash_hi"), col("ahash_lo"),
-        col("b.bi").as("bi"), col("b.bv").as("bv"))
-    val a = bands.select(col("media_id").as("media_a"),
-      col("ahash_hi").as("hi_a"), col("ahash_lo").as("lo_a"),
-      col("w"), col("h"), col("bi"), col("bv"))
-    val b = bands.select(col("media_id").as("media_b"),
-      col("ahash_hi").as("hi_b"), col("ahash_lo").as("lo_b"),
-      col("w"), col("h"), col("bi"), col("bv"))
-    a.join(b, Seq("bi", "bv", "w", "h"))
+      .select(cols :+ explode(expr(bandArr)).as("b"): _*)
+      .select(cols :+ col("b.bi").as("bi") :+ col("b.bv").as("bv"): _*)
+    def side(s: String) = bands.select(Seq(col("media_id").as(s"media_$s"),
+      col(hi).as(s"hi_$s"), col(lo).as(s"lo_$s")) ++
+      (meta :+ "bi" :+ "bv").map(col): _*)
+    side("a").join(side("b"), Seq("bi", "bv") ++ meta)
       .where(col("media_a") < col("media_b"))
       .where(expr("bi = CASE WHEN lo_a % 65536 = lo_b % 65536 THEN 0 " +
         "WHEN lo_a DIV 65536 = lo_b DIV 65536 THEN 1 " +
@@ -767,39 +804,31 @@ object MediaPipeline {
     * brightness/local deltas folded into luma as 1000·delta), so the
     * oracle recomputes hash → bands → lowest-band ownership → popcount
     * from ground-truth integers. */
-  def imageDedupOracleSql: String =
+  def imageDedupOracleSql: String = {
+    val (ctes, hash) = ahashDuck("media_id", "")
     "WITH m AS (SELECT doc_id, v.variant, doc_id * 2 + v.variant AS media_id, " +
       "8 + doc_id % 9 AS w, 8 + (doc_id * 3) % 9 AS h " +
       "FROM documents, (VALUES (0), (1)) v(variant)), " +
-      "g AS (SELECT media_id, w, h, yy.y AS y, xx.x AS x, " +
-      "299 * ((5 * doc_id + 3 * xx.x + 17 * yy.y) % 190) + " +
-      "587 * ((3 * doc_id + 11 * xx.x + 5 * yy.y) % 190) + " +
-      "114 * ((doc_id + 7 * xx.x + 13 * yy.y) % 190) + " +
-      "1000 * (CASE WHEN variant = 1 THEN 17 + (CASE WHEN doc_id % 3 = 0 " +
-      "AND xx.x * 4 < w THEN 40 ELSE 0 END) ELSE 0 END) AS luma " +
-      "FROM m, range(16) yy(y), range(16) xx(x) " +
-      "WHERE yy.y < m.h AND xx.x < m.w), " +
-      "blk AS (SELECT media_id, w, h, (y * 8) // h AS by, (x * 8) // w AS bx, " +
-      "CAST(sum(luma) AS BIGINT) AS sum_k, count(*) AS n_k " +
-      "FROM g GROUP BY media_id, w, h, (y * 8) // h, (x * 8) // w), " +
-      "tot AS (SELECT media_id, CAST(sum(luma) AS BIGINT) AS total " +
-      "FROM g GROUP BY media_id), " +
-      "hsh AS (SELECT blk.media_id, w, h, " +
-      "CAST(sum(CASE WHEN sum_k * (w * h) > total * n_k AND by * 8 + bx >= 32 " +
-      "THEN (CAST(1 AS BIGINT) << CAST(by * 8 + bx - 32 AS INT)) ELSE 0 END) AS BIGINT) AS ahash_hi, " +
-      "CAST(sum(CASE WHEN sum_k * (w * h) > total * n_k AND by * 8 + bx < 32 " +
-      "THEN (CAST(1 AS BIGINT) << CAST(by * 8 + bx AS INT)) ELSE 0 END) AS BIGINT) AS ahash_lo " +
-      "FROM blk JOIN tot ON blk.media_id = tot.media_id " +
-      "GROUP BY blk.media_id, w, h), " +
-      "bnd AS (SELECT media_id, w, h, ahash_hi, ahash_lo, b.bi, " +
-      "CASE b.bi WHEN 0 THEN ahash_lo % 65536 WHEN 1 THEN ahash_lo // 65536 " +
-      "WHEN 2 THEN ahash_hi % 65536 ELSE ahash_hi // 65536 END AS bv " +
-      "FROM hsh, (VALUES (0), (1), (2), (3)) b(bi)), " +
+      lumaGridDuck("media_id", "m", 190, " + 1000 * (CASE WHEN variant = 1 " +
+        "THEN 17 + (CASE WHEN doc_id % 3 = 0 AND xx.x * 4 < w THEN 40 ELSE 0 END) ELSE 0 END)") +
+      s"$ctes, hsh AS ($hash), " +
+      bandedHammingDuck("hsh", Seq("w", "h"), "ahash_hi", "ahash_lo")
+  }
+
+  /** DuckDB twin of [[bandedHammingPairs]] over CTE `src` (media_id,
+    * `meta`, `hi`, `lo`): bands `bnd`, candidates `p`, lowest-band
+    * ownership and the Hamming ≤ 4 verify. */
+  private def bandedHammingDuck(src: String, meta: Seq[String], hi: String,
+      lo: String): String =
+    s"bnd AS (SELECT media_id, ${meta.mkString(", ")}, $hi, $lo, b.bi, " +
+      s"CASE b.bi WHEN 0 THEN $lo % 65536 WHEN 1 THEN $lo // 65536 " +
+      s"WHEN 2 THEN $hi % 65536 ELSE $hi // 65536 END AS bv " +
+      s"FROM $src, (VALUES (0), (1), (2), (3)) b(bi)), " +
       "p AS (SELECT a.media_id AS media_a, b2.media_id AS media_b, " +
-      "a.ahash_hi AS hi_a, a.ahash_lo AS lo_a, " +
-      "b2.ahash_hi AS hi_b, b2.ahash_lo AS lo_b, a.bi " +
+      s"a.$hi AS hi_a, a.$lo AS lo_a, " +
+      s"b2.$hi AS hi_b, b2.$lo AS lo_b, a.bi " +
       "FROM bnd a JOIN bnd b2 ON a.bi = b2.bi AND a.bv = b2.bv " +
-      "AND a.w = b2.w AND a.h = b2.h " +
+      meta.map(m => s"AND a.$m = b2.$m ").mkString +
       "AND a.media_id < b2.media_id) " +
       "SELECT media_a, media_b, " +
       "CAST(bit_count(xor(hi_a, hi_b)) + bit_count(xor(lo_a, lo_b)) AS BIGINT) AS hamming " +
@@ -827,6 +856,7 @@ object MediaPipeline {
 
   private[multimodal] def cos64DuckLiteral: String =
     cos64.mkString("[", ", ", "]")
+  private val cos64Spark: String = cos64.mkString("array(", "L, ", "L)")
 
   /** Grayscale pixel value for the perceptual-hash family, as a SQL expr
     * over (doc_id, v, bw, h, x, y) — natural-spectrum content (a
@@ -866,36 +896,52 @@ object MediaPipeline {
     (if (v == 3) math.floor(math.sqrt((g0 * 255).toDouble)).toLong else g0).toInt
   }
 
-  private def grayBmpBytes(docId: Long, v: Int): Array[Byte] = {
-    val bw = (18 + docId % 6).toInt; val h = (16 + (docId * 3) % 8).toInt
-    val w = if (v == 2) bw - 2 else bw
-    val pad = (4 - (w * 3) % 4) % 4
-    val dlen = (w * 3 + pad) * h
-    val out = new Array[Byte](54 + dlen)
-    def le(off: Int, n: Int, value: Long): Unit = {
-      var i = 0
-      while (i < n) { out(off + i) = ((value >> (8 * i)) & 0xff).toByte; i += 1 }
-    }
-    out(0) = 'B'; out(1) = 'M'
-    le(2, 4, 54L + dlen); le(10, 4, 54); le(14, 4, 40)
-    le(18, 4, w); le(22, 4, h); le(26, 2, 1); le(28, 2, 24)
-    le(34, 4, dlen); le(38, 4, 2835); le(42, 4, 2835)
-    var p = 54
-    var yy = h - 1
-    while (yy >= 0) {
-      var x = 0
-      while (x < w) {
-        val g = grayByte(docId, v, bw, h, x, yy).toByte
-        out(p) = g; out(p + 1) = g; out(p + 2) = g; p += 3
-        x += 1
-      }
-      p += pad // padding bytes stay zero
-      yy -= 1
-    }
-    out
+  /** `value` little-endian into `n` bytes of `out` at `off`. */
+  private def le(out: Array[Byte], off: Int, n: Int, value: Long): Unit = {
+    var i = 0
+    while (i < n) { out(off + i) = ((value >> (8 * i)) & 0xff).toByte; i += 1 }
   }
 
-  val grayBmp = udf((docId: Long, v: Int) => grayBmpBytes(docId, v))
+  private def bmpRowPad(w: Int): Int = (4 - (w * 3) % 4) % 4
+  private def bmpSize(w: Int, h: Int): Int = 54 + (w * 3 + bmpRowPad(w)) * h
+
+  /** One valid 24-bpp BMP (`bmpSize(w, h)` bytes) into `out` at `off` —
+    * the byte twin of [[bmpHex]]: bottom-up rows, B,G,R, zero padding.
+    * `rgb(x, y)` (y top-down) packs R << 16 | G << 8 | B; the specialized
+    * (Int, Int) => Int call keeps the pixel loop free of boxing. */
+  private def writeBmp(out: Array[Byte], off: Int, w: Int, h: Int,
+      rgb: (Int, Int) => Int): Unit = {
+    val dlen = bmpSize(w, h) - 54
+    out(off) = 'B'; out(off + 1) = 'M'
+    le(out, off + 2, 4, 54L + dlen); le(out, off + 10, 4, 54); le(out, off + 14, 4, 40)
+    le(out, off + 18, 4, w); le(out, off + 22, 4, h)
+    le(out, off + 26, 2, 1); le(out, off + 28, 2, 24)
+    le(out, off + 34, 4, dlen); le(out, off + 38, 4, 2835); le(out, off + 42, 4, 2835)
+    var p = off + 54
+    var y = h - 1
+    while (y >= 0) {
+      var x = 0
+      while (x < w) {
+        val c = rgb(x, y)
+        out(p) = c.toByte; out(p + 1) = (c >> 8).toByte; out(p + 2) = (c >> 16).toByte
+        p += 3; x += 1
+      }
+      p += bmpRowPad(w)
+      y -= 1
+    }
+  }
+
+  private def rgb(r: Int, g: Int, b: Int): Int =
+    (r & 0xff) << 16 | (g & 0xff) << 8 | (b & 0xff)
+  private def gray(g: Int): Int = rgb(g, g, g)
+
+  val grayBmp = udf((docId: Long, v: Int) => {
+    val bw = (18 + docId % 6).toInt; val h = (16 + (docId * 3) % 8).toInt
+    val w = if (v == 2) bw - 2 else bw
+    val out = new Array[Byte](bmpSize(w, h))
+    writeBmp(out, 0, w, h, (x, y) => gray(grayByte(docId, v, bw, h, x, y)))
+    out
+  })
 
   /** Valid grayscale 24-bpp BMPs for the perceptual-hash family: base
     * width 18..23, height 16..23 (≥ 16 so the 16×16 mean grid has no
@@ -927,10 +973,8 @@ object MediaPipeline {
     Tables(spark, sfDir, "documents").select(col("doc_id"))
       .select(col("doc_id"), explode(expr("array(0, 1, 2, 3)")).as("v"))
       .withColumn("bw", expr("18 + doc_id % 6"))
-      .withColumn("h", expr("16 + (doc_id * 3) % 8"))
-      .withColumn("w", expr("CASE WHEN v = 2 THEN bw - 2 ELSE bw END"))
-      .withColumn("pad", expr("(4 - (w * 3) % 4) % 4"))
-      .withColumn("dlen", expr("(w * 3 + pad) * h"))
+      .transform(withBmpGeometry(_, "CASE WHEN v = 2 THEN bw - 2 ELSE bw END",
+        "16 + (doc_id * 3) % 8"))
       .selectExpr("doc_id * 4 + v AS media_id",
         s"unhex(${bmpHex(null, null, null,
           s"repeat(lpad(hex($grayExpr), 2, '0'), 3)")}) AS content")
@@ -948,34 +992,10 @@ object MediaPipeline {
   private def perceptualOf(bytes: Array[Byte]): PHashed = {
     val d = decodeImage(bytes)
     if (d == null || d.w < 16 || d.h < 16) return null
-    val (w, h) = (d.w, d.h)
-    val s8 = new Array[Long](64); val c8 = new Array[Long](64)
-    val s16 = new Array[Long](256); val c16 = new Array[Long](256)
-    var total = 0L
-    var y = 0
-    while (y < h) {
-      val r8 = y * 8 / h * 8; val r16 = y * 16 / h * 16
-      var x = 0
-      while (x < w) {
-        val v = d.luma(y * w + x)
-        val k8 = r8 + x * 8 / w; val k16 = r16 + x * 16 / w
-        s8(k8) += v; c8(k8) += 1; s16(k16) += v; c16(k16) += 1
-        total += v
-        x += 1
-      }
-      y += 1
-    }
-    val np = w.toLong * h
-    var ahi = 0L; var alo = 0L
-    var k = 0
-    while (k < 64) {
-      if (s8(k) * np > total * c8(k)) {
-        if (k >= 32) ahi |= 1L << (k - 32) else alo |= 1L << k
-      }
-      k += 1
-    }
+    val (ahi, alo) = ahashBits(d)
+    val (s16, c16, _) = blockSums(d, 16)
     val m = new Array[Long](256)
-    k = 0
+    var k = 0
     while (k < 256) { m(k) = s16(k) / c16(k); k += 1 }
     val coef = new Array[Long](64)
     var u = 0
@@ -1000,15 +1020,8 @@ object MediaPipeline {
     }
     val sorted = coef.clone(); java.util.Arrays.sort(sorted)
     val med = sorted(32)
-    var phi = 0L; var plo = 0L
-    k = 0
-    while (k < 64) {
-      if (coef(k) > med) {
-        if (k >= 32) phi |= 1L << (k - 32) else plo |= 1L << k
-      }
-      k += 1
-    }
-    PHashed(w, h, ahi, alo, phi, plo)
+    val (phi, plo) = packBits(k => coef(k) > med)
+    PHashed(d.w, d.h, ahi, alo, phi, plo)
   }
 
   val decodePerceptual = udf((bytes: Array[Byte]) => perceptualOf(bytes))
@@ -1085,10 +1098,7 @@ object MediaPipeline {
       "tot AS (SELECT doc_id, v, CAST(sum(luma) AS BIGINT) AS total " +
       "FROM g GROUP BY doc_id, v), " +
       "ah AS (SELECT blk8.doc_id, blk8.v, " +
-      "CAST(sum(CASE WHEN sk * (w * h) > total * nk AND k >= 32 " +
-      "THEN (CAST(1 AS BIGINT) << CAST(k - 32 AS INT)) ELSE 0 END) AS BIGINT) AS a_hi, " +
-      "CAST(sum(CASE WHEN sk * (w * h) > total * nk AND k < 32 " +
-      "THEN (CAST(1 AS BIGINT) << CAST(k AS INT)) ELSE 0 END) AS BIGINT) AS a_lo " +
+      packDuck("sk * (w * h) > total * nk", "k", "a_hi", "a_lo") + " " +
       "FROM blk8 JOIN tot ON blk8.doc_id = tot.doc_id AND blk8.v = tot.v " +
       "GROUP BY blk8.doc_id, blk8.v), " +
       "blk16 AS (SELECT doc_id, v, (x * 16) // w AS bx, (y * 16) // h AS by, " +
@@ -1115,10 +1125,7 @@ object MediaPipeline {
       "FROM dct), " +
       "md AS (SELECT doc_id, v, coef AS med FROM rk WHERE rn = 33), " +
       "ph AS (SELECT rk.doc_id, rk.v, " +
-      "CAST(sum(CASE WHEN coef > med AND k >= 32 " +
-      "THEN (CAST(1 AS BIGINT) << CAST(k - 32 AS INT)) ELSE 0 END) AS BIGINT) AS p_hi, " +
-      "CAST(sum(CASE WHEN coef > med AND k < 32 " +
-      "THEN (CAST(1 AS BIGINT) << CAST(k AS INT)) ELSE 0 END) AS BIGINT) AS p_lo " +
+      packDuck("coef > med", "k", "p_hi", "p_lo") + " " +
       "FROM rk JOIN md ON rk.doc_id = md.doc_id AND rk.v = md.v " +
       "GROUP BY rk.doc_id, rk.v), " +
       "hsh AS (SELECT ah.doc_id, ah.v, a_hi, a_lo, p_hi, p_lo " +
@@ -1235,26 +1242,23 @@ object MediaPipeline {
     * WAV reader decodes these back to the SAME integer sample grid
     * (MediaPipelineSpec pins decode == construction, the oracle pins it
     * cross-engine). */
-  def validWavBlobs(spark: SparkSession, sfDir: String): DataFrame = {
-    def le(e: String, n: Int) = leHex(e, n, "DIV")
-    val rate = "8000 * (1 + doc_id % 5)"
-    // signed sample -> two's-complement 16-bit -> LE byte pair
-    val u = "(((doc_id * 131 + i * 73) % 4001) - 2000 + 65536) % 65536"
+  def validWavBlobs(spark: SparkSession, sfDir: String): DataFrame =
+    pcmWavBlobs(Tables(spark, sfDir, "documents").select(col("doc_id")),
+      "doc_id", "(((doc_id * 131 + i * 73) % 4001) - 2000 + 65536) % 65536")
+
+  /** (media_id, content) mono PCM WAVs over `base`'s rows: n in 64..192
+    * samples from doc_id, sample i's two's-complement 16-bit value `u`
+    * (an expr of doc_id, i, n and `base`'s columns) stored as an LE byte
+    * pair. */
+  private def pcmWavBlobs(base: DataFrame, mediaId: String, u: String): DataFrame = {
     val payload = "array_join(transform(sequence(0, CAST(n - 1 AS INT)), i -> " +
       s"concat(lpad(hex(($u) % 256), 2, '0'), " +
       s"lpad(hex(($u) DIV 256), 2, '0'))), '')"
-    val wav = Seq(
-      "'52494646'", le("36 + __len", 4),   // "RIFF", chunk size
-      "'57415645'", "'666D7420'",          // "WAVE", "fmt "
-      le("16", 4), le("1", 2), le("1", 2), // fmt size, PCM, mono
-      le(rate, 4), le(s"($rate) * 2", 4),  // sample rate, byte rate
-      le("2", 2), le("16", 2),             // block align, bits
-      "'64617461'", le("__len", 4),        // "data", data length
-      payload).mkString("concat(", ", ", ")")
-    Tables(spark, sfDir, "documents").select(col("doc_id"))
+    base
       .withColumn("n", expr("64 + (doc_id * 7) % 129"))
       .withColumn("__len", expr("2 * n"))
-      .selectExpr("doc_id AS media_id", s"unhex($wav) AS content")
+      .selectExpr(s"$mediaId AS media_id",
+        s"unhex(${wavHex("DIV", payload, stereoIds = false)}) AS content")
   }
 
   /** Per-window audio profile over the REAL decode: each clip splits into
@@ -1327,18 +1331,8 @@ object MediaPipeline {
     * MAP-ONLY until the output ordering (the [[pcmWindows]] shape).
     * Frames are whole (n ≥ 64 by construction), so no ragged-tail rule
     * is needed on either engine. */
-  def pcmSpectrogram(spark: SparkSession, sfDir: String): DataFrame = {
-    val ct = cos64.mkString("array(", "L, ", "L)")
-    val coef = "transform(sequence(0, 7), k -> aggregate(sequence(0, 15), " +
-      "CAST(0 AS BIGINT), (a, i) -> a + " +
-      "element_at(sm, CAST(frame * 16 + i + 1 AS INT)) * " +
-      s"element_at($ct, CAST(((2 * i + 1) * k) % 64 + 1 AS INT))))"
-    validWavBlobs(spark, sfDir)
-      .withColumn("p", decodePcm(col("content")))
-      .selectExpr("media_id", "slice(p.samples, 1, 64) AS sm")
-      .select(col("media_id"), col("sm"),
-        explode(expr("sequence(CAST(0 AS BIGINT), CAST(3 AS BIGINT))")).as("frame"))
-      .withColumn("coef", expr(coef))
+  def pcmSpectrogram(spark: SparkSession, sfDir: String): DataFrame =
+    pcmFrameCoefs(spark, sfDir)
       .selectExpr("media_id", "frame",
         "element_at(coef, 1) AS dc",
         "abs(element_at(coef, 2)) + abs(element_at(coef, 3)) AS band_low",
@@ -1346,26 +1340,44 @@ object MediaPipeline {
           "abs(element_at(coef, 6)) AS band_mid",
         "abs(element_at(coef, 7)) + abs(element_at(coef, 8)) AS band_high")
       .orderBy("media_id", "frame")
-  }
+
+  /** decode → first 64 samples → 4 frames of 16 → each frame's 8-bin
+    * integer DCT-II `coef` through [[cos64]]: (media_id, sm, frame, coef),
+    * the spectrum under both the spectrogram and the MFCC chain. */
+  private def pcmFrameCoefs(spark: SparkSession, sfDir: String): DataFrame =
+    validWavBlobs(spark, sfDir)
+      .withColumn("p", decodePcm(col("content")))
+      .selectExpr("media_id", "slice(p.samples, 1, 64) AS sm")
+      .select(col("media_id"), col("sm"),
+        explode(expr("sequence(CAST(0 AS BIGINT), CAST(3 AS BIGINT))")).as("frame"))
+      .withColumn("coef", expr("transform(sequence(0, 7), k -> aggregate(sequence(0, 15), " +
+        "CAST(0 AS BIGINT), (a, i) -> a + " +
+        "element_at(sm, CAST(frame * 16 + i + 1 AS INT)) * " +
+        s"element_at($cos64Spark, CAST(((2 * i + 1) * k) % 64 + 1 AS INT))))"))
 
   /** DuckDB mirror of [[pcmSpectrogram]] with NO bytes and NO decode:
     * frame coefficients recomputed from the arithmetic (doc_id, i)
     * sample formula and the same scaled-cosine table — a pass certifies
     * construct → real javax.sound decode → integer DCT end to end. */
   def spectroOracleSql: String =
-    "WITH g AS (SELECT doc_id, t.i // 16 AS frame, t.i % 16 AS j, " +
-      "((doc_id * 131 + t.i * 73) % 4001) - 2000 AS s " +
-      "FROM documents, range(64) t(i)), " +
-      s"ct AS (SELECT $cos64DuckLiteral AS c), " +
-      "coefs AS (SELECT doc_id, frame, k.k AS k, " +
-      "sum(s * c[((2 * j + 1) * k.k) % 64 + 1]) AS v " +
-      "FROM g, range(8) k(k), ct GROUP BY doc_id, frame, k.k) " +
+    pcmCoefsDuck + " " +
       "SELECT doc_id AS media_id, CAST(frame AS BIGINT) AS frame, " +
       "CAST(sum(CASE WHEN k = 0 THEN v END) AS BIGINT) AS dc, " +
       "CAST(sum(CASE WHEN k IN (1, 2) THEN abs(v) END) AS BIGINT) AS band_low, " +
       "CAST(sum(CASE WHEN k IN (3, 4, 5) THEN abs(v) END) AS BIGINT) AS band_mid, " +
       "CAST(sum(CASE WHEN k IN (6, 7) THEN abs(v) END) AS BIGINT) AS band_high " +
       "FROM coefs GROUP BY doc_id, frame ORDER BY media_id, frame"
+
+  /** DuckDB twin of [[pcmFrameCoefs]] over the arithmetic sample grid:
+    * CTEs `g`, `ct` (cos64) and `coefs` (doc_id, frame, k, v). */
+  private def pcmCoefsDuck: String =
+    "WITH g AS (SELECT doc_id, t.i // 16 AS frame, t.i % 16 AS j, " +
+      "((doc_id * 131 + t.i * 73) % 4001) - 2000 AS s " +
+      "FROM documents, range(64) t(i)), " +
+      s"ct AS (SELECT $cos64DuckLiteral AS c), " +
+      "coefs AS (SELECT doc_id, frame, k.k AS k, " +
+      "sum(s * c[((2 * j + 1) * k.k) % 64 + 1]) AS v " +
+      "FROM g, range(8) k(k), ct GROUP BY doc_id, frame, k.k)"
 
   /** The toy-scale mel filterbank for [[pcmMfcc]]: 4 triangular filters
     * over spectral bins k = 1..7 (DC excluded, the published rule) with
@@ -1398,22 +1410,12 @@ object MediaPipeline {
     * (integers after the one rounded-ln boundary) are served, so the
     * oracle certifies the filterbank and the full chain separately. */
   def pcmMfcc(spark: SparkSession, sfDir: String): DataFrame = {
-    val ct = cos64.mkString("array(", "L, ", "L)")
-    val coef = "transform(sequence(0, 7), k -> aggregate(sequence(0, 15), " +
-      "CAST(0 AS BIGINT), (a, i) -> a + " +
-      "element_at(sm, CAST(frame * 16 + i + 1 AS INT)) * " +
-      s"element_at($ct, CAST(((2 * i + 1) * k) % 64 + 1 AS INT))))"
     def mel(m: Int): String = melWeights.collect { case (`m`, k, w) =>
       s"$w * abs(element_at(coef, ${k + 1}))" }.mkString(" + ")
     def mfcc(j: Int): String = (0 to 3).map { m =>
-      s"lm$m * element_at($ct, CAST(${(4 * (2 * m + 1) * j) % 64} + 1 AS INT))"
+      s"lm$m * element_at($cos64Spark, CAST(${(4 * (2 * m + 1) * j) % 64} + 1 AS INT))"
     }.mkString(" + ")
-    validWavBlobs(spark, sfDir)
-      .withColumn("p", decodePcm(col("content")))
-      .selectExpr("media_id", "slice(p.samples, 1, 64) AS sm")
-      .select(col("media_id"), col("sm"),
-        explode(expr("sequence(CAST(0 AS BIGINT), CAST(3 AS BIGINT))")).as("frame"))
-      .withColumn("coef", expr(coef))
+    pcmFrameCoefs(spark, sfDir)
       .selectExpr(Seq("media_id", "frame") ++
         (0 to 3).map(m => s"${mel(m)} AS mel$m"): _*)
       .selectExpr(Seq("media_id", "frame") ++
@@ -1433,13 +1435,7 @@ object MediaPipeline {
   def mfccOracleSql: String = {
     val wvals = melWeights.map { case (m, k, w) => s"($m, $k, $w)" }
       .mkString(", ")
-    "WITH g AS (SELECT doc_id, t.i // 16 AS frame, t.i % 16 AS j, " +
-      "((doc_id * 131 + t.i * 73) % 4001) - 2000 AS s " +
-      "FROM documents, range(64) t(i)), " +
-      s"ct AS (SELECT $cos64DuckLiteral AS c), " +
-      "coefs AS (SELECT doc_id, frame, k.k AS k, " +
-      "sum(s * c[((2 * j + 1) * k.k) % 64 + 1]) AS v " +
-      "FROM g, range(8) k(k), ct GROUP BY doc_id, frame, k.k), " +
+    pcmCoefsDuck + ", " +
       s"mel AS (SELECT doc_id, frame, w.m, " +
       "CAST(sum(w.w * abs(c.v)) AS BIGINT) AS e " +
       s"FROM coefs c JOIN (VALUES $wvals) w(m, k, w) ON c.k = w.k " +
@@ -1470,81 +1466,89 @@ object MediaPipeline {
     * channel per frame), and at the doc's CUT point (frame 1 + doc_id%3)
     * the content seed jumps by 1000 — a scene change. The frame walk,
     * decode, and temporal profile all read the BYTES; the construction
-    * is a UDF for the same reason as [[grayBmpBytes]] (per-pixel SQL hex
+    * is a UDF for the same reason as [[grayBmp]] (per-pixel SQL hex
     * churn), and the oracle recomputes from the arithmetic grids, which
     * certifies construct → container walk → per-frame real decode →
     * temporal arithmetic end to end. */
-  private def videoBytes(docId: Long): Array[Byte] = {
-    val w = (8 + docId % 9).toInt; val h = (8 + (docId * 3) % 9).toInt
+  val videoBlob = udf((docId: Long) => {
     val ct = (1 + docId % 3).toInt
-    val pad = (4 - (w * 3) % 4) % 4
-    val dlen = (w * 3 + pad) * h
-    val fsz = 54 + dlen
-    val out = new Array[Byte](4 + 4 * fsz)
-    def le(off: Int, n: Int, value: Long): Unit = {
-      var i = 0
-      while (i < n) { out(off + i) = ((value >> (8 * i)) & 0xff).toByte; i += 1 }
-    }
-    le(0, 4, 4) // frame count
-    var t = 0
-    while (t < 4) {
-      val o = 4 + t * fsz
-      out(o) = 'B'; out(o + 1) = 'M'
-      le(o + 2, 4, fsz.toLong); le(o + 10, 4, 54); le(o + 14, 4, 40)
-      le(o + 18, 4, w); le(o + 22, 4, h); le(o + 26, 2, 1); le(o + 28, 2, 24)
-      le(o + 34, 4, dlen); le(o + 38, 4, 2835); le(o + 42, 4, 2835)
+    videoContainer(docId, t => {
       val seed = docId + (if (t >= ct) 1000L else 0L)
-      var p = o + 54
-      var yy = h - 1
-      while (yy >= 0) {
-        var x = 0
-        while (x < w) {
-          out(p) = ((seed + 7 * x + 13 * yy + 5 * t) % 256).toByte
-          out(p + 1) = ((3 * seed + 11 * x + 5 * yy + 5 * t) % 256).toByte
-          out(p + 2) = ((5 * seed + 3 * x + 17 * yy + 5 * t) % 256).toByte
-          p += 3
-          x += 1
-        }
-        p += pad
-        yy -= 1
-      }
-      t += 1
-    }
+      (x, y) => rgb(((5 * seed + 3 * x + 17 * y + 5 * t) % 256).toInt,
+        ((3 * seed + 11 * x + 5 * y + 5 * t) % 256).toInt,
+        ((seed + 7 * x + 13 * y + 5 * t) % 256).toInt)
+    })
+  })
+
+  /** The 4-frame container of both video families: a 4-byte LE frame
+    * count, then four w×h BMPs back to back (the [[validBmpBlobs]]
+    * geometry); `frame(t)` is frame t's [[writeBmp]] pixel function. */
+  private def videoContainer(docId: Long,
+      frame: Int => ((Int, Int) => Int)): Array[Byte] = {
+    val w = (8 + docId % 9).toInt; val h = (8 + (docId * 3) % 9).toInt
+    val fsz = bmpSize(w, h)
+    val out = new Array[Byte](4 + 4 * fsz)
+    le(out, 0, 4, 4)
+    for (t <- 0 until 4) writeBmp(out, 4 + t * fsz, w, h, frame(t))
     out
   }
 
-  val videoBlob = udf((docId: Long) => videoBytes(docId))
+  /** The one container walk: frame count from the 4-byte LE header, each
+    * frame's size from ITS OWN BMP file-size field (never frame 0's — a
+    * container with frames of different sizes would otherwise be
+    * mis-sliced), each slice checked for the 'BM' magic and decoded for
+    * real through ImageIO. Null when the clip is undecodable: a count
+    * outside 1..64, bad magic, a truncated slice, or a decoder failure. */
+  private[graft] def containerFrames(bytes: Array[Byte]): Array[Decoded] = {
+    if (bytes == null || bytes.length < 66) return null
+    def u32(off: Int): Long = {
+      var v = 0L; var i = 3
+      while (i >= 0) { v = (v << 8) | (bytes(off + i) & 0xff); i -= 1 }
+      v
+    }
+    val nf = u32(0).toInt
+    if (nf <= 0 || nf > 64) return null
+    val frames = new Array[Decoded](nf)
+    var off = 4
+    var t = 0
+    while (t < nf) {
+      if (off + 6 > bytes.length ||
+        bytes(off) != 'B'.toByte || bytes(off + 1) != 'M'.toByte) return null
+      val fsz = u32(off + 2).toInt
+      if (fsz < 54 || off.toLong + fsz > bytes.length) return null
+      frames(t) = decodeImage(java.util.Arrays.copyOfRange(bytes, off, off + fsz))
+      if (frames(t) == null) return null
+      off += fsz
+      t += 1
+    }
+    frames
+  }
+
+  val decodeFrames = udf((bytes: Array[Byte]) => containerFrames(bytes))
 
   /** Per-frame temporal profile over the REAL decode — the
-    * frame-sample/scene-cut pass a video training pipeline runs: parse
-    * the frame count and frame size FROM THE BYTES (the count from the
-    * container header, the size from frame 0's own BMP file-size field),
-    * slice each frame with a binary substring, decode it through ImageIO,
-    * and serve per frame the luma mass and the inter-frame delta energy
+    * frame-sample/scene-cut pass a video training pipeline runs: walk
+    * the container FROM THE BYTES ([[containerFrames]]: one decode per
+    * frame, each sliced by its own header's size), and serve per frame
+    * the luma mass and the inter-frame delta energy
     * Σ|luma_t − luma_{t−1}| — the scene-cut statistic (the cut frame's
     * delta dwarfs the ±5 drift frames', and MediaPipelineSpec pins
-    * argmax(delta) == the constructed cut for every doc). MAP-ONLY: the
-    * consecutive frame pair decodes in the same row (two slices of the
-    * one blob), so there is no self-join and no window — the shape that
-    * survives a billion clips. */
+    * argmax(delta) == the constructed cut for every doc). The rows come
+    * from the container header's frame count (byte 1; <= 255 here), so a
+    * row count never pays the decode; an undecodable clip serves null
+    * stats. MAP-ONLY: the consecutive frame pair sits in the same row's
+    * frame array, so there is no self-join and no window — the shape
+    * that survives a billion clips. */
   def frameProfile(spark: SparkSession, sfDir: String): DataFrame =
     Tables(spark, sfDir, "documents").select(col("doc_id"))
       .select(col("doc_id").as("media_id"), videoBlob(col("doc_id")).as("content"))
-      // LE frame count (byte 1; <= 255 here) and frame size from frame
-      // 0's BMP header (LE file-size field at container bytes 7..10)
-      .withColumn("nf", expr("CAST(conv(hex(substring(content, 1, 1)), 16, 10) AS INT)"))
-      .withColumn("fh", expr("hex(substring(content, 7, 4))"))
-      .withColumn("fsz", expr("CAST(conv(concat(substr(fh, 7, 2), substr(fh, 5, 2), " +
-        "substr(fh, 3, 2), substr(fh, 1, 2)), 16, 10) AS INT)"))
-      .select(col("media_id"), col("content"), col("fsz"),
-        explode(expr("sequence(0, nf - 1)")).as("f"))
-      .withColumn("d1", decodeLuma(expr("substring(content, 5 + f * fsz, fsz)")))
-      .withColumn("d0", decodeLuma(expr(
-        "CASE WHEN f >= 1 THEN substring(content, 5 + (f - 1) * fsz, fsz) END")))
+      .select(col("media_id"), col("content"), decodeFrames(col("content")).as("fr"))
+      .select(col("media_id"), col("fr"), explode(expr(
+        "sequence(0, CAST(conv(hex(substring(content, 1, 1)), 16, 10) AS INT) - 1)")).as("f"))
       .selectExpr("media_id", "CAST(f AS BIGINT) AS frame",
-        "CAST(d1.w AS BIGINT) AS w", "CAST(d1.h AS BIGINT) AS h",
-        "aggregate(d1.luma, CAST(0 AS BIGINT), (a, v) -> a + v) AS luma_sum",
-        "CASE WHEN f >= 1 THEN aggregate(zip_with(d1.luma, d0.luma, " +
+        "CAST(fr[f].w AS BIGINT) AS w", "CAST(fr[f].h AS BIGINT) AS h",
+        "aggregate(fr[f].luma, CAST(0 AS BIGINT), (a, v) -> a + v) AS luma_sum",
+        "CASE WHEN f >= 1 THEN aggregate(zip_with(fr[f].luma, fr[f - 1].luma, " +
           "(a, b) -> abs(a - b)), CAST(0 AS BIGINT), (a, v) -> a + v) END AS delta_sum")
       .orderBy("media_id", "frame")
 
@@ -1554,10 +1558,8 @@ object MediaPipeline {
     * formulas directly (no lag needed — the previous frame is just the
     * formula at t−1). */
   def frameOracleSql: String = {
-    def luma(t: String) =
-      s"299 * ((5 * (doc_id + (CASE WHEN ($t) >= ct THEN 1000 ELSE 0 END)) + 3 * xx.x + 17 * yy.y + 5 * ($t)) % 256) + " +
-      s"587 * ((3 * (doc_id + (CASE WHEN ($t) >= ct THEN 1000 ELSE 0 END)) + 11 * xx.x + 5 * yy.y + 5 * ($t)) % 256) + " +
-      s"114 * (((doc_id + (CASE WHEN ($t) >= ct THEN 1000 ELSE 0 END)) + 7 * xx.x + 13 * yy.y + 5 * ($t)) % 256)"
+    def luma(t: String) = lumaDuck(
+      s"(doc_id + (CASE WHEN ($t) >= ct THEN 1000 ELSE 0 END))", 256, s" + 5 * ($t)")
     "WITH d AS (SELECT doc_id, 8 + doc_id % 9 AS w, 8 + (doc_id * 3) % 9 AS h, " +
       "1 + doc_id % 3 AS ct FROM documents), " +
       "g AS (SELECT doc_id, w, h, ct, t.f AS f, " +
@@ -1584,26 +1586,13 @@ object MediaPipeline {
     * delta bits — the realistic re-cut). Samples stay within ±4600, far
     * inside 16-bit range. */
   def audioVariantBlobs(spark: SparkSession, sfDir: String): DataFrame = {
-    def le(e: String, n: Int) = leHex(e, n, "DIV")
-    val rate = "8000 * (1 + doc_id % 5)"
     val s0 = "(((doc_id * 131 + i * 73) % 4001) - 2000)"
     val sv = s"CASE WHEN v = 1 THEN 2 * $s0 + " +
       s"(CASE WHEN doc_id % 3 = 0 AND i * 8 < n THEN 600 ELSE 0 END) " +
       s"ELSE $s0 END"
-    val u = s"((($sv) + 65536) % 65536)"
-    val payload = "array_join(transform(sequence(0, CAST(n - 1 AS INT)), i -> " +
-      s"concat(lpad(hex(($u) % 256), 2, '0'), " +
-      s"lpad(hex(($u) DIV 256), 2, '0'))), '')"
-    val wav = Seq(
-      "'52494646'", le("36 + __len", 4), "'57415645'", "'666D7420'",
-      le("16", 4), le("1", 2), le("1", 2),
-      le(rate, 4), le(s"($rate) * 2", 4), le("2", 2), le("16", 2),
-      "'64617461'", le("__len", 4), payload).mkString("concat(", ", ", ")")
-    Tables(spark, sfDir, "documents").select(col("doc_id"))
-      .select(col("doc_id"), explode(expr("array(0, 1)")).as("v"))
-      .withColumn("n", expr("64 + (doc_id * 7) % 129"))
-      .withColumn("__len", expr("2 * n"))
-      .selectExpr("doc_id * 2 + v AS media_id", s"unhex($wav) AS content")
+    pcmWavBlobs(Tables(spark, sfDir, "documents").select(col("doc_id"))
+      .select(col("doc_id"), explode(expr("array(0, 1)")).as("v")),
+      "doc_id * 2 + v", s"((($sv) + 65536) % 65536)")
   }
 
   /** Decoded-and-fingerprinted in one pass (the [[decodeAhash]] fusion
@@ -1629,14 +1618,7 @@ object MediaPipeline {
       e(k) = s
       k += 1
     }
-    var hi = 0L; var lo = 0L
-    k = 1
-    while (k < 64) {
-      if (e(k) > e(k - 1)) {
-        if (k >= 32) hi |= 1L << (k - 32) else lo |= 1L << k
-      }
-      k += 1
-    }
+    val (hi, lo) = packBits(k => k >= 1 && e(k) > e(k - 1))
     AudioFp(p.rate, n, hi, lo)
   }
 
@@ -1644,47 +1626,17 @@ object MediaPipeline {
 
   /** Near-duplicate AUDIO pairs over real decoded PCM — [[imageNearDups]]
     * replayed for sound: fingerprint every clip (decode + envelope hash
-    * in one UDF pass), split the 64-bit hash into 4 sixteen-bit bands,
-    * equi-join on (band index, band value, sample_rate, n_samples) — the
-    * metadata prefilter — verify full Hamming ≤ 4 with two popcounts,
-    * pairs counted once at their lowest shared band (no DISTINCT). The
-    * same recall bound as the image family: 4 bands guarantee a shared
-    * band through Hamming 3; gain twins collide in all 4 by the
-    * invariance theorem. localCheckpoint is the same PLAN boundary
-    * (construct + decode must not re-inline per self-join side).
-    * Candidates bounded by band-bucket populations — never all-pairs. */
+    * in one UDF pass), then the same [[bandedHammingPairs]] join with
+    * (sample_rate, n_samples) as the metadata prefilter and the same
+    * recall bound; gain twins collide in all 4 bands by the invariance
+    * theorem. localCheckpoint is the same PLAN boundary. */
   def audioNearDups(spark: SparkSession, sfDir: String): DataFrame = {
     val hashed = audioVariantBlobs(spark, sfDir)
       .withColumn("d", decodeAudioFp(col("content")))
       .selectExpr("media_id", "CAST(d.rate AS BIGINT) AS rate",
         "CAST(d.n AS BIGINT) AS n", "d.fp_hi AS fp_hi", "d.fp_lo AS fp_lo")
       .localCheckpoint()
-    val bandArr = "array(" +
-      "struct(0 AS bi, fp_lo % 65536 AS bv), " +
-      "struct(1 AS bi, fp_lo DIV 65536 AS bv), " +
-      "struct(2 AS bi, fp_hi % 65536 AS bv), " +
-      "struct(3 AS bi, fp_hi DIV 65536 AS bv))"
-    val bands = hashed
-      .select(col("media_id"), col("rate"), col("n"),
-        col("fp_hi"), col("fp_lo"), explode(expr(bandArr)).as("b"))
-      .select(col("media_id"), col("rate"), col("n"),
-        col("fp_hi"), col("fp_lo"),
-        col("b.bi").as("bi"), col("b.bv").as("bv"))
-    val a = bands.select(col("media_id").as("media_a"),
-      col("fp_hi").as("hi_a"), col("fp_lo").as("lo_a"),
-      col("rate"), col("n"), col("bi"), col("bv"))
-    val b = bands.select(col("media_id").as("media_b"),
-      col("fp_hi").as("hi_b"), col("fp_lo").as("lo_b"),
-      col("rate"), col("n"), col("bi"), col("bv"))
-    a.join(b, Seq("bi", "bv", "rate", "n"))
-      .where(col("media_a") < col("media_b"))
-      .where(expr("bi = CASE WHEN lo_a % 65536 = lo_b % 65536 THEN 0 " +
-        "WHEN lo_a DIV 65536 = lo_b DIV 65536 THEN 1 " +
-        "WHEN hi_a % 65536 = hi_b % 65536 THEN 2 ELSE 3 END"))
-      .withColumn("hamming",
-        expr("CAST(bit_count(hi_a ^ hi_b) + bit_count(lo_a ^ lo_b) AS BIGINT)"))
-      .where(col("hamming") <= 4)
-      .select("media_a", "media_b", "hamming")
+    bandedHammingPairs(hashed, meta = Seq("rate", "n"), hi = "fp_hi", lo = "fp_lo")
       .orderBy("media_a", "media_b")
   }
 
@@ -1711,28 +1663,9 @@ object MediaPipeline {
       "(PARTITION BY media_id ORDER BY k) THEN 1 ELSE 0 END AS bit " +
       "FROM e), " +
       "fp AS (SELECT media_id, rate, n, " +
-      "CAST(sum(CASE WHEN bit = 1 AND k >= 32 " +
-      "THEN (CAST(1 AS BIGINT) << CAST(k - 32 AS INT)) ELSE 0 END) AS BIGINT) AS fp_hi, " +
-      "CAST(sum(CASE WHEN bit = 1 AND k < 32 " +
-      "THEN (CAST(1 AS BIGINT) << CAST(k AS INT)) ELSE 0 END) AS BIGINT) AS fp_lo " +
+      packDuck("bit = 1", "k", "fp_hi", "fp_lo") + " " +
       "FROM bits GROUP BY media_id, rate, n), " +
-      "bnd AS (SELECT media_id, rate, n, fp_hi, fp_lo, b.bi, " +
-      "CASE b.bi WHEN 0 THEN fp_lo % 65536 WHEN 1 THEN fp_lo // 65536 " +
-      "WHEN 2 THEN fp_hi % 65536 ELSE fp_hi // 65536 END AS bv " +
-      "FROM fp, (VALUES (0), (1), (2), (3)) b(bi)), " +
-      "p AS (SELECT a.media_id AS media_a, b2.media_id AS media_b, " +
-      "a.fp_hi AS hi_a, a.fp_lo AS lo_a, " +
-      "b2.fp_hi AS hi_b, b2.fp_lo AS lo_b, a.bi " +
-      "FROM bnd a JOIN bnd b2 ON a.bi = b2.bi AND a.bv = b2.bv " +
-      "AND a.rate = b2.rate AND a.n = b2.n " +
-      "AND a.media_id < b2.media_id) " +
-      "SELECT media_a, media_b, " +
-      "CAST(bit_count(xor(hi_a, hi_b)) + bit_count(xor(lo_a, lo_b)) AS BIGINT) AS hamming " +
-      "FROM p WHERE bi = (CASE WHEN lo_a % 65536 = lo_b % 65536 THEN 0 " +
-      "WHEN lo_a // 65536 = lo_b // 65536 THEN 1 " +
-      "WHEN hi_a % 65536 = hi_b % 65536 THEN 2 ELSE 3 END) " +
-      "AND bit_count(xor(hi_a, hi_b)) + bit_count(xor(lo_a, lo_b)) <= 4 " +
-      "ORDER BY media_a, media_b"
+      bandedHammingDuck("fp", Seq("rate", "n"), "fp_hi", "fp_lo")
 
   // ---- Perceptual near-dup VIDEO dedup: per-frame aHash sequence over
   // the real container walk + decode, frame-equality candidate join ----
@@ -1744,26 +1677,10 @@ object MediaPipeline {
     * per frame — values stay ≤ 215, no wrap, so the shift is exact),
     * and for doc_id % 3 == 0 the LAST frame re-rolled (+5000 on the
     * content seed — the "different outro" edit). Grayscale 24-bpp
-    * frames (luma exactly 1000·g) in the [[videoBytes]] container shape
+    * frames (luma exactly 1000·g) in the [[videoBlob]] container shape
     * (4-byte LE frame count + concatenated valid BMPs), w,h ∈ 8..16. */
-  private def videoVariantBytes(docId: Long, v: Int): Array[Byte] = {
-    val w = (8 + docId % 9).toInt; val h = (8 + (docId * 3) % 9).toInt
-    val pad = (4 - (w * 3) % 4) % 4
-    val dlen = (w * 3 + pad) * h
-    val fsz = 54 + dlen
-    val out = new Array[Byte](4 + 4 * fsz)
-    def le(off: Int, n: Int, value: Long): Unit = {
-      var i = 0
-      while (i < n) { out(off + i) = ((value >> (8 * i)) & 0xff).toByte; i += 1 }
-    }
-    le(0, 4, 4)
-    var t = 0
-    while (t < 4) {
-      val o = 4 + t * fsz
-      out(o) = 'B'; out(o + 1) = 'M'
-      le(o + 2, 4, fsz.toLong); le(o + 10, 4, 54); le(o + 14, 4, 40)
-      le(o + 18, 4, w); le(o + 22, 4, h); le(o + 26, 2, 1); le(o + 28, 2, 24)
-      le(o + 34, 4, dlen); le(o + 38, 4, 2835); le(o + 42, 4, 2835)
+  val videoVariantBlob = udf((docId: Long, v: Int) =>
+    videoContainer(docId, t => {
       val base = docId * 59 + t * 17 +
         (if (v == 1 && t == 3 && docId % 3 == 0) 5000L else 0L)
       // the (docId DIV 180) slope breaks the mod-180 periodicity of the
@@ -1772,25 +1689,9 @@ object MediaPipeline {
       // accidentally carries huge duplicate classes — 278k pairs at
       // sf0.1 instead of the intended twins (measured before this term)
       val slope = (docId / 180) * 53
-      var p = o + 54
-      var yy = h - 1
-      while (yy >= 0) {
-        var x = 0
-        while (x < w) {
-          val g = (20 + (base * 73 + slope * (x + yy) + x * 149L + yy * 211L) % 180 +
-            (if (v == 1) 16 else 0)).toByte
-          out(p) = g; out(p + 1) = g; out(p + 2) = g; p += 3
-          x += 1
-        }
-        p += pad
-        yy -= 1
-      }
-      t += 1
-    }
-    out
-  }
-
-  val videoVariantBlob = udf((docId: Long, v: Int) => videoVariantBytes(docId, v))
+      (x, y) => gray((20 + (base * 73 + slope * (x + y) + x * 149L + y * 211L) % 180 +
+        (if (v == 1) 16 else 0)).toInt)
+    }))
 
   def videoVariantBlobs(spark: SparkSession, sfDir: String): DataFrame =
     Tables(spark, sfDir, "documents").select(col("doc_id"))
@@ -1799,66 +1700,19 @@ object MediaPipeline {
         videoVariantBlob(col("doc_id"), col("v").cast("int")).as("content"))
 
   /** Walk the container and hash every frame in ONE UDF pass (the
-    * [[decodeAhash]] fusion at the clip level): frame count from the
-    * container header, each frame's size from ITS OWN BMP file-size
-    * field (not frame 0's — a container with heterogeneous frame sizes
-    * would otherwise be silently mis-sliced, the r17 advice), each
-    * slice validated against the 'BM' magic before the real ImageIO
-    * decode, each decode 8×8-block aHashed. Returns per-clip geometry
-    * plus the per-frame hash sequence — the video fingerprint. The
-    * null-drop is reserved for genuinely undecodable inputs (bad
-    * magic, truncated slice, decoder failure). */
+    * [[decodeAhash]] fusion at the clip level): [[containerFrames]]
+    * slices and decodes each frame, each decode is 8×8-block aHashed.
+    * Returns per-clip geometry (the last frame's) plus the per-frame hash
+    * sequence — the video fingerprint; null for an undecodable clip or a
+    * frame under 8×8. */
   case class VideoFp(w: Int, h: Int, nf: Int, hi: Array[Long], lo: Array[Long])
 
   private def videoFpOf(bytes: Array[Byte]): VideoFp = {
-    if (bytes == null || bytes.length < 66) return null
-    def le(off: Int, n: Int): Long = {
-      var v = 0L; var i = n - 1
-      while (i >= 0) { v = (v << 8) | (bytes(off + i) & 0xff); i -= 1 }
-      v
-    }
-    val nf = le(0, 4).toInt
-    if (nf <= 0 || nf > 64) return null
-    val hi = new Array[Long](nf); val lo = new Array[Long](nf)
-    var w = 0; var h = 0
-    var off = 4
-    var t = 0
-    while (t < nf) {
-      // each slice must carry its own valid BMP header: 'BM' magic at
-      // +0, its own little-endian file-size field at +2
-      if (off + 6 > bytes.length ||
-        bytes(off) != 'B'.toByte || bytes(off + 1) != 'M'.toByte) return null
-      val fsz = le(off + 2, 4).toInt
-      if (fsz < 54 || off.toLong + fsz > bytes.length) return null
-      val d = decodeImage(java.util.Arrays.copyOfRange(bytes, off, off + fsz))
-      if (d == null || d.w < 8 || d.h < 8) return null
-      off += fsz
-      w = d.w; h = d.h
-      val s8 = new Array[Long](64); val c8 = new Array[Long](64)
-      var total = 0L
-      var y = 0
-      while (y < h) {
-        val r8 = y * 8 / h * 8
-        var x = 0
-        while (x < w) {
-          val v = d.luma(y * w + x)
-          val k = r8 + x * 8 / w
-          s8(k) += v; c8(k) += 1; total += v
-          x += 1
-        }
-        y += 1
-      }
-      val np = w.toLong * h
-      var k = 0
-      while (k < 64) {
-        if (s8(k) * np > total * c8(k)) {
-          if (k >= 32) hi(t) |= 1L << (k - 32) else lo(t) |= 1L << k
-        }
-        k += 1
-      }
-      t += 1
-    }
-    VideoFp(w, h, nf, hi, lo)
+    val frames = containerFrames(bytes)
+    if (frames == null || frames.exists(d => d.w < 8 || d.h < 8)) return null
+    val (hi, lo) = frames.map(ahashBits).unzip
+    val last = frames.last
+    VideoFp(last.w, last.h, frames.length, hi, lo)
   }
 
   val decodeVideoFp = udf((bytes: Array[Byte]) => videoFpOf(bytes))
@@ -1938,10 +1792,7 @@ object MediaPipeline {
       "tt AS (SELECT media_id, t, CAST(sum(sk) AS BIGINT) AS total " +
       "FROM bl GROUP BY media_id, t), " +
       "fp AS (SELECT bl.media_id, w, h, bl.t, " +
-      "CAST(sum(CASE WHEN sk * (w * h) > total * ck AND k >= 32 " +
-      "THEN (CAST(1 AS BIGINT) << CAST(k - 32 AS INT)) ELSE 0 END) AS BIGINT) AS fh, " +
-      "CAST(sum(CASE WHEN sk * (w * h) > total * ck AND k < 32 " +
-      "THEN (CAST(1 AS BIGINT) << CAST(k AS INT)) ELSE 0 END) AS BIGINT) AS fl " +
+      packDuck("sk * (w * h) > total * ck", "k", "fh", "fl") + " " +
       "FROM bl JOIN tt ON bl.media_id = tt.media_id AND bl.t = tt.t " +
       "GROUP BY bl.media_id, w, h, bl.t), " +
       "cand AS (SELECT DISTINCT a.media_id AS media_a, b.media_id AS media_b " +
@@ -1987,26 +1838,9 @@ object MediaPipeline {
     * back from the bytes, big- and little-endian in one pass.
     */
   def pngProfile(spark: SparkSession, sfDir: String): DataFrame =
-    Tables(spark, sfDir, "documents")
-      .selectExpr("doc_id", "octet_length(text) AS __len",
-        "hex(encode(text, 'UTF-8')) AS __payload")
-      .selectExpr("doc_id AS media_id",
-        s"unhex(${pngWavHex("DIV", "__payload")}) AS content")
-      .selectExpr("media_id", "hex(content) AS __h",
-        "CAST(octet_length(content) AS BIGINT) AS __n")
-      .selectExpr("media_id" +: pngWavParseCols("__h", "__n", sparkInt): _*)
-      .orderBy("media_id")
+    profile(spark, sfDir, pngWavHex, pngWavParseCols)
 
-  def pngOracleSql: String = {
-    val hexExpr = pngWavHex("//", "hex(encode(text))")
-    val cols = pngWavParseCols("h",
-      "CAST(octet_length(unhex(h)) AS BIGINT)", duckInt)
-      .map(_.replace(" DIV ", " // "))
-    s"WITH b AS (SELECT doc_id AS media_id, " +
-      s"hex(unhex($hexExpr)) AS h FROM (SELECT doc_id, text, " +
-      s"octet_length(encode(text)) AS __len FROM documents)) " +
-      s"SELECT media_id, ${cols.mkString(", ")} FROM b ORDER BY media_id"
-  }
+  def pngOracleSql: String = profileOracle(pngWavHex, pngWavParseCols)
 
   /** Full pipeline: decode -> resize -> sample -> per-kind feature stats. */
   def pipeline(spark: SparkSession, sfDir: String): DataFrame = {

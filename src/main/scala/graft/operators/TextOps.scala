@@ -1156,16 +1156,6 @@ object TextOps extends QueryFamily {
         "base64(encode(substr(text, 1, 9), 'UTF-8')) AS b64_head")
         .orderBy("doc_id")),
 
-    // Header parsing from BYTES: blobs with real BMP / RIFF-WAVE
-    // container headers (synthesized — the container ships no codecs),
-    // and every served field (kind sniffed from the magic, dimensions,
-    // bpp, sample rate, channels, duration) little-endian-decoded from
-    // the standard byte offsets of a genuine BinaryType column — the
-    // media-lake profile pass that reads header row-groups without
-    // decoding payloads. Codegen'd built-ins only (substr/conv/hex);
-    // the oracle re-runs the identical construct+parse through a DuckDB
-    // BLOB, and md5 over the canonical hex certifies the round trip
-    // byte-for-byte. See multimodal/MediaPipeline.scala.
     // decode-free aHash-shaped byte fingerprint per blob — see
     // MediaPipeline.byteFingerprint for the block/threshold contract
     "q_multimodal_phash" -> ((s, dir) =>
@@ -1196,6 +1186,16 @@ object TextOps extends QueryFamily {
     "q_multimodal_thumb" -> ((s, dir) =>
       graft.multimodal.MediaPipeline.pixelThumb(s, dir)),
 
+    // Header parsing from BYTES: blobs with real BMP / RIFF-WAVE
+    // container headers (synthesized — the container ships no codecs),
+    // and every served field (kind sniffed from the magic, dimensions,
+    // bpp, sample rate, channels, duration) little-endian-decoded from
+    // the standard byte offsets of a genuine BinaryType column — the
+    // media-lake profile pass that reads header row-groups without
+    // decoding payloads. Codegen'd built-ins only (substr/conv/hex);
+    // the oracle re-runs the identical construct+parse through a DuckDB
+    // BLOB, and md5 over the canonical hex certifies the round trip
+    // byte-for-byte. See multimodal/MediaPipeline.scala.
     "q_multimodal_header" -> ((s, dir) =>
       graft.multimodal.MediaPipeline.headerProfile(s, dir)),
 
@@ -1269,10 +1269,6 @@ object TextOps extends QueryFamily {
       graft.multimodal.MediaPipeline.pcmMfcc(s, dir)),
   )
 
-  /** DuckDB mirror of the BPE trainer: the identical word-count base,
-    * per-round weighted pair counts, (cnt DESC, x, y) argmax, and
-    * boundary-delimited replace — one CTE triple (p/t/w) per round.
-    */
   /** The shared CTE chain w0..w{rounds}: word-count base, then one
     * (p/t/w) triple per round — weighted pair counts, (cnt DESC, x, y)
     * argmax, boundary-delimited replace. Carries the raw word so the
@@ -1300,7 +1296,9 @@ object TextOps extends QueryFamily {
     s"$base, $iters"
   }
 
-  /** DuckDB mirror of the BPE trainer: the chain's per-round argmax rows. */
+  /** DuckDB mirror of the BPE trainer: the identical word-count base,
+    * per-round weighted pair counts, (cnt DESC, x, y) argmax, and
+    * boundary-delimited replace; serves the chain's per-round argmax rows. */
   private def bpeOracle(rounds: Int): String = {
     val sel = (1 to rounds).map(i =>
       s"SELECT CAST($i AS BIGINT) AS iter, x, y, x || y AS merged, " +

@@ -40,7 +40,6 @@ object SearchQueries extends QueryFamily {
       root
     }
 
-  /** The serve-side contract: answered from index artifacts only. */
   /** The BM25 oracle's CTE chain through per-(doc, term) scores `sc` —
     * shared by q_search_bm25 (the plain top-20) and q_search_hybrid
     * (the RRF text leg), so the two cannot drift. */

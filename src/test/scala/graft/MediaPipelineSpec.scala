@@ -390,6 +390,16 @@ class MediaPipelineSpec extends AnyFunSuite {
         .getAs[Long]("frame")
       assert(cut == 1 + id % 3, s"doc $id: detected cut $cut != ${1 + id % 3}")
     }
+    // a container whose frames differ in size: the walker reads each
+    // frame's size from that frame's own header, never from frame 0's
+    val bmps = MediaPipeline.validBmpBlobs(spark, sf0001)
+      .where("media_id IN (0, 1)").collect()
+      .map(r => r.getAs[Long]("media_id") -> r.getAs[Array[Byte]]("content")).toMap
+    val mixed = Array[Byte](3, 0, 0, 0) ++ bmps(0L) ++ bmps(1L) ++ bmps(0L)
+    val frames = MediaPipeline.containerFrames(mixed)
+    assert(frames != null, "walker rejected a valid mixed-size container")
+    val dims = frames.map(d => (d.w, d.h)).toSeq
+    assert(dims == Seq((8, 8), (9, 11), (8, 8)), s"walked frames $dims")
   }
 
   test("perceptual blob UDF bytes == SQL-hex construction, byte for byte") {
@@ -403,6 +413,14 @@ class MediaPipelineSpec extends AnyFunSuite {
     val viaUdf = md5s(MediaPipeline.perceptualBlobs(spark, sf0001, variants = true))
     val viaSql = md5s(MediaPipeline.perceptualBlobsSql(spark, sf0001))
     assert(viaUdf.size == 2000 && viaUdf == viaSql)
+    // the video container's frame 0 uses validBmpBlobs' channel formulas
+    // at t = 0, so the byte writer behind every UDF-built BMP is pinned
+    // against the SQL-hex bmpHex construction too
+    val bmps = MediaPipeline.validBmpBlobs(spark, sf0001)
+    val frame0 = md5s(bmps
+      .withColumn("video", MediaPipeline.videoBlob(col("media_id")))
+      .selectExpr("media_id", "substring(video, 5, octet_length(content)) AS content"))
+    assert(frame0.size == 500 && frame0 == md5s(bmps))
   }
 
   test("q_multimodal_dcthash: pHash bits well-formed and discriminative") {
