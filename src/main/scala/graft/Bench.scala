@@ -15,9 +15,9 @@ object Bench {
     try {
       import org.apache.spark.sql.expressions.Window
       import org.apache.spark.sql.functions._
-      spark.read.parquet(s"$sfDir/lineitem.parquet")
+      Tables(spark, sfDir, "lineitem")
         .groupBy("l_returnflag").count().count()
-      val d = spark.read.parquet(s"$sfDir/documents.parquet").limit(200)
+      val d = Tables(spark, sfDir, "documents").limit(200)
       d.select(col("doc_id"), explode(split(col("text"), " ")).as("t"))
         .join(broadcast(d.select(col("doc_id"))), "doc_id")
         .withColumn("r", row_number().over(

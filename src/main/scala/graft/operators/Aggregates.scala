@@ -441,7 +441,7 @@ object Aggregates extends QueryFamily {
         // key/count only: parquet footer stats push for integral types;
         // timestamp min/max stays un-pushable (logical-type caveats), so
         // including one would silently fall back to a full scan
-        val df = s.read.parquet(s"$dir/orders.parquet")
+        val df = Tables(s, dir, "orders")
           .agg(count(lit(1)).as("n_rows"),
             min("o_orderkey").as("min_key"), max("o_orderkey").as("max_key"),
             min("o_custkey").as("min_cust"), max("o_custkey").as("max_cust"))

@@ -118,7 +118,7 @@ object Warehouse extends QueryFamily {
         .repartition(col("bucket"))
         .write.mode("overwrite").partitionBy("bucket").parquet(dataPath)
       // the DELETE: scan once with the predicate, persist positions only
-      s.read.parquet(dataPath)
+      Tables.parquet(s, dataPath)
         .where(col("o_orderstatus") === "F" && col("o_orderkey") % 7 === 0)
         .select("bucket", "pos")
         .coalesce(1).write.mode("overwrite").parquet(dvPath)
@@ -154,7 +154,7 @@ object Warehouse extends QueryFamily {
   private def bloomIndexLayout(s: SparkSession, dir: String): (String, String) = {
     val (dataPath, _) = manifestLayout(s, dir)
     val idxPath = layout(s, dir, "bloomidx") { idxPath =>
-      s.read.parquet(dataPath)
+      Tables.parquet(s, dataPath)
         .select(input_file_name().as("file"), col("o_custkey"))
         .distinct()
         .select(col("file"), explode(expr(bloomPosExpr)).as("p"))
@@ -173,7 +173,7 @@ object Warehouse extends QueryFamily {
   private[graft] def bloomPlan(s: SparkSession,
       dir: String): (Seq[Long], Seq[String], Int) = {
     val (dataPath, idxPath) = bloomIndexLayout(s, dir)
-    val keys = s.read.parquet(dataPath)
+    val keys = Tables.parquet(s, dataPath)
       .groupBy("o_custkey").agg(count(lit(1)).as("n"))
       .orderBy(col("n"), col("o_custkey")).limit(3)
       .collect().map(_.getLong(0)).toSeq // 3 rows: the plan step
@@ -203,7 +203,7 @@ object Warehouse extends QueryFamily {
     @volatile var total: Int = 0
     graft.Par.run(
       () => if (neededWords.nonEmpty) {
-        blooms = s.read.parquet(idxPath)
+        blooms = Tables.parquet(s, idxPath)
           .where(col("w").isin(neededWords: _*))
           .collect() // O(files × needed words), never the full bitmap
           .groupBy(_.getAs[String]("file"))
@@ -211,7 +211,7 @@ object Warehouse extends QueryFamily {
             r.getAs[Long]("w") -> r.getAs[Long]("bits")).toMap)
           .toMap
       },
-      () => total = s.read.parquet(idxPath).select("file").distinct()
+      () => total = Tables.parquet(s, idxPath).select("file").distinct()
         .count().toInt) // O(files) plan-step count, no bitmap transfer
     def mayContain(words: Map[Long, Long], ps: Seq[Long]): Boolean =
       ps.forall(p => ((words.getOrElse(p / 64, 0L) >> (p % 64)) & 1L) == 1L)
@@ -263,7 +263,7 @@ object Warehouse extends QueryFamily {
       val dataDirs = (0 to 7).map(b => s"$root/files/b=$b")
       // the DELETE commit: positions only, files untouched — v2 is the
       // merge-on-read snapshot (data files + the vector)
-      s.read.parquet(dataDirs: _*)
+      Tables.parquet(s, dataDirs: _*)
         .where(col("o_orderstatus") === "F" && col("o_orderkey") % 16 < 3)
         .select("bucket", "pos")
         .coalesce(1).write.mode("overwrite").parquet(s"$root/dv/v2")
@@ -293,13 +293,13 @@ object Warehouse extends QueryFamily {
       // minus their tombstoned positions; untouched buckets ride into
       // v3 by reference. The original pos is CARRIED (not re-assigned)
       // so the rewrite is auditable against the cleared vector.
-      val dv = s.read.parquet(s"$root/dv/v2")
+      val dv = Tables.parquet(s, s"$root/dv/v2")
       val affected = dv.select("bucket").distinct()
         .collect().map(_.getLong(0)).sorted // O(buckets): the plan step
       require(affected.nonEmpty && affected.length < 8,
         s"compaction fixture must be a partial rewrite, got ${affected.toSeq}")
       affected.foreach { b =>
-        s.read.parquet(s"$root/files/b=$b")
+        Tables.parquet(s, s"$root/files/b=$b")
           .join(broadcast(dv.where(col("bucket") === b)),
             Seq("bucket", "pos"), "left_anti")
           .coalesce(1).write.mode("overwrite").parquet(s"$root/rw/b=$b")
@@ -330,7 +330,7 @@ object Warehouse extends QueryFamily {
       // this is the table maintenance job every lake format runs, and it
       // is what lets later queries plan without listing or footer-reading
       // the data files at all
-      s.read.parquet(dataPath)
+      Tables.parquet(s, dataPath)
         .groupBy(input_file_name().as("file"))
         .agg(min("o_orderkey").as("min_key"), max("o_orderkey").as("max_key"),
           count(lit(1)).as("n_rows"))
@@ -376,7 +376,7 @@ object Warehouse extends QueryFamily {
       Tables(s, dir, "documents").select("doc_id", "lang", "n_chars")
         .repartition(24)
         .write.mode("overwrite").partitionBy("lang").parquet(s"$root/frag")
-      s.read.parquet(s"$root/frag")
+      Tables.parquet(s, s"$root/frag")
         .repartition(col("lang"))
         .write.mode("overwrite")
         .option("maxRecordsPerFile", 1000)
@@ -407,7 +407,7 @@ object Warehouse extends QueryFamily {
     // Partition-pruned scan: documents laid out as lang=<v>/ dirs; the
     // lang filter never touches the other languages' files.
     "q_scan_partitioned" -> ((s, dir) => {
-      s.read.parquet(partsLayout(s, dir))
+      Tables.parquet(s, partsLayout(s, dir))
         .where(col("lang") === "en")
         .groupBy("source")
         .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"))
@@ -425,7 +425,7 @@ object Warehouse extends QueryFamily {
     // sort orders. ZOrderSpec proves the skipping premise file-by-file;
     // correctness here is the 2-D range read's result itself.
     "q_scan_zorder" -> ((s, dir) => {
-      s.read.parquet(zorderLayout(s, dir))
+      Tables.parquet(s, zorderLayout(s, dir))
         .where(col("user_id").between(1, 2) &&
           col("ts") >= tsLit("2024-01-10") && col("ts") < tsLit("2024-01-14"))
         .select("event_id", "user_id", "ts", "event_type", "value")
@@ -444,7 +444,7 @@ object Warehouse extends QueryFamily {
     // is KB-scale planning; the data files skipped are the win.
     "q_scan_manifest" -> ((s, dir) => {
       val (_, manPath) = manifestLayout(s, dir)
-      val man = s.read.parquet(manPath).collect() // O(files): the plan step
+      val man = Tables.parquet(s, manPath).collect() // O(files): the plan step
       val maxKey = man.map(_.getAs[Long]("max_key")).max
       val (lo, hi) = (maxKey / 10, maxKey / 5)
       val selected = man.filter(r =>
@@ -453,7 +453,7 @@ object Warehouse extends QueryFamily {
       require(selected.nonEmpty, "manifest pruned every file — empty band")
       require(selected.length < man.length,
         s"manifest pruned nothing: ${selected.length} of ${man.length} files")
-      val df = s.read.parquet(selected.toIndexedSeq: _*)
+      val df = Tables.parquet(s, selected.toIndexedSeq: _*)
         .where(col("o_orderkey").between(lo, hi))
         .groupBy("o_orderpriority")
         .agg(count(lit(1)).as("n_orders"), sum("o_custkey").as("sum_cust"))
@@ -488,7 +488,7 @@ object Warehouse extends QueryFamily {
       require(selected.nonEmpty, "bloom skipped every file — lost the needle")
       require(selected.length < total,
         s"bloom pruned nothing: ${selected.length} of $total files")
-      val df = s.read.parquet(selected: _*)
+      val df = Tables.parquet(s, selected: _*)
         .where(col("o_custkey").isin(keys: _*))
         .groupBy("o_custkey")
         .agg(count(lit(1)).as("n_orders"),
@@ -516,9 +516,9 @@ object Warehouse extends QueryFamily {
     "q_scan_timetravel" -> ((s, dir) => {
       val root = timeTravelLayout(s, dir)
       def readV(v: Int): DataFrame = {
-        val paths = s.read.parquet(s"$root/snapshots/v=$v")
+        val paths = Tables.parquet(s, s"$root/snapshots/v=$v")
           .collect().map(_.getString(0)) // O(files): the plan step
-        s.read.parquet(paths.toIndexedSeq: _*)
+        Tables.parquet(s, paths.toIndexedSeq: _*)
       }
       val v2 = readV(2)
       require(!v2.inputFiles.exists(_.contains("b=1")),
@@ -548,12 +548,12 @@ object Warehouse extends QueryFamily {
     "q_scan_snapshotdiff" -> ((s, dir) => {
       val root = timeTravelLayout(s, dir)
       def paths(v: Int): Set[String] =
-        s.read.parquet(s"$root/snapshots/v=$v")
+        Tables.parquet(s, s"$root/snapshots/v=$v")
           .collect().map(_.getString(0)).toSet // O(files): the plan step
       val (v0, v1, v2) = (paths(0), paths(1), paths(2))
       def delta(files: Set[String], fromV: Int, toV: Int, change: String) = {
         require(files.nonEmpty, s"empty manifest diff v$fromV -> v$toV")
-        val df = s.read.parquet(files.toSeq: _*)
+        val df = Tables.parquet(s, files.toSeq: _*)
         require(df.inputFiles.forall(f => files.exists(p =>
           f.contains(p.split('/').last))),
           s"delta scan read past the manifest diff v$fromV -> v$toV")
@@ -582,8 +582,8 @@ object Warehouse extends QueryFamily {
     // positions addressed exactly the predicate's rows.
     "q_scan_deletevector" -> ((s, dir) => {
       val (dataPath, dvPath) = deleteVectorLayout(s, dir)
-      val dv = s.read.parquet(dvPath)
-      s.read.parquet(dataPath)
+      val dv = Tables.parquet(s, dvPath)
+      Tables.parquet(s, dataPath)
         .join(broadcast(dv), Seq("bucket", "pos"), "left_anti")
         .groupBy("o_orderstatus")
         .agg(count(lit(1)).as("n_orders"),
@@ -608,7 +608,7 @@ object Warehouse extends QueryFamily {
     "q_lake_compact" -> ((s, dir) => {
       val root = dvCompactLayout(s, dir)
       def manifest(v: Int) = // O(files): the plan step
-        s.read.parquet(s"$root/snapshots/v=$v").collect()
+        Tables.parquet(s, s"$root/snapshots/v=$v").collect()
           .map(r => (r.getAs[String]("path"), r.getAs[String]("kind")))
       val m2 = manifest(2); val m3 = manifest(3)
       val data2 = m2.collect { case (p, "data") => p }
@@ -621,10 +621,10 @@ object Warehouse extends QueryFamily {
       val shared = data2.toSet.intersect(data3.toSet)
       require(shared.nonEmpty && shared.size < data2.length,
         s"expected a partial file swap: shared ${shared.size} of ${data2.length}")
-      val dv = s.read.parquet(dvPaths.head)
-      val v2 = s.read.parquet(data2.toIndexedSeq: _*)
+      val dv = Tables.parquet(s, dvPaths.head)
+      val v2 = Tables.parquet(s, data2.toIndexedSeq: _*)
         .join(broadcast(dv), Seq("bucket", "pos"), "left_anti")
-      val v3 = s.read.parquet(data3.toIndexedSeq: _*)
+      val v3 = Tables.parquet(s, data3.toIndexedSeq: _*)
       // the compacted scan never reads past its manifest (the
       // q_scan_manifest proof pattern; compare by file name)
       val listed = data3.map(_.split('/').last).toSet
@@ -737,7 +737,7 @@ object Warehouse extends QueryFamily {
     // maxRecordsPerFile ignored) fails the hash gate, not just a spec.
     // sum_chars guards content: compaction must move every row, once.
     "q_sink_compacted" -> ((s, dir) => {
-      s.read.parquet(compactionLayout(s, dir)._2)
+      Tables.parquet(s, compactionLayout(s, dir)._2)
         // projected before the aggregate: input_file_name() is
         // non-deterministic and may not sit inside an agg function
         .withColumn("fname", input_file_name())
@@ -778,7 +778,7 @@ object Warehouse extends QueryFamily {
           .select("c_custkey", "c_name", "c_mktsegment", "c_acctbal")
           .write.mode("overwrite").parquet(s"$path/batch=2")
       }
-      s.read.option("mergeSchema", "true").parquet(path)
+      Tables.parquet(s, Map("mergeSchema" -> "true"), path)
         .groupBy("c_mktsegment")
         .agg(count(lit(1)).as("n_rows"),
           count(col("c_acctbal")).as("n_with_bal"),
@@ -803,8 +803,8 @@ object Warehouse extends QueryFamily {
           ("es", "east"), ("zh", "east")).toDF("lang", "grp")
           .coalesce(1).write.mode("overwrite").parquet(dimPath)
       }
-      s.read.parquet(partsLayout(s, dir))
-        .join(s.read.parquet(dimPath), "lang")
+      Tables.parquet(s, partsLayout(s, dir))
+        .join(Tables.parquet(s, dimPath), "lang")
         .where(col("grp") === "west")
         .groupBy("lang")
         .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"))

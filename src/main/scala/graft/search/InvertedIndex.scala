@@ -3,6 +3,7 @@ package graft.search
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
+import graft.Tables
 import graft.sinks.AliasedIndex
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -173,18 +174,18 @@ object InvertedIndex {
   private def publishSegment(spark: SparkSession, root: String,
       segName: String, batch: Option[Long]): Unit = {
     val prev = AliasedIndex.resolve(metaRoot(root))
-    val deltaLex = spark.read.parquet(s"$root/$segName/postings")
+    val deltaLex = Tables.parquet(spark, s"$root/$segName/postings")
       .groupBy("tok")
       .agg(count(lit(1)).as("df"), sum("tf").as("tf_total"))
-    val deltaGlob = spark.read.parquet(s"$root/$segName/docstats")
+    val deltaGlob = Tables.parquet(spark, s"$root/$segName/docstats")
       .agg(count(lit(1)).as("n_docs"),
         coalesce(sum("dl"), lit(0L)).as("total_tokens"))
     AliasedIndex.publish(metaRoot(root)) { dir =>
       val (lex, glob, segs) = prev match {
         case None => (deltaLex, deltaGlob, Seq(segName))
         case Some(p) =>
-          val oldLex = spark.read.parquet(s"$p/lexicon")
-          val oldGlob = spark.read.parquet(s"$p/globals")
+          val oldLex = Tables.parquet(spark, s"$p/lexicon")
+          val oldGlob = Tables.parquet(spark, s"$p/globals")
           (oldLex.unionByName(deltaLex).groupBy("tok")
             .agg(sum("df").as("df"), sum("tf_total").as("tf_total")),
             oldGlob.unionByName(deltaGlob)
@@ -290,9 +291,9 @@ object InvertedIndex {
     }
     AliasedIndex.publish(metaRoot(root)) { dir =>
       graft.Par.run(
-        () => spark.read.parquet(s"$prevDir/lexicon").repartition(1)
+        () => Tables.parquet(spark, s"$prevDir/lexicon").repartition(1)
           .write.parquet(s"$dir/lexicon"),
-        () => spark.read.parquet(s"$prevDir/globals")
+        () => Tables.parquet(spark, s"$prevDir/globals")
           .write.parquet(s"$dir/globals"))
       ledger(prevDir).foreach(b =>
         Files.write(Paths.get(dir, "batch"), b.toString.getBytes("UTF-8")))
@@ -350,11 +351,11 @@ object InvertedIndex {
     AliasedIndex.publish(metaRoot(root)) { dir =>
       // the three meta artifacts fold from independent inputs — overlap
       graft.Par.run(
-        () => spark.read.parquet(s"$prevDir/lexicon").unionByName(negLex)
+        () => Tables.parquet(spark, s"$prevDir/lexicon").unionByName(negLex)
           .groupBy("tok").agg(sum("df").as("df"), sum("tf_total").as("tf_total"))
           .where(col("df") > 0) // a token living only in deleted docs vanishes
           .repartition(1).write.parquet(s"$dir/lexicon"),
-        () => spark.read.parquet(s"$prevDir/globals").unionByName(negGlob)
+        () => Tables.parquet(spark, s"$prevDir/globals").unionByName(negGlob)
           .agg(sum("n_docs").as("n_docs"),
             sum("total_tokens").as("total_tokens"))
           .write.parquet(s"$dir/globals"),
@@ -373,7 +374,7 @@ object InvertedIndex {
 
   private def deletes(spark: SparkSession, metaDir: String): Option[DataFrame] = {
     val p = Paths.get(metaDir, "deletes")
-    if (Files.isDirectory(p)) Some(spark.read.parquet(p.toString)) else None
+    if (Files.isDirectory(p)) Some(Tables.parquet(spark, p.toString)) else None
   }
 
   /** Tombstone filter shared by every reader: deleted docs are invisible
@@ -392,18 +393,18 @@ object InvertedIndex {
     * into every segment at once.
     */
   def postings(spark: SparkSession, root: String): DataFrame =
-    liveOnly(spark, root, spark.read.parquet(
+    liveOnly(spark, root, Tables.parquet(spark,
       liveSegments(root).map(s => s"$root/$s/postings"): _*))
 
   def docstats(spark: SparkSession, root: String): DataFrame =
-    liveOnly(spark, root, spark.read.parquet(
+    liveOnly(spark, root, Tables.parquet(spark,
       liveSegments(root).map(s => s"$root/$s/docstats"): _*))
 
   def lexicon(spark: SparkSession, root: String): DataFrame =
-    spark.read.parquet(s"${currentMeta(root)}/lexicon")
+    Tables.parquet(spark, s"${currentMeta(root)}/lexicon")
 
   def globals(spark: SparkSession, root: String): DataFrame =
-    spark.read.parquet(s"${currentMeta(root)}/globals")
+    Tables.parquet(spark, s"${currentMeta(root)}/globals")
 
   /** BM25 ranked retrieval over the committed index — top `k` documents
     * for an OR-of-terms query, never touching the original corpus.

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Tables
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import scala.jdk.CollectionConverters._
@@ -81,7 +82,7 @@ object LakeBridge {
 
   /** Snapshot v's full file list — the O(files) plan step. */
   def manifest(spark: SparkSession, root: String, v: Int): Seq[String] =
-    spark.read.parquet(snapDir(root, v).resolve("manifest").toString)
+    Tables.parquet(spark, snapDir(root, v).resolve("manifest").toString)
       .collect().map(_.getString(0)).toSeq
 
   /** One append COMMIT: write the rows as a new immutable file dir,
@@ -119,7 +120,7 @@ object LakeBridge {
   def read(spark: SparkSession, root: String, v: Option[Int] = None): DataFrame = {
     val ver = v.orElse(currentVersion(root)).getOrElse(
       sys.error(s"no committed snapshot at $root"))
-    spark.read.parquet(manifest(spark, root, ver): _*)
+    Tables.parquet(spark, manifest(spark, root, ver): _*)
   }
 
   /** The CDF consumer: every ROW-DELTA commit's delta as (version,
@@ -139,7 +140,7 @@ object LakeBridge {
           .getOrElse(Set.empty[String])
         val added = manifest(spark, root, v).filterNot(prev)
         require(added.nonEmpty, s"commit v$v added no files")
-        (v, spark.read.parquet(added: _*))
+        (v, Tables.parquet(spark, added: _*))
       }
   }
 

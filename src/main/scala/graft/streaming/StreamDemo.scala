@@ -54,7 +54,7 @@ object StreamDemo {
   }
 
   private def source(spark: SparkSession, workDir: String): DataFrame = {
-    val schema = spark.read.parquet(s"$workDir/in").schema
+    val schema = Tables.parquet(spark, s"$workDir/in").schema
     spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1")
       .parquet(s"$workDir/in")

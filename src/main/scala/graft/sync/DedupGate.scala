@@ -3,6 +3,7 @@ package graft.sync
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
+import graft.Tables
 import graft.operators.Dedup
 
 /** First-copy-wins dedup gate for a continuous ingest: each micro-batch
@@ -46,6 +47,10 @@ class DedupGate(val storeRoot: String, thresh: Double = 0.8,
 
   private val sigCols = Seq("doc_id", "lang", "bucket", "sz", "codes")
 
+  /** Every committed signature row, `batch` from the `batch=N` dirs. */
+  private def store(spark: org.apache.spark.sql.SparkSession): DataFrame =
+    Tables.parquet(spark, Map("basePath" -> storeRoot), storeRoot)
+
   /** Signatures from every batch strictly below `batchId`, or None if
     * the store has none (first batch, or a replay of it). The listing
     * check is explicit because reading a nonexistent/empty parquet root
@@ -53,8 +58,7 @@ class DedupGate(val storeRoot: String, thresh: Double = 0.8,
     */
   private def prior(batch: DataFrame, batchId: Long): Option[DataFrame] =
     if (!batchIds().exists(_ < batchId)) None
-    else Some(batch.sparkSession.read.option("basePath", storeRoot)
-      .parquet(storeRoot).where(col("batch") < batchId)
+    else Some(store(batch.sparkSession).where(col("batch") < batchId)
       .select(sigCols.map(col): _*))
 
   /** Shed earlier-seen near-dups from `batch`, record the whole batch's
@@ -113,8 +117,7 @@ class DedupGate(val storeRoot: String, thresh: Double = 0.8,
       s"compact upTo=$upTo exceeds the newest store partition " +
         s"${batchIds().max}: the merged rows would be invisible to probes")
     val tmp = java.nio.file.Paths.get(storeRoot, TmpName)
-    spark.read.option("basePath", storeRoot).parquet(storeRoot)
-      .where(col("batch") <= upTo).select(sigCols.map(col): _*)
+    store(spark).where(col("batch") <= upTo).select(sigCols.map(col): _*)
       .write.mode("overwrite").parquet(tmp.toString)
     // the marker is the commit point, so it must APPEAR atomically: a
     // torn plain write would wedge (or worse, misdirect) every future

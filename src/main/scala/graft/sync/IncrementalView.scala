@@ -4,6 +4,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, DecimalType, DecimalType => DT}
+import graft.Tables
 import graft.sinks.AliasedIndex
 
 /** Incrementally-maintained aggregate views: refresh a grouped aggregate
@@ -262,7 +263,7 @@ object IncrementalView {
     * [[read]]. */
   def state(spark: SparkSession, root: String): Option[DataFrame] =
     AliasedIndex.resolve(root).map(cur =>
-      spark.read.parquet(Paths.get(cur, "state").toString))
+      Tables.parquet(spark, Paths.get(cur, "state").toString))
 
   /** The served view: one row per key with a LIVE count. A fully
     * retracted key (mv_n = 0) disappears, exactly as its rows

@@ -561,7 +561,7 @@ object SyncRunner {
         // stage retries (this is a transformation, not an action) and
         // would fail a healthy run spuriously; the written files are
         // exactly-once by the commit protocol
-        val n = spark.read.parquet(pol.dir).count()
+        val n = Tables.parquet(spark, pol.dir).count()
         if (n > pol.budget)
           throw new graft.sinks.DeadLetterBudgetExceeded(n, pol.budget, pol.dir)
         n
@@ -601,7 +601,7 @@ object SyncRunner {
     */
   def replayQuarantine(spark: SparkSession, dlqRoot: String, job: SyncJob,
       client: BulkClient, where: String = "true"): DeliveryCounts = {
-    val q = spark.read.parquet(dlqRoot).where(expr(where))
+    val q = Tables.parquet(spark, dlqRoot).where(expr(where))
     val conflicts = q.groupBy("_id")
       .agg(countDistinct(coalesce(col("doc"), lit("\u0000del"))).as("n"))
       .where(col("n") > 1).select("_id")

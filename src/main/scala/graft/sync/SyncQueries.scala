@@ -1,6 +1,6 @@
 package graft.sync
 
-import graft.QueryFamily
+import graft.{QueryFamily, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -127,7 +127,7 @@ object SyncQueries extends QueryFamily {
         deadLetter = Some(graft.sinks.DeadLetterPolicy(s"$base/dlq", budget = 5000)))
       SyncRunner.run(s, dir, job,
         ModPoisonClient(graft.sinks.FileBulkClient(s"$base/idx"), 97L))
-      s.read.parquet(s"$base/dlq")
+      Tables.parquet(s, s"$base/dlq")
         .select(col("shard").cast("bigint").as("shard"), col("batch_id"),
           col("_id"), col("error"), col("doc"))
         .orderBy("_id")

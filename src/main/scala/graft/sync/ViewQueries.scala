@@ -1,6 +1,6 @@
 package graft.sync
 
-import graft.{Artifacts, Dets, QueryFamily}
+import graft.{Artifacts, Dets, QueryFamily, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -27,7 +27,7 @@ object ViewQueries extends QueryFamily {
     * column the tracked query watermarks on.
     */
   private def ordersSrc(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/orders.parquet").select(
+    Tables(s, dir, "orders").select(
       col("o_orderkey"),
       col("o_orderstatus").as("status"),
       col("o_orderpriority").as("priority"),
@@ -112,7 +112,7 @@ object ViewQueries extends QueryFamily {
     // (folded estimate == one-shot estimate).
     "q_view_distinct" -> ((s, dir) => {
       val root = Artifacts.root(s, "q_view_distinct")
-      val src = s.read.parquet(s"$dir/events.parquet")
+      val src = Tables(s, dir, "events")
         .select(col("event_type"), col("user_id"), col("ts"))
       val cuts = Seq("1970-01-01", "2024-01-11", "2024-01-21", "2100-01-01")
       // the three deltas' sketch aggregations are independent O(delta)
@@ -131,13 +131,13 @@ object ViewQueries extends QueryFamily {
         deltas.zipWithIndex.foreach { case (delta, i) =>
           val folded =
             if (i == 0) delta
-            else s.read.parquet(s"$root/v${i - 1}").union(delta)
+            else Tables.parquet(s, s"$root/v${i - 1}").union(delta)
               .groupBy("event_type")
               .agg(expr("hll_union_agg(sk)").as("sk"))
           folded.write.mode("overwrite").parquet(s"$root/v$i")
         }
       } finally deltas.foreach(_.unpersist())
-      val est = s.read.parquet(s"$root/v2")
+      val est = Tables.parquet(s, s"$root/v2")
         .select(col("event_type"),
           expr("hll_sketch_estimate(sk)").as("est_users"))
       val exact = src.groupBy("event_type")
@@ -175,7 +175,7 @@ object ViewQueries extends QueryFamily {
     // scan, N measures — not N single-measure views.
     "q_view_multi" -> ((s, dir) => {
       val root = Artifacts.root(s, "q_view_multi")
-      val li = s.read.parquet(s"$dir/lineitem.parquet").select(
+      val li = Tables(s, dir, "lineitem").select(
         col("l_returnflag").as("rflag"), col("l_linestatus").as("lstatus"),
         Dets.money(col("l_quantity")).as("qty"),
         Dets.money(col("l_extendedprice")).as("price"),
@@ -218,7 +218,7 @@ object ViewQueries extends QueryFamily {
       val v = IncrementalView.ViewDef(Seq("status"), "total",
         retractable = true)
       val prev = ordersSrc(s, dir).where(s"o_orderdate <= $cutoff")
-      val cur = s.read.parquet(s"$dir/orders.parquet")
+      val cur = Tables(s, dir, "orders")
         .where("o_orderkey % 13 <> 0")
         .select(col("o_orderkey"),
           expr("CASE WHEN o_orderkey % 5 = 0 THEN 'U' ELSE o_orderstatus END")
@@ -326,10 +326,10 @@ object ViewQueries extends QueryFamily {
     // broadcast-sized dim.
     "q_view_join" -> ((s, dir) => {
       val root = Artifacts.root(s, "q_view_join")
-      val orders = s.read.parquet(s"$dir/orders.parquet").select(
+      val orders = Tables(s, dir, "orders").select(
         col("o_custkey"), col("o_orderstatus").as("status"),
         Dets.money(col("o_totalprice")).as("total"), col("o_orderdate"))
-      val cust = s.read.parquet(s"$dir/customer.parquet")
+      val cust = Tables(s, dir, "customer")
         .select(col("c_custkey"), col("c_mktsegment").as("segment"))
       def facts(pred: String): DataFrame =
         orders.where(pred).join(broadcast(cust),

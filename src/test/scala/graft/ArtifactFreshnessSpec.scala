@@ -28,7 +28,8 @@ class ArtifactFreshnessSpec extends AnyFunSuite {
     to
   }
 
-  private def answers(s: SparkSession, dir: Path): Map[String, Seq[String]] =
+  private def answers(s: SparkSession, dir: Path,
+      keys: Seq[String] = keys): Map[String, Seq[String]] =
     keys.map(k => k -> SparkEntry.queries(k)(s, dir.toString)
       .collect().map(_.toString).toSeq.sorted).toMap
 
@@ -58,5 +59,21 @@ class ArtifactFreshnessSpec extends AnyFunSuite {
       assert(changed, s"$k: the rewrite did not change its answer")
       assert(fresh, s"$k served a stale artifact after the rewrite")
     }
+  }
+
+  test("a table rewritten in place with a new column reads with its new schema") {
+    val dir = copyTree(Paths.get(sf0001), "newcol")
+    val s = spark.newSession()
+    val key = Seq("q_text_tfidf")
+    val before = answers(s, dir, key)
+    val cols = Tables(s, dir.toString, "documents").columns.toSeq
+    rewrite(dir, "documents", _.where(pmod(col("doc_id"), lit(3)) =!= 0)
+      .withColumn("extra", lit(1)))
+    assert(Tables(s, dir.toString, "documents").columns.toSeq == cols :+ "extra",
+      "the same session read the old schema after the rewrite")
+    val after = answers(s, dir, key)
+    val expected = answers(spark.newSession(), copyTree(dir, "newcol_fresh"), key)
+    assert(expected != before, "the rewrite did not change the answer")
+    assert(after == expected, "the same session answered from the old table")
   }
 }

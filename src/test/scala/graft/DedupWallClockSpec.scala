@@ -72,11 +72,23 @@ class DedupWallClockSpec extends AnyFunSuite {
     // load-aware gate (r20 verdict item 3): on a contended host the
     // timing ratios are noise — CANCEL (visible, not failed) instead of
     // flaking the suite. Half the core count is far above this box's
-    // idle load and far below the contended windows on record.
+    // idle load and far below the contended windows on record. A burst
+    // (the suite's own previous spec) decays within a minute, so the
+    // gate looks again a bounded number of times before it gives up,
+    // and a cancellation is printed with every load it saw.
     val cores = Runtime.getRuntime.availableProcessors()
-    val load = loadavg()
-    assume(load < cores / 2.0,
-      f"host contended (1-min load $load%.1f on $cores cores) — " +
+    val limit = cores / 2.0
+    val loads = scala.collection.mutable.ArrayBuffer(loadavg())
+    while (loads.last >= limit && loads.size < 6) {
+      Thread.sleep(10000)
+      loads += loadavg()
+    }
+    val seen = loads.map(l => f"$l%.1f").mkString(", ")
+    if (loads.last >= limit)
+      println(f"DedupWallClockSpec CANCELLED: 1-min load $seen on $cores cores " +
+        f"(gate < $limit%.1f), ${loads.size} checks 10 s apart")
+    assume(loads.last < limit,
+      s"host contended (1-min load $seen on $cores cores) — " +
         "wall-clock ratios are scheduler noise here; rerun on a quiet box")
     val (n, factor) = (3000, 4)
     val small = synthCorpus(n)
