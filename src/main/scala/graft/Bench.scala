@@ -1,5 +1,7 @@
 package graft
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import scala.util.control.NonFatal
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -57,8 +59,15 @@ object Bench {
     }
     val names = only.getOrElse(SparkEntry.queries.keys.toSeq).sorted
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
+    // Per key, for the detail file only: generated classes compiled and
+    // their compile time over the key's `runs` calls (a warm call that
+    // compiles is a generated-class cache miss), and the 1-min load
+    // right before the key.
+    val perKey = scala.collection.mutable.LinkedHashMap.empty[String, (Long, Double, Double)]
     val samples = names.map { name =>
-      name -> (1 to runs).map { _ =>
+      val load = loadavg()
+      val (c0, ns0) = (CodegenMetrics.METRIC_COMPILATION_TIME.getCount, CodeGenerator.compileTime)
+      val times = (1 to runs).map { _ =>
         val t0 = System.nanoTime()
         try { SparkEntry.queries(name)(spark, sfDir).count() }
         catch { case NonFatal(e) =>
@@ -68,6 +77,9 @@ object Bench {
         }
         (System.nanoTime() - t0) / 1e9
       }.sorted
+      perKey(name) = (CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0,
+        (CodeGenerator.compileTime - ns0) / 1e6, load)
+      name -> times
     }
     def median(v: Seq[Double]): Double = v(v.size / 2)
     val results = samples.map { case (n, v) => n -> median(v) }
@@ -88,12 +100,15 @@ object Bench {
     val errNames = errors.keys.map(Verify.q).mkString("[", ",", "]")
     val loadAfter = loadavg()
     def line(entries: Seq[(String, Double)], omitted: Int,
-        errs: String): String = {
+        errs: String, extra: String = ""): String = {
       val qs = entries.map { case (k, v) => "\"" + k + "\":" + fmt(v) }
         .mkString("{", ",", "}")
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","runs":$runs,"noise":${fmt(noise)},"load_before":${fmt(loadBefore)},"load_after":${fmt(loadAfter)},"n_queries":${results.size},"n_errors":${errors.size},"errors":$errs,"q_omitted":$omitted,"queries":$qs,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","runs":$runs,"noise":${fmt(noise)},"load_before":${fmt(loadBefore)},"load_after":${fmt(loadAfter)},"n_queries":${results.size},"n_errors":${errors.size},"errors":$errs,"q_omitted":$omitted,"queries":$qs,$extra"sf":"$sfDir"}"""
     }
-    val full = line(results, 0, errFull)
+    val keys = perKey.map { case (k, (n, ms, load)) =>
+      s""""$k":{"compiles":$n,"compile_ms":${fmt(ms)},"load_before":${fmt(load)}}"""
+    }.mkString("{", ",", "}")
+    val full = line(results, 0, errFull, s""""keys":$keys,""")
     // Anchor the detail file to an explicit base (user.dir = the sbt
     // project root) and never let an IO failure discard the timings the
     // run just spent minutes computing — the printed line below is the

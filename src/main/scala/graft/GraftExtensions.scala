@@ -64,6 +64,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectFunction((FunctionIdentifier("topk_sum"),
       info("topk_sum", "topk_sum(v, k) - exact sum of the k largest cent-quantized values"),
       (es: Seq[Expression]) => TopKSum.build(arity("topk_sum", 2, es))))
+    ext.injectFunction((FunctionIdentifier("lsh_bucket"),
+      info("lsh_bucket",
+        "lsh_bucket(v, planes) - sign-LSH bucket of a 64-d double vector over fixed Rademacher planes"),
+      (es: Seq[Expression]) => LshBucket.build(arity("lsh_bucket", 2, es))))
     // Domain optimizer rule: size-ratio prefilter ahead of the fused
     // Jaccard merge (see JaccardSizePrefilter's scaladoc).
     ext.injectOptimizerRule(_ => graft.plans.JaccardSizePrefilter)

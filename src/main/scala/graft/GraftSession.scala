@@ -13,6 +13,17 @@ import org.apache.spark.sql.SparkSession
   * metastore db, derby.log) lands under java.io.tmpdir, never the repo.
   */
 object GraftSession {
+  /** Size of Spark's generated-class cache (`spark.sql.codegen.cache.maxEntries`).
+    * Spark's default of 100 is below the benchmark's working set, so a
+    * warm round evicted and recompiled classes it had just used. Measured
+    * with an unbounded cache (distinct classes compiled in one whole run,
+    * first calls and oracle checks included): perfbench query_mix 166,
+    * sync_ingest 234. 500 holds both sets at once with 25 % headroom.
+    * The conf is static: the first code generation in the JVM fixes it,
+    * so it is set here, never by a later `conf.set`.
+    */
+  val CodegenCacheEntries = 500
+
   def builder(cpus: String): SparkSession.Builder = {
     val scratch = java.nio.file.Files.createTempDirectory("graft_cat")
     // derby.log goes to derby.system.home (defaults to cwd = the repo)
@@ -35,6 +46,14 @@ object GraftSession {
       .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
         sys.env.getOrElse("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "true"))
       .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
+      // Keep the whole-stage codegen stage id out of the generated class's
+      // source (its class name). Adaptive execution numbers stages in the
+      // order concurrent shuffle stages finish, so the same subtree got a
+      // different id, hence new source and a recompile, from call to call
+      // (q_text_tfidf: 4 classes on some warm calls). The id still shows
+      // in `explain` as *(n) and in the generated code's comments.
+      .config("spark.sql.codegen.useIdInClassName", "false")
       .config("spark.ui.enabled", "false")
       // cluster-wide extension point: custom expressions + the
       // JaccardSizePrefilter optimizer rule, builtin-level

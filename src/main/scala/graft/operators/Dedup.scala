@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{Dets, QueryFamily, Tables}
+import graft.functions.LshBucket
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -94,40 +95,22 @@ object Dedup extends QueryFamily {
     docs.selectExpr("doc_id", "lang", "n_chars DIV 50 AS bucket",
       "size(array_distinct(split(text, ' '))) AS sz")
 
-  /** Fixed Rademacher hyperplanes for sign-LSH: sign(b, j) for hyperplane
-    * b in [0, planes), dimension j in [0,64), derived from md5 so there
-    * is no accidental structure. Computed once in Scala and inlined as +-
-    * literals into BOTH the Spark expression and the DuckDB oracle SQL —
-    * the engines then evaluate the identical left-assoc float chain, so
-    * bucket assignment is bit-identical with no runtime hashing. The
-    * plane COUNT is the LSH fan-out knob: 2^planes buckets, so a
-    * corpus-scaled choice is planes ≈ log2(N / target-bucket-size) —
-    * bucket population, and with it within-bucket pair volume, then
-    * stays constant as the corpus grows instead of linear (pairs
-    * quadratic). Plane b is identical at every fan-out (prefix
-    * property), so widening the knob refines existing buckets rather
-    * than reshuffling them — so the table is computed once at the
-    * 30-plane maximum and a fan-out reads its prefix.
-    */
-  private lazy val lshSigns: IndexedSeq[IndexedSeq[Int]] = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    (0 until 30).map { b =>
-      (0 until 64).map { j =>
-        val h = md.digest(s"lsh:$b:$j".getBytes("UTF-8"))
-        if ((h(0) & 1) == 1) 1 else -1
-      }
-    }
-  }
-
-  /** Sign-LSH bucket expression over a DOUBLE vector (one bit per
-    * hyperplane, 2^planes buckets); `elem(j)` renders the engine's
-    * 1-based element access.
+  /** Sign-LSH bucket as a SQL chain (one bit per hyperplane, 2^planes
+    * buckets) over [[graft.functions.LshBucket.positive]]; `elem(j)` renders
+    * the engine's 1-based element access. Each plane is a left-assoc
+    * +-1 add/subtract chain, so the DuckDB oracles evaluate the same
+    * float sums `lsh_bucket` computes on the Spark side (the tests render
+    * it in Spark SQL as `lsh_bucket`'s reference). The plane COUNT
+    * is the LSH fan-out knob: a corpus-scaled choice is planes ≈
+    * log2(N / target-bucket-size) — bucket population, and with it
+    * within-bucket pair volume, then stays constant as the corpus grows
+    * instead of linear (pairs quadratic).
     */
   private[graft] def lshBucketExpr(elem: Int => String, planes: Int = 4): String = {
-    require(planes >= 1 && planes <= 30, s"bad planes=$planes")
-    val bits = lshSigns.take(planes).zipWithIndex.map { case (signs, b) =>
-      val proj = signs.zipWithIndex.map { case (sg, j) =>
-        (if (sg > 0) " + " else " - ") + elem(j + 1)
+    require(planes >= 1 && planes <= LshBucket.MaxPlanes, s"bad planes=$planes")
+    val bits = LshBucket.positive.take(planes).zipWithIndex.map { case (pos, b) =>
+      val proj = pos.zipWithIndex.map { case (p, j) =>
+        (if (p) " + " else " - ") + elem(j + 1)
       }.mkString
       s"(CASE WHEN (CAST(0.0 AS DOUBLE)$proj) > 0 THEN ${1 << b} ELSE 0 END)"
     }
@@ -264,7 +247,7 @@ object Dedup extends QueryFamily {
     */
   private def cosinePairs(s: SparkSession, dir: String, planes: Int): DataFrame = {
     val b = vectors(s, dir)
-      .withColumn("bucket", expr(lshBucketExpr(j => s"element_at(v, $j)", planes)))
+      .withColumn("bucket", expr(s"lsh_bucket(v, $planes)"))
     b.as("a").join(b.as("b"),
         col("a.label") === col("b.label") && col("a.bucket") === col("b.bucket") &&
         col("a.vec_id") < col("b.vec_id"))
@@ -681,9 +664,10 @@ object Dedup extends QueryFamily {
 
   /** (vec_id, label, v, norm): the embedding corpus as DOUBLE vectors
     * with their L2 norms — the one vector load of the cosine kernels
-    * (registers vec_dot). */
+    * (registers vec_dot and lsh_bucket). */
   private def vectors(s: SparkSession, dir: String): DataFrame = {
     graft.functions.VecDot.register(s)
+    LshBucket.register(s)
     Tables(s, dir, "embeddings").select(col("vec_id"), col("label"),
       transform(col("embedding"), x => x.cast("double")).as("v"))
       .withColumn("norm", norm("v"))
@@ -1413,11 +1397,12 @@ object Dedup extends QueryFamily {
     // (label, sign-LSH bucket). Label alone is a coarse cluster whose
     // population grows linearly with the corpus — quadratic pairs within
     // the hottest label; composing it with the sign-LSH bucket (the same
-    // fixed Rademacher planes as q_sim_lsh, inlined bit-identically into
-    // both engines) bounds within-block pairs. The declared query runs
-    // the FIXTURE fan-out (4 planes, mirrored in the oracle); at corpus
-    // scale set spark.graft.dedup.cosinePlanes ≈ log2(N / target-bucket)
-    // so bucket population stays constant as the corpus grows — plane b
+    // fixed Rademacher planes as q_sim_lsh: `lsh_bucket` here, the
+    // bit-identical SQL chain in the oracle) bounds within-block pairs.
+    // The declared query runs the FIXTURE fan-out (4 planes, mirrored in
+    // the oracle); at corpus scale set spark.graft.dedup.cosinePlanes ≈
+    // log2(N / target-bucket) so bucket population stays constant as the
+    // corpus grows — plane b
     // is identical at every fan-out, so widening refines buckets without
     // reshuffling them. Approximate by design — a same-label pair split
     // across buckets is absent — and the oracle runs the identical
@@ -1430,10 +1415,10 @@ object Dedup extends QueryFamily {
         (Tables(s, dir, "embeddings"), "vec_id")))),
 
     // The corpus-scaled sign-LSH fan-out, oracle-pinned at a NON-fixture
-    // parameter (6 hyperplanes = 64 buckets): both engines inline the
-    // identical first-6-planes literals (prefix property — planes 0-3
-    // are exactly q_dedup_cosine's), so the widened blocking is
-    // hash-checked end to end.
+    // parameter (6 hyperplanes = 64 buckets): `lsh_bucket` and the
+    // oracle's chain read the same first 6 planes (prefix property —
+    // planes 0-3 are exactly q_dedup_cosine's), so the widened blocking
+    // is hash-checked end to end.
     "q_dedup_cosine_wide" -> ((s, dir) => cosinePairs(s, dir, 6)),
 
     // Similarity search: brute-force cosine top-5 for 10 probe vectors
@@ -1560,8 +1545,8 @@ object Dedup extends QueryFamily {
     // (q_sim_topk) and IVF (q_sim_ivf). Approximate by design: a neighbor
     // in a different bucket is absent; the oracle runs the identical
     // bucketed pipeline, so outputs hash-match. The +-1 projections are
-    // plain left-assoc add/subtract chains — bit-identical in both
-    // engines and fully codegen'd (no interpreted lambda per row).
+    // one primitive loop in `lsh_bucket` on the Spark side and the
+    // bit-identical left-assoc add/subtract chain in the oracle.
     "q_sim_lsh" -> ((s, dir) => {
       // scanned fraction per probe is ~1/2^planes — at corpus scale set
       // spark.graft.sim.lshPlanes (prefix property: wider refines, so
@@ -1571,7 +1556,7 @@ object Dedup extends QueryFamily {
         fixture = 4, cap = 24, name = "emb", dir = dir)(
         (Tables(s, dir, "embeddings"), "vec_id"))
       val e = vectors(s, dir)
-        .withColumn("bucket", expr(lshBucketExpr(j => s"element_at(v, $j)", planes)))
+        .withColumn("bucket", expr(s"lsh_bucket(v, $planes)"))
       val probes = e.where(col("vec_id") < 10)
         .select(col("vec_id").as("probe_id"), col("bucket").as("pbucket"),
           col("v").as("pv"), col("norm").as("pnorm"))
@@ -1839,7 +1824,7 @@ object Dedup extends QueryFamily {
 
     "q_sim_recall" -> ((s, dir) => {
       val e = vectors(s, dir)
-        .withColumn("bucket", expr(lshBucketExpr(j => s"element_at(v, $j)", 4)))
+        .withColumn("bucket", expr("lsh_bucket(v, 4)"))
         .withColumn("p16", slice(col("v"), 1, 16))
         .withColumn("norm16", norm("p16"))
       val probes = e.where(col("vec_id") < 10).select(
@@ -2060,7 +2045,7 @@ object Dedup extends QueryFamily {
   }
 
   /** DuckDB oracle for the two-level (label, sign-LSH) cosine pairs at
-    * `planes` hyperplanes — identical inlined plane literals.
+    * `planes` hyperplanes — the SQL chain `lsh_bucket` is bit-identical to.
     */
   private def cosineOracle(planes: Int): String = {
     val bucket = lshBucketExpr(j => s"v[$j]", planes)
@@ -2333,7 +2318,7 @@ object Dedup extends QueryFamily {
       gradeHitsDuck(("r4", "hits_4bit", top5("rkivf_k4")), ("r8", "hits_8bit", top5("rkivf_k8")))),
 
     // identical exact/coarse rankings (round(·,4) + id tiebreak) and the
-    // identical inlined 4-plane bucket literals; hits are integer counts
+    // 4-plane bucket chain that `lsh_bucket` mirrors; hits are integer counts
     // identical round-4 score grids, identical running conditional
     // window sums for the filtered ranks
     "q_sim_filtered" -> ("WITH e AS (SELECT vec_id, " +

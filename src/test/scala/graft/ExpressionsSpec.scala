@@ -8,6 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class ExpressionsSpec extends AnyFunSuite {
   import TestSpark._
+  import graft.operators.Dedup
   import org.apache.spark.sql.functions._
 
   private lazy val toksDf = {
@@ -100,12 +101,98 @@ class ExpressionsSpec extends AnyFunSuite {
     assert(r.getInt(2) == 4) // 6 code points -> 4 trigrams, all distinct
   }
 
-  test("GraftExtensions installs all five custom functions") {
+  test("GraftExtensions installs all seven custom functions") {
     // ExpressionInfo validates its arguments eagerly, so applying the
-    // extensions exercises the whole injectFunction surface (the builders
-    // themselves are covered by the equivalence tests above via register()).
+    // extensions exercises the whole injectFunction surface.
     val ext = new org.apache.spark.sql.SparkSessionExtensions
     new GraftExtensions().apply(ext)
+    // A new session carries none of the temp functions register() adds to
+    // this one, so what it resolves came from the extensions.
+    val fresh = spark.newSession()
+    val names = Seq("vec_dot", "sorted_intersect_size", "sorted_jaccard_ge",
+      "minhash_sig", "trigram_codes", "topk_sum", "lsh_bucket")
+    assert(names.filterNot(fresh.catalog.functionExists) == Nil)
+    assert(fresh.sql("SELECT lsh_bucket(array_repeat(1.0D, 64), 4)").head().getInt(0) ==
+      graft.functions.LshBucket.bucket(
+        new org.apache.spark.sql.catalyst.util.GenericArrayData(Array.fill(64)(1.0)), 4,
+        failOnError = true))
+    val e = intercept[org.apache.spark.sql.AnalysisException](
+      fresh.sql("SELECT lsh_bucket(array(1.0D))").collect())
+    assert(e.getCondition == "WRONG_NUM_ARGS.WITHOUT_SUGGESTION")
+  }
+
+  /** 64-d vectors as `v ARRAY<DOUBLE>` rows, read through a shuffle so
+    * the projection over them runs in the plan, not folded on the driver.
+    */
+  private def vectorRows(vs: Seq[Option[Seq[Option[Double]]]]) = {
+    import spark.implicits._
+    vs.zipWithIndex.map { case (v, i) => (i, v) }.toDF("id", "v").repartition(2)
+  }
+
+  private def lshCondition(t: Throwable): Option[String] =
+    Iterator.iterate(t)(_.getCause).takeWhile(_ != null).collectFirst {
+      case st: org.apache.spark.SparkThrowable if st.getCondition != null => st.getCondition
+    }
+
+  test("lsh_bucket == the lshBucketExpr chain, bit-exact, interpreted and codegen") {
+    graft.functions.LshBucket.register(spark)
+    assert(spark.conf.get("spark.sql.ansi.enabled") == "true")
+    val rnd = new scala.util.Random(42)
+    val special = Seq(-0.0, 0.0, Double.NaN, Double.PositiveInfinity,
+      Double.NegativeInfinity, Double.MinPositiveValue, -Double.MinPositiveValue)
+    val random = (0 until 300).map { i =>
+      Some(Seq.fill(64)(Some(
+        if (i % 5 == 0) special(rnd.nextInt(special.size)) // sparse specials
+        else rnd.nextGaussian())))
+    }
+    val fixed = Seq(
+      Some(Seq.fill(64)(Some(-0.0))),
+      Some(Seq.fill(64)(Some(1.0))), // integer sums: exact zeros on balanced planes
+      Some(Seq.tabulate(64)(j => Some(if (j == 17) Double.NaN else 1.0))),
+      Some(Seq.tabulate(64)(j => if (j == 40) None else Some(1.0))), // null element
+      Some(Seq.tabulate(70)(j => Some(j - 30.5))), // past 64: extra elements ignored
+      None) // null array
+    val rows = vectorRows(random ++ fixed)
+    val short = vectorRows(Seq(Some(Seq(Some(1.0), Some(2.0)))))
+    // the chain at 30 planes holds every narrower chain as its low bits
+    // (a sum of distinct plane bits), so one chain checks all 30 fan-outs
+    val chain = Dedup.lshBucketExpr(j => s"element_at(v, $j)", 30)
+    val cols = s"$chain AS chain" +: (1 to 30).map(p => s"lsh_bucket(v, $p) AS b$p")
+    def check(): Unit = {
+      val out = rows.selectExpr("id" +: cols: _*).collect()
+      assert(out.length == 306)
+      for (r <- out; p <- 1 to 30)
+        assert(r.getInt(p + 1) == (r.getInt(1) & ((1 << p) - 1)),
+          s"row ${r.getInt(0)}, planes $p")
+      val byId = out.map(r => r.getInt(0) -> r.getInt(30 + 1)).toMap
+      assert(byId(300) == 0 && byId(303) == 0 && byId(305) == 0,
+        "all -0.0, a null element and a null array clear every bit")
+      assert(byId(302) == (1 << 30) - 1, "a NaN sum sets every bit")
+      // and the chains the queries run, rendered at their own fan-out
+      for (p <- Seq(4, 6)) {
+        val direct = rows.selectExpr(s"${Dedup.lshBucketExpr(j => s"element_at(v, $j)", p)} AS c",
+          s"lsh_bucket(v, $p) AS b").where("c != b")
+        assert(direct.count() == 0, s"planes $p")
+      }
+      val conditions = Seq(chain, "lsh_bucket(v, 4)").map(e =>
+        lshCondition(intercept[Exception](short.selectExpr(e).collect())))
+      assert(conditions == Seq.fill(2)(Some("INVALID_ARRAY_INDEX_IN_ELEMENT_AT")))
+    }
+    check()
+    try {
+      spark.conf.set("spark.sql.codegen.wholeStage", "false")
+      spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+      check()
+    } finally {
+      spark.conf.unset("spark.sql.codegen.wholeStage")
+      spark.conf.unset("spark.sql.codegen.factoryMode")
+    }
+    // without ANSI, element_at reads past the end as NULL: every bit clear
+    try {
+      spark.conf.set("spark.sql.ansi.enabled", "false")
+      val r = short.selectExpr(s"$chain AS c", "lsh_bucket(v, 30) AS b").head()
+      assert(r.getInt(0) == 0 && r.getInt(1) == 0)
+    } finally spark.conf.unset("spark.sql.ansi.enabled")
   }
 
   test("minhash_sig equals the naive per-hash formulation") {

@@ -41,8 +41,8 @@ class LshScalingSpec extends AnyFunSuite {
     * generator pays, summed as C(n_b, 2) without materializing pairs.
     */
   private def cosineCandidateVolume(n: Int, planes: Int): Long = {
-    val bucket = Dedup.lshBucketExpr(j => s"element_at(v, $j)", planes)
-    synthEmb(n).selectExpr("label", s"$bucket AS bucket")
+    graft.functions.LshBucket.register(spark)
+    synthEmb(n).selectExpr("label", s"lsh_bucket(v, $planes) AS bucket")
       .groupBy("label", "bucket").count()
       .agg(sum(expr("count * (count - 1) DIV 2"))).head().getLong(0)
   }
@@ -89,12 +89,11 @@ class LshScalingSpec extends AnyFunSuite {
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(s16 == s64, "wider signature must extend, not reshuffle, the narrow one")
     // bucket prefix: plane b is the same hyperplane at every fan-out
+    graft.functions.LshBucket.register(spark)
     val e = synthEmb(300)
-    val b4 = e.selectExpr("vec_id",
-      s"${Dedup.lshBucketExpr(j => s"element_at(v, $j)", 4)} AS b").collect()
+    val b4 = e.selectExpr("vec_id", "lsh_bucket(v, 4) AS b").collect()
       .map(r => r.getLong(0) -> r.getInt(1)).toMap
-    val b6 = e.selectExpr("vec_id",
-      s"(${Dedup.lshBucketExpr(j => s"element_at(v, $j)", 6)}) & 15 AS b").collect()
+    val b6 = e.selectExpr("vec_id", "lsh_bucket(v, 6) & 15 AS b").collect()
       .map(r => r.getLong(0) -> r.getInt(1)).toMap
     assert(b4 == b6, "wider bucket must refine, not reshuffle, the narrow one")
   }

@@ -137,11 +137,11 @@ class PrefixFilterSpec extends AnyFunSuite {
     // label alone is a coarse cluster that grows linearly with the corpus;
     // composing it with the sign-LSH bucket must strictly shrink the
     // worst block and the total pair count
-    val bucket = Dedup.lshBucketExpr(j => s"element_at(v, $j)")
+    graft.functions.LshBucket.register(spark)
     val e = spark.read.parquet(s"$sf0001/embeddings.parquet")
       .selectExpr("vec_id", "label",
         "transform(embedding, x -> CAST(x AS DOUBLE)) AS v")
-      .selectExpr("vec_id", "label", s"$bucket AS bucket")
+      .selectExpr("vec_id", "label", "lsh_bucket(v, 4) AS bucket")
     def pairSum(df: org.apache.spark.sql.DataFrame, keys: String*) =
       df.groupBy(keys.map(col): _*).count()
         .agg(sum(expr("count * (count - 1) DIV 2"))).head().getLong(0)

@@ -371,10 +371,11 @@ class SyncSpec extends AnyFunSuite {
   }
 
   test("tracked runs execute the source once (max rides the delivery accumulator)") {
-    import spark.implicits._
     val marker = "wm_exec_marker_9174"
-    Seq((1L, 1L), (2L, 2L)).toDF("id", "ver")
-      .withColumn("mk", lit(marker)).createOrReplaceTempView("wm_once_src")
+    // The source is an inline query, not a temp view: creating a view is
+    // itself a listener event whose plan holds the marker, and the
+    // listener bus may deliver it after the listener below registers.
+    val src = s"SELECT id, ver, '$marker' AS mk FROM VALUES (1L, 1L), (2L, 2L) AS t(id, ver)"
     val counter = new java.util.concurrent.atomic.AtomicInteger
     val listener = new org.apache.spark.sql.util.QueryExecutionListener {
       override def onSuccess(funcName: String,
@@ -386,7 +387,7 @@ class SyncSpec extends AnyFunSuite {
     spark.listenerManager.register(listener)
     try {
       val store = new WatermarkStore(tmp("graft_wm_once").toString)
-      val job = SyncJob("wm_once", SyncSource.Sql("SELECT * FROM wm_once_src"),
+      val job = SyncJob("wm_once", SyncSource.Sql(src),
         idCol = "id", fields = Seq(DocField("id", "id", quoted = false)),
         shards = 1, batchSize = 10, mode = SyncMode.Incremental("ver", "0"))
       val d = SyncRunner.runTracked(spark, sf0001, job, store,
