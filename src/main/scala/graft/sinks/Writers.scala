@@ -1,7 +1,6 @@
 package graft.sinks
 
-import org.apache.spark.sql.{DataFrame, Row, SaveMode}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, SaveMode}
 import scala.util.control.NonFatal
 
 /** One document of a bulk request: an index action (`doc = Some(body)`)
@@ -129,20 +128,15 @@ case class FileBulkClient(dir: String, gen: Option[Int] = None) extends BulkClie
   *
   *  1. [[writePartitioned]] — warehouse layout: parquet partitioned by
   *     low-cardinality columns, so downstream scans partition-prune.
-  *  2. [[bulkIndex]] — ES-style bulk sink: rows routed to a shard by
-  *     hash(`_id`) (deterministic, like ES routing), ordered within the
-  *     shard, and delivered in `batchSize`-doc batches via foreachPartition
-  *     — no driver collect at any size. Deterministic routing + ordering
-  *     means batch membership is stable across replays, so an idempotent
-  *     [[BulkClient]] yields exactly-once-equivalent results after any
-  *     number of retries.
-  *  3. [[deliver]] — the retry loop every bulk call goes through:
+  *  2. [[deliver]] — the retry loop every bulk call goes through:
   *     retryable rejections resend the WHOLE batch (idempotency makes
   *     redelivery of accepted docs a no-op; see the method doc) with
   *     exponential backoff up to `maxRetries`; permanent rejections or
   *     exhausted retries throw [[BulkRejectedException]]. Because batch
   *     membership is deterministic and the client idempotent, a
   *     redelivery converges to the same store state as a clean run.
+  *     Routing, batching and the partition loop that calls it are
+  *     [[graft.sync.SyncRunner.runDocs]].
   */
 object Writers {
 
@@ -188,8 +182,9 @@ object Writers {
     * throw, quarantine or not: retryable-forever is an outage, not
     * per-doc poison. The thrown exception carries the last request-level
     * exception as its CAUSE, so an AccessDenied surfaces as itself.
-    * Runs INSIDE executor tasks (called from the delivery partition
-    * loops), so the backoff sleeps a task thread, never the driver.
+    * Runs INSIDE executor tasks (called from
+    * [[graft.sync.SyncRunner.runDocs]]'s partition loop, the one caller),
+    * so the backoff sleeps an executor task thread.
     */
   def deliver(client: BulkClient, shard: Int, batchIdx: Int, docs: Seq[BulkDoc],
       maxRetries: Int = 3, backoffMs: Long = 10,
@@ -280,25 +275,5 @@ object Writers {
       }
     }
     state.toMap
-  }
-
-  /** Bulk-index `df` through `client`. `idCol` is the document `_id`
-    * (stringified), `docCol` the serialized document body.
-    */
-  def bulkIndex(df: DataFrame, idCol: String, docCol: String,
-      shards: Int, batchSize: Int, client: BulkClient): Unit = {
-    require(shards > 0 && batchSize > 0, s"bad shards=$shards/batchSize=$batchSize")
-    df.select(col(idCol).cast("string").as("_id"), col(docCol).as("_doc"))
-      // hash routing on _id: the shard a doc lands in never depends on
-      // which task produced it, so replays re-route identically
-      .repartition(shards, col("_id"))
-      .sortWithinPartitions("_id")
-      .foreachPartition { (rows: Iterator[Row]) =>
-        val shard = org.apache.spark.TaskContext.getPartitionId()
-        rows.grouped(batchSize).zipWithIndex.foreach { case (batch, bi) =>
-          deliver(client, shard, bi,
-            batch.map(r => BulkDoc(r.getString(0), Some(r.getString(1)))))
-        }
-      }
   }
 }

@@ -233,7 +233,8 @@ object LakeBridge {
       graft.sync.SyncRunner.runOn(df, job,
         graft.sinks.FileBulkClient(indexDir, gen = Some(v)))
       Files.createDirectories(Paths.get(indexDir))
-      Files.write(ledgerPath, v.toString.getBytes("UTF-8"))
+      // atomic replace: a torn ledger would fail the next call's parse
+      graft.sinks.AliasedIndex.writeAtomically(ledgerPath, v.toString.getBytes("UTF-8"))
     }
     todo.map(_._1)
   }

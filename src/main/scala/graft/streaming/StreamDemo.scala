@@ -263,27 +263,27 @@ object StreamDemo {
     spark.table("stream_interval_join")
   }
 
-  /** Stream → bulk store: the batch bulk sink reused under
-    * foreachBatch. Exactly-once end to end from two layers:
-    * the checkpoint makes each micro-batch processed once (a recovered
-    * query re-runs at most the in-flight batch), and folding the
-    * micro-batch id into the delivery directory makes that re-run land
-    * on the same (batch, shard, file) keys — the idempotent client
-    * overwrites instead of appending. This is the streaming half of the
-    * "rows into a keyed store" contract (SURVEY.md §2.A / §7.6).
+  /** Stream → bulk store: a Full-mode sync job over the event stream,
+    * delivered by [[graft.sync.ContinuousSync.start]] — the same
+    * route → batch → idempotent-deliver engine as a scan-based sync.
+    * Exactly-once end to end from two layers: the checkpoint makes each
+    * micro-batch processed once (a recovered query re-runs at most the
+    * in-flight batch), and the micro-batch id is the delivery generation
+    * (`gen=NNNN` under `outDir`), so that re-run lands on the same
+    * (generation, shard, batch) files — the idempotent client overwrites
+    * instead of appending. This is the streaming half of the "rows into
+    * a keyed store" contract (SURVEY.md §2.A / §7.6).
     */
   def bulkSink(spark: SparkSession, workDir: String, outDir: String): Unit = {
-    val q = source(spark, workDir)
-      .select(col("event_id"),
-        to_json(struct(col("user_id"), col("event_type"), col("value"))).as("doc"))
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.sinks.Writers.bulkIndex(batch, "event_id", "doc",
-          shards = 4, batchSize = 500,
-          graft.sinks.FileBulkClient(s"$outDir/mb=$batchId"))
-      }
-      .option("checkpointLocation", s"$outDir/_chk")
-      .start()
+    import graft.sync.{ContinuousSync, DocField, SyncJob, SyncSource, WatermarkStore}
+    val job = SyncJob("stream_events", SyncSource.Table("events"), idCol = "event_id",
+      fields = Seq(DocField("user_id", "user_id", quoted = false),
+        DocField("event_type", "event_type", quoted = true),
+        DocField("value", "value", quoted = false)),
+      shards = 4, batchSize = 500)
+    // a Full-mode job tracks no watermark: the store stays empty
+    val q = ContinuousSync.start(source(spark, workDir), job, outDir,
+      new WatermarkStore(s"$outDir/_wm"), s"$outDir/_chk")
     q.processAllAvailable(); q.stop()
   }
 }

@@ -41,11 +41,9 @@ object ContinuousSync {
     * the running query; stop it with `.stop()`, resume it by calling
     * `start` again with the same `checkpointDir`.
     *
-    * `clientFor` builds the per-batch delivery client (default: a
-    * [[FileBulkClient]] generation per batchId). Override it to wrap
-    * the client — credentials, failure injection, a different store —
-    * while keeping the batchId-keyed idempotency contract: the client
-    * for batch N must overwrite, not append, on replay.
+    * Each micro-batch delivers into a [[FileBulkClient]] generation keyed
+    * by its batchId; `wrap` customises that client (credentials, failure
+    * injection) while keeping the batchId-keyed idempotency contract.
     *
     * `gate` optionally filters each micro-batch before it enters the
     * delivery engine (e.g. [[DedupGate.filterBatch]] shedding near-dups
@@ -56,52 +54,46 @@ object ContinuousSync {
     */
   def start(stream: DataFrame, job: SyncJob, indexRoot: String,
       store: WatermarkStore, checkpointDir: String,
-      clientFor: Option[Long => graft.sinks.BulkClient] = None,
-      gate: Option[(DataFrame, Long) => DataFrame] = None): StreamingQuery = {
-    require(stream.isStreaming, s"job '${job.name}': ContinuousSync needs a streaming DataFrame")
-    val clients: Long => graft.sinks.BulkClient = clientFor.getOrElse(
-      batchId => FileBulkClient(indexRoot, gen = Some(batchId.toInt)))
-    val wmCol = job.mode match {
-      case SyncMode.Incremental(c, _) => Some(c)
-      case SyncMode.Upsert(c, _, _)   => Some(c)
-      case SyncMode.Full              => None
+      wrap: graft.sinks.BulkClient => graft.sinks.BulkClient = identity,
+      gate: Option[(DataFrame, Long) => DataFrame] = None): StreamingQuery =
+    deliverStream(stream, job, "sync", store, checkpointDir, gate) {
+      (batch, batchJob, batchId, track) =>
+        require(batchId <= Int.MaxValue, s"batchId $batchId overflows the generation key")
+        SyncRunner.runOn(batch, batchJob,
+          wrap(FileBulkClient(indexRoot, gen = Some(batchId.toInt))), track)
     }
+
+  /** The one `foreachBatch` loop behind every sync stream (this object's
+    * [[start]] and [[Rollover.startContinuous]]). Per micro-batch it
+    * applies the gate, scopes the job's dead-letter dir to the batch
+    * (each delivery overwrites its quarantine dir, so batch N must not
+    * clobber batch N-1's), tracks the watermark column's max in an
+    * accumulator riding the delivery pass, calls `deliver`, and — only
+    * after the whole batch delivered — advances `store` monotonically. A
+    * failed batch leaves the watermark put, exactly like a failed tracked
+    * run (the replay converges idempotently).
+    */
+  private[sync] def deliverStream(stream: DataFrame, job: SyncJob, kind: String,
+      store: WatermarkStore, checkpointDir: String,
+      gate: Option[(DataFrame, Long) => DataFrame])(
+      deliver: (DataFrame, SyncJob, Long, Option[(String, MaxWatermarkAccumulator)]) => Unit):
+      StreamingQuery = {
+    require(stream.isStreaming, s"job '${job.name}': a $kind stream needs a streaming DataFrame")
+    val wmCol = job.mode.watermark.map(_._1)
     stream.writeStream
-      .queryName(s"graft-sync-${job.name}")
+      .queryName(s"graft-$kind-${job.name}")
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch0: DataFrame, batchId: Long) =>
-        require(batchId <= Int.MaxValue, s"batchId $batchId overflows the generation key")
         val batch = gate.fold(batch0)(g => g(batch0, batchId))
-        val client = clients(batchId)
-        // the dead-letter quarantine is batch-scoped like the delivery
-        // generation: run() overwrites its DLQ dir (idempotent replay),
-        // so an unscoped dir would let batch N clobber batch N-1's
-        // quarantine; a replayed batch still overwrites only ITS dir
-        val job0 = job.copy(deadLetter = job.deadLetter.map(p =>
-          p.copy(dir = s"${p.dir}/batch=$batchId")))
-        wmCol match {
-          case Some(c) =>
-            val spark = batch.sparkSession
-            val acc = new MaxWatermarkAccumulator
-            spark.sparkContext.register(acc,
-              s"graft.sync.${job.name}.stream.wmMax.b$batchId")
-            if (gate.isDefined) preGateMax(batch0, c, acc)
-            SyncRunner.runOn(batch, job0, client, wmTrack = Some((c, acc)))
-            // advance only after the whole batch delivered — a failed
-            // batch leaves the watermark put, exactly like a failed
-            // tracked run (the replay converges idempotently) — and only
-            // MONOTONICALLY: a micro-batch of late rows has a max below
-            // the stored mark (runTracked never sees this — its pushdown
-            // predicate guarantees the delta exceeds the bound), and
-            // regressing the store would make the batch-mode handoff
-            // re-ship the regressed window. The comparison evaluates
-            // both literals in Spark itself — same dialect that will
-            // re-parse them.
-            advanceMonotone(spark, store, job.name, acc)
-          case None =>
-            SyncRunner.runOn(batch, job0, client)
+        val spark = batch.sparkSession
+        val track = wmCol.map { c =>
+          val acc = new MaxWatermarkAccumulator
+          spark.sparkContext.register(acc, s"graft.$kind.${job.name}.stream.wmMax.b$batchId")
+          if (gate.isDefined) preGateMax(batch0, c, acc)
+          (c, acc)
         }
-        ()
+        deliver(batch, job.scopeDeadLetter(s"batch=$batchId"), batchId, track)
+        track.foreach { case (_, acc) => advanceMonotone(spark, store, job.name, acc) }
       }
       .start()
   }
@@ -127,11 +119,9 @@ object ContinuousSync {
     * batch — the watermark must cover shed docs too, or the documented
     * batch-mode handoff re-scans their window through the ungated path
     * and re-ships them. Max is idempotent, so riding alongside the
-    * delivery pass's per-row tracking is safe. Shared by the single-index
-    * and period-family ([[Rollover.startContinuous]]) streams so the
-    * coverage discipline can't drift between them.
+    * delivery pass's per-row tracking is safe.
     */
-  private[sync] def preGateMax(batch0: DataFrame, c: String,
+  private def preGateMax(batch0: DataFrame, c: String,
       acc: MaxWatermarkAccumulator): Unit = {
     val m = batch0.agg(max(col(c))).head().get(0)
     if (m != null) acc.add(m)
@@ -143,7 +133,7 @@ object ContinuousSync {
     * regressed window. The comparison evaluates both literals in Spark
     * itself — the same dialect that will re-parse them.
     */
-  private[sync] def advanceMonotone(spark: org.apache.spark.sql.SparkSession,
+  private def advanceMonotone(spark: org.apache.spark.sql.SparkSession,
       store: WatermarkStore, name: String, acc: MaxWatermarkAccumulator): Unit =
     acc.value.foreach { v =>
       val lit = SyncRunner.wmLiteral(v)

@@ -88,15 +88,13 @@ object Rollover {
     val mapping = EsMapping.forJob(spark, sfDir, job)
     val outcomes = periods.map { name =>
       val slice = src.where(idx === name)
-      val sliceJob = periodScoped(job, name)
+      // each period delivers on its own, so its quarantine (and budget)
+      // is per period index
+      val sliceJob = job.scopeDeadLetter(s"index=$name")
       val root = s"$familyRoot/$name"
       AliasedIndex.resolve(root) match {
         case None =>
-          var counts = DeliveryCounts(0, 0)
-          AliasedIndex.publish(root) { dir =>
-            EsMapping.write(dir, mapping)
-            counts = SyncRunner.runOn(slice, sliceJob, wrap(FileBulkClient(dir)))
-          }
+          val (_, counts) = SyncRunner.publishRun(root, mapping, slice, sliceJob, wrap = wrap)
           PeriodOutcome(name, created = true, gen = None, counts)
         case Some(cur) =>
           requireMappingUnchanged(cur, mapping, job, name)
@@ -124,16 +122,6 @@ object Rollover {
         "some rows — a null period routes nowhere; filter or default it upstream")
     names
   }
-
-  /** Scope the job's dead-letter dir per period index: each period's
-    * delivery is its own `runOn` whose quarantine write OVERWRITES its
-    * dir — unscoped, the last period's (possibly empty) quarantine would
-    * destroy every earlier period's shed docs, whose only record is that
-    * parquet. The budget stays per delivery (period), the finer scope.
-    */
-  private def periodScoped(job: SyncJob, index: String): SyncJob =
-    job.copy(deadLetter = job.deadLetter.map(p =>
-      p.copy(dir = s"${p.dir}/index=$index")))
 
   private def requireMappingUnchanged(cur: String, expected: String,
       job: SyncJob, name: String): Unit = {
@@ -304,11 +292,8 @@ object Rollover {
       .where(indexExpr(job) === lit(name))
     require(!slice.isEmpty, s"source has no rows for period '$period' — " +
       "refusing to publish an empty index over a live one")
-    var counts = DeliveryCounts(0, 0)
-    AliasedIndex.publish(s"$familyRoot/$name") { dir =>
-      EsMapping.write(dir, EsMapping.forJob(spark, sfDir, job))
-      counts = SyncRunner.runOn(slice, job, FileBulkClient(dir))
-    }
+    val (_, counts) = SyncRunner.publishRun(s"$familyRoot/$name",
+      EsMapping.forJob(spark, sfDir, job), slice, job)
     writeAlias(familyRoot, job.name)
     PeriodOutcome(name, created = true, gen = None, counts)
   }
@@ -320,8 +305,10 @@ object Rollover {
     * (mapping-first atomic publish, like the batch path) and delivering
     * each period slice under a LEDGER-pinned generation ([[streamGen]]),
     * so a replayed batch overwrites its own files per period even when
-    * nightly appends interleave. Watermark advance and alias refresh
-    * ride each batch exactly as in the single-index stream.
+    * nightly appends interleave. The gate, dead-letter scoping and
+    * watermark advance are the single-index stream's own
+    * ([[ContinuousSync.deliverStream]], the one sync stream loop); the
+    * alias refresh rides each batch.
     *
     * The per-batch period fan-out is a driver loop over the batch's
     * DISTINCT periods — for a time-ordered stream that is 1 (occasionally
@@ -333,23 +320,9 @@ object Rollover {
       wrap: graft.sinks.BulkClient => graft.sinks.BulkClient = identity,
       gate: Option[(DataFrame, Long) => DataFrame] = None):
       org.apache.spark.sql.streaming.StreamingQuery = {
-    require(stream.isStreaming,
-      s"job '${job.name}': startContinuous needs a streaming DataFrame")
     val idx = indexExpr(job) // also validates the job carries a period
-    val wmCol = job.mode match {
-      case SyncMode.Incremental(c, _) => Some(c)
-      case SyncMode.Upsert(c, _, _)   => Some(c)
-      case SyncMode.Full              => None
-    }
-    stream.writeStream
-      .queryName(s"graft-rollover-${job.name}")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch0: DataFrame, batchId: Long) =>
-        // same gate contract as ContinuousSync.start: deterministic per
-        // (rows, batchId), batchId-scoped state — e.g. DedupGate shedding
-        // near-dups before the period fan-out
-        val batch = gate.fold(batch0)(g => g(batch0, batchId))
-        val spark = batch.sparkSession
+    ContinuousSync.deliverStream(stream, job, "rollover", store, checkpointDir, gate) {
+      (batch, batchJob, batchId, track) =>
         // the period fan-out executes `batch` once for collectPeriods and
         // once per period slice — behind a gate, each execution would
         // re-run the gate's whole signature-store probe (and the store is
@@ -357,19 +330,6 @@ object Rollover {
         // ×(periods+1)). Pin the batch once; slices then read the cache.
         batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try {
-          val acc = wmCol.map { _ =>
-            val a = new MaxWatermarkAccumulator
-            spark.sparkContext.register(a,
-              s"graft.rollover.${job.name}.stream.wmMax.b$batchId")
-            a
-          }
-          // the watermark must cover GATE-SHED rows too (the stream
-          // consumed the whole batch) — the shared pre-gate max discipline
-          (gate, wmCol, acc) match {
-            case (Some(_), Some(c), Some(a)) =>
-              ContinuousSync.preGateMax(batch0, c, a)
-            case _ => ()
-          }
           val periods = collectPeriods(batch, idx, job)
           // period-independent: one schema analysis per batch, shared by
           // the create path and the drift check
@@ -389,24 +349,14 @@ object Rollover {
             // bulk with a mapping conflict)
             requireMappingUnchanged(cur, mapping, job, name)
             val g = streamGen(Paths.get(cur), batchId)
-            // quarantine scoped per (batch, period): each runOn overwrites
-            // its own dir on replay, and neither a later batch nor a
-            // sibling period may clobber another's unreplayed rejects
-            val sliceJob = job.copy(deadLetter = job.deadLetter.map(p =>
-              p.copy(dir = s"${p.dir}/batch=$batchId/index=$name")))
-            SyncRunner.runOn(slice, sliceJob, wrap(FileBulkClient(cur, gen = Some(g))),
-              wmTrack = wmCol.map(c => (c, acc.get)))
+            // quarantine scoped per (batch, period): neither a later batch
+            // nor a sibling period may clobber another's unreplayed rejects
+            SyncRunner.runOn(slice, batchJob.scopeDeadLetter(s"index=$name"),
+              wrap(FileBulkClient(cur, gen = Some(g))), wmTrack = track)
           }
           writeAlias(familyRoot, job.name)
-          (wmCol, acc) match {
-            case (Some(_), Some(a)) =>
-              ContinuousSync.advanceMonotone(spark, store, job.name, a)
-            case _ => ()
-          }
         } finally batch.unpersist()
-        ()
-      }
-      .start()
+    }
   }
 
   /** The manifest's member list (what a reader resolves the alias to). */

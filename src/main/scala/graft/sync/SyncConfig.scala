@@ -130,8 +130,8 @@ object SyncConfig {
     require(dupNames.isEmpty, s"duplicate job names: ${dupNames.mkString(", ")}")
     def one(job: SyncJob): JobOutcome =
       try {
-        val c = (watermarks, job.mode) match {
-          case (Some(st), _: SyncMode.Incremental | _: SyncMode.Upsert) =>
+        val c = watermarks match {
+          case Some(st) if job.mode.watermark.isDefined =>
             SyncRunner.runTracked(spark, sfDir, job, st, clientFor(job))
           case _ => SyncRunner.run(spark, sfDir, job, clientFor(job))
         }

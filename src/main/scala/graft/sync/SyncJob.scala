@@ -31,7 +31,14 @@ object SyncSource {
   final case class Sql(query: String) extends SyncSource
 }
 
-sealed trait SyncMode
+sealed trait SyncMode {
+  /** The watermark column and FROM literal of a watermarked mode; None
+    * for [[SyncMode.Full]]. */
+  def watermark: Option[(String, String)] = None
+  /** The same mode with its FROM literal rebound (a tracked run's stored
+    * watermark); [[SyncMode.Full]] has none to rebind. */
+  def withFrom(from: String): SyncMode = this
+}
 object SyncMode {
   /** Re-sync the whole source. */
   case object Full extends SyncMode
@@ -42,7 +49,10 @@ object SyncMode {
     * so updates already converge), but an upstream DELETE never reaches
     * the index — that is [[Upsert]]'s job.
     */
-  final case class Incremental(watermarkCol: String, fromLit: String) extends SyncMode
+  final case class Incremental(watermarkCol: String, fromLit: String) extends SyncMode {
+    override def watermark: Option[(String, String)] = Some((watermarkCol, fromLit))
+    override def withFrom(from: String): SyncMode = copy(fromLit = from)
+  }
   /** Incremental with delete propagation: rows past the watermark whose
     * `deleteWhere` predicate holds become DELETE actions (tombstones) for
     * their `_id`; the rest are index actions, exactly like
@@ -56,7 +66,10 @@ object SyncMode {
     * columns in the first place.
     */
   final case class Upsert(watermarkCol: String, fromLit: String,
-      deleteWhere: String) extends SyncMode
+      deleteWhere: String) extends SyncMode {
+    override def watermark: Option[(String, String)] = Some((watermarkCol, fromLit))
+    override def withFrom(from: String): SyncMode = copy(fromLit = from)
+  }
 }
 
 /** Time-partitioned index assignment ("index-per-period"): docs route to
@@ -97,6 +110,18 @@ final case class SyncJob(
   require(name.nonEmpty, "sync job needs a name")
   require(shards > 0 && batchSize > 0, s"bad shards=$shards/batchSize=$batchSize")
   require(fields.nonEmpty, "sync job needs at least one document field")
+
+  /** This job with its dead-letter dir narrowed to `scope` (a `key=value`
+    * path segment). Every delivery OVERWRITES its quarantine dir (an
+    * idempotent replay of the same slice), so each unit that delivers on
+    * its own — a watermark slice, a stream batch, a period index — needs
+    * its own dir, or a later unit's (possibly empty) quarantine destroys
+    * an earlier one's unreplayed rejects, whose only record is that
+    * parquet. The key=value form keeps the whole quarantine readable as
+    * ONE partitioned dataset with provenance.
+    */
+  def scopeDeadLetter(scope: String): SyncJob =
+    copy(deadLetter = deadLetter.map(p => p.copy(dir = s"${p.dir}/$scope")))
 }
 
 /** What a delivery run reports about itself, counted by accumulators
@@ -131,11 +156,7 @@ object SyncRunner {
       case SyncSource.Table(n) => Tables(spark, sfDir, n)
       case SyncSource.Sql(q)   => Tables.registerAll(spark, sfDir); spark.sql(q)
     }
-    job.mode match {
-      case SyncMode.Full                     => src
-      case SyncMode.Incremental(wm, fromLit) => src.where(expr(s"$wm > $fromLit"))
-      case SyncMode.Upsert(wm, fromLit, _)   => src.where(expr(s"$wm > $fromLit"))
-    }
+    job.mode.watermark.fold(src) { case (wm, fromLit) => src.where(expr(s"$wm > $fromLit")) }
   }
 
   /** Column names the planner owns; a passthrough column may not shadow
@@ -181,15 +202,19 @@ object SyncRunner {
     // of an ES _bulk request); single-index jobs are unchanged
     val idxCol = job.period.map(p =>
       concat(lit(job.name + "-"), date_format(col(p.col), p.format)).as("_index"))
-    src
-      .select(Seq(col(job.idCol).cast("string").as("_id"), docCol.as("doc"),
-        action.as("action")) ++ idxCol.toSeq ++ keep.map(col): _*)
-      // 60-bit md5 prefix: content-deterministic routing, identical in
-      // DuckDB (`CAST('0x'||substr(md5(..),1,15) AS BIGINT)`), never the
-      // engine-private hash()
-      .withColumn("h", expr("CAST(conv(substr(md5(_id), 1, 15), 16, 10) AS BIGINT)"))
-      .withColumn("routing", pmod(col("h"), lit(job.shards.toLong)).cast("int"))
+    routed(src.select(Seq(col(job.idCol).cast("string").as("_id"), docCol.as("doc"),
+      action.as("action")) ++ idxCol.toSeq ++ keep.map(col): _*), job.shards)
   }
+
+  /** Add the content hash `h` and the `routing` shard, both from `_id`:
+    * a 60-bit md5 prefix, identical in DuckDB
+    * (`CAST('0x'||substr(md5(..),1,15) AS BIGINT)`), never the
+    * engine-private hash() — a doc routes to the same shard whichever
+    * engine, cluster size or run computes it.
+    */
+  def routed(docs: DataFrame, shards: Int): DataFrame =
+    docs.withColumn("h", expr("CAST(conv(substr(md5(_id), 1, 15), 16, 10) AS BIGINT)"))
+      .withColumn("routing", pmod(col("h"), lit(shards.toLong)).cast("int"))
 
   /** The planned sync: one row per document with its complete delivery
     * coordinates — `_id`, `routing` shard, `batch_id`, serialized `doc`,
@@ -294,16 +319,13 @@ object SyncRunner {
     val prev = previous.select(col("_id"), md5(col("doc")).as("old_fp"))
     val cur = current.select(col("_id"), col("doc"),
       md5(col("doc")).as("new_fp"))
-    cur.join(prev, Seq("_id"), "full_outer")
+    routed(cur.join(prev, Seq("_id"), "full_outer")
       .withColumn("action",
         when(col("old_fp").isNull, lit("insert"))
           .when(col("new_fp").isNull, lit("delete"))
           .when(col("old_fp") =!= col("new_fp"), lit("update"))
           .otherwise(lit("noop")))
-      .where(col("action") =!= "noop")
-      .withColumn("h",
-        expr("CAST(conv(substr(md5(_id), 1, 15), 16, 10) AS BIGINT)"))
-      .withColumn("routing", pmod(col("h"), lit(shards.toLong)).cast("int"))
+      .where(col("action") =!= "noop"), shards)
       .select("_id", "h", "routing", "action", "doc")
   }
 
@@ -360,18 +382,9 @@ object SyncRunner {
     */
   def runTracked(spark: SparkSession, sfDir: String, job: SyncJob,
       store: WatermarkStore, client: BulkClient): DeliveryCounts = {
-    val (wmCol, seed) = job.mode match {
-      case SyncMode.Incremental(c, f) => (c, f)
-      case SyncMode.Upsert(c, f, _)   => (c, f)
-      case SyncMode.Full => throw new IllegalArgumentException(
-        s"job '${job.name}': tracked runs need a watermarked mode")
-    }
-    val from = store.get(job.name).getOrElse(seed)
-    val resolved = job.mode match {
-      case m: SyncMode.Incremental => job.copy(mode = m.copy(fromLit = from))
-      case m: SyncMode.Upsert      => job.copy(mode = m.copy(fromLit = from))
-      case SyncMode.Full           => job // unreachable
-    }
+    val (wmCol, seed) = job.mode.watermark.getOrElse(throw new IllegalArgumentException(
+      s"job '${job.name}': tracked runs need a watermarked mode"))
+    val resolved = job.copy(mode = job.mode.withFrom(store.get(job.name).getOrElse(seed)))
     val acc = new MaxWatermarkAccumulator
     spark.sparkContext.register(acc, s"graft.sync.${job.name}.wmMax")
     val counts = run(spark, sfDir, resolved, client, wmTrack = Some((wmCol, acc)))
@@ -393,10 +406,25 @@ object SyncRunner {
     */
   def fullSync(spark: SparkSession, sfDir: String, job: SyncJob,
       indexRoot: String, keep: Int = 2): String =
-    graft.sinks.AliasedIndex.publish(indexRoot, keep) { dir =>
-      EsMapping.write(dir, EsMapping.forJob(spark, sfDir, job))
-      run(spark, sfDir, job, graft.sinks.FileBulkClient(dir))
+    publishRun(indexRoot, EsMapping.forJob(spark, sfDir, job),
+      source(spark, sfDir, job), job, keep)._1
+
+  /** Publish a new version under `root`: write `mapping` first, then
+    * deliver `src` into the version through `wrap(FileBulkClient)`, then
+    * flip the alias ([[graft.sinks.AliasedIndex.publish]]). Returns the
+    * version dir and the delivery counts. The shared create path of
+    * [[fullSync]] and of [[Rollover]]'s period indices.
+    */
+  private[sync] def publishRun(root: String, mapping: String, src: DataFrame,
+      job: SyncJob, keep: Int = 2,
+      wrap: BulkClient => BulkClient = identity): (String, DeliveryCounts) = {
+    var counts = DeliveryCounts(0, 0)
+    val dir = graft.sinks.AliasedIndex.publish(root, keep) { dir =>
+      EsMapping.write(dir, mapping)
+      counts = runOn(src, job, wrap(graft.sinks.FileBulkClient(dir)))
     }
+    (dir, counts)
+  }
 
   /** Execute the job: deliver every planned batch through `client` (via
     * [[graft.sinks.Writers.deliver]] — bounded retry on retryable
@@ -442,28 +470,21 @@ object SyncRunner {
       client: BulkClient): DeliveryCounts =
     runDocs(cdcActions(previous, current, job.shards), job, client, None)
 
-  /** The delivery engine over an already-built docs stream (the shared
-    * tail of [[runOn]] and [[runCdc]]).
+  /** The delivery engine over an already-built docs stream (`_id`, `doc`,
+    * `action`, `h`, `routing`, + any tracked watermark column): the ONE
+    * place planned docs become [[Writers.deliver]] calls. [[runOn]],
+    * [[runCdc]], [[replayQuarantine]] and every stream delivery end here;
+    * a new delivery path builds a docs frame and calls this, never a
+    * partition loop of its own (DeliveryGuardSpec).
     */
   def runDocs(docsDf: DataFrame, job: SyncJob, client: BulkClient,
       wmTrack: Option[(String, MaxWatermarkAccumulator)]): DeliveryCounts = {
     val spark = docsDf.sparkSession
     val batchSize = job.batchSize // avoid serializing the runner object
     // the quarantine is SLICE-scoped: successive runs of a watermarked
-    // job cover different deltas, and each run's parquet write overwrites
-    // its own dir (idempotent replay of the same slice) — an unscoped dir
-    // would let tonight's (possibly empty) quarantine destroy last
-    // night's unreplayed rejects, whose only record is that parquet. The
-    // key=value dir form keeps the whole quarantine readable as ONE
-    // partitioned dataset with slice provenance.
-    val deadLetter = job.deadLetter.map { pol =>
-      val slice = job.mode match {
-        case SyncMode.Full => "full"
-        case SyncMode.Incremental(_, f) => sliceKey(f)
-        case SyncMode.Upsert(_, f, _)   => sliceKey(f)
-      }
-      pol.copy(dir = s"${pol.dir}/slice=$slice")
-    }
+    // job cover different deltas (see SyncJob.scopeDeadLetter)
+    val deadLetter = job.scopeDeadLetter(
+      "slice=" + job.mode.watermark.fold("full")(w => sliceKey(w._2))).deadLetter
     val quarantine = deadLetter.isDefined
     val budget = deadLetter.fold(Long.MaxValue)(_.budget)
     val docsAcc = spark.sparkContext.longAccumulator(s"graft.sync.${job.name}.docs")
@@ -583,12 +604,12 @@ object SyncRunner {
   /** Re-deliver a dead-letter quarantine once the rejection cause is
     * fixed (mapping updated, doc bug patched) — the replay half of the
     * quarantine contract: nothing a sync sheds is ever lost, it waits
-    * under `dlqRoot` until this ships it. Same deterministic md5
-    * routing as [[docs]]; the per-shard rank is a PLAIN window here —
-    * justified because a quarantine is budget-bounded (hundreds, not a
-    * corpus), so the bucket-offset decomposition run() needs would be
-    * dead weight. Rejections during a replay fail LOUDLY (no
-    * re-quarantine — if the fix didn't take, the operator must know).
+    * under `dlqRoot` until this ships it. The quarantined rows become a
+    * docs frame (a null body is a delete action) and deliver through
+    * [[runDocs]], so routing, batch membership and in-batch order are the
+    * planner's. Rejections during a replay fail LOUDLY: the job runs with
+    * no dead-letter policy (no re-quarantine — if the fix didn't take,
+    * the operator must know).
     *
     * The same `_id` can sit in several slices with DIFFERENT bodies
     * (the doc changed between the runs that shed it); picking a winner
@@ -608,38 +629,9 @@ object SyncRunner {
     val bad = conflicts.take(5).map(_.getString(0))
     require(bad.isEmpty, s"quarantine holds conflicting bodies for _ids " +
       s"${bad.mkString(", ")} — filter to one slice (the `where` parameter)")
-    val batchSize = job.batchSize
-    val docsAcc = spark.sparkContext.longAccumulator(s"graft.sync.${job.name}.replay.docs")
-    val batchesAcc = spark.sparkContext.longAccumulator(s"graft.sync.${job.name}.replay.batches")
-    val resendsAcc = spark.sparkContext.longAccumulator(s"graft.sync.${job.name}.replay.resends")
-    q.select("_id", "doc").distinct()
-      .withColumn("h", expr("CAST(conv(substr(md5(_id), 1, 15), 16, 10) AS BIGINT)"))
-      .withColumn("routing", pmod(col("h"), lit(job.shards.toLong)).cast("int"))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("routing").orderBy("h", "_id")))
-      .withColumn("batch_id", expr(s"CAST((rn - 1) DIV $batchSize AS BIGINT)"))
-      .repartition(job.shards, col("routing"))
-      .sortWithinPartitions("routing", "batch_id", "h", "_id")
-      .select("routing", "batch_id", "_id", "doc")
-      .foreachPartition { (rows: Iterator[Row]) =>
-        var curShard = -1
-        var curBatch = -1L
-        val buf = scala.collection.mutable.ArrayBuffer.empty[BulkDoc]
-        def flush(): Unit = if (buf.nonEmpty) {
-          val report = Writers.deliver(client, curShard, curBatch.toInt, buf.toSeq)
-          docsAcc.add(buf.size.toLong)
-          batchesAcc.add(1L)
-          resendsAcc.add(report.resends.toLong)
-          buf.clear()
-        }
-        rows.foreach { r =>
-          val sh = r.getInt(0); val b = r.getLong(1)
-          if (sh != curShard || b != curBatch) { flush(); curShard = sh; curBatch = b }
-          buf += BulkDoc(r.getString(2), Option(r.getString(3)))
-        }
-        flush()
-      }
-    DeliveryCounts(docsAcc.value, batchesAcc.value, resendsAcc.value, 0L, 0L)
+    val docsDf = q.select("_id", "doc").distinct()
+      .withColumn("action", when(col("doc").isNull, lit("delete")).otherwise(lit("index")))
+    runDocs(routed(docsDf, job.shards), job.copy(deadLetter = None), client, None)
   }
 }
 

@@ -85,8 +85,7 @@ class ContinuousSyncSpec extends AnyFunSuite {
     // the store permanently rejects id 2, whichever batch carries it
     val q = ContinuousSync.start(df, job,
       idx, new WatermarkStore(tmp("graft_cs_dlq_wm")), tmp("graft_cs_dlq_ckpt"),
-      clientFor = Some(b =>
-        PoisonClient(graft.sinks.FileBulkClient(idx, gen = Some(b.toInt)), Set("2"))))
+      wrap = c => PoisonClient(c, Set("2")))
     try {
       input.addData((1L, "a", 1L, false), (2L, "b", 1L, false))
       q.processAllAvailable()

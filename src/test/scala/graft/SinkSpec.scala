@@ -131,12 +131,16 @@ class SinkSpec extends AnyFunSuite {
     }
   }
 
-  test("bulkIndex batches in _id order per shard and replay is duplicate-free") {
+  test("bulk delivery batches in (h, _id) order per shard; replay is duplicate-free") {
+    import graft.sync.{DocField, SyncJob, SyncRunner, SyncSource}
     val dir = tmp("graft_bulk").toString
     val in = docs.select(col("doc_id"), to_json(struct(col("lang"), col("n_chars"))).as("doc"))
+    val job = SyncJob("bulk", SyncSource.Table("documents"), idCol = "doc_id",
+      fields = Seq(DocField("unused", "1", quoted = false)), shards = 4, batchSize = 50)
+    // the prebuilt JSON bodies go straight in as a docs frame
     def runOnce(): Unit =
-      Writers.bulkIndex(in, "doc_id", "doc", shards = 4, batchSize = 50,
-        FileBulkClient(dir))
+      SyncRunner.runDocs(SyncRunner.routed(in.select(col("doc_id").cast("string").as("_id"),
+        col("doc"), lit("index").as("action")), job.shards), job, FileBulkClient(dir), None)
 
     def snapshot(): Map[String, String] =
       Files.walk(java.nio.file.Paths.get(dir)).iterator().asScala
@@ -146,9 +150,10 @@ class SinkSpec extends AnyFunSuite {
 
     runOnce()
     val first = snapshot()
+    def idsOf(body: String): Seq[String] = body.split("\n").toSeq.filter(_.nonEmpty)
+      .map(l => l.split("\"_id\":\"")(1).takeWhile(_ != '"'))
     // every input row landed exactly once, across 4 shards
-    val ids = first.values.flatMap(_.split("\n")).filter(_.nonEmpty)
-      .map(l => l.split("\"_id\":\"")(1).takeWhile(_ != '"')).toSeq
+    val ids = first.values.toSeq.flatMap(idsOf)
     assert(ids.size == in.count())
     assert(ids.distinct.size == ids.size, "duplicate _id in bulk output")
     assert(first.keys.map(_.split("/")(1)).toSet.size == 4)
@@ -156,6 +161,14 @@ class SinkSpec extends AnyFunSuite {
     first.foreach { case (name, body) =>
       val n = body.split("\n").count(_.nonEmpty)
       assert(n <= 50, s"$name has $n docs > batchSize")
+    }
+    // a shard's batches, read in batch order, follow the 60-bit md5 prefix
+    // h, ties broken by _id
+    def h(id: String): BigInt = BigInt(java.security.MessageDigest.getInstance("MD5")
+      .digest(id.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(15), 16)
+    first.toSeq.groupBy(_._1.split("/")(1)).foreach { case (shard, files) =>
+      val order = files.sortBy(_._1).flatMap(f => idsOf(f._2))
+      assert(order == order.sortBy(i => (h(i), i)), s"$shard is not in (h, _id) order")
     }
     // the exactly-once story: full replay (task-retry analog) changes nothing
     runOnce()
@@ -349,7 +362,10 @@ class SinkSpec extends AnyFunSuite {
     // into the NEXT delivery generation — nothing the sync shed is lost
     val counts = SyncRunner.replayQuarantine(spark, dlqDir, job,
       FileBulkClient(outDir, gen = Some(1)))
-    assert(counts.docs == 3 && counts.batches > 0)
+    assert(counts.docs == 3 && counts.batches > 0 && counts.exact, counts.toString)
+    val replayFiles = dirSnapshot(outDir).keys.count(_.startsWith("/gen=0001/"))
+    assert(counts.batches == replayFiles,
+      s"${counts.batches} batches counted, $replayFiles batch files written")
     assert(Writers.foldState(outDir) == all,
       "replayed quarantine must converge the served state to the clean run")
     // a replay that STILL rejects fails loudly — no silent re-quarantine

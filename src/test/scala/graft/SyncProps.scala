@@ -15,7 +15,9 @@ import graft.sinks._
   *  - [[graft.sync.MaxWatermarkAccumulator]] equals `max` under any
   *    partitioning and merge order (what task scheduling permutes);
   *  - the integer ceil used for Jaccard prefixes equals exact rational
-  *    arithmetic everywhere (the float-ceil trap, pinned as a law).
+  *    arithmetic everywhere (the float-ceil trap, pinned as a law);
+  *  - [[graft.sync.SyncRunner.planDocs]]' bucket-offset rank assigns the
+  *    same batches as the plain per-shard `row_number` window.
   */
 object SyncProps extends Properties("graft.sync") {
 
@@ -221,6 +223,36 @@ object SyncProps extends Properties("graft.sync") {
       scala.util.Random.shuffle(accs).foreach(merged.merge(_))
       val expected = if (xs.isEmpty) None else Some(java.lang.Long.valueOf(xs.max))
       Prop(merged.value == expected) :| s"got=${merged.value} want=$expected"
+    }
+
+  // ---- planDocs' bucket-offset rank == the plain per-shard window ------
+
+  private val genRankCase: Gen[(Seq[String], Int, Int)] = for {
+    n <- Gen.choose(0, 300)
+    ids <- Gen.listOfN(n, Gen.choose(0L, Long.MaxValue).map(_.toString))
+    shards <- Gen.choose(1, 16)
+    batchSize <- Gen.choose(1, 50)
+  } yield (ids.distinct, shards, batchSize)
+
+  property("planDocs batch_id equals (row_number() OVER (PARTITION BY routing ORDER BY h, _id) - 1) DIV batchSize") =
+    // no shrinking: each step is a Spark job, and the label names the diff
+    Prop.forAllNoShrink(genRankCase) { case (ids, shards, batchSize) =>
+      import org.apache.spark.sql.functions.{expr, lit}
+      import graft.sync.{DocField, SyncJob, SyncRunner, SyncSource}
+      val spark = TestSpark.spark
+      import spark.implicits._
+      val job = SyncJob("rank_prop", SyncSource.Table("unused"), idCol = "_id",
+        fields = Seq(DocField("v", "1", quoted = false)), shards = shards, batchSize = batchSize)
+      val docs = SyncRunner.routed(ids.toDF("_id")
+        .withColumn("doc", lit("{}")).withColumn("action", lit("index")), shards)
+      def batches(df: org.apache.spark.sql.DataFrame, c: String): Map[String, Long] =
+        df.select("_id", c).collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      val planned = batches(SyncRunner.planDocs(docs, job), "batch_id")
+      val window = batches(docs.withColumn("ref", expr("CAST((row_number() OVER " +
+        s"(PARTITION BY routing ORDER BY h, _id) - 1) DIV $batchSize AS BIGINT)")), "ref")
+      Prop(planned.size == ids.size && planned == window) :|
+        s"shards=$shards batchSize=$batchSize ids=${ids.size} " +
+          s"diff=${planned.toSet.diff(window.toSet).take(5)}"
     }
 
   // ---- integer prefix ceil == exact rational ceil ---------------------
