@@ -24,6 +24,23 @@ object GraftSession {
     */
   val CodegenCacheEntries = 500
 
+  /** Runs `body` with each of `confs` set on `s`, then restores each one
+    * to its earlier value, or unsets it. Only what runs inside `body`
+    * sees the confs: a DataFrame returned from it is optimized and
+    * planned again, under the restored confs, by every later action. A
+    * key whose plan needs the confs returns
+    * `Bridge.ofRows(s, df.queryExecution.optimizedPlan)` built inside the
+    * block, which fixes the optimized plan made under them.
+    */
+  def withConfs[T](s: SparkSession, confs: (String, String)*)(body: => T): T = {
+    val prev = confs.map { case (k, _) => k -> s.conf.getOption(k) }
+    confs.foreach { case (k, v) => s.conf.set(k, v) }
+    try body finally prev.foreach {
+      case (k, Some(v)) => s.conf.set(k, v)
+      case (k, None)    => s.conf.unset(k)
+    }
+  }
+
   def builder(cpus: String): SparkSession.Builder = {
     val scratch = java.nio.file.Files.createTempDirectory("graft_cat")
     // derby.log goes to derby.system.home (defaults to cwd = the repo)

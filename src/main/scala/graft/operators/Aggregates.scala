@@ -1,7 +1,8 @@
 package graft.operators
 
-import graft.{Dets, QueryFamily, Tables}
+import graft.{Dets, GraftSession, QueryFamily, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import Dets._
@@ -65,8 +66,45 @@ object Aggregates extends QueryFamily {
     }
   }
 
-  /** Shared ROLLUP/CUBE body — identical text runs in Spark SQL and (with
-    * the grouping-set clause swapped in) in the DuckDB oracle.
+  /** The two-sample grid of q_agg_ks and q_agg_mannwhitney: per
+    * comparison type `vs` (purchase, signup, view) and distinct value `v`
+    * (micro-units), the click count `c1` and the `vs` count `c2`, 0 where
+    * absent. ONE events pass for ALL pairs: the click grid fans out under
+    * a 3-row broadcast vs-tag and full-joins each comparison type's grid;
+    * the prefix windows then partition by (vs, bkt) — same statistic, a
+    * third of the jobs (the per-pair form re-scanned events six times and
+    * was measured 2.6× slower at sf0.1).
+    */
+  private def clickVsGrid(s: SparkSession, dir: String): DataFrame = {
+    import s.implicits._
+    val ev = Tables(s, dir, "events")
+      .selectExpr("event_type",
+        "CAST(CAST(value AS DECIMAL(18,6)) * 1000000 AS BIGINT) AS v")
+    val others = Seq("purchase", "signup", "view")
+    val c1 = ev.where(col("event_type") === "click")
+      .groupBy("v").agg(count(lit(1)).as("c1"))
+    val c2 = ev.where(col("event_type").isin(others: _*))
+      .groupBy(col("event_type").as("vs"), col("v"))
+      .agg(count(lit(1)).as("c2"))
+    broadcast(others.toDF("vs")).crossJoin(c1)
+      .select(col("vs"), col("v"), col("c1"))
+      .join(c2, Seq("vs", "v"), "full")
+      .na.fill(0L, Seq("c1", "c2"))
+  }
+
+  /** The fixture languages, one pivot column each. */
+  private val pivotLangs = Seq("de", "en", "es", "fr", "zh")
+
+  /** Doc counts per source with one column per language, 0 where none. */
+  private def langPivot(s: SparkSession, dir: String): DataFrame =
+    Tables(s, dir, "documents")
+      .groupBy("source")
+      .pivot("lang", pivotLangs)
+      .count()
+      .na.fill(0)
+
+  /** Spark SQL body of q_agg_rollup and q_agg_cube; `groupClause` is the
+    * grouping sets. The oracle states the same text apart (rollupOracle).
     */
   private def rollupSql(groupClause: String): String =
     "SELECT n_name, o_orderpriority, count(*) AS n, " +
@@ -426,33 +464,27 @@ object Aggregates extends QueryFamily {
     // this is the difference between "count the lake" as a metadata
     // listing and as a full scan. Works only for whole-file aggregates
     // (no filters, no grouping by data columns) — exactly the "how many
-    // rows / what's the key range" operational query. The conf is
-    // restored after; flipping it mid-flight only ever changes OTHER
+    // rows / what's the key range" operational query. Aggregate
+    // pushdown is a DataSource V2 feature: THIS scan is routed through
+    // the V2 parquet source (useV1SourceList) with pushdown on, and the
+    // frame is rebuilt from the optimized plan made under those confs,
+    // so every later action runs the pushed aggregate. The confs are
+    // restored after; flipping them mid-flight only ever changes OTHER
     // queries' plans to equally-correct ones.
-    "q_agg_footerstats" -> ((s, dir) => {
-      // aggregate pushdown is a DataSource V2 feature: route THIS scan
-      // through the V2 parquet source (useV1SourceList) with pushdown on
-      val confs = Seq(
+    "q_agg_footerstats" -> ((s, dir) => GraftSession.withConfs(s,
         "spark.sql.parquet.aggregatePushdown" -> "true",
-        "spark.sql.sources.useV1SourceList" -> "")
-      val prev = confs.map { case (k, _) => k -> s.conf.getOption(k) }
-      confs.foreach { case (k, v) => s.conf.set(k, v) }
-      try {
-        // key/count only: parquet footer stats push for integral types;
-        // timestamp min/max stays un-pushable (logical-type caveats), so
-        // including one would silently fall back to a full scan
-        val df = Tables(s, dir, "orders")
-          .agg(count(lit(1)).as("n_rows"),
-            min("o_orderkey").as("min_key"), max("o_orderkey").as("max_key"),
-            min("o_custkey").as("min_cust"), max("o_custkey").as("max_cust"))
-        val plan = df.queryExecution.executedPlan.toString
-        require(plan.contains("PushedAggregation: [COUNT(*)"),
-          s"aggregate did not push into the parquet footer:\n${plan.take(3000)}")
-        df
-      } finally prev.foreach {
-        case (k, Some(v)) => s.conf.set(k, v)
-        case (k, None)    => s.conf.unset(k)
-      }
+        "spark.sql.sources.useV1SourceList" -> "") {
+      // key/count only: parquet footer stats push for integral types;
+      // timestamp min/max stays un-pushable (logical-type caveats), so
+      // including one would silently fall back to a full scan
+      val df = Tables(s, dir, "orders")
+        .agg(count(lit(1)).as("n_rows"),
+          min("o_orderkey").as("min_key"), max("o_orderkey").as("max_key"),
+          min("o_custkey").as("min_cust"), max("o_custkey").as("max_cust"))
+      val plan = df.queryExecution.executedPlan.toString
+      require(plan.contains("PushedAggregation: [COUNT(*)"),
+        s"aggregate did not push into the parquet footer:\n${plan.take(3000)}")
+      Bridge.ofRows(s, df.queryExecution.optimizedPlan)
     }),
 
     // Histogram binning: fixed-width buckets over order value — the
@@ -470,24 +502,13 @@ object Aggregates extends QueryFamily {
         .orderBy("bucket")),
 
     // Pivot to a wide table (source × lang doc counts).
-    "q_agg_pivot" -> ((s, dir) =>
-      Tables(s, dir, "documents")
-        .groupBy("source")
-        .pivot("lang", Seq("de", "en", "es", "fr", "zh"))
-        .count()
-        .na.fill(0)
-        .orderBy("source")),
+    "q_agg_pivot" -> ((s, dir) => langPivot(s, dir).orderBy("source")),
 
     // Unpivot (melt) the pivoted table back to long form — the wide->long
     // inverse, a Generator-backed Expand under the hood.
     "q_agg_unpivot" -> ((s, dir) =>
-      Tables(s, dir, "documents")
-        .groupBy("source")
-        .pivot("lang", Seq("de", "en", "es", "fr", "zh"))
-        .count()
-        .na.fill(0)
-        .unpivot(Array(col("source")), Array(col("de"), col("en"), col("es"), col("fr"), col("zh")),
-          "lang", "n_docs")
+      langPivot(s, dir)
+        .unpivot(Array(col("source")), pivotLangs.map(col).toArray, "lang", "n_docs")
         .orderBy("source", "lang")),
 
     // Per-group OLS trend (regr_slope's exact-sum formulation): the
@@ -739,25 +760,7 @@ object Aggregates extends QueryFamily {
     // certifies it; PlanSpec pins that no value-ordered global
     // window survives in the physical plan.
     "q_agg_ks" -> ((s, dir) => {
-      import s.implicits._
-      val ev = Tables(s, dir, "events")
-        .selectExpr("event_type",
-          "CAST(CAST(value AS DECIMAL(18,6)) * 1000000 AS BIGINT) AS v")
-      // ONE events pass for ALL pairs: the click grid fans out under a
-      // 3-row broadcast vs-tag and full-joins each comparison type's
-      // grid; the prefix windows then partition by (vs, bkt) — same
-      // statistic, a third of the jobs (the per-pair form re-scanned
-      // events six times and was measured 2.6× slower at sf0.1)
-      val others = Seq("purchase", "signup", "view")
-      val c1 = ev.where(col("event_type") === "click")
-        .groupBy("v").agg(count(lit(1)).as("c1"))
-      val c2 = ev.where(col("event_type").isin(others: _*))
-        .groupBy(col("event_type").as("vs"), col("v"))
-        .agg(count(lit(1)).as("c2"))
-      val merged = broadcast(others.toDF("vs")).crossJoin(c1)
-        .select(col("vs"), col("v"), col("c1"))
-        .join(c2, Seq("vs", "v"), "full")
-        .na.fill(0L, Seq("c1", "c2"))
+      val merged = clickVsGrid(s, dir)
       val totals = merged.groupBy("vs")
         .agg(sum("c1").as("n1"), sum("c2").as("n2"))
       distributedPrefix(merged, Seq("c1", "c2"), grpCols = Seq("vs"))
@@ -790,22 +793,7 @@ object Aggregates extends QueryFamily {
     // 2R₁ + 2R₂ = n(n+1)·... (both sides' twice-rank-sums total
     // 2·n(n+1)/2).
     "q_agg_mannwhitney" -> ((s, dir) => {
-      import s.implicits._
-      val ev = Tables(s, dir, "events")
-        .selectExpr("event_type",
-          "CAST(CAST(value AS DECIMAL(18,6)) * 1000000 AS BIGINT) AS v")
-      // one events pass for all pairs — the q_agg_ks plan, shared
-      val others = Seq("purchase", "signup", "view")
-      val c1 = ev.where(col("event_type") === "click")
-        .groupBy("v").agg(count(lit(1)).as("c1"))
-      val c2 = ev.where(col("event_type").isin(others: _*))
-        .groupBy(col("event_type").as("vs"), col("v"))
-        .agg(count(lit(1)).as("c2"))
-      val merged = broadcast(others.toDF("vs")).crossJoin(c1)
-        .select(col("vs"), col("v"), col("c1"))
-        .join(c2, Seq("vs", "v"), "full")
-        .na.fill(0L, Seq("c1", "c2"))
-        .withColumn("c", expr("c1 + c2"))
+      val merged = clickVsGrid(s, dir).withColumn("c", expr("c1 + c2"))
       distributedPrefix(merged, Seq("c"), grpCols = Seq("vs"))
         .withColumn("rank2", expr("2 * f_c - c + 1"))
         .groupBy("vs")
@@ -999,7 +987,36 @@ object Aggregates extends QueryFamily {
     }),
   )
 
+  /** DuckDB's two-sample grid (per comparison type `other` and value
+    * `v`: click count c1, other count c2), computed apart from
+    * clickVsGrid; the q_agg_ks and q_agg_mannwhitney oracles extend it. */
+  private val clickVsGridOracle = "WITH ev AS (SELECT event_type, " +
+    "CAST(CAST(value AS DECIMAL(18,6)) * 1000000 AS BIGINT) AS v FROM events), " +
+    "pr AS (SELECT * FROM (VALUES ('purchase'), ('signup'), ('view')) p(other)), " +
+    "c1 AS (SELECT v, CAST(count(*) AS BIGINT) AS c1 FROM ev " +
+    "WHERE event_type = 'click' GROUP BY v), " +
+    "c2 AS (SELECT pr.other, v, CAST(count(*) AS BIGINT) AS c2 " +
+    "FROM ev JOIN pr ON ev.event_type = pr.other GROUP BY pr.other, v), " +
+    "grid AS (SELECT pr.other, g.v, coalesce(c1.c1, 0) AS c1, " +
+    "coalesce(c2.c2, 0) AS c2 FROM pr " +
+    "JOIN (SELECT DISTINCT other, v FROM " +
+    "(SELECT pr2.other, c1.v FROM c1, pr pr2 " +
+    "UNION ALL SELECT other, v FROM c2)) g ON g.other = pr.other " +
+    "LEFT JOIN c1 ON c1.v = g.v " +
+    "LEFT JOIN c2 ON c2.other = g.other AND c2.v = g.v), "
+
   private val decSum = "CAST(SUM(CAST(%s AS DECIMAL(12,2))) AS DOUBLE)"
+
+  /** DuckDB's ROLLUP/CUBE recompute; `groupClause` is the grouping sets. */
+  private def rollupOracle(groupClause: String): String =
+    "SELECT n_name, o_orderpriority, count(*) AS n, " +
+      decSum.format("o_totalprice") + " AS total, " +
+      "CAST(GROUPING(n_name) AS BIGINT) AS g_nation, " +
+      "CAST(GROUPING(o_orderpriority) AS BIGINT) AS g_prio " +
+      "FROM orders JOIN customer ON o_custkey = c_custkey " +
+      "JOIN nation ON c_nationkey = n_nationkey " +
+      s"GROUP BY $groupClause " +
+      "ORDER BY g_nation, g_prio, n_name NULLS FIRST, o_orderpriority NULLS FIRST"
   private val rev = "CAST(l_extendedprice AS DECIMAL(12,2)) * CAST(1.0 - l_discount AS DECIMAL(4,2))"
 
   def oracles: Map[String, String] = Map(
@@ -1062,20 +1079,7 @@ object Aggregates extends QueryFamily {
       "FROM c, t ORDER BY digit"),
 
     // identical ECDF grid, identical cross-multiplied integer gaps
-    "q_agg_ks" -> ("WITH ev AS (SELECT event_type, " +
-      "CAST(CAST(value AS DECIMAL(18,6)) * 1000000 AS BIGINT) AS v FROM events), " +
-      "pr AS (SELECT * FROM (VALUES ('purchase'), ('signup'), ('view')) p(other)), " +
-      "c1 AS (SELECT v, CAST(count(*) AS BIGINT) AS c1 FROM ev " +
-      "WHERE event_type = 'click' GROUP BY v), " +
-      "c2 AS (SELECT pr.other, v, CAST(count(*) AS BIGINT) AS c2 " +
-      "FROM ev JOIN pr ON ev.event_type = pr.other GROUP BY pr.other, v), " +
-      "grid AS (SELECT pr.other, g.v, coalesce(c1.c1, 0) AS c1, " +
-      "coalesce(c2.c2, 0) AS c2 FROM pr " +
-      "JOIN (SELECT DISTINCT other, v FROM " +
-      "(SELECT pr2.other, c1.v FROM c1, pr pr2 " +
-      "UNION ALL SELECT other, v FROM c2)) g ON g.other = pr.other " +
-      "LEFT JOIN c1 ON c1.v = g.v " +
-      "LEFT JOIN c2 ON c2.other = g.other AND c2.v = g.v), " +
+    "q_agg_ks" -> (clickVsGridOracle +
       "cum AS (SELECT other, v, " +
       "sum(c1) OVER (PARTITION BY other ORDER BY v) AS f1, " +
       "sum(c2) OVER (PARTITION BY other ORDER BY v) AS f2 FROM grid), " +
@@ -1090,20 +1094,7 @@ object Aggregates extends QueryFamily {
 
     // identical pooled grid, identical twice-average-rank integers,
     // identical tie correction, identical one-chain z
-    "q_agg_mannwhitney" -> ("WITH ev AS (SELECT event_type, " +
-      "CAST(CAST(value AS DECIMAL(18,6)) * 1000000 AS BIGINT) AS v FROM events), " +
-      "pr AS (SELECT * FROM (VALUES ('purchase'), ('signup'), ('view')) p(other)), " +
-      "c1 AS (SELECT v, CAST(count(*) AS BIGINT) AS c1 FROM ev " +
-      "WHERE event_type = 'click' GROUP BY v), " +
-      "c2 AS (SELECT pr.other, v, CAST(count(*) AS BIGINT) AS c2 " +
-      "FROM ev JOIN pr ON ev.event_type = pr.other GROUP BY pr.other, v), " +
-      "grid AS (SELECT pr.other, g.v, coalesce(c1.c1, 0) AS c1, " +
-      "coalesce(c2.c2, 0) AS c2 FROM pr " +
-      "JOIN (SELECT DISTINCT other, v FROM " +
-      "(SELECT pr2.other, c1.v FROM c1, pr pr2 " +
-      "UNION ALL SELECT other, v FROM c2)) g ON g.other = pr.other " +
-      "LEFT JOIN c1 ON c1.v = g.v " +
-      "LEFT JOIN c2 ON c2.other = g.other AND c2.v = g.v), " +
+    "q_agg_mannwhitney" -> (clickVsGridOracle +
       "cum AS (SELECT other, v, c1, c1 + c2 AS c, " +
       "sum(c1 + c2) OVER (PARTITION BY other ORDER BY v) AS f FROM grid), " +
       "st AS (SELECT other, CAST(sum(c1) AS BIGINT) AS n1, " +
@@ -1332,23 +1323,9 @@ object Aggregates extends QueryFamily {
       "CAST(sum(DISTINCT l_linenumber) AS BIGINT) AS sum_distinct_lines " +
       "FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag"),
 
-    "q_agg_rollup" -> ("SELECT n_name, o_orderpriority, count(*) AS n, " +
-      decSum.format("o_totalprice") + " AS total, " +
-      "CAST(GROUPING(n_name) AS BIGINT) AS g_nation, " +
-      "CAST(GROUPING(o_orderpriority) AS BIGINT) AS g_prio " +
-      "FROM orders JOIN customer ON o_custkey = c_custkey " +
-      "JOIN nation ON c_nationkey = n_nationkey " +
-      "GROUP BY ROLLUP(n_name, o_orderpriority) " +
-      "ORDER BY g_nation, g_prio, n_name NULLS FIRST, o_orderpriority NULLS FIRST"),
+    "q_agg_rollup" -> rollupOracle("ROLLUP(n_name, o_orderpriority)"),
 
-    "q_agg_cube" -> ("SELECT n_name, o_orderpriority, count(*) AS n, " +
-      decSum.format("o_totalprice") + " AS total, " +
-      "CAST(GROUPING(n_name) AS BIGINT) AS g_nation, " +
-      "CAST(GROUPING(o_orderpriority) AS BIGINT) AS g_prio " +
-      "FROM orders JOIN customer ON o_custkey = c_custkey " +
-      "JOIN nation ON c_nationkey = n_nationkey " +
-      "GROUP BY CUBE(n_name, o_orderpriority) " +
-      "ORDER BY g_nation, g_prio, n_name NULLS FIRST, o_orderpriority NULLS FIRST"),
+    "q_agg_cube" -> rollupOracle("CUBE(n_name, o_orderpriority)"),
 
     "q_agg_gsets" -> ("SELECT n_name, c_mktsegment, count(*) AS n, " +
       "CAST(GROUPING(n_name) AS BIGINT) AS g_n, " +

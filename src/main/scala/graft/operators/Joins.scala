@@ -1,7 +1,8 @@
 package graft.operators
 
-import graft.{Dets, QueryFamily, Tables}
+import graft.{Dets, GraftSession, QueryFamily, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import Dets._
@@ -137,30 +138,12 @@ object Joins extends QueryFamily {
     // a hot user with m events and n orders costs m + n rows, where the
     // naive theta-join (events x all earlier orders, then top-1 per
     // event) materializes m*n intermediate rows before pruning.
-    "q_join_asof" -> ((s, dir) => {
-      val ev = Tables(s, dir, "events")
-        .select(col("user_id"), col("ts").as("t"), lit(1).as("kind"),
-          col("event_id"), col("ts"),
-          lit(null).cast("struct<o_orderkey:bigint,o_orderdate:timestamp_ntz>").as("ord"))
-      val o = Tables(s, dir, "orders")
-        .select(col("o_custkey").as("user_id"),
-          col("o_orderdate").as("t"), lit(0).as("kind"),
-          lit(null).cast("bigint").as("event_id"),
-          lit(null).cast("timestamp_ntz").as("ts"),
-          struct(col("o_orderkey"), col("o_orderdate")).as("ord"))
-      // order rows sort by ascending o_orderkey inside a tied t, so the
-      // LAST order seen at any point is the (date desc, orderkey desc) winner
-      val w = Window.partitionBy("user_id")
-        .orderBy(col("t"), col("kind"), col("ord.o_orderkey").asc_nulls_last)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      o.unionByName(ev)
-        .withColumn("asof", last(col("ord"), ignoreNulls = true).over(w))
-        .where(col("kind") === 1)
+    "q_join_asof" -> ((s, dir) =>
+      latestOrderCarried(s, dir)
         .select(col("event_id"), col("user_id"),
           col("asof.o_orderkey").as("o_orderkey"),
           col("asof.o_orderdate").as("o_orderdate"))
-        .orderBy("event_id")
-    }),
+        .orderBy("event_id")),
 
     // As-of with a TOLERANCE bound (pandas merge_asof's `tolerance`,
     // the feature-store staleness rule): the carried order only counts
@@ -172,31 +155,15 @@ object Joins extends QueryFamily {
     // adds zero plan structure. Serves matched/stale as a nullable
     // match plus a flag, with per-event determinism from the same
     // tie rules.
-    "q_join_asof_tolerance" -> ((s, dir) => {
-      val ev = Tables(s, dir, "events")
-        .select(col("user_id"), col("ts").as("t"), lit(1).as("kind"),
-          col("event_id"), col("ts"),
-          lit(null).cast("struct<o_orderkey:bigint,o_orderdate:timestamp_ntz>").as("ord"))
-      val o = Tables(s, dir, "orders")
-        .select(col("o_custkey").as("user_id"),
-          col("o_orderdate").as("t"), lit(0).as("kind"),
-          lit(null).cast("bigint").as("event_id"),
-          lit(null).cast("timestamp_ntz").as("ts"),
-          struct(col("o_orderkey"), col("o_orderdate")).as("ord"))
-      val w = Window.partitionBy("user_id")
-        .orderBy(col("t"), col("kind"), col("ord.o_orderkey").asc_nulls_last)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      o.unionByName(ev)
-        .withColumn("asof", last(col("ord"), ignoreNulls = true).over(w))
-        .where(col("kind") === 1)
+    "q_join_asof_tolerance" -> ((s, dir) =>
+      latestOrderCarried(s, dir)
         .withColumn("fresh", col("asof").isNotNull &&
           expr("ts <= asof.o_orderdate + INTERVAL 7 DAYS"))
         .select(col("event_id"), col("user_id"),
           when(col("fresh"), col("asof.o_orderkey")).as("o_orderkey"),
           when(col("fresh"), col("asof.o_orderdate")).as("o_orderdate"),
           col("fresh"))
-        .orderBy("event_id")
-    }),
+        .orderBy("event_id")),
 
     // The SAME as-of join through the NATIVE operator (graft.plans
     // .AsOfJoin: logical node → planner strategy → physical two-pointer
@@ -253,20 +220,9 @@ object Joins extends QueryFamily {
     // (clicks x later purchases, top-1) is the m*n blowup the carry
     // avoids on hot users.
     "q_join_asof_forward" -> ((s, dir) => {
-      val ev = Tables(s, dir, "events")
-      val c = ev.where(col("event_type") === "click")
-        .select(col("user_id"), col("ts").as("t"), lit(1).as("kind"),
-          col("event_id"), col("ts").as("c_ts"),
-          lit(null).cast("struct<p_id:bigint,p_ts:timestamp_ntz>").as("pur"))
-      val p = ev.where(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts").as("t"), lit(0).as("kind"),
-          lit(null).cast("bigint").as("event_id"),
-          lit(null).cast("timestamp_ntz").as("c_ts"),
-          struct(col("event_id").as("p_id"), col("ts").as("p_ts")).as("pur"))
-      val w = Window.partitionBy("user_id")
-        .orderBy(col("t"), col("kind"), col("pur.p_id").asc_nulls_last)
+      val w = carryOrder("pur.p_id")
         .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-      p.unionByName(c)
+      clickPurchaseStream(s, dir)
         .withColumn("nxt", first(col("pur"), ignoreNulls = true).over(w))
         .where(col("kind") === 1)
         .withColumn("hit",
@@ -293,25 +249,14 @@ object Joins extends QueryFamily {
     // next carry = min (p_ts, p_id) strictly after; |Δ| ties prefer
     // prev — all integer comparisons, no rounding boundary.
     "q_join_asof_nearest" -> ((s, dir) => {
-      val ev = Tables(s, dir, "events")
-      val c = ev.where(col("event_type") === "click")
-        .select(col("user_id"), col("ts").as("t"), lit(1).as("kind"),
-          col("event_id"), col("ts").as("c_ts"),
-          lit(null).cast("struct<p_id:bigint,p_ts:timestamp_ntz>").as("pur"))
-      val p = ev.where(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts").as("t"), lit(0).as("kind"),
-          lit(null).cast("bigint").as("event_id"),
-          lit(null).cast("timestamp_ntz").as("c_ts"),
-          struct(col("event_id").as("p_id"), col("ts").as("p_ts")).as("pur"))
       // pre-project the purchase-id sort key: two windows extracting
       // pur.p_id independently get distinct aliases, distinct window
       // specs, and TWO Window operators — on one shared column the
       // planner fuses both frames into a single Window pass
-      val ord = Window.partitionBy("user_id")
-        .orderBy(col("t"), col("kind"), col("pid").asc_nulls_last)
+      val ord = carryOrder("pid")
       val wPrev = ord.rowsBetween(Window.unboundedPreceding, Window.currentRow)
       val wNext = ord.rowsBetween(Window.currentRow, Window.unboundedFollowing)
-      p.unionByName(c)
+      clickPurchaseStream(s, dir)
         .withColumn("pid", col("pur.p_id"))
         .select(col("*"),
           last(col("pur"), ignoreNulls = true).over(wPrev).as("prev"),
@@ -358,40 +303,38 @@ object Joins extends QueryFamily {
     // 100 TB this is the difference between shuffling the whole fact
     // table and shuffling the ~selectivity fraction that can match.
     // The thresholds are lowered scoped-to-this-query (fixture tables
-    // sit far under the 10 GB production default); might_contain is
-    // REQUIRED in the plan, so the query fails loudly if the filter
-    // ever stops injecting.
-    "q_join_bloom" -> ((s, dir) => {
-      val confs = Seq(
+    // sit far under the 10 GB production default) and the frame is
+    // rebuilt from the optimized plan made under them, so every later
+    // action (count, collect, a write) runs the filtered plan;
+    // might_contain is REQUIRED in that plan, so the query fails loudly
+    // if the filter ever stops injecting. Bloom filters inject only for
+    // SHUFFLE joins (a broadcast join already prunes at the probe); at
+    // fixture scale the filtered dim would broadcast — exactly not the
+    // 100 TB situation the filter exists for. The optimizer injects only
+    // when neither side fits the broadcast threshold (a join hint does
+    // not count), so the thresholds are off in scope; the shuffle_merge
+    // hint keeps the shuffle join when later actions re-plan under the
+    // restored thresholds.
+    "q_join_bloom" -> ((s, dir) => GraftSession.withConfs(s,
         "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
         "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold" -> "100GB",
         "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
-        // bloom filters inject only for SHUFFLE joins (a broadcast join
-        // already prunes at the probe); at fixture scale the filtered
-        // dim would broadcast, so pin the shuffle path — which is
-        // exactly the 100 TB situation the filter exists for
         "spark.sql.autoBroadcastJoinThreshold" -> "-1",
-        "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1")
-      val prev = confs.map { case (k, _) => k -> s.conf.getOption(k) }
-      confs.foreach { case (k, v) => s.conf.set(k, v) }
-      try {
-        val o = Tables(s, dir, "orders")
-          .where(col("o_orderpriority") === "1-URGENT")
-          .select("o_orderkey", "o_orderdate")
-        val df = Tables(s, dir, "lineitem")
-          .join(o, col("l_orderkey") === col("o_orderkey"))
-          .groupBy("l_returnflag")
-          .agg(count(lit(1)).as("n_lines"),
-            dbl(sum(money(col("l_quantity")))).as("sum_qty"))
-          .orderBy("l_returnflag")
-        val plan = df.queryExecution.optimizedPlan.toString
-        require(plan.contains("might_contain"),
-          s"bloom filter was not injected into the fact scan:\n${plan.take(3000)}")
-        df
-      } finally prev.foreach {
-        case (k, Some(v)) => s.conf.set(k, v)
-        case (k, None)    => s.conf.unset(k)
-      }
+        "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1") {
+      val o = Tables(s, dir, "orders")
+        .where(col("o_orderpriority") === "1-URGENT")
+        .select("o_orderkey", "o_orderdate")
+        .hint("shuffle_merge")
+      val plan = Tables(s, dir, "lineitem")
+        .join(o, col("l_orderkey") === col("o_orderkey"))
+        .groupBy("l_returnflag")
+        .agg(count(lit(1)).as("n_lines"),
+          dbl(sum(money(col("l_quantity")))).as("sum_qty"))
+        .orderBy("l_returnflag")
+        .queryExecution.optimizedPlan
+      require(plan.toString.contains("might_contain"),
+        s"bloom filter was not injected into the fact scan:\n${plan.toString.take(3000)}")
+      Bridge.ofRows(s, plan)
     }),
 
     // 4-way star join, TPC-H Q5 shape: revenue per nation for 1996.
@@ -411,6 +354,51 @@ object Joins extends QueryFamily {
         .orderBy("r_name", "n_name")
     }),
   )
+
+  /** The carry order of the composed as-of joins: per user, by time,
+    * then `kind` (0 = the carried side sorts first at equal time), then
+    * the carried row's id `tiebreak` (nulls — the probe rows — last). */
+  private def carryOrder(tiebreak: String) = Window.partitionBy("user_id")
+    .orderBy(col("t"), col("kind"), col(tiebreak).asc_nulls_last)
+
+  /** q_join_asof's carry: orders (kind 0, `ord` struct) unioned with
+    * events (kind 1) into one keyed stream, the latest order so far
+    * carried onto each event row as `asof`; event rows only. Order rows
+    * sort by ascending o_orderkey inside a tied t, so the LAST order
+    * seen at any point is the (date desc, orderkey desc) winner. */
+  private def latestOrderCarried(s: SparkSession, dir: String): DataFrame = {
+    val ev = Tables(s, dir, "events")
+      .select(col("user_id"), col("ts").as("t"), lit(1).as("kind"),
+        col("event_id"), col("ts"),
+        lit(null).cast("struct<o_orderkey:bigint,o_orderdate:timestamp_ntz>").as("ord"))
+    val o = Tables(s, dir, "orders")
+      .select(col("o_custkey").as("user_id"),
+        col("o_orderdate").as("t"), lit(0).as("kind"),
+        lit(null).cast("bigint").as("event_id"),
+        lit(null).cast("timestamp_ntz").as("ts"),
+        struct(col("o_orderkey"), col("o_orderdate")).as("ord"))
+    val w = carryOrder("ord.o_orderkey")
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    o.unionByName(ev)
+      .withColumn("asof", last(col("ord"), ignoreNulls = true).over(w))
+      .where(col("kind") === 1)
+  }
+
+  /** The forward and nearest as-of stream: purchases (kind 0, `pur`
+    * struct of p_id and p_ts) unioned with clicks (kind 1, `c_ts`). */
+  private def clickPurchaseStream(s: SparkSession, dir: String): DataFrame = {
+    val ev = Tables(s, dir, "events")
+    val c = ev.where(col("event_type") === "click")
+      .select(col("user_id"), col("ts").as("t"), lit(1).as("kind"),
+        col("event_id"), col("ts").as("c_ts"),
+        lit(null).cast("struct<p_id:bigint,p_ts:timestamp_ntz>").as("pur"))
+    val p = ev.where(col("event_type") === "purchase")
+      .select(col("user_id"), col("ts").as("t"), lit(0).as("kind"),
+        lit(null).cast("bigint").as("event_id"),
+        lit(null).cast("timestamp_ntz").as("c_ts"),
+        struct(col("event_id").as("p_id"), col("ts").as("p_ts")).as("pur"))
+    p.unionByName(c)
+  }
 
   /** The interval-overlap pair kernel behind q_join_interval, factored so
     * SkewSpec can drive the SAME code path with a synthetic hot-hour
@@ -460,6 +448,22 @@ object Joins extends QueryFamily {
       .agg(count(lit(1)).as("n_concurrent"))
   }
 
+  /** DuckDB's backward as-of recompute: each event's best earlier order
+    * by row_number over the LEFT join; `extra` adds inner columns and
+    * `cols` is the outer projection. */
+  private def asOfOracle(cols: String, extra: String): String =
+    s"SELECT $cols FROM " +
+      s"(SELECT e.event_id, e.user_id, o.o_orderkey, o.o_orderdate, $extra" +
+      "row_number() OVER (PARTITION BY e.event_id ORDER BY o.o_orderdate DESC, o.o_orderkey DESC) AS rn " +
+      "FROM events e LEFT JOIN orders o ON e.user_id = o.o_custkey AND o.o_orderdate <= e.ts) " +
+      "WHERE rn = 1 ORDER BY event_id"
+
+  /** DuckDB's click and purchase CTEs for the forward and nearest as-of oracles. */
+  private val clickPurchaseOracleCtes = "WITH c AS (SELECT event_id, user_id, ts AS c_ts " +
+    "FROM events WHERE event_type = 'click'), " +
+    "p AS (SELECT event_id AS p_id, user_id, ts AS p_ts " +
+    "FROM events WHERE event_type = 'purchase'), "
+
   def oracles: Map[String, String] = Map(
     "q_join_inner" -> ("SELECT o_orderkey, c_name, o_totalprice FROM orders " +
       "JOIN customer ON o_custkey = c_custkey ORDER BY o_orderkey"),
@@ -503,34 +507,20 @@ object Joins extends QueryFamily {
       "WHERE e1.event_type = 'signup' AND e2.event_type = 'purchase' " +
       "ORDER BY s_id, p_id"),
 
-    "q_join_asof" -> ("SELECT event_id, user_id, o_orderkey, o_orderdate FROM " +
-      "(SELECT e.event_id, e.user_id, o.o_orderkey, o.o_orderdate, " +
-      "row_number() OVER (PARTITION BY e.event_id ORDER BY o.o_orderdate DESC, o.o_orderkey DESC) AS rn " +
-      "FROM events e LEFT JOIN orders o ON e.user_id = o.o_custkey AND o.o_orderdate <= e.ts) " +
-      "WHERE rn = 1 ORDER BY event_id"),
+    "q_join_asof" -> asOfOracle("event_id, user_id, o_orderkey, o_orderdate", ""),
 
     // the same backward recompute with the staleness bound applied to
     // the WINNER (not the candidate set — a stale best match nulls,
     // it does not fall back to an older one, exactly the carry-forward
     // semantics)
-    "q_join_asof_tolerance" -> ("SELECT event_id, user_id, " +
+    "q_join_asof_tolerance" -> asOfOracle("event_id, user_id, " +
       "CASE WHEN fresh THEN o_orderkey END AS o_orderkey, " +
-      "CASE WHEN fresh THEN o_orderdate END AS o_orderdate, fresh FROM " +
-      "(SELECT e.event_id, e.user_id, o.o_orderkey, o.o_orderdate, " +
+      "CASE WHEN fresh THEN o_orderdate END AS o_orderdate, fresh",
       "(o.o_orderkey IS NOT NULL AND " +
-      "e.ts <= o.o_orderdate + INTERVAL 7 DAY) AS fresh, " +
-      "row_number() OVER (PARTITION BY e.event_id " +
-      "ORDER BY o.o_orderdate DESC, o.o_orderkey DESC) AS rn " +
-      "FROM events e LEFT JOIN orders o ON e.user_id = o.o_custkey " +
-      "AND o.o_orderdate <= e.ts) " +
-      "WHERE rn = 1 ORDER BY event_id"),
+      "e.ts <= o.o_orderdate + INTERVAL 7 DAY) AS fresh, "),
 
     // identical recompute — the native operator must match it exactly
-    "q_join_asof_native" -> ("SELECT event_id, user_id, o_orderkey, o_orderdate FROM " +
-      "(SELECT e.event_id, e.user_id, o.o_orderkey, o.o_orderdate, " +
-      "row_number() OVER (PARTITION BY e.event_id ORDER BY o.o_orderdate DESC, o.o_orderkey DESC) AS rn " +
-      "FROM events e LEFT JOIN orders o ON e.user_id = o.o_custkey AND o.o_orderdate <= e.ts) " +
-      "WHERE rn = 1 ORDER BY event_id"),
+    "q_join_asof_native" -> asOfOracle("event_id, user_id, o_orderkey, o_orderdate", ""),
 
     // plain overlap self-join over the same gaps-and-islands sessions
     // the stream_session oracle builds (>= at exactly 30:00 mirrors
@@ -551,10 +541,7 @@ object Joins extends QueryFamily {
 
     // LEFT-join recompute of the forward carry: first purchase strictly
     // after the click and inside the 6h window, (p_ts, p_id) tiebreak
-    "q_join_asof_forward" -> ("WITH c AS (SELECT event_id, user_id, ts AS c_ts " +
-      "FROM events WHERE event_type = 'click'), " +
-      "p AS (SELECT event_id AS p_id, user_id, ts AS p_ts " +
-      "FROM events WHERE event_type = 'purchase'), " +
+    "q_join_asof_forward" -> (clickPurchaseOracleCtes +
       "m AS (SELECT c.event_id, p.p_id, p.p_ts, " +
       "row_number() OVER (PARTITION BY c.event_id ORDER BY p.p_ts, p.p_id) AS rn " +
       "FROM c JOIN p ON c.user_id = p.user_id " +
@@ -568,10 +555,7 @@ object Joins extends QueryFamily {
     // rank by (|Δ| asc, prev-side first, then the carry's own id rule —
     // prev takes the LARGEST p_id at equal time (it is a last()-carry),
     // next the smallest)
-    "q_join_asof_nearest" -> ("WITH c AS (SELECT event_id, user_id, ts AS c_ts " +
-      "FROM events WHERE event_type = 'click'), " +
-      "p AS (SELECT event_id AS p_id, user_id, ts AS p_ts " +
-      "FROM events WHERE event_type = 'purchase'), " +
+    "q_join_asof_nearest" -> (clickPurchaseOracleCtes +
       "pairs AS (SELECT c.event_id, p.p_id, p.p_ts, " +
       "epoch_us(p.p_ts) - epoch_us(c.c_ts) AS delta_us, " +
       "abs(epoch_us(p.p_ts) - epoch_us(c.c_ts)) AS ad, " +

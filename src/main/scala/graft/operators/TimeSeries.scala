@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{Dets, QueryFamily, Tables}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import Dets._
@@ -185,13 +185,6 @@ object TimeSeries extends QueryFamily {
         .orderBy("event_type", "wk")
     }),
 
-    // CUSUM changepoint per event type: the day where the cumulative
-    // deviation from the series' mean daily volume peaks — the classic
-    // level-shift locator. Exactness discipline for an argmax over
-    // floats: daily totals and their prefix sums stay DECIMAL (exact,
-    // order-independent); cusum_k = S_k - k·S_n/n is evaluated in
-    // doubles with identical operation order in both engines, so the
-    // |cusum| ranking — and therefore the argmax day — is identical.
     // Theil–Sen robust trend per event type — the outlier-immune
     // complement of q_agg_linreg's OLS slope (one spiked hour drags an
     // OLS fit; the MEDIAN of pairwise slopes shrugs it off — the
@@ -204,48 +197,8 @@ object TimeSeries extends QueryFamily {
     // the honest Theil–Sen cost, bounded by the series length (720
     // hours here), never corpus²; at 100 TB a long series moves to
     // the sampled or repeated-median variant, same serving shape.
-    "q_ts_theilsen" -> ((s, dir) => {
-      val x = "(unix_micros(CAST(ts AS TIMESTAMP)) - " +
-        "unix_micros(TIMESTAMP '2000-01-01 00:00:00')) DIV 3600000000"
-      val hourly = Tables(s, dir, "events")
-        .selectExpr("event_type", s"$x AS t",
-          "CAST(CAST(value AS DECIMAL(18,6)) * 1000000 AS BIGINT) AS v")
-        .groupBy("event_type", "t").agg(sum("v").as("v"))
-      // scale guard (r21): the exact leg is O(n²) per group BY DEFINITION,
-      // so a series past the ceiling must fail LOUDLY (the sampled
-      // variant is the scale path) instead of running a 100 TB misuse
-      // forever. The check rides the meta subtree — the broadcast build
-      // of the final join, which executes before the pair join's probe
-      // side streams — so it costs no extra job; CASE keeps it from
-      // being constant-folded away, and the default ceiling (20k hours
-      // ≈ 2·10⁸ pairs/group) is conf-overridable for clusters that
-      // genuinely want a bigger exact leg.
-      val maxHours = s.conf.getOption("spark.graft.ts.theilsenExactMaxHours")
-        .map(_.toLong).getOrElse(20000L)
-      val meta = hourly.groupBy("event_type")
-        .agg(count(lit(1)).as("n_hours"))
-        .withColumn("n_hours", expr(
-          s"CASE WHEN n_hours <= ${maxHours}L THEN n_hours ELSE " +
-            "CAST(raise_error(concat('q_ts_theilsen: series ', event_type, " +
-            s"' spans ', CAST(n_hours AS STRING), ' hours > $maxHours — " +
-            "the exact O(n\\u00b2) leg refuses; use q_ts_theilsen_sampled " +
-            "or raise spark.graft.ts.theilsenExactMaxHours')) AS BIGINT) END"))
-      val slopes = hourly.selectExpr("event_type", "t AS ta", "v AS va")
-        .join(hourly.selectExpr("event_type", "t AS tb", "v AS vb"),
-          Seq("event_type"))
-        .where(col("tb") > col("ta"))
-        .selectExpr("event_type", "(vb - va) * 1000000 DIV (tb - ta) AS slope")
-      val wRank = Window.partitionBy("event_type").orderBy("slope")
-      val wAll = Window.partitionBy("event_type")
-      slopes
-        .withColumn("rn", row_number().over(wRank))
-        .withColumn("m", count(lit(1)).over(wAll))
-        .where(col("rn") === expr("(m + 1) DIV 2"))
-        .join(broadcast(meta), "event_type")
-        .select(col("event_type"), col("n_hours"), col("m").as("n_pairs"),
-          col("slope").as("theil_slope_micros"))
-        .orderBy("event_type")
-    }),
+    "q_ts_theilsen" -> ((s, dir) =>
+      theilSenExact(Tables(s, dir, "events"), TheilSenExactMaxHours)),
 
     // Wald–Wolfowitz RUNS test per event type — the randomness check
     // beside q_ts_mannkendall's trend test (a series can be trendless
@@ -260,18 +213,8 @@ object TimeSeries extends QueryFamily {
     // n ≈ 3e4 — the chisq lesson, so only the exact R/n₁/n₂ are
     // integers and the moments are double-side.
     "q_ts_runs" -> ((s, dir) => {
-      val x = "(unix_micros(CAST(ts AS TIMESTAMP)) - " +
-        "unix_micros(TIMESTAMP '2000-01-01 00:00:00')) DIV 3600000000"
-      val hourly = Tables(s, dir, "events")
-        .selectExpr("event_type", s"$x AS t",
-          "CAST(CAST(value AS DECIMAL(18,6)) * 1000000 AS BIGINT) AS v")
-        .groupBy("event_type", "t").agg(sum("v").as("v"))
-      val wV = Window.partitionBy("event_type").orderBy("v")
-      val wA = Window.partitionBy("event_type")
-      val med = hourly
-        .withColumn("rn", row_number().over(wV))
-        .withColumn("m", count(lit(1)).over(wA))
-        .where(col("rn") === expr("(m + 1) DIV 2"))
+      val hourly = hourlySeries(Tables(s, dir, "events"))
+      val med = lowerMedian(hourly, "v")
         .select(col("event_type"), col("v").as("med"))
       val wT = Window.partitionBy("event_type").orderBy("t")
       hourly.join(broadcast(med), "event_type")
@@ -311,16 +254,8 @@ object TimeSeries extends QueryFamily {
     // per-group n² pair shape as theilsen (bounded by series length,
     // never corpus²; the sampled key shows the thinning move).
     "q_ts_mannkendall" -> ((s, dir) => {
-      val x = "(unix_micros(CAST(ts AS TIMESTAMP)) - " +
-        "unix_micros(TIMESTAMP '2000-01-01 00:00:00')) DIV 3600000000"
-      val hourly = Tables(s, dir, "events")
-        .selectExpr("event_type", s"$x AS t",
-          "CAST(CAST(value AS DECIMAL(18,6)) * 1000000 AS BIGINT) AS v")
-        .groupBy("event_type", "t").agg(sum("v").as("v"))
-      val sStat = hourly.selectExpr("event_type", "t AS ta", "v AS va")
-        .join(hourly.selectExpr("event_type", "t AS tb", "v AS vb"),
-          Seq("event_type"))
-        .where(col("tb") > col("ta"))
+      val hourly = hourlySeries(Tables(s, dir, "events"))
+      val sStat = hourPairs(hourly)
         .groupBy("event_type")
         .agg(sum(expr("CAST(sign(vb - va) AS BIGINT)")).as("s_stat"))
       val ties = hourly.groupBy("event_type", "v")
@@ -349,25 +284,12 @@ object TimeSeries extends QueryFamily {
     // partitioned per event_type (series-bounded, never corpus-wide);
     // the per-type medians ride a broadcast back onto the hourly grid.
     "q_ts_mad" -> ((s, dir) => {
-      val x = "(unix_micros(CAST(ts AS TIMESTAMP)) - " +
-        "unix_micros(TIMESTAMP '2000-01-01 00:00:00')) DIV 3600000000"
-      val hourly = Tables(s, dir, "events")
-        .selectExpr("event_type", s"$x AS t",
-          "CAST(CAST(value AS DECIMAL(18,6)) * 1000000 AS BIGINT) AS v")
-        .groupBy("event_type", "t").agg(sum("v").as("v"))
-      val wV = Window.partitionBy("event_type").orderBy("v")
-      val wA = Window.partitionBy("event_type")
-      val med = hourly
-        .withColumn("rn", row_number().over(wV))
-        .withColumn("m", count(lit(1)).over(wA))
-        .where(col("rn") === expr("(m + 1) DIV 2"))
+      val hourly = hourlySeries(Tables(s, dir, "events"))
+      val med = lowerMedian(hourly, "v")
         .select(col("event_type"), col("v").as("med"), col("m").as("n_hours"))
-      val wD = Window.partitionBy("event_type").orderBy("d")
-      hourly.join(broadcast(med), "event_type")
+      val dev = hourly.join(broadcast(med), "event_type")
         .withColumn("d", abs(col("v") - col("med")))
-        .withColumn("rn", row_number().over(wD))
-        .withColumn("m2", count(lit(1)).over(wA))
-        .where(col("rn") === expr("(m2 + 1) DIV 2"))
+      lowerMedian(dev, "d", size = "m2")
         .select(col("event_type"), col("n_hours"),
           col("med").as("median_micros"), col("d").as("mad_micros"))
         .orderBy("event_type")
@@ -391,28 +313,15 @@ object TimeSeries extends QueryFamily {
     // TimeSeriesSpec pins the sampled median's rank position in the
     // exact slope distribution on the fixture.
     "q_ts_theilsen_sampled" -> ((s, dir) => {
-      val x = "(unix_micros(CAST(ts AS TIMESTAMP)) - " +
-        "unix_micros(TIMESTAMP '2000-01-01 00:00:00')) DIV 3600000000"
-      val hourly = Tables(s, dir, "events")
-        .selectExpr("event_type", s"$x AS t",
-          "CAST(CAST(value AS DECIMAL(18,6)) * 1000000 AS BIGINT) AS v")
-        .groupBy("event_type", "t").agg(sum("v").as("v"))
+      val hourly = hourlySeries(Tables(s, dir, "events"))
         .withColumn("bk", expr("CAST(conv(substr(md5(concat(event_type, " +
           "':', CAST(t AS STRING))), 1, 15), 16, 10) AS BIGINT) % 4"))
       val meta = hourly.groupBy("event_type")
         .agg(count(lit(1)).as("n_hours"))
-      val slopes = hourly.selectExpr("event_type", "t AS ta", "v AS va", "bk AS bka")
-        .join(hourly.selectExpr("event_type", "t AS tb", "v AS vb", "bk AS bkb"),
-          Seq("event_type"))
-        .where(col("tb") > col("ta"))
+      val slopes = hourPairs(hourly, "bk")
         .where(expr("(bka + bkb) % 4 = 0"))
-        .selectExpr("event_type", "(vb - va) * 1000000 DIV (tb - ta) AS slope")
-      val wRank = Window.partitionBy("event_type").orderBy("slope")
-      val wAll = Window.partitionBy("event_type")
-      slopes
-        .withColumn("rn", row_number().over(wRank))
-        .withColumn("m", count(lit(1)).over(wAll))
-        .where(col("rn") === expr("(m + 1) DIV 2"))
+        .selectExpr("event_type", pairSlope)
+      lowerMedian(slopes, "slope")
         .join(broadcast(meta), "event_type")
         .selectExpr("event_type", "n_hours",
           "n_hours * (n_hours - 1) DIV 2 AS n_pairs_exact",
@@ -421,11 +330,15 @@ object TimeSeries extends QueryFamily {
         .orderBy("event_type")
     }),
 
+    // CUSUM changepoint per event type: the day where the cumulative
+    // deviation from the series' mean daily volume peaks — the classic
+    // level-shift locator. Exactness discipline for an argmax over
+    // floats: daily totals and their prefix sums stay DECIMAL (exact,
+    // order-independent); cusum_k = S_k - k·S_n/n is evaluated in
+    // doubles with identical operation order in both engines, so the
+    // |cusum| ranking — and therefore the argmax day — is identical.
     "q_ts_changepoint" -> ((s, dir) => {
-      val daily = Tables(s, dir, "events")
-        .groupBy(col("event_type"),
-          date_trunc("day", col("ts")).cast("timestamp_ntz").as("day"))
-        .agg(sum(dec6(col("value"))).as("d_total"))
+      val daily = dailySeries(s, dir, sum(dec6(col("value"))).as("d_total"))
       val wOrd = Window.partitionBy("event_type").orderBy("day")
       val wAll = Window.partitionBy("event_type")
       val cu = daily
@@ -451,10 +364,7 @@ object TimeSeries extends QueryFamily {
     // doubles, so the output rounds to the shared 4-dp grid (the
     // q_agg_stats discipline).
     "q_ts_autocorr" -> ((s, dir) => {
-      val daily = Tables(s, dir, "events")
-        .groupBy(col("event_type"),
-          date_trunc("day", col("ts")).cast("timestamp_ntz").as("day"))
-        .agg(dbl(sum(dec6(col("value")))).as("total"))
+      val daily = dailySeries(s, dir, dbl(sum(dec6(col("value")))).as("total"))
       val w = Window.partitionBy("event_type").orderBy("day")
       daily.withColumn("prev", lag(col("total"), 1).over(w))
         .where(col("prev").isNotNull)
@@ -484,6 +394,74 @@ object TimeSeries extends QueryFamily {
     }),
   )
 
+  /** Whole hours since 2000-01-01 of an event's `ts`, in Spark SQL. */
+  private val hourOf = "(unix_micros(CAST(ts AS TIMESTAMP)) - " +
+    "unix_micros(TIMESTAMP '2000-01-01 00:00:00')) DIV 3600000000"
+
+  /** The exact hourly series behind the robust-statistics keys: one row
+    * per (event_type, t) with `t` the whole hours since 2000-01-01 and
+    * `v` the bigint sum of the hour's values in micro-units. An hour
+    * with no events has no row. */
+  private[graft] def hourlySeries(events: DataFrame): DataFrame =
+    events
+      .selectExpr("event_type", s"$hourOf AS t",
+        "CAST(CAST(value AS DECIMAL(18,6)) * 1000000 AS BIGINT) AS v")
+      .groupBy("event_type", "t").agg(sum("v").as("v"))
+
+  /** Each event type's lower-median row in `by` order: `rn` numbers the
+    * rows, the column named `size` counts the group, and the row with
+    * rn = (size + 1) DIV 2 is kept. Tied values share a value, so the
+    * pick needs no tiebreak column. */
+  private[graft] def lowerMedian(df: DataFrame, by: String, size: String = "m"): DataFrame =
+    df.withColumn("rn", row_number().over(Window.partitionBy("event_type").orderBy(by)))
+      .withColumn(size, count(lit(1)).over(Window.partitionBy("event_type")))
+      .where(col("rn") === expr(s"($size + 1) DIV 2"))
+
+  /** Every ordered hour pair (ta < tb) within an event type: `t`, `v`
+    * and each `carry` column of `hourly`, suffixed `a` and `b` by side.
+    * The per-group n² self-join of the Theil–Sen and Mann–Kendall keys. */
+  private def hourPairs(hourly: DataFrame, carry: String*): DataFrame = {
+    def side(x: String) = hourly.selectExpr(
+      Seq("event_type", s"t AS t$x", s"v AS v$x") ++ carry.map(c => s"$c AS $c$x"): _*)
+    side("a").join(side("b"), Seq("event_type")).where(col("tb") > col("ta"))
+  }
+
+  /** A pair's exact integer slope in micro-units per hour (DIV truncates). */
+  private val pairSlope = "(vb - va) * 1000000 DIV (tb - ta) AS slope"
+
+  /** Hour ceiling of the exact Theil–Sen leg (≈ 2·10⁸ pairs per group). */
+  private val TheilSenExactMaxHours = 20000L
+
+  /** q_ts_theilsen over `events`. Scale guard (r21): the exact leg is
+    * O(n²) per group BY DEFINITION, so a series longer than `maxHours`
+    * fails LOUDLY (the sampled variant is the scale path) instead of
+    * running a 100 TB misuse forever. The check rides the meta subtree —
+    * the broadcast build of the final join, which executes before the
+    * pair join's probe side streams — so it costs no extra job; CASE
+    * keeps it from being constant-folded away. */
+  private[graft] def theilSenExact(events: DataFrame, maxHours: Long): DataFrame = {
+    val hourly = hourlySeries(events)
+    val meta = hourly.groupBy("event_type")
+      .agg(count(lit(1)).as("n_hours"))
+      .withColumn("n_hours", expr(
+        s"CASE WHEN n_hours <= ${maxHours}L THEN n_hours ELSE " +
+          "CAST(raise_error(concat('q_ts_theilsen: series ', event_type, " +
+          s"' spans ', CAST(n_hours AS STRING), ' hours > $maxHours — " +
+          "the exact O(n\\u00b2) leg refuses; use q_ts_theilsen_sampled')) AS BIGINT) END"))
+    lowerMedian(hourPairs(hourly).selectExpr("event_type", pairSlope), "slope")
+      .join(broadcast(meta), "event_type")
+      .select(col("event_type"), col("n_hours"), col("m").as("n_pairs"),
+        col("slope").as("theil_slope_micros"))
+      .orderBy("event_type")
+  }
+
+  /** One aggregate `total` per (event_type, calendar day). */
+  private def dailySeries(s: SparkSession, dir: String, total: Column): DataFrame =
+    Tables(s, dir, "events")
+      .groupBy(col("event_type"),
+        date_trunc("day", col("ts")).cast("timestamp_ntz").as("day"))
+      .agg(total)
+
   /** DuckDB mirror of the truncated EWMA: the identical 16-term lag
     * chain over one named window — exact integer weights, one divide.
     */
@@ -503,40 +481,47 @@ object TimeSeries extends QueryFamily {
     "ORDER BY user_id, ts"
   }
 
+  /** DuckDB's hourly grid: the rows of hourlySeries, computed apart. */
+  private val hourlyOracle = "SELECT event_type, " +
+    "(epoch_us(ts) - epoch_us(TIMESTAMP '2000-01-01')) // 3600000000 AS t, " +
+    "CAST(sum(CAST(CAST(value AS DECIMAL(18,6)) * 1000000 AS BIGINT)) " +
+    "AS BIGINT) AS v FROM events GROUP BY event_type, t"
+
+  /** DuckDB's lower-median ranking: `cols` of `from` plus the row number
+    * `rn` in `by` order and the group size named `size`, per event type. */
+  private def rankOracle(cols: String, by: String, size: String, from: String): String =
+    s"SELECT $cols, " +
+      s"CAST(row_number() OVER (PARTITION BY event_type ORDER BY $by) AS BIGINT) AS rn, " +
+      s"CAST(count(*) OVER (PARTITION BY event_type) AS BIGINT) AS $size FROM $from"
+
+  /** DuckDB Theil–Sen over the hourly CTE body `h`: hour counts `m`,
+    * exact pair slopes (`pairFilter` thins the pairs), the lower-median
+    * rank pick, and the served `cols` beside event_type and n_hours. */
+  private def theilSenOracle(h: String, pairFilter: String, cols: String): String =
+    s"WITH h AS ($h), " +
+      "m AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n_hours " +
+      "FROM h GROUP BY event_type), " +
+      "sl AS (SELECT a.event_type, " +
+      "(b.v - a.v) * 1000000 // (b.t - a.t) AS slope " +
+      s"FROM h a JOIN h b ON a.event_type = b.event_type AND b.t > a.t$pairFilter), " +
+      s"rk AS (${rankOracle("event_type, slope", "slope", "mm", "sl")}) " +
+      s"SELECT rk.event_type, m.n_hours, $cols " +
+      "FROM rk JOIN m ON rk.event_type = m.event_type " +
+      "WHERE rn = (mm + 1) // 2 ORDER BY rk.event_type"
+
   def oracles: Map[String, String] = Map(
     "q_ts_ewma" -> ewmaOracle,
 
     // identical hourly sums, identical exact-integer pair slopes
     // (// and DIV truncate toward zero identically), identical
     // lower-median rank pick
-    "q_ts_theilsen" -> ("WITH h AS (SELECT event_type, " +
-      "(epoch_us(ts) - epoch_us(TIMESTAMP '2000-01-01')) // 3600000000 AS t, " +
-      "CAST(sum(CAST(CAST(value AS DECIMAL(18,6)) * 1000000 AS BIGINT)) " +
-      "AS BIGINT) AS v FROM events GROUP BY event_type, t), " +
-      "m AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n_hours " +
-      "FROM h GROUP BY event_type), " +
-      "sl AS (SELECT a.event_type, " +
-      "(b.v - a.v) * 1000000 // (b.t - a.t) AS slope " +
-      "FROM h a JOIN h b ON a.event_type = b.event_type AND b.t > a.t), " +
-      "rk AS (SELECT event_type, slope, " +
-      "CAST(row_number() OVER (PARTITION BY event_type ORDER BY slope) " +
-      "AS BIGINT) AS rn, " +
-      "CAST(count(*) OVER (PARTITION BY event_type) AS BIGINT) AS mm " +
-      "FROM sl) " +
-      "SELECT rk.event_type, m.n_hours, rk.mm AS n_pairs, " +
-      "rk.slope AS theil_slope_micros " +
-      "FROM rk JOIN m ON rk.event_type = m.event_type " +
-      "WHERE rn = (mm + 1) // 2 ORDER BY rk.event_type"),
+    "q_ts_theilsen" -> theilSenOracle(hourlyOracle, "",
+      "rk.mm AS n_pairs, rk.slope AS theil_slope_micros"),
 
     // identical hourly grid, identical lower-median sign rule and
     // lag-transition run count, identical one-chain z
-    "q_ts_runs" -> ("WITH h AS (SELECT event_type, " +
-      "(epoch_us(ts) - epoch_us(TIMESTAMP '2000-01-01')) // 3600000000 AS t, " +
-      "CAST(sum(CAST(CAST(value AS DECIMAL(18,6)) * 1000000 AS BIGINT)) " +
-      "AS BIGINT) AS v FROM events GROUP BY event_type, t), " +
-      "rk AS (SELECT event_type, v, " +
-      "CAST(row_number() OVER (PARTITION BY event_type ORDER BY v) AS BIGINT) AS rn, " +
-      "CAST(count(*) OVER (PARTITION BY event_type) AS BIGINT) AS m FROM h), " +
+    "q_ts_runs" -> (s"WITH h AS ($hourlyOracle), " +
+      s"rk AS (${rankOracle("event_type, v", "v", "m", "h")}), " +
       "md AS (SELECT event_type, v AS med FROM rk WHERE rn = (m + 1) // 2), " +
       "sg AS (SELECT h.event_type, h.t, " +
       "CASE WHEN h.v > md.med THEN 1 ELSE 0 END AS sgn " +
@@ -560,10 +545,7 @@ object TimeSeries extends QueryFamily {
 
     // identical hourly grid, identical integer S and tie-corrected
     // 18·Var, identical continuity-corrected z chain
-    "q_ts_mannkendall" -> ("WITH h AS (SELECT event_type, " +
-      "(epoch_us(ts) - epoch_us(TIMESTAMP '2000-01-01')) // 3600000000 AS t, " +
-      "CAST(sum(CAST(CAST(value AS DECIMAL(18,6)) * 1000000 AS BIGINT)) " +
-      "AS BIGINT) AS v FROM events GROUP BY event_type, t), " +
+    "q_ts_mannkendall" -> (s"WITH h AS ($hourlyOracle), " +
       "ss AS (SELECT a.event_type, " +
       "CAST(sum(CAST(sign(b.v - a.v) AS BIGINT)) AS BIGINT) AS s_stat " +
       "FROM h a JOIN h b ON a.event_type = b.event_type AND b.t > a.t " +
@@ -585,48 +567,25 @@ object TimeSeries extends QueryFamily {
 
     // identical hourly grid, identical lower-median rank picks, all
     // integers — no float boundary at all
-    "q_ts_mad" -> ("WITH h AS (SELECT event_type, " +
-      "(epoch_us(ts) - epoch_us(TIMESTAMP '2000-01-01')) // 3600000000 AS t, " +
-      "CAST(sum(CAST(CAST(value AS DECIMAL(18,6)) * 1000000 AS BIGINT)) " +
-      "AS BIGINT) AS v FROM events GROUP BY event_type, t), " +
-      "rk AS (SELECT event_type, v, " +
-      "CAST(row_number() OVER (PARTITION BY event_type ORDER BY v) AS BIGINT) AS rn, " +
-      "CAST(count(*) OVER (PARTITION BY event_type) AS BIGINT) AS m FROM h), " +
+    "q_ts_mad" -> (s"WITH h AS ($hourlyOracle), " +
+      s"rk AS (${rankOracle("event_type, v", "v", "m", "h")}), " +
       "md AS (SELECT event_type, v AS med, m AS n_hours FROM rk " +
       "WHERE rn = (m + 1) // 2), " +
       "dv AS (SELECT h.event_type, md.n_hours, md.med, abs(h.v - md.med) AS d " +
       "FROM h JOIN md ON h.event_type = md.event_type), " +
-      "rk2 AS (SELECT event_type, n_hours, med, d, " +
-      "CAST(row_number() OVER (PARTITION BY event_type ORDER BY d) AS BIGINT) AS rn, " +
-      "CAST(count(*) OVER (PARTITION BY event_type) AS BIGINT) AS m FROM dv) " +
+      s"rk2 AS (${rankOracle("event_type, n_hours, med, d", "d", "m", "dv")}) " +
       "SELECT event_type, n_hours, med AS median_micros, d AS mad_micros " +
       "FROM rk2 WHERE rn = (m + 1) // 2 ORDER BY event_type"),
 
     // identical hourly grid, identical per-ENDPOINT md5 bucket +
     // (bka+bkb) mod 4 pair rule, identical integer slope + rank pick
-    "q_ts_theilsen_sampled" -> ("WITH h AS (SELECT event_type, t, v, " +
-      "CAST(concat('0x', substr(md5(concat(event_type, ':', " +
-      "CAST(t AS VARCHAR))), 1, 15)) AS BIGINT) % 4 AS bk FROM " +
-      "(SELECT event_type, " +
-      "(epoch_us(ts) - epoch_us(TIMESTAMP '2000-01-01')) // 3600000000 AS t, " +
-      "CAST(sum(CAST(CAST(value AS DECIMAL(18,6)) * 1000000 AS BIGINT)) " +
-      "AS BIGINT) AS v FROM events GROUP BY event_type, t)), " +
-      "m AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n_hours " +
-      "FROM h GROUP BY event_type), " +
-      "sl AS (SELECT a.event_type, " +
-      "(b.v - a.v) * 1000000 // (b.t - a.t) AS slope " +
-      "FROM h a JOIN h b ON a.event_type = b.event_type AND b.t > a.t " +
-      "WHERE (a.bk + b.bk) % 4 = 0), " +
-      "rk AS (SELECT event_type, slope, " +
-      "CAST(row_number() OVER (PARTITION BY event_type ORDER BY slope) " +
-      "AS BIGINT) AS rn, " +
-      "CAST(count(*) OVER (PARTITION BY event_type) AS BIGINT) AS mm " +
-      "FROM sl) " +
-      "SELECT rk.event_type, m.n_hours, " +
+    "q_ts_theilsen_sampled" -> theilSenOracle(
+      "SELECT event_type, t, v, " +
+        "CAST(concat('0x', substr(md5(concat(event_type, ':', " +
+        s"CAST(t AS VARCHAR))), 1, 15)) AS BIGINT) % 4 AS bk FROM ($hourlyOracle)",
+      " WHERE (a.bk + b.bk) % 4 = 0",
       "m.n_hours * (m.n_hours - 1) // 2 AS n_pairs_exact, " +
-      "rk.mm AS n_pairs_sampled, rk.slope AS theil_sampled_micros " +
-      "FROM rk JOIN m ON rk.event_type = m.event_type " +
-      "WHERE rn = (mm + 1) // 2 ORDER BY rk.event_type"),
+        "rk.mm AS n_pairs_sampled, rk.slope AS theil_sampled_micros"),
 
     "q_ts_cohort" -> ("""
       WITH ev AS (SELECT user_id, CAST(date_trunc('week', ts) AS TIMESTAMP) AS wk FROM events),

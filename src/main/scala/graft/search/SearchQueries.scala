@@ -1,6 +1,5 @@
 package graft.search
 
-
 import graft.{Artifacts, QueryFamily, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -40,17 +39,26 @@ object SearchQueries extends QueryFamily {
       root
     }
 
+  /** The standard three-term query of the BM25 keys. */
+  private val bm25Terms = Seq("spark", "merge", "window")
+
+  /** DuckDB's tokenized corpus CTE `d` (doc_id, t), rows kept by `filter`. */
+  private def corpusCte(filter: String = ""): String =
+    s"d AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents$filter)"
+
   /** The BM25 oracle's CTE chain through per-(doc, term) scores `sc` —
-    * shared by q_search_bm25 (the plain top-20) and q_search_hybrid
-    * (the RRF text leg), so the two cannot drift. */
-  private val bm25OracleCtes: String =
-    "d AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents), " +
+    * shared by every BM25 key's oracle, so they cannot drift. `docFilter`
+    * restricts the corpus, `terms` is the IN operand that picks the
+    * query terms, and `termCtes` defines any CTE that operand reads. */
+  private def bm25OracleCtes(docFilter: String = "",
+      terms: String = "'spark', 'merge', 'window'", termCtes: String = ""): String =
+    corpusCte(docFilter) + ", " +
     "ds AS (SELECT doc_id, CAST(len(t) AS BIGINT) AS dl FROM d), " +
     "g AS (SELECT CAST(count(*) AS BIGINT) AS n_docs, " +
     "CAST(sum(dl) AS BIGINT) AS total_tokens FROM ds), " +
-    "tk AS (SELECT doc_id, unnest(t) AS tok FROM d), " +
+    "tk AS (SELECT doc_id, unnest(t) AS tok FROM d), " + termCtes +
     "post AS (SELECT tok, doc_id, CAST(count(*) AS BIGINT) AS tf FROM tk " +
-    "WHERE tok IN ('spark', 'merge', 'window') GROUP BY 1, 2), " +
+    s"WHERE tok IN ($terms) GROUP BY 1, 2), " +
     "lex AS (SELECT tok, CAST(count(*) AS BIGINT) AS df FROM post GROUP BY tok), " +
     "sc AS (SELECT p.doc_id, CAST(floor(((((CAST(g.n_docs AS DOUBLE) - " +
     "CAST(l.df AS DOUBLE)) + 0.5) / (CAST(l.df AS DOUBLE) + 0.5)) * " +
@@ -60,6 +68,41 @@ object SearchQueries extends QueryFamily {
     "* 1000000.0) AS BIGINT) AS s_micros " +
     "FROM post p JOIN ds USING (doc_id) CROSS JOIN g " +
     "JOIN lex l ON p.tok = l.tok)"
+
+  /** Per-doc BM25 totals over `sc`, before any filter or GROUP BY. */
+  private val bm25ScoresOracle = "SELECT doc_id, CAST(count(*) AS BIGINT) AS n_terms, " +
+    "CAST(sum(s_micros) AS BIGINT) AS score_micros FROM sc "
+
+  /** DuckDB's term-match recompute: per doc the count of matched terms
+    * and their tf sum, for tokens passing `pred`. */
+  private def termMatchOracle(pred: String, having: String = ""): String =
+    s"WITH ${corpusCte()}, " +
+      "tk AS (SELECT doc_id, unnest(t) AS tok FROM d), " +
+      "post AS (SELECT doc_id, tok, CAST(count(*) AS BIGINT) AS tf FROM tk " +
+      s"WHERE $pred GROUP BY 1, 2) " +
+      "SELECT doc_id, CAST(count(*) AS BIGINT) AS n_terms, " +
+      "CAST(sum(tf) AS BIGINT) AS tf_sum FROM post " +
+      s"GROUP BY doc_id ${having}ORDER BY doc_id"
+
+  /** DuckDB's phrase recompute: per doc the positions where `words`
+    * (two or more) occur in a row, from the raw split. */
+  private def phraseOracle(words: Seq[String]): String = {
+    val last = if (words.length == 2) "len(t)" else s"len(t) - ${words.length - 2}"
+    val at = words.zipWithIndex.map {
+      case (w, 0) => s"t[i] = '$w'"
+      case (w, j) => s"t[i + $j] = '$w'"
+    }
+    s"WITH ${corpusCte()} " +
+      "SELECT doc_id, CAST(count(*) AS BIGINT) AS n_occurrences " +
+      s"FROM d, UNNEST(range(1, $last)) AS u(i) " +
+      s"WHERE ${at.mkString(" AND ")} " +
+      "GROUP BY doc_id ORDER BY doc_id"
+  }
+
+  /** Serves `q` from the shared base index, requiring that its plan
+    * never reads the corpus. */
+  private def served(s: SparkSession, dir: String)(q: String => DataFrame): DataFrame =
+    fromIndexOnly(q(sharedIndex(s, dir)))
 
   private def fromIndexOnly(df: DataFrame): DataFrame = {
     val plan = df.queryExecution.executedPlan.toString
@@ -72,22 +115,17 @@ object SearchQueries extends QueryFamily {
     // Build the index, then serve the lexicon head (top-30 tokens by
     // document frequency) from the published meta version — the "what's
     // in this index" operational query.
-    "q_search_index" -> ((s, dir) => {
-      val root = sharedIndex(s, dir)
-      fromIndexOnly(InvertedIndex.lexicon(s, root)
+    "q_search_index" -> ((s, dir) => served(s, dir)(root =>
+      InvertedIndex.lexicon(s, root)
         .orderBy(col("df").desc, col("tok"))
         .limit(30)
-        .select("tok", "df", "tf_total"))
-    }),
+        .select("tok", "df", "tf_total"))),
 
     // BM25 ranked retrieval (rational-idf profile — see InvertedIndex
     // scaladoc for the bit-reproducibility argument) for a 3-term OR
     // query, top-20 docs with integer micro-scores.
-    "q_search_bm25" -> ((s, dir) => {
-      val root = sharedIndex(s, dir)
-      fromIndexOnly(
-        InvertedIndex.bm25(s, root, Seq("spark", "merge", "window"), 20))
-    }),
+    "q_search_bm25" -> ((s, dir) =>
+      served(s, dir)(InvertedIndex.bm25(s, _, bm25Terms, 20))),
 
     // HYBRID retrieval — Reciprocal Rank Fusion (Cormack et al. 2009,
     // the published fusion behind every modern lexical+vector serving
@@ -104,7 +142,7 @@ object SearchQueries extends QueryFamily {
       graft.functions.VecDot.register(s)
       val root = sharedIndex(s, dir)
       val wBm = org.apache.spark.sql.expressions.Window.orderBy(col("score_micros").desc, col("doc_id"))
-      val bm = InvertedIndex.bm25(s, root, Seq("spark", "merge", "window"), 20)
+      val bm = InvertedIndex.bm25(s, root, bm25Terms, 20)
         .select(col("doc_id"), row_number().over(wBm).cast("long").as("bm25_rank"))
       val e = Tables(s, dir, "embeddings").select(col("vec_id"),
         transform(col("embedding"), x => x.cast("double")).as("v"))
@@ -131,27 +169,19 @@ object SearchQueries extends QueryFamily {
 
     // Positional phrase query "merge batch": adjacent-position counts per
     // doc from the postings alone — the corpus text is never re-read.
-    "q_search_phrase" -> ((s, dir) => {
-      val root = sharedIndex(s, dir)
-      fromIndexOnly(InvertedIndex.phrase(s, root, "merge", "batch"))
-    }),
+    "q_search_phrase" -> ((s, dir) =>
+      served(s, dir)(InvertedIndex.phrase(s, _, "merge", "batch"))),
 
     // Three-word phrase "slow hash batch" via the shift-and-count shape
     // (one scan + one aggregation, no per-term self-joins) — the
     // arbitrary-length ES match_phrase, index-only.
-    "q_search_phrase3" -> ((s, dir) => {
-      val root = sharedIndex(s, dir)
-      fromIndexOnly(
-        InvertedIndex.phraseN(s, root, Seq("slow", "hash", "batch")))
-    }),
+    "q_search_phrase3" -> ((s, dir) =>
+      served(s, dir)(InvertedIndex.phraseN(s, _, Seq("slow", "hash", "batch")))),
 
     // Conjunctive retrieval: docs containing ALL THREE terms, served
     // from one term-pruned postings aggregation (no per-term self-join).
-    "q_search_and" -> ((s, dir) => {
-      val root = sharedIndex(s, dir)
-      fromIndexOnly(
-        InvertedIndex.conjunctive(s, root, Seq("spark", "merge", "window")))
-    }),
+    "q_search_and" -> ((s, dir) =>
+      served(s, dir)(InvertedIndex.conjunctive(s, _, bm25Terms))),
 
     // ES terms AGGREGATIONS (facets) over the FULL match set — the
     // analytics half of every search product: hits for one term come
@@ -183,14 +213,11 @@ object SearchQueries extends QueryFamily {
     // at 100 TB this is a broadcast-sized scan however big the corpus.
     // Distinct from q_search_wildcard, which expands the prefix and then
     // retrieves DOCUMENTS; suggest serves the completions themselves.
-    "q_search_suggest" -> ((s, dir) => {
-      val root = sharedIndex(s, dir)
-      fromIndexOnly(
-        InvertedIndex.lexicon(s, root)
-          .where(col("tok").startsWith("s"))
-          .select(col("tok"), col("df"))
-          .orderBy(col("df").desc, col("tok")).limit(5))
-    }),
+    "q_search_suggest" -> ((s, dir) => served(s, dir)(root =>
+      InvertedIndex.lexicon(s, root)
+        .where(col("tok").startsWith("s"))
+        .select(col("tok"), col("df"))
+        .orderBy(col("df").desc, col("tok")).limit(5))),
 
     // HIGHLIGHTING — the serve-side snippet render: the index's
     // positional postings answer WHERE each hit's first match sits
@@ -215,40 +242,32 @@ object SearchQueries extends QueryFamily {
     // Prefix wildcard "s*": capped term expansion against the lexicon
     // (6 fixture terms), then one term-pruned postings aggregation —
     // the Lucene rewrite model, served from the index alone.
-    "q_search_wildcard" -> ((s, dir) => {
-      val root = sharedIndex(s, dir)
-      fromIndexOnly(InvertedIndex.wildcard(s, root, "s"))
-    }),
+    "q_search_wildcard" -> ((s, dir) =>
+      served(s, dir)(InvertedIndex.wildcard(s, _, "s"))),
 
     // Deep pagination (ES search_after): page 2 of the standard BM25
     // query — the in-query cursor is page 1's last (score, doc_id),
     // read back as a 1-row stats job; the served page must equal the
     // full ranking's ranks 11-20 (the oracle recomputes exactly that),
     // certifying the cursor predicate against the total order.
-    "q_search_after" -> ((s, dir) => {
-      val root = sharedIndex(s, dir)
-      val terms = Seq("spark", "merge", "window")
-      val cursor = InvertedIndex.bm25(s, root, terms, 10)
+    "q_search_after" -> ((s, dir) => served(s, dir) { root =>
+      val cursor = InvertedIndex.bm25(s, root, bm25Terms, 10)
         .select("score_micros", "doc_id").collect().last
-      fromIndexOnly(InvertedIndex.searchAfter(s, root, terms, 10,
-        afterScore = cursor.getLong(0), afterDoc = cursor.getLong(1)))
+      InvertedIndex.searchAfter(s, root, bm25Terms, 10,
+        afterScore = cursor.getLong(0), afterDoc = cursor.getLong(1))
     }),
 
     // More-like-this for doc 42: its top-3 terms by tf become an OR
     // query, BM25-ranked with the source doc excluded — the ES
     // `more_like_this` serve path, index-only.
-    "q_search_mlt" -> ((s, dir) => {
-      val root = sharedIndex(s, dir)
-      fromIndexOnly(InvertedIndex.moreLikeThis(s, root, 42L))
-    }),
+    "q_search_mlt" -> ((s, dir) =>
+      served(s, dir)(InvertedIndex.moreLikeThis(s, _, 42L))),
 
     // Fuzzy query 'part'~2: Levenshtein expansion against the lexicon
     // (fixture: part, fast, sort, spark), then the same term-pruned
     // postings aggregation — the ES `fuzziness` clause, index-only.
-    "q_search_fuzzy" -> ((s, dir) => {
-      val root = sharedIndex(s, dir)
-      fromIndexOnly(InvertedIndex.fuzzy(s, root, "part", maxEdits = 2))
-    }),
+    "q_search_fuzzy" -> ((s, dir) =>
+      served(s, dir)(InvertedIndex.fuzzy(s, _, "part", maxEdits = 2))),
 
     // Tombstone deletion, stats-exact: delete every 5th doc, then serve
     // BM25 — scores must equal a from-scratch index of the surviving
@@ -259,8 +278,7 @@ object SearchQueries extends QueryFamily {
       val d = docs(s, dir)
       InvertedIndex.build(s, root, d)
       InvertedIndex.delete(s, root, d.where("doc_id % 5 = 0").select("doc_id"))
-      fromIndexOnly(
-        InvertedIndex.bm25(s, root, Seq("spark", "merge", "window"), 20))
+      fromIndexOnly(InvertedIndex.bm25(s, root, bm25Terms, 20))
     }),
 
     // The segment model under ingest: three disjoint deltas appended as
@@ -301,16 +319,14 @@ object SearchQueries extends QueryFamily {
     // identical IEEE op sequence as InvertedIndex.bm25 — see its scaladoc;
     // every parenthesis mirrors the Column expression
     "q_search_bm25" ->
-      (s"WITH $bm25OracleCtes " +
-        "SELECT doc_id, CAST(count(*) AS BIGINT) AS n_terms, " +
-        "CAST(sum(s_micros) AS BIGINT) AS score_micros " +
-        "FROM sc GROUP BY doc_id ORDER BY score_micros DESC, doc_id LIMIT 20"),
+      (s"WITH ${bm25OracleCtes()} $bm25ScoresOracle" +
+        "GROUP BY doc_id ORDER BY score_micros DESC, doc_id LIMIT 20"),
 
     // the identical BM25 chain cut to a ranked top-20, the identical
     // cosine ranking (round(·,4) + id), and the published RRF fold as
     // exact integers
     "q_search_hybrid" ->
-      (s"WITH $bm25OracleCtes, " +
+      (s"WITH ${bm25OracleCtes()}, " +
         "bm20 AS (SELECT doc_id, CAST(sum(s_micros) AS BIGINT) AS score_micros " +
         "FROM sc GROUP BY doc_id ORDER BY score_micros DESC, doc_id LIMIT 20), " +
         "bmrk AS (SELECT doc_id, CAST(row_number() OVER " +
@@ -332,13 +348,7 @@ object SearchQueries extends QueryFamily {
         "ORDER BY rrf_micros DESC, doc_id LIMIT 10"),
 
     "q_search_and" ->
-      ("WITH d AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents), " +
-        "tk AS (SELECT doc_id, unnest(t) AS tok FROM d), " +
-        "post AS (SELECT doc_id, tok, CAST(count(*) AS BIGINT) AS tf FROM tk " +
-        "WHERE tok IN ('spark', 'merge', 'window') GROUP BY 1, 2) " +
-        "SELECT doc_id, CAST(count(*) AS BIGINT) AS n_terms, " +
-        "CAST(sum(tf) AS BIGINT) AS tf_sum FROM post " +
-        "GROUP BY doc_id HAVING count(*) = 3 ORDER BY doc_id"),
+      termMatchOracle("tok IN ('spark', 'merge', 'window')", "HAVING count(*) = 3 "),
 
     // df recomputed from the raw text; same (df DESC, tok) cut
     "q_search_suggest" ->
@@ -371,37 +381,13 @@ object SearchQueries extends QueryFamily {
         "SELECT facet, val, CAST(n AS BIGINT) AS n_docs FROM u " +
         "ORDER BY facet, val"),
 
-    "q_search_wildcard" ->
-      ("WITH d AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents), " +
-        "tk AS (SELECT doc_id, unnest(t) AS tok FROM d), " +
-        "post AS (SELECT doc_id, tok, CAST(count(*) AS BIGINT) AS tf FROM tk " +
-        "WHERE tok LIKE 's%' GROUP BY 1, 2) " +
-        "SELECT doc_id, CAST(count(*) AS BIGINT) AS n_terms, " +
-        "CAST(sum(tf) AS BIGINT) AS tf_sum FROM post " +
-        "GROUP BY doc_id ORDER BY doc_id"),
+    "q_search_wildcard" -> termMatchOracle("tok LIKE 's%'"),
 
     // the full-ranking recompute cut at ranks 11-20 — equal to the
     // engine's cursor-filtered page because (score, doc_id) totals
     "q_search_after" ->
-      ("WITH d AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents), " +
-        "ds AS (SELECT doc_id, CAST(len(t) AS BIGINT) AS dl FROM d), " +
-        "g AS (SELECT CAST(count(*) AS BIGINT) AS n_docs, " +
-        "CAST(sum(dl) AS BIGINT) AS total_tokens FROM ds), " +
-        "tk AS (SELECT doc_id, unnest(t) AS tok FROM d), " +
-        "post AS (SELECT tok, doc_id, CAST(count(*) AS BIGINT) AS tf FROM tk " +
-        "WHERE tok IN ('spark', 'merge', 'window') GROUP BY 1, 2), " +
-        "lex AS (SELECT tok, CAST(count(*) AS BIGINT) AS df FROM post GROUP BY tok), " +
-        "sc AS (SELECT p.doc_id, CAST(floor(((((CAST(g.n_docs AS DOUBLE) - " +
-        "CAST(l.df AS DOUBLE)) + 0.5) / (CAST(l.df AS DOUBLE) + 0.5)) * " +
-        "((CAST(p.tf AS DOUBLE) * 2.2) / (CAST(p.tf AS DOUBLE) + 1.2 * " +
-        "(0.25 + (0.75 * CAST(ds.dl AS DOUBLE)) / " +
-        "(CAST(g.total_tokens AS DOUBLE) / CAST(g.n_docs AS DOUBLE)))))) " +
-        "* 1000000.0) AS BIGINT) AS s_micros " +
-        "FROM post p JOIN ds USING (doc_id) CROSS JOIN g " +
-        "JOIN lex l ON p.tok = l.tok), " +
-        "agg AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_terms, " +
-        "CAST(sum(s_micros) AS BIGINT) AS score_micros " +
-        "FROM sc GROUP BY doc_id), " +
+      (s"WITH ${bm25OracleCtes()}, " +
+        s"agg AS ($bm25ScoresOracle" + "GROUP BY doc_id), " +
         "rk AS (SELECT *, row_number() OVER " +
         "(ORDER BY score_micros DESC, doc_id) AS rn FROM agg) " +
         "SELECT doc_id, n_terms, score_micros FROM rk " +
@@ -412,81 +398,29 @@ object SearchQueries extends QueryFamily {
     // excluded; excluding one doc from a top-k commutes with cutting
     // top-(k+1) first, so both engines compute exclude-then-top-k
     "q_search_mlt" ->
-      ("WITH d AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents), " +
-        "ds AS (SELECT doc_id, CAST(len(t) AS BIGINT) AS dl FROM d), " +
-        "g AS (SELECT CAST(count(*) AS BIGINT) AS n_docs, " +
-        "CAST(sum(dl) AS BIGINT) AS total_tokens FROM ds), " +
-        "tk AS (SELECT doc_id, unnest(t) AS tok FROM d), " +
-        "qt AS (SELECT tok FROM (SELECT tok, count(*) AS qtf FROM tk " +
-        "WHERE doc_id = 42 GROUP BY tok ORDER BY qtf DESC, tok LIMIT 3)), " +
-        "post AS (SELECT tok, doc_id, CAST(count(*) AS BIGINT) AS tf FROM tk " +
-        "WHERE tok IN (SELECT tok FROM qt) GROUP BY 1, 2), " +
-        "lex AS (SELECT tok, CAST(count(*) AS BIGINT) AS df FROM post GROUP BY tok), " +
-        "sc AS (SELECT p.doc_id, CAST(floor(((((CAST(g.n_docs AS DOUBLE) - " +
-        "CAST(l.df AS DOUBLE)) + 0.5) / (CAST(l.df AS DOUBLE) + 0.5)) * " +
-        "((CAST(p.tf AS DOUBLE) * 2.2) / (CAST(p.tf AS DOUBLE) + 1.2 * " +
-        "(0.25 + (0.75 * CAST(ds.dl AS DOUBLE)) / " +
-        "(CAST(g.total_tokens AS DOUBLE) / CAST(g.n_docs AS DOUBLE)))))) " +
-        "* 1000000.0) AS BIGINT) AS s_micros " +
-        "FROM post p JOIN ds USING (doc_id) CROSS JOIN g " +
-        "JOIN lex l ON p.tok = l.tok) " +
-        "SELECT doc_id, CAST(count(*) AS BIGINT) AS n_terms, " +
-        "CAST(sum(s_micros) AS BIGINT) AS score_micros " +
-        "FROM sc WHERE doc_id <> 42 GROUP BY doc_id " +
+      ("WITH " + bm25OracleCtes(terms = "SELECT tok FROM qt",
+        termCtes = "qt AS (SELECT tok FROM (SELECT tok, count(*) AS qtf FROM tk " +
+          "WHERE doc_id = 42 GROUP BY tok ORDER BY qtf DESC, tok LIMIT 3)), ") +
+        s" ${bm25ScoresOracle}WHERE doc_id <> 42 GROUP BY doc_id " +
         "ORDER BY score_micros DESC, doc_id LIMIT 10"),
 
     // same IN-set the engine expands to — the oracle recomputes the
     // expansion itself via DuckDB's levenshtein (identical classic
     // edit-distance semantics, no transpositions, in both engines)
-    "q_search_fuzzy" ->
-      ("WITH d AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents), " +
-        "tk AS (SELECT doc_id, unnest(t) AS tok FROM d), " +
-        "post AS (SELECT doc_id, tok, CAST(count(*) AS BIGINT) AS tf FROM tk " +
-        "WHERE levenshtein(tok, 'part') <= 2 GROUP BY 1, 2) " +
-        "SELECT doc_id, CAST(count(*) AS BIGINT) AS n_terms, " +
-        "CAST(sum(tf) AS BIGINT) AS tf_sum FROM post " +
-        "GROUP BY doc_id ORDER BY doc_id"),
+    "q_search_fuzzy" -> termMatchOracle("levenshtein(tok, 'part') <= 2"),
 
     // the q_search_bm25 oracle restricted to the surviving corpus — a
     // from-scratch recompute the tombstoned index must equal exactly
     "q_search_delete" ->
-      ("WITH d AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents " +
-        "WHERE doc_id % 5 <> 0), " +
-        "ds AS (SELECT doc_id, CAST(len(t) AS BIGINT) AS dl FROM d), " +
-        "g AS (SELECT CAST(count(*) AS BIGINT) AS n_docs, " +
-        "CAST(sum(dl) AS BIGINT) AS total_tokens FROM ds), " +
-        "tk AS (SELECT doc_id, unnest(t) AS tok FROM d), " +
-        "post AS (SELECT tok, doc_id, CAST(count(*) AS BIGINT) AS tf FROM tk " +
-        "WHERE tok IN ('spark', 'merge', 'window') GROUP BY 1, 2), " +
-        "lex AS (SELECT tok, CAST(count(*) AS BIGINT) AS df FROM post GROUP BY tok), " +
-        "sc AS (SELECT p.doc_id, CAST(floor(((((CAST(g.n_docs AS DOUBLE) - " +
-        "CAST(l.df AS DOUBLE)) + 0.5) / (CAST(l.df AS DOUBLE) + 0.5)) * " +
-        "((CAST(p.tf AS DOUBLE) * 2.2) / (CAST(p.tf AS DOUBLE) + 1.2 * " +
-        "(0.25 + (0.75 * CAST(ds.dl AS DOUBLE)) / " +
-        "(CAST(g.total_tokens AS DOUBLE) / CAST(g.n_docs AS DOUBLE)))))) " +
-        "* 1000000.0) AS BIGINT) AS s_micros " +
-        "FROM post p JOIN ds USING (doc_id) CROSS JOIN g " +
-        "JOIN lex l ON p.tok = l.tok) " +
-        "SELECT doc_id, CAST(count(*) AS BIGINT) AS n_terms, " +
-        "CAST(sum(s_micros) AS BIGINT) AS score_micros " +
-        "FROM sc GROUP BY doc_id ORDER BY score_micros DESC, doc_id LIMIT 20"),
+      (s"WITH ${bm25OracleCtes(docFilter = " WHERE doc_id % 5 <> 0")} $bm25ScoresOracle" +
+        "GROUP BY doc_id ORDER BY score_micros DESC, doc_id LIMIT 20"),
 
-    "q_search_phrase3" ->
-      ("WITH d AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents) " +
-        "SELECT doc_id, CAST(count(*) AS BIGINT) AS n_occurrences " +
-        "FROM d, UNNEST(range(1, len(t) - 1)) AS u(i) " +
-        "WHERE t[i] = 'slow' AND t[i + 1] = 'hash' AND t[i + 2] = 'batch' " +
-        "GROUP BY doc_id ORDER BY doc_id"),
+    "q_search_phrase3" -> phraseOracle(Seq("slow", "hash", "batch")),
 
-    "q_search_phrase" ->
-      ("WITH d AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents) " +
-        "SELECT doc_id, CAST(count(*) AS BIGINT) AS n_occurrences " +
-        "FROM d, UNNEST(range(1, len(t))) AS u(i) " +
-        "WHERE t[i] = 'merge' AND t[i + 1] = 'batch' " +
-        "GROUP BY doc_id ORDER BY doc_id"),
+    "q_search_phrase" -> phraseOracle(Seq("merge", "batch")),
 
     "q_search_incremental" ->
-      ("WITH d AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents), " +
+      (s"WITH ${corpusCte()}, " +
         "tk AS (SELECT doc_id, unnest(t) AS tok FROM d), " +
         "lex AS (SELECT tok, CAST(count(DISTINCT doc_id) AS BIGINT) AS df, " +
         "CAST(count(*) AS BIGINT) AS tf_total FROM tk GROUP BY tok), " +

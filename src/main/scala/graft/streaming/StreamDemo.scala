@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.Tables
+import graft.{GraftSession, Tables}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -32,6 +32,10 @@ object StreamDemo {
   case class SessionOut(user_id: Long, start_us: Long, end_us: Long, n: Int)
 
   private val gapUs = 30L * 60 * 1000000 // 30 minutes in microseconds
+
+  /** The RocksDB state store, set per query (the conf is read at start). */
+  private val rocksDbProvider = "spark.sql.streaming.stateStore.providerClass" ->
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
   /** Rewrite events as time-ordered parquet chunks so the stream has real
     * micro-batches that replay in event-time order — with out-of-order
@@ -99,11 +103,7 @@ object StreamDemo {
     */
   def windowedCounts(spark: SparkSession, workDir: String,
       rocksdb: Boolean = false): DataFrame = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    if (rocksdb) spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    GraftSession.withConfs(spark, (if (rocksdb) Seq(rocksDbProvider) else Nil): _*) {
       val name = if (rocksdb) "stream_windowed_rocksdb" else "stream_windowed"
       val q = source(spark, workDir)
         .withWatermark("ts", "1 hour")
@@ -113,8 +113,6 @@ object StreamDemo {
         .queryName(name).start()
       q.processAllAvailable(); q.stop()
       spark.table(name)
-    } finally if (rocksdb) {
-      prev.fold(spark.conf.unset(key))(v => spark.conf.set(key, v))
     }
   }
 
@@ -215,18 +213,14 @@ object StreamDemo {
         out.iterator
       }
     }
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    GraftSession.withConfs(spark, rocksDbProvider) {
       val q = ds.groupByKey(_.user_id)
         .transformWithState(new SessionProc, TimeMode.None(), OutputMode.Append())
         .writeStream.outputMode("append").format("memory")
         .queryName("stream_sessions_tws").start()
       q.processAllAvailable(); q.stop()
       spark.table("stream_sessions_tws").as[SessionOut]
-    } finally prev.fold(spark.conf.unset(key))(v => spark.conf.set(key, v))
+    }
   }
 
   /** True stream-STREAM interval join (the §2.J shape the stream-static

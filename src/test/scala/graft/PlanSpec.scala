@@ -665,6 +665,56 @@ class PlanSpec extends AnyFunSuite {
     assert("Scan parquet .*events".r.findAllIn(fin).size <= 4, fin.take(2500))
   }
 
+  /** The executed plan of a noop-sink write of `df`, as the write ran. */
+  private def noopWritePlan(df: org.apache.spark.sql.DataFrame): String = {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val plans = new java.util.concurrent.LinkedBlockingQueue[String]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan.toString)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      df.write.format("noop").mode("overwrite").save()
+      val p = plans.poll(60, java.util.concurrent.TimeUnit.SECONDS)
+      assert(p != null, "no plan reported for the noop write")
+      p
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  test("q_join_bloom keeps the bloom filter and the shuffle join under count() and a write") {
+    val df = SparkEntry.queries("q_join_bloom")(spark, sf0001)
+    // the confs the key scopes are restored by now: a derived count()
+    // and the sink write are planned under the session defaults
+    val counted = df.groupBy().count()
+    counted.collect()
+    val pc = counted.queryExecution.executedPlan.toString
+    assert(pc.contains("might_contain"), s"count() lost the bloom filter:\n${pc.take(3000)}")
+    assert(pc.contains("SortMergeJoin") && !pc.contains("BroadcastHashJoin"),
+      s"count() left the shuffle join:\n${pc.take(3000)}")
+    val pw = noopWritePlan(df)
+    assert(pw.contains("might_contain"), s"the write lost the bloom filter:\n${pw.take(3000)}")
+    assert(pw.contains("SortMergeJoin") && !pw.contains("BroadcastHashJoin"),
+      s"the write left the shuffle join:\n${pw.take(3000)}")
+  }
+
+  test("q_agg_footerstats answers a derived count() and a write from parquet footers") {
+    val df = SparkEntry.queries("q_agg_footerstats")(spark, sf0001)
+    val counted = df.groupBy().count()
+    counted.collect()
+    val pc = counted.queryExecution.executedPlan.toString
+    assert(pc.contains("PushedAggregation: [COUNT(*)"),
+      s"count() rescans orders:\n${pc.take(3000)}")
+    val ps = df.select("n_rows", "max_key").queryExecution.executedPlan.toString
+    assert(ps.contains("PushedAggregation: [COUNT(*)"),
+      s"a select rescans orders:\n${ps.take(3000)}")
+    val pw = noopWritePlan(df)
+    assert(pw.contains("PushedAggregation: [COUNT(*)"),
+      s"the write rescans orders:\n${pw.take(3000)}")
+  }
+
   test("q_agg_mannwhitney: the shared distributed-ECDF shape — no global value window") {
     val df = SparkEntry.queries("q_agg_mannwhitney")(spark, sf0001)
     df.collect()

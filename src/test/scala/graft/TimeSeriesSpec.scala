@@ -173,21 +173,65 @@ class TimeSeriesSpec extends AnyFunSuite {
   test("q_ts_theilsen: the exact O(n²) leg refuses a series past the ceiling") {
     // scale guard (r21): a 100 TB misuse of the exact leg must fail
     // loudly, not run forever — the sampled variant is the scale path.
-    // Lower the ceiling below the fixture's series length and expect the
-    // loud refusal; restore and expect the normal answer.
-    spark.conf.set("spark.graft.ts.theilsenExactMaxHours", "10")
-    try {
-      val e = intercept[Exception] {
-        SparkEntry.queries("q_ts_theilsen")(spark, sf0001).collect()
-      }
-      def messages(t: Throwable): Seq[String] =
-        if (t == null) Seq.empty
-        else Option(t.getMessage).toSeq ++ messages(t.getCause)
-      assert(messages(e).exists(m =>
-        m.contains("q_ts_theilsen") && m.contains("theilsen_sampled")),
-        s"expected the loud ceiling refusal, got: $e")
-    } finally spark.conf.unset("spark.graft.ts.theilsenExactMaxHours")
+    // Build the key with a ceiling below the fixture's series length and
+    // expect the loud refusal; the key itself gives the normal answer.
+    val e = intercept[Exception] {
+      operators.TimeSeries.theilSenExact(Tables(spark, sf0001, "events"), 10).collect()
+    }
+    def messages(t: Throwable): Seq[String] =
+      if (t == null) Seq.empty
+      else Option(t.getMessage).toSeq ++ messages(t.getCause)
+    assert(messages(e).exists(m =>
+      m.contains("q_ts_theilsen") && m.contains("theilsen_sampled")),
+      s"expected the loud ceiling refusal, got: $e")
     // default ceiling: untouched behavior
     assert(SparkEntry.queries("q_ts_theilsen")(spark, sf0001).collect().nonEmpty)
+  }
+
+  private def events(rows: Seq[(String, String, Double)]) = {
+    import spark.implicits._
+    rows.toDF("event_type", "ts", "value")
+      .selectExpr("event_type", "CAST(ts AS TIMESTAMP_NTZ) AS ts", "value")
+  }
+
+  test("lowerMedian picks the lower median for group sizes 1, 2 and 3 and under ties") {
+    import spark.implicits._
+    val groups = Map(
+      "one" -> Seq(7L),
+      "two" -> Seq(9L, 4L),
+      "three" -> Seq(5L, -2L, 8L),
+      "ties" -> Seq(3L, 1L, 3L, 3L, 1L, 2L),
+      "tied_pair" -> Seq(6L, 6L))
+    val df = groups.toSeq.flatMap { case (g, vs) => vs.map(v => (g, v)) }
+      .toDF("event_type", "v")
+    val got = operators.TimeSeries.lowerMedian(df, "v").collect()
+      .map(r => r.getAs[String]("event_type") -> (r.getAs[Long]("v"), r.getAs[Long]("m")))
+    // exactly one row per group: the rank pick never keeps a tied twin
+    assert(got.length == groups.size, got.mkString(", "))
+    groups.foreach { case (g, vs) =>
+      val sorted = vs.sorted
+      val expect = sorted((sorted.length + 1) / 2 - 1)
+      assert(got.toMap.apply(g) == ((expect, vs.length.toLong)), s"group $g")
+    }
+    // a renamed size column, as q_ts_mad's second pick uses
+    val named = operators.TimeSeries.lowerMedian(df, "v", size = "m2")
+    assert(named.columns.contains("m2") && !named.columns.contains("m"))
+  }
+
+  test("hourlySeries sums exact micro-units per hour and skips an empty hour") {
+    val ev = events(Seq(
+      ("click", "2000-01-01 00:10:00", 1.5),
+      ("click", "2000-01-01 00:50:00", 0.25),
+      // hour 1 has no event
+      ("click", "2000-01-01 02:00:00", 2.000001),
+      ("click", "2000-01-01 02:59:59", -1.0),
+      ("view", "2000-01-02 00:00:00", 3.0)))
+    val got = operators.TimeSeries.hourlySeries(ev).collect()
+      .map(r => (r.getAs[String]("event_type"), r.getAs[Long]("t"), r.getAs[Long]("v")))
+      .sorted.toSeq
+    assert(got == Seq(
+      ("click", 0L, 1750000L),
+      ("click", 2L, 1000001L),
+      ("view", 24L, 3000000L)), got.mkString(", "))
   }
 }
