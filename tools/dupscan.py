@@ -8,9 +8,10 @@ and lines of 12 characters or fewer are skipped before windows are
 formed. A high count marks a kernel written out more than once, a
 candidate for stating it once.
 
-Usage: python3 tools/dupscan.py [root] [--all]
-  root   source root (default: src/main/scala next to this script)
-  --all  also print files with a count of 0
+Usage: python3 tools/dupscan.py [root]
+  root  source root (default: src/main/scala next to this script)
+
+Files with a count of 0 are not printed; the last line is the total.
 """
 import os
 import sys
@@ -42,10 +43,8 @@ def dup_lines(lines, width=3):
 
 
 def main(argv):
-    show_all = "--all" in argv
-    args = [a for a in argv if a != "--all"]
     here = os.path.dirname(os.path.abspath(__file__))
-    root = args[0] if args else os.path.join(here, "..", "src", "main", "scala")
+    root = argv[0] if argv else os.path.join(here, "..", "src", "main", "scala")
     rows = []
     for d, _, files in os.walk(root):
         for name in files:
@@ -56,7 +55,7 @@ def main(argv):
     total = 0
     for n, rel in rows:
         total += n
-        if n or show_all:
+        if n:
             print(f"{n:6d}  {rel}")
     print(f"{total:6d}  total")
 
