@@ -71,9 +71,14 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // Domain optimizer rule: size-ratio prefilter ahead of the fused
     // Jaccard merge (see JaccardSizePrefilter's scaladoc).
     ext.injectOptimizerRule(_ => graft.plans.JaccardSizePrefilter)
-    // Whole-operator extension: the native as-of join's planner strategy
-    // (graft.plans.AsOfJoin logical node -> AsOfJoinExec).
+    // A runtime bloom probe copied onto its own creation side always
+    // passes; drop it (see RedundantBloomProbe's scaladoc).
+    ext.injectOptimizerRule(_ => graft.plans.RedundantBloomProbe)
+    // Whole-operator extensions: the native as-of join's and interval
+    // overlap's planner strategies (graft.plans.AsOfJoin logical node ->
+    // AsOfJoinExec; graft.plans.IntervalOverlap -> IntervalOverlapExec).
     ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
+    ext.injectPlannerStrategy(_ => graft.plans.IntervalOverlapStrategy)
     // Materialized-view routing: aggregates over a registered view
     // source answer from the O(keyspace) state table. Analysis-time —
     // after pruning the source shape no longer matches (ViewRewrite doc).

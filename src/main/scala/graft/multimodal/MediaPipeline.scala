@@ -772,7 +772,7 @@ object MediaPipeline {
     * (band, value) bucket and candidate volume there is n²). The bucket
     * join is a plain equi-join, so the production answer is AQE's
     * skew-join split — SkewSpec pins skew=true firing on a synthetic hot
-    * band with pair counts unchanged (the q_join_interval precedent). */
+    * band with pair counts unchanged. */
   private[graft] def bandedHammingPairs(hashed: DataFrame, radius: Int = 4,
       meta: Seq[String] = Seq("w", "h"), hi: String = "ahash_hi",
       lo: String = "ahash_lo"): DataFrame = {

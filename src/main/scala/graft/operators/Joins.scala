@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{Dets, GraftSession, QueryFamily, Tables}
+import graft.plans.IntervalOverlap
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.expressions.Window
@@ -188,16 +189,13 @@ object Joins extends QueryFamily {
     // sessions (the same session_window q_stream_session serves)
     // overlap-joined against OTHER users' sessions (half-open
     // a_start < b_end AND b_start < a_end) — "who was online together",
-    // served as per-user-pair concurrent-session counts. Scale recipe:
-    // both interval sets explode into their HOUR buckets and equi-join
-    // on the bucket (candidate volume is Σ n_bucket², so the bucket
-    // granularity should track interval LENGTH — day buckets read 10.8s
-    // at sf0.1, hour buckets ~1s); a pair colliding in several buckets
-    // is counted ONCE by the ownership rule — only the bucket containing
-    // greatest(a_start, b_start), the overlap's own start, reports it —
-    // so there is no DISTINCT shuffle at all, just a map-side filter
-    // into the final count. The unbounded theta join this replaces
-    // pairs every session with every session before filtering.
+    // served as per-user-pair concurrent-session counts. The pairing is
+    // the native sweep-line operator (plans.IntervalOverlap): one events
+    // scan and one sessionization, one stripe shuffle, and a per-stripe
+    // sweep whose work follows the overlap count, not the Σ n_bucket²
+    // candidates of an hour-bucket equi-join. Each pair is reported once
+    // (in the stripe of its later start), so no DISTINCT runs, and the
+    // key starts no job while it is built.
     "q_join_interval" -> ((s, dir) => {
       val sess = Tables(s, dir, "events")
         .groupBy(session_window(col("ts"), "30 minutes").as("w"), col("user_id"))
@@ -400,53 +398,15 @@ object Joins extends QueryFamily {
     p.unionByName(c)
   }
 
-  /** The interval-overlap pair kernel behind q_join_interval, factored so
-    * SkewSpec can drive the SAME code path with a synthetic hot-hour
+  /** The interval-overlap pair counts behind q_join_interval, factored so
+    * SkewSpec can drive the same code path with a synthetic hot-hour
     * session set. Input: one interval per row (user_id, s_start, s_end);
     * output: per user-pair concurrent-interval counts (ua < ub, half-open
-    * overlap). Both sides explode into HOUR buckets and equi-join on the
-    * bucket; a pair colliding in several buckets is counted ONCE by the
-    * ownership rule — only the bucket containing greatest(a_start,
-    * b_start), the overlap's own start, reports it — so there is no
-    * DISTINCT shuffle, just a map-side filter into the final count.
-    * Skew story at 100×: the bucket key can go globally hot (one peak
-    * hour ⇒ n_bucket² candidates in one shuffle partition); the join is a
-    * plain equi-join, so AQE's skew-join split handles it — SkewSpec pins
-    * skew=true firing on this exact helper under test-lowered thresholds,
-    * with pair counts identical to the unsalted run. */
-  private[graft] def intervalOverlapPairs(sess: DataFrame): DataFrame = {
-    // The session table feeds BOTH self-join sides. Left declarative, the
-    // session construction (scan + shuffle + session-window sort) PLANS
-    // AND RUNS TWICE — ReuseExchange cannot dedupe the two subtrees
-    // because AQE puts one side under a BroadcastExchange at fixture size
-    // (r21 plan audit: 2 parquet scans, 2 exchanges, 2 session
-    // aggregates). Pin it once (§2.4 — compute a multiply-consumed heavy
-    // subtree once; measured 6.4-7.7 s → 4.6-5.7 s noop-sink at sf0.1).
-    // At 100 TB one session pass instead of two corpus-scale
-    // aggregations is also the right shape; passPinner upgrades to a
-    // reliable checkpoint under spark.graft.cluster.reliableCheckpoint.
-    val pinned = Dedup.passPinner(sess.sparkSession)(sess)
-    // Each side's FIRST bucket (date_trunc of its start) is computed once
-    // per session row, BEFORE the explode — the ownership test then runs
-    // per candidate pair as greatest() + equality over two precomputed
-    // timestamps. The inlined form, date_trunc('HOUR',
-    // greatest(a_start, b_start)) == bucket, re-ran the double
-    // precisetimestampconversion + truncation chain per CANDIDATE
-    // (Σ n_bucket² times, 6.5M at sf0.1 — r20 plan audit); identical by
-    // monotonicity: trunc(greatest(a,b)) == greatest(trunc(a), trunc(b)).
-    def bucketed(u: String, st: String, en: String, b0: String) = pinned
-      .select(col("user_id").as(u), col("s_start").as(st), col("s_end").as(en))
-      .withColumn(b0, expr(s"date_trunc('HOUR', $st)"))
-      .withColumn("bucket", explode(expr(
-        s"sequence($b0, date_trunc('HOUR', $en), INTERVAL 1 HOUR)")))
-    bucketed("ua", "a_start", "a_end", "ab0")
-      .join(bucketed("ub", "b_start", "b_end", "bb0"), "bucket")
-      .where(col("ua") < col("ub") &&
-        col("a_start") < col("b_end") && col("b_start") < col("a_end") &&
-        greatest(col("ab0"), col("bb0")) === col("bucket"))
+    * overlap), from the sweep's one row per overlapping pair. */
+  private[graft] def intervalOverlapPairs(sess: DataFrame): DataFrame =
+    IntervalOverlap.pairs(sess, "user_id", "s_start", "s_end")
       .groupBy("ua", "ub")
       .agg(count(lit(1)).as("n_concurrent"))
-  }
 
   /** DuckDB's backward as-of recompute: each event's best earlier order
     * by row_number over the LEFT join; `extra` adds inner columns and

@@ -295,17 +295,16 @@ object TextOps extends QueryFamily {
       val tf = docs.select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
         .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
       val n = docs.agg(count(lit(1)).as("n_docs"))
-      // document frequency via groupBy + join-back: one more shuffle than
-      // a count() window partitioned by term, but the window form does NO
-      // partial aggregation — at corpus scale every occurrence of a
-      // stopword lands in a single partition, while groupBy map-side
-      // combines the hot keys before the shuffle. df is (vocab)-sized, so
-      // it may or may not be broadcastable — leave the join strategy to
-      // the optimizer/AQE rather than forcing either.
-      val dfreq = tf.groupBy("term").agg(count(lit(1)).as("df"))
+      // df from the same tf pass, as a count() window partitioned by
+      // term, so documents.text is scanned and tokenized once (a groupBy
+      // + join-back plans a second tf for the df side). The window does
+      // no partial aggregation, but tf rows are already one per (doc,
+      // term), and when df is too large to broadcast the join-back
+      // shuffles tf by term too. n_docs counts documents, not tf rows: a
+      // document with null text has no terms.
       val score = round(col("tf") * log(col("n_docs").cast("double") / col("df")), 4)
       val w = Window.partitionBy("doc_id").orderBy(col("score").desc, col("term"))
-      tf.join(dfreq, "term").crossJoin(n)
+      tf.withColumn("df", count(lit(1)).over(Window.partitionBy("term"))).crossJoin(n)
         .withColumn("score", score)
         .withColumn("rnk", row_number().over(w))
         .where(col("rnk") <= 3)

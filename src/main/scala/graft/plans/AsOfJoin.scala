@@ -149,16 +149,29 @@ final case class AsOfJoinExec(leftKey: Expression, rightKey: Expression,
 
 /** Public API + construction-time type guard. */
 object AsOfJoin {
-  private def longBacked(e: Expression, what: String): Expression = {
+  private[plans] def longBacked[E <: Expression](e: E, what: String): E = {
     val ok = e.dataType match {
       // NOT DateType: dates are int-backed internally
       case LongType | TimestampType | TimestampNTZType => true
       case _ => false
     }
     require(ok,
-      s"asOf $what must be long-backed (bigint / timestamp), got ${e.dataType}")
+      s"$what must be long-backed (bigint / timestamp), got ${e.dataType}")
     e
   }
+
+  /** `p`'s output column `n`, by name, for the native operators' column-name APIs. */
+  private[plans] def column(p: LogicalPlan, n: String, op: String): Attribute =
+    p.output.find(_.name == n).getOrElse(throw new IllegalArgumentException(
+      s"$op: column '$n' not in (${p.output.map(_.name).mkString(", ")})"))
+
+  /** Defensive per-session registration of a native operator's strategy
+    * (mirrors each custom expression's register(spark)): the
+    * cluster-install route is GraftExtensions, but a plain session must
+    * plan the node too. */
+  private[plans] def install(spark: SparkSession, strategy: SparkStrategy): Unit =
+    if (!spark.experimental.extraStrategies.contains(strategy))
+      spark.experimental.extraStrategies = spark.experimental.extraStrategies :+ strategy
 
   /** `left` as-of-joined to `right`: per left row, the latest right row
     * with equal `key` and `rightTime <= leftTime` (ties → greatest
@@ -171,22 +184,13 @@ object AsOfJoin {
       rightOrder: Seq[String] = Nil): DataFrame = {
     val lp = leftDf.queryExecution.analyzed
     val rp = rightDf.queryExecution.analyzed
-    def attr(p: LogicalPlan, n: String): Attribute =
-      p.output.find(_.name == n).getOrElse(throw new IllegalArgumentException(
-        s"asOf: column '$n' not in (${p.output.map(_.name).mkString(", ")})"))
+    def attr(p: LogicalPlan, n: String, what: String): Expression =
+      longBacked(column(p, n, "asOf"), s"asOf $what")
     val node = AsOfJoin(lp, rp,
-      longBacked(attr(lp, leftKey), "left key"),
-      longBacked(attr(rp, rightKey), "right key"),
-      longBacked(attr(lp, leftTime), "left time"),
-      longBacked(attr(rp, rightTime), "right time"),
-      rightOrder.map(n => longBacked(attr(rp, n), "right order")))
-    // defensive per-session registration (mirrors each custom
-    // expression's register(spark)): the cluster-install route is
-    // GraftExtensions, but a plain session must plan this node too
-    val spark = leftDf.sparkSession
-    if (!spark.experimental.extraStrategies.contains(AsOfJoinStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ AsOfJoinStrategy
-    org.apache.spark.sql.graft.Bridge.ofRows(spark, node)
+      attr(lp, leftKey, "left key"), attr(rp, rightKey, "right key"),
+      attr(lp, leftTime, "left time"), attr(rp, rightTime, "right time"),
+      rightOrder.map(n => attr(rp, n, "right order")))
+    install(leftDf.sparkSession, AsOfJoinStrategy)
+    org.apache.spark.sql.graft.Bridge.ofRows(leftDf.sparkSession, node)
   }
 }

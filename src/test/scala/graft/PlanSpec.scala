@@ -586,35 +586,32 @@ class PlanSpec extends AnyFunSuite {
       s"no calendar cross-join allowed:\n${p.take(1500)}")
   }
 
-  test("q_join_interval: bucket equi-join + ownership filter, no distinct, one events shuffle") {
+  test("q_join_interval: native sweep over one events scan, no bucket join") {
     val df = SparkEntry.queries("q_join_interval")(spark, sf0001)
     df.collect() // finalize the adaptive plan
     val fin = df.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
-    // never a cartesian/nested-loop pairing of the interval sets
-    assert(!fin.contains("CartesianProduct") &&
-      !fin.contains("BroadcastNestedLoopJoin"), fin.take(2500))
-    // the pairing is an EQUI join keyed on the hour bucket, with the
-    // half-open overlap + ownership predicates as residual condition
-    assert("Join \\[bucket".r.findFirstIn(fin).isDefined, fin.take(2500))
-    // r20: the ownership test is the HOISTED form — each side's first
-    // bucket (ab0/bb0 = date_trunc of its start) is computed once per
-    // session row before the explode, so the per-candidate predicate is
-    // greatest()+equality over two precomputed timestamps, not a
-    // per-pair date_trunc chain (identical by monotonicity of trunc)
-    assert(fin.contains("greatest(ab0"),
-      s"ownership filter must ride the join condition:\n${fin.take(2500)}")
-    // the ownership rule replaced the DISTINCT: exactly one (ua, ub)
-    // aggregate pair (partial+final), no dedup aggregate anywhere else
+    // the pairing is the sweep-line operator over stripe copies
+    assert(fin.contains("IntervalOverlap") && fin.contains("IntervalStripes"), fin.take(2500))
+    // no exploded hour buckets and no join of any kind pairs the sessions
+    assert(!fin.contains("explode(sequence") && !fin.contains("bucket"), fin.take(2500))
+    assert(!"(HashJoin|SortMergeJoin|NestedLoopJoin|CartesianProduct)".r
+      .findFirstIn(fin).isDefined, fin.take(2500))
+    // no pinned session table: events are scanned once, inside the action
+    assert(!fin.contains("Scan ExistingRDD"), fin.take(2500))
+    assert("Scan parquet".r.findAllIn(fin).size == 1, fin.take(2500))
+    assert(fin.contains("events.parquet"), fin.take(2500))
+    // each pair is reported once, so one (ua, ub) aggregate (partial +
+    // final) and no dedup aggregate
     assert("HashAggregate\\(keys=\\[ua".r.findAllIn(fin).size == 2, fin.take(2500))
-    // both exploded sides serve from ONE sessionization of events — the
-    // session table is pinned once (r21: localCheckpoint via passPinner)
-    // and both sides scan the pinned blocks, so the serve plan holds NO
-    // events scan at all. (Pre-r21 this was a ReusedExchange of the
-    // events shuffle — which still re-ran the session-window sort-agg
-    // and the explode once per side.)
-    assert(!fin.contains("Scan parquet"),
-      s"events must be scanned only inside the one pinned session pass:\n${fin.take(2500)}")
-    assert("Scan ExistingRDD".r.findAllIn(fin).size >= 2, fin.take(2500))
+  }
+
+  test("q_text_tfidf: one scan reads documents.text; df comes from the tf pass") {
+    val df = SparkEntry.queries("q_text_tfidf")(spark, sf0001)
+    df.collect()
+    val fin = df.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
+    assert("ReadSchema: struct<[^>]*text:string".r.findAllIn(fin).size == 1, fin.take(3000))
+    assert("HashJoin|SortMergeJoin".r.findFirstIn(fin).isEmpty,
+      s"df must not join back:\n${fin.take(3000)}")
   }
 
   test("q_graph_bfs: per-hop frontier join + anti-join over pinned id-only rows") {
@@ -698,6 +695,13 @@ class PlanSpec extends AnyFunSuite {
     assert(pw.contains("might_contain"), s"the write lost the bloom filter:\n${pw.take(3000)}")
     assert(pw.contains("SortMergeJoin") && !pw.contains("BroadcastHashJoin"),
       s"the write left the shuffle join:\n${pw.take(3000)}")
+    // one probe, on the lineitem side: the copy that filter inference
+    // puts on the orders (creation) side always passes and is dropped
+    for (p <- Seq(pc, pw).map(_.split("== Initial Plan ==")(0))) {
+      val probes = "might_contain\\(.*?xxhash64\\((\\w+)#".r.findAllMatchIn(p)
+        .map(_.group(1)).toSeq
+      assert(probes == Seq("l_orderkey"), s"bloom probes on $probes:\n${p.take(3000)}")
+    }
   }
 
   test("q_agg_footerstats answers a derived count() and a write from parquet footers") {

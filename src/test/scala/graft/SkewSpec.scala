@@ -132,57 +132,33 @@ class SkewSpec extends AnyFunSuite {
   }
 
   // A globally hot HOUR is q_join_interval's skew shape at 100×: every
-  // session in the peak hour lands in ONE bucket partition and candidate
-  // volume there is n_bucket². The production answer is AQE's skew-join
-  // split on the bucket equi-join — this drives the query's own kernel
-  // (Joins.intervalOverlapPairs) with a synthetic hot hour and pins both
-  // halves: skew=true fires, and the split changes no pair count.
-  test("interval-overlap join: AQE splits a hot-hour bucket; pair counts unchanged") {
+  // session in the peak hour lands in ONE stripe, whose sweep keeps them
+  // all in one active set. There is no equi-join left for AQE to split;
+  // this drives the query's own kernel (Joins.intervalOverlapPairs) with
+  // a synthetic hot hour and pins its pair counts to a brute force.
+  test("interval-overlap sweep: hot-hour pair counts equal brute force") {
     // 2500 sessions of one hot hour (5-min sessions, second-offset starts)
     // + 500 spread across 400 other hours; distinct users so ua < ub
     // dedups nothing structurally
-    def sessions = spark.range(0, 3000).selectExpr(
+    val sessions = spark.range(0, 3000).selectExpr(
       "id AS user_id",
       "CASE WHEN id < 2500 THEN timestamp'2024-03-01 12:00:00' + " +
         "make_interval(0, 0, 0, 0, 0, 0, id % 3000) " +
         "ELSE timestamp'2024-03-01 12:00:00' + " +
         "make_interval(0, 0, 0, 0, CAST(id % 400 AS INT) + 1, 0, 0) END AS s_start")
       .withColumn("s_end", expr("s_start + INTERVAL 5 MINUTES"))
-    // returns (checksum row, finalized adaptive plan containing the join)
-    def checksum(df: org.apache.spark.sql.DataFrame) = {
-      val agg = df.agg(
-        count(lit(1)).as("pairs"), sum("n_concurrent").as("total"),
-        sum(col("ua") * col("n_concurrent")).as("chk"))
-      val row = agg.collect().head
-      (row, agg.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0))
-    }
-    val prev = Seq(
-      "spark.sql.autoBroadcastJoinThreshold",
-      "spark.sql.adaptive.autoBroadcastJoinThreshold",
-      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-      "spark.sql.adaptive.skewJoin.skewedPartitionFactor",
-      "spark.sql.adaptive.coalescePartitions.enabled",
-      "spark.sql.adaptive.skewJoin.enabled"
-    ).map(k => k -> spark.conf.getOption(k)).toMap
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-      spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "16KB")
-      spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "16KB")
-      spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2")
-      spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-      spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-      val (splitSum, p) = checksum(graft.operators.Joins.intervalOverlapPairs(sessions))
-      assert(p.contains("skew=true"),
-        s"hot-hour partition did not split:\n${p.take(3000)}")
-      spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "false")
-      val (plainSum, _) = checksum(graft.operators.Joins.intervalOverlapPairs(sessions))
-      assert(splitSum == plainSum, s"split=$splitSum plain=$plainSum")
-      assert(splitSum.getAs[Long]("total") > 100000L,
-        s"fixture too small to mean anything: $splitSum")
-    } finally prev.foreach { case (k, v) =>
-      v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+    val got = graft.operators.Joins.intervalOverlapPairs(sessions).collect()
+      .map(r => (r.getAs[Long]("ua"), r.getAs[Long]("ub")) -> r.getAs[Long]("n_concurrent")).toMap
+    val rows = sessions.selectExpr("user_id", "unix_micros(s_start)", "unix_micros(s_end)")
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+    val want = (for {
+      i <- rows.indices; j <- rows.indices if i < j
+      (ua, sa, ea) = rows(i); (ub, sb, eb) = rows(j)
+      if ua != ub && sa < eb && sb < ea
+    } yield (math.min(ua, ub), math.max(ua, ub))).groupBy(identity).map { case (k, v) => k -> v.size.toLong }
+    assert(want.values.sum > 100000L, s"fixture too small to mean anything: ${want.values.sum}")
+    assert(got == want, s"sweep=${got.size} pairs sum=${got.values.sum}, " +
+      s"brute=${want.size} pairs sum=${want.values.sum}")
   }
 
   test("distributedPrefix survives a pathologically clustered value grid") {
