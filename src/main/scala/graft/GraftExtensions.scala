@@ -6,18 +6,16 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 import graft.functions._
 
-/** Spark-native installation point for the engine's custom Catalyst
-  * expressions — the supported way to extend a cluster-wide session
-  * without touching application code:
+/** The one installation point for the engine's custom Catalyst
+  * functions, optimizer rules and planner strategies — the supported way
+  * to extend a cluster-wide session without touching application code:
   *
   *   spark.sql.extensions=graft.GraftExtensions
   *
-  * Every function this injects is also registrable per-session via each
-  * expression's `register(spark)` (which the query definitions call
-  * defensively), but on a shared 1000-executor cluster the extensions
-  * route is the one an operator of the reference system would configure:
-  * builtin-level registration, visible in every new session, no
-  * temp-function scoping.
+  * `GraftSession.builder` sets it, so every function is builtin-level:
+  * visible in every new session, with one arity check and usage text, and
+  * no temp-function scoping. Nothing else registers a function or adds a
+  * rule or strategy (ExtensionInstallGuardSpec).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -68,6 +66,14 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       info("lsh_bucket",
         "lsh_bucket(v, planes) - sign-LSH bucket of a 64-d double vector over fixed Rademacher planes"),
       (es: Seq[Expression]) => LshBucket.build(arity("lsh_bucket", 2, es))))
+    ext.injectFunction((FunctionIdentifier("freq_sketch"),
+      info("freq_sketch",
+        "freq_sketch(item, maxMapSize) - frequent-items sketch served as item -> (est, lb, ub)"),
+      (es: Seq[Expression]) => FreqSketch.build(arity("freq_sketch", 2, es))))
+    ext.injectFunction((FunctionIdentifier("rolling_kgram_hash"),
+      info("rolling_kgram_hash",
+        "rolling_kgram_hash(s, k) - polynomial hash of every k-code-point window of s"),
+      (es: Seq[Expression]) => RollingKgramHash.build(arity("rolling_kgram_hash", 2, es))))
     // Domain optimizer rule: size-ratio prefilter ahead of the fused
     // Jaccard merge (see JaccardSizePrefilter's scaladoc).
     ext.injectOptimizerRule(_ => graft.plans.JaccardSizePrefilter)

@@ -56,20 +56,8 @@ object GraftSession {
     SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
-      // AQE coalescing: MEASURED r20 and left at the Spark defaults
-      // (parallelismFirst=true). Size-based coalescing
-      // (parallelismFirst=false, 64m advisory) read 44.3s vs 31.1s on a
-      // 20-key subset at sf0.1 — this workload's shuffles are CPU-bound
-      // per row (pair verification, codegen'd set merges), so collapsing
-      // small-byte partitions starves the compute of cores
-      // (q_join_interval 3.0s -> 8.0s on 1 task). parallelismFirst=true
-      // is also the scale-correct setting: at 100 TB the advisory size
-      // governs anyway (partitions are above it), while small
-      // intermediate shuffles keep the cluster busy. Override per run
-      // with SPARK_GRAFT_AQE_* if a byte-bound deployment measures
-      // otherwise.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "true"))
+      // AQE coalescing stays at Spark's default (parallelismFirst=true):
+      // size-based coalescing read 44.3 s against 31.1 s on 20 keys at sf0.1.
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
       // Keep the whole-stage codegen stage id out of the generated class's
@@ -81,8 +69,7 @@ object GraftSession {
       .config("spark.sql.codegen.useIdInClassName", "false")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.ui.explainMode", UiExplainMode)
-      // cluster-wide extension point: custom expressions + the
-      // JaccardSizePrefilter optimizer rule, builtin-level
+      // the one installer of graft's functions, rules and strategies
       .config("spark.sql.extensions", "graft.GraftExtensions")
       .config("spark.sql.catalogImplementation", "hive")
       .config("spark.sql.warehouse.dir", s"$scratch/warehouse")

@@ -4,11 +4,9 @@ import org.apache.datasketches.common.ArrayOfStringsSerDe
 import org.apache.datasketches.frequencies.{ErrorType, ItemsSketch}
 import org.apache.datasketches.memory.Memory
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, GenericInternalRow, Literal}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, Literal}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
 import org.apache.spark.sql.types._
@@ -110,12 +108,4 @@ object FreqSketch {
     case _ => throw new IllegalArgumentException(
       "freq_sketch(item, maxMapSize) requires a literal integer maxMapSize")
   }
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("freq_sketch"),
-      new ExpressionInfo(classOf[FreqSketch].getName, null, "freq_sketch",
-        "freq_sketch(item, maxMapSize) - frequent-items sketch served as item -> (est, lb, ub)",
-        "", "", "", "", "", "", "scala_udf"),
-      (es: Seq[Expression]) => build(es))
 }

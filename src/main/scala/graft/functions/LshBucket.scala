@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, UnaryExpression}
@@ -114,8 +113,4 @@ object LshBucket {
     case _ => throw new IllegalArgumentException(
       "lsh_bucket(v, planes) requires a literal integer planes")
   }
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "lsh_bucket", build, "scala_udf")
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
@@ -160,15 +159,11 @@ object RollingKgramHash {
     cps
   }
 
-  private def build(es: Seq[Expression]): Expression = es match {
+  def build(es: Seq[Expression]): Expression = es match {
     case Seq(c, kk) =>
       require(kk.foldable, "rolling_kgram_hash: k must be a literal")
       RollingKgramHash(c, kk.eval().asInstanceOf[Number].intValue)
     case _ => throw new IllegalArgumentException(
       s"rolling_kgram_hash expects 2 arguments, got ${es.size}")
   }
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "rolling_kgram_hash", build, "scala_udf")
 }

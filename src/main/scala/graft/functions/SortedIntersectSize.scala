@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -53,11 +52,4 @@ object SortedIntersectSize {
     }
     n
   }
-
-  /** Register as a SQL function so query code can use it via expr(...). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sorted_intersect_size",
-      exprs => SortedIntersectSize(exprs(0), exprs(1)),
-      "scala_udf")
 }

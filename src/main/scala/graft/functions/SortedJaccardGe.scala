@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -103,10 +102,4 @@ object SortedJaccardGe {
     val jac = inter.toDouble / (s - inter)
     if (jac >= t) jac else -1.0
   }
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sorted_jaccard_ge",
-      exprs => SortedJaccardGe(exprs(0), exprs(1), exprs(2)),
-      "scala_udf")
 }

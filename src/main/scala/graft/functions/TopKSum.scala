@@ -4,12 +4,10 @@ import java.math.{BigDecimal => JBigDecimal, RoundingMode}
 import java.nio.ByteBuffer
 import java.util.PriorityQueue
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.types._
 
 /** `topk_sum(value, k)` — exact sum of the k largest values per group,
@@ -142,12 +140,4 @@ object TopKSum {
     case _ => throw new IllegalArgumentException(
       "topk_sum(value, k) requires a literal integer k")
   }
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("topk_sum"),
-      new ExpressionInfo(classOf[TopKSum].getName, null, "topk_sum",
-        "topk_sum(v, k) - exact sum of the k largest cent-quantized values",
-        "", "", "", "", "", "", "scala_udf"),
-      (es: Seq[Expression]) => build(es))
 }

@@ -388,7 +388,6 @@ object Aggregates extends QueryFamily {
     // "revenue share of the 10 biggest orders" question at 100 TB ships
     // 10 longs per (partition, group).
     "q_agg_topksum" -> ((s, dir) => {
-      graft.functions.TopKSum.register(s)
       Tables(s, dir, "orders")
         .groupBy("o_orderpriority")
         .agg(expr("topk_sum(o_totalprice, 10)").as("top10_total"),
@@ -408,7 +407,6 @@ object Aggregates extends QueryFamily {
     // 0.75 * 64), bounds-true at any scale. The 1-row sketch map
     // broadcasts onto the top-10 exact rows.
     "q_agg_freqitems" -> ((s, dir) => {
-      graft.functions.FreqSketch.register(s)
       val toks = Tables(s, dir, "documents")
         .select(explode(split(col("text"), " ")).as("tok"))
       val fm = toks.agg(expr("freq_sketch(tok, 64)").as("fm"))

@@ -184,12 +184,12 @@ object Dedup extends QueryFamily {
   }
 
   /** SimHash near-dup pairs (hamming <= 3 within a language) at
-    * signature width `bits` over `bands` pigeonhole bands:
+    * signature width `bits` over [[SimhashBands]] pigeonhole bands:
     * (doc_a, doc_b, sim_a, hamming), sorted. */
-  private def simhashPairs(s: SparkSession, dir: String, bits: Int, bands: Int): DataFrame = {
+  private def simhashPairs(s: SparkSession, dir: String, bits: Int): DataFrame = {
     val d = Tables(s, dir, "documents").select(col("doc_id"), col("lang"),
       array_distinct(split(col("text"), " ")).as("toks"))
-    simhashCandidates(simhashSignatures(d, bits), bits, bands)
+    simhashCandidates(simhashSignatures(d, bits), bits, SimhashBands)
       .withColumn("hamming", expr("CAST(bit_count(sim_a ^ sim_b) AS BIGINT)"))
       .where(col("hamming") <= 3)
       .select(col("doc_a"), col("doc_b"), col("sim_a"), col("hamming"))
@@ -211,7 +211,6 @@ object Dedup extends QueryFamily {
     * shuffle over the candidate pairs.
     */
   private[graft] def minhashCandidates(d: DataFrame, perms: Int, bands: Int): DataFrame = {
-    graft.functions.MinHashSig.register(d.sparkSession)
     val rows = perms / bands
     // one md5 per token for the whole signature (custom expr)
     val sig = d.withColumn("mh", expr(s"minhash_sig(toks, $perms)"))
@@ -362,6 +361,10 @@ object Dedup extends QueryFamily {
   /** The target LSH bucket population every `auto` fan-out aims for. */
   private val TargetBucket = 64L
 
+  /** Pigeonhole bands of both simhash keys (mirrored in their oracles):
+    * hamming <= 3 needs at least 4 for exact recall. */
+  private val SimhashBands = 4
+
   /** Resolve a fan-out conf knob: unset → the declared fixture value
     * (oracle-pinned); an integer → pinned explicitly; `auto` → derived
     * from the memoized approximate corpus count via [[autoWidth]] — the
@@ -478,7 +481,6 @@ object Dedup extends QueryFamily {
     */
   private[graft] def ingestSurvivors(s: SparkSession, dir: String,
       k: Int): DataFrame = {
-    graft.functions.SortedJaccardGe.register(s)
     val docs = Tables(s, dir, "documents")
     // O(1)-row statistics job for the fixture batch boundaries; a real
     // ingest knows its batch membership (yesterday's files)
@@ -646,7 +648,6 @@ object Dedup extends QueryFamily {
     */
   private def nearDupEdges(s: SparkSession, dir: String): DataFrame =
     graft.Artifacts.get(s, "dedup.nearEdges", dir) {
-      graft.functions.SortedJaccardGe.register(s)
       val meta = docMeta(Tables(s, dir, "documents"))
       val enc = tokenCodes(s, dir)
       val pairs = candidatePairs(enc, meta, 4, 5, "near", dir)
@@ -663,15 +664,11 @@ object Dedup extends QueryFamily {
   // side broadcasts against the candidates. ----
 
   /** (vec_id, label, v, norm): the embedding corpus as DOUBLE vectors
-    * with their L2 norms — the one vector load of the cosine kernels
-    * (registers vec_dot and lsh_bucket). */
-  private def vectors(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VecDot.register(s)
-    LshBucket.register(s)
+    * with their L2 norms — the one vector load of the cosine kernels. */
+  private def vectors(s: SparkSession, dir: String): DataFrame =
     Tables(s, dir, "embeddings").select(col("vec_id"), col("label"),
       transform(col("embedding"), x => x.cast("double")).as("v"))
       .withColumn("norm", norm("v"))
-  }
 
   /** L2 norm of DOUBLE-vector column `v`. */
   private def norm(v: String): Column = expr(s"sqrt(vec_dot($v, $v))")
@@ -1131,7 +1128,6 @@ object Dedup extends QueryFamily {
     // candidates shuffle once on the fingerprint, pairs aggregate once.
     // Never a corpus self-join.
     "q_dedup_substring" -> ((s, dir) => {
-      graft.functions.RollingKgramHash.register(s)
       val (k, p, minShared, maxDf) = (24, 8, 3, 64)
       // h % p filter BEFORE the distinct: the predicate is on h alone, so
       // distinct-then-filter == filter-then-distinct, and the dedup
@@ -1172,7 +1168,6 @@ object Dedup extends QueryFamily {
     // are a sequential refinement both engines would apply identically
     // — stated, not implemented (basic CDC is the published baseline).
     "q_dedup_cdc" -> ((s, dir) => {
-      graft.functions.RollingKgramHash.register(s)
       val (k, d) = (16, 64)
       val docs = Tables(s, dir, "documents")
         .where(length(col("text")) >= k)
@@ -1209,7 +1204,6 @@ object Dedup extends QueryFamily {
     // verify (one linear merge per pair over long codes). Output is
     // identical to the all-pairs-in-block form the oracle runs.
     "q_dedup_near" -> ((s, dir) => {
-      graft.functions.SortedJaccardGe.register(s)
       val meta = docMeta(Tables(s, dir, "documents"))
       // enc feeds the candidate generator AND both verify attach legs,
       // which join on DIFFERENT keys (doc_a / doc_b) — no exchange
@@ -1236,7 +1230,6 @@ object Dedup extends QueryFamily {
     // candidates per doc; the langBlockedTokenPairs asymmetric path),
     // then the codegen'd sorted-merge intersect decides exactly.
     "q_dedup_containment" -> ((s, dir) => {
-      graft.functions.SortedIntersectSize.register(s)
       langBlockedTokenPairs(s, dir, ordered = false)
         .where(expr("sorted_intersect_size(ta, tb)") === size(col("ta")))
         .groupBy(col("da").as("doc_id"))
@@ -1255,7 +1248,6 @@ object Dedup extends QueryFamily {
     // an O(1)-row statistics job (the auto-knob pattern); a real delta is
     // a known input (yesterday's files), not derived from max(id).
     "q_dedup_incremental" -> ((s, dir) => {
-      graft.functions.SortedJaccardGe.register(s)
       val docs = Tables(s, dir, "documents")
       val cut = docs.selectExpr("(4 * max(doc_id)) DIV 5 AS c").head().getLong(0)
       val meta = docMeta(docs)
@@ -1288,20 +1280,16 @@ object Dedup extends QueryFamily {
     // q_dedup_minhash_banded runs the wider (12, 3) setting and
     // q_dedup_recall grades both. Verify's two attach legs join on
     // different keys and read the encode pass unpinned (see q_dedup_near).
-    "q_dedup_minhash" -> ((s, dir) => {
-      graft.functions.SortedJaccardGe.register(s)
-      jaccardVerify(minhashCandidates(sortedToks(s, dir), 8, 2), tokenCodes(s, dir), 0.8)
-    }),
+    "q_dedup_minhash" -> ((s, dir) =>
+      jaccardVerify(minhashCandidates(sortedToks(s, dir), 8, 2), tokenCodes(s, dir), 0.8)),
 
     // The generalized banding, oracle-pinned at NON-fixture parameters
     // (12 permutations x 3 bands of 4 rows): the DuckDB oracle mirrors
     // the widened multiplier table and the three band keys, so the
     // knob-widened code path — not just the 8/2 default — is
     // hash-checked. Recall at t=0.8 rises to 1-(1-0.8^4)^3 ≈ 80%.
-    "q_dedup_minhash_banded" -> ((s, dir) => {
-      graft.functions.SortedJaccardGe.register(s)
-      jaccardVerify(minhashCandidates(sortedToks(s, dir), 12, 3), tokenCodes(s, dir), 0.8)
-    }),
+    "q_dedup_minhash_banded" -> ((s, dir) =>
+      jaccardVerify(minhashCandidates(sortedToks(s, dir), 12, 3), tokenCodes(s, dir), 0.8)),
 
     // Candidate-quality gate for the approximate dedup paths — the
     // dedup twin of q_sim_recall: how many of the TRUE near-dup pairs
@@ -1316,7 +1304,6 @@ object Dedup extends QueryFamily {
     // aggregates of id-pair joins: the 1-row stat frames cross-join at
     // the end, the fact-sized work is hash joins + counts.
     "q_dedup_recall" -> ((s, dir) => {
-      graft.functions.SortedJaccardGe.register(s)
       val d = sortedToks(s, dir)
       val truth = nearDupEdges(s, dir)
       def graded(name: String, perms: Int, bands: Int): DataFrame = {
@@ -1353,17 +1340,14 @@ object Dedup extends QueryFamily {
     // approximate corpus count (ceil(log2(N/64)) per band,
     // floored at the fixture width) — scale-safety without knowing N.
     "q_dedup_simhash" -> ((s, dir) => {
-      val bands = s.conf.getOption("spark.graft.dedup.simhashBands")
-        .map(_.toInt).getOrElse(4)
-      require(bands > 3, s"hamming<=3 needs >=4 bands for exact recall, got $bands")
       val bits = s.conf.getOption("spark.graft.dedup.simhashBits") match {
         case None => 16
         case Some("auto") =>
           val n = approxCorpusCount(Tables(s, dir, "documents"), "doc_id", "docs", dir)
-          bands * autoWidth(n, TargetBucket, math.max(1, 16 / bands), 64 / bands)
+          SimhashBands * autoWidth(n, TargetBucket, 16 / SimhashBands, 64 / SimhashBands)
         case Some(v) => v.toInt
       }
-      simhashPairs(s, dir, bits, bands)
+      simhashPairs(s, dir, bits)
     }),
 
     // The corpus-scaled signature width, oracle-pinned at a NON-fixture
@@ -1372,7 +1356,7 @@ object Dedup extends QueryFamily {
     // values per band, fewer false candidates — is hash-checked, and the
     // prefix property is visible in the data (sim_a's low 16 bits equal
     // q_dedup_simhash's signature doc for doc).
-    "q_dedup_simhash_wide" -> ((s, dir) => simhashPairs(s, dir, 24, 4)),
+    "q_dedup_simhash_wide" -> ((s, dir) => simhashPairs(s, dir, 24)),
 
     // Character 3-gram Jaccard >= 0.6 inside (lang, n_chars/100) blocks.
     // Shape matters here: the blocked self-join emits id-only pairs (no
@@ -1382,8 +1366,6 @@ object Dedup extends QueryFamily {
     // string formulation the oracle runs) — are shuffle-attached, and the
     // O(pairs * |grams|) primitive-long merge runs once per pair.
     "q_dedup_ngram" -> ((s, dir) => {
-      graft.functions.SortedJaccardGe.register(s)
-      graft.functions.TrigramCodes.register(s)
       // grams feeds the candidate generator and both verify attach
       // legs, unpinned like q_dedup_near's encode pass
       val grams = Tables(s, dir, "documents")

@@ -44,12 +44,10 @@ object GraphOps extends QueryFamily {
     * >= thresh pair collides inside both prefixes), then the exact
     * codegen'd sorted-merge intersect verifies. One construction for
     * both families, no corpus-wide join or broadcast anywhere. */
-  private def edges(s: SparkSession, dir: String, thresh: Int = minShared): DataFrame = {
-    graft.functions.SortedIntersectSize.register(s)
+  private def edges(s: SparkSession, dir: String, thresh: Int = minShared): DataFrame =
     Dedup.langBlockedTokenPairs(s, dir, ordered = true, minShared = thresh)
       .where(expr(s"sorted_intersect_size(ta, tb) >= $thresh"))
       .select("da", "db")
-  }
 
   // The pinned graphs below are memoized per (session, dir) in
   // graft.Artifacts, which evicts stopped/overflow sessions so the

@@ -354,7 +354,6 @@ object Sampling extends QueryFamily {
     * (doc_id, lang, n_chars, text) rows.
     */
   private def cleanSurvivors(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.SortedJaccardGe.register(s)
     val docs = Tables(s, dir, "documents")
     val canon = docs.groupBy("text").agg(min("doc_id").as("doc_id"))
       .select("doc_id")

@@ -704,7 +704,6 @@ object TextOps extends QueryFamily {
     // Multimodal join: text features with vector features, outer where the
     // embedding is missing (genuinely partial at sf0.1).
     "q_multimodal_join" -> ((s, dir) => {
-      graft.functions.VecDot.register(s)
       val d = Tables(s, dir, "documents"); val e = Tables(s, dir, "embeddings")
       d.join(e.withColumn("v", transform(col("embedding"), x => x.cast("double"))),
           d("doc_id") === col("vec_id"), "left")

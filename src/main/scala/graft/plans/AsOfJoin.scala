@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, BindReferences, Expression, GenericInternalRow, JoinedRow, SortOrder, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
@@ -37,6 +37,8 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   * `zipPartitions` and merge. Keys and times must be integral-backed
   * (long, date, timestamp[_ntz] — all compare as longs); construction
   * refuses anything else loudly.
+  *
+  * [[AsOfJoinStrategy]] comes from [[graft.GraftExtensions]].
   */
 final case class AsOfJoin(left: LogicalPlan, right: LogicalPlan,
     leftKey: Expression, rightKey: Expression,
@@ -165,14 +167,6 @@ object AsOfJoin {
     p.output.find(_.name == n).getOrElse(throw new IllegalArgumentException(
       s"$op: column '$n' not in (${p.output.map(_.name).mkString(", ")})"))
 
-  /** Defensive per-session registration of a native operator's strategy
-    * (mirrors each custom expression's register(spark)): the
-    * cluster-install route is GraftExtensions, but a plain session must
-    * plan the node too. */
-  private[plans] def install(spark: SparkSession, strategy: SparkStrategy): Unit =
-    if (!spark.experimental.extraStrategies.contains(strategy))
-      spark.experimental.extraStrategies = spark.experimental.extraStrategies :+ strategy
-
   /** `left` as-of-joined to `right`: per left row, the latest right row
     * with equal `key` and `rightTime <= leftTime` (ties → greatest
     * `rightOrder`), nulls when none. Column-name API over analyzed
@@ -190,7 +184,6 @@ object AsOfJoin {
       attr(lp, leftKey, "left key"), attr(rp, rightKey, "right key"),
       attr(lp, leftTime, "left time"), attr(rp, rightTime, "right time"),
       rightOrder.map(n => attr(rp, n, "right order")))
-    install(leftDf.sparkSession, AsOfJoinStrategy)
     org.apache.spark.sql.graft.Bridge.ofRows(leftDf.sparkSession, node)
   }
 }

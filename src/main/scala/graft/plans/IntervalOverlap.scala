@@ -13,6 +13,7 @@ import org.apache.spark.sql.types.LongType
 
 /** A NATIVE interval-overlap self-join, built on the same stack as
   * [[AsOfJoin]] (logical node → planner strategy → physical operator).
+  * [[IntervalOverlapStrategy]] comes from [[graft.GraftExtensions]].
   *
   * Semantics: one output row (ua, ub), ua < ub, per pair of input rows
   * of DIFFERENT users whose half-open intervals overlap (`a_start <
@@ -197,7 +198,6 @@ object IntervalOverlap {
     val node = IntervalOverlap(u, st, en,
       AttributeReference("ua", LongType, nullable = false)(),
       AttributeReference("ub", LongType, nullable = false)(), p)
-    AsOfJoin.install(df.sparkSession, IntervalOverlapStrategy)
     org.apache.spark.sql.graft.Bridge.ofRows(df.sparkSession, node)
   }
 }

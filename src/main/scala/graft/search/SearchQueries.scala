@@ -139,7 +139,6 @@ object SearchQueries extends QueryFamily {
     // work at ANY corpus size — the whole point of fusing RANKS
     // instead of trying to calibrate heterogeneous scores.
     "q_search_hybrid" -> ((s, dir) => {
-      graft.functions.VecDot.register(s)
       val root = sharedIndex(s, dir)
       val wBm = org.apache.spark.sql.expressions.Window.orderBy(col("score_micros").desc, col("doc_id"))
       val bm = InvertedIndex.bm25(s, root, bm25Terms, 20)

@@ -67,8 +67,6 @@ class DedupGate(val storeRoot: String, thresh: Double = 0.8,
     */
   def filterBatch(batch: DataFrame, batchId: Long): DataFrame = {
     recover()
-    val s = batch.sparkSession
-    graft.functions.SortedJaccardGe.register(s)
     val sig = Dedup.signatures(batch)
     val all = prior(batch, batchId).fold(sig)(p => p.unionAll(sig))
     val meta = (df: DataFrame) => df.select("doc_id", "lang", "bucket", "sz")

@@ -319,7 +319,6 @@ class AllQueriesSpec extends AnyFunSuite {
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(declared.nonEmpty && declared.values.sum > 0)
     // brute force on the same threshold-30 edge definition
-    graft.functions.SortedIntersectSize.register(spark)
     val d = Tables(spark, sf0001, "documents").select(col("doc_id"), col("lang"),
       array_sort(array_distinct(split(col("text"), " "))).as("toks"))
     val a = d.select(col("doc_id").as("da"), col("lang"), col("toks").as("ta"))
@@ -340,7 +339,6 @@ class AllQueriesSpec extends AnyFunSuite {
     val preds = SparkEntry.queries("q_graph_linkpred")(spark, sf0001).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getAs[Long]("common")))
     assert(preds.nonEmpty && preds.length <= 20)
-    graft.functions.SortedIntersectSize.register(spark)
     val d = Tables(spark, sf0001, "documents").select(col("doc_id"), col("lang"),
       array_sort(array_distinct(split(col("text"), " "))).as("toks"))
     val edges = d.select(col("doc_id").as("da"), col("lang"), col("toks").as("ta"))
@@ -578,7 +576,6 @@ class AllQueriesSpec extends AnyFunSuite {
     assert(declared.nonEmpty && declared.values.max >= 1L,
       "degenerate fixture: BFS never left the source")
     // brute force on the same threshold-28 edge definition
-    graft.functions.SortedIntersectSize.register(spark)
     val d = Tables(spark, sf0001, "documents").select(col("doc_id"), col("lang"),
       array_sort(array_distinct(split(col("text"), " "))).as("toks"))
     val edges = d.select(col("doc_id").as("da"), col("lang"), col("toks").as("ta"))

@@ -12,10 +12,6 @@ class ExpressionsSpec extends AnyFunSuite {
   import org.apache.spark.sql.functions._
 
   private lazy val toksDf = {
-    graft.functions.SortedIntersectSize.register(spark)
-    graft.functions.SortedJaccardGe.register(spark)
-    graft.functions.MinHashSig.register(spark)
-    graft.functions.VecDot.register(spark)
     Tables(spark, sf0001, "documents")
       .selectExpr("doc_id", "array_sort(array_distinct(split(text, ' '))) AS toks")
   }
@@ -46,7 +42,6 @@ class ExpressionsSpec extends AnyFunSuite {
   }
 
   test("vec_dot is NULL on length mismatch (zip_with null-pad semantics)") {
-    toksDf // force registration
     val df = spark.sql(
       """SELECT vec_dot(array(1.0D, 2.0D), array(3.0D)) AS mismatch,
         |       vec_dot(array(1.0D, 2.0D), array(3.0D, 4.0D)) AS ok,
@@ -58,7 +53,6 @@ class ExpressionsSpec extends AnyFunSuite {
   }
 
   test("minhash_sig: skips NULL elements, NULL for empty input (list_min semantics)") {
-    toksDf // force registration
     val df = spark.sql(
       """SELECT minhash_sig(array('a', CAST(NULL AS STRING), 'b')) AS skipped,
         |       minhash_sig(array('a', 'b')) AS plain,
@@ -79,8 +73,6 @@ class ExpressionsSpec extends AnyFunSuite {
   }
 
   test("trigram_codes jaccard == string-trigram jaccard, bit-exact") {
-    graft.functions.TrigramCodes.register(spark)
-    toksDf // force registration of sorted_jaccard_ge
     val d = Tables(spark, sf0001, "documents").selectExpr("doc_id",
       "trigram_codes(text) AS tc",
       "array_sort(array_distinct(transform(sequence(1, length(text) - 2), i -> substr(text, i, 3)))) AS ts")
@@ -91,7 +83,6 @@ class ExpressionsSpec extends AnyFunSuite {
   }
 
   test("trigram_codes handles non-ASCII code points and short strings") {
-    graft.functions.TrigramCodes.register(spark)
     val r = spark.sql(
       """SELECT size(trigram_codes('ab')) AS short,
         |       size(trigram_codes('aaaa')) AS dedup,
@@ -101,16 +92,15 @@ class ExpressionsSpec extends AnyFunSuite {
     assert(r.getInt(2) == 4) // 6 code points -> 4 trigrams, all distinct
   }
 
-  test("GraftExtensions installs all seven custom functions") {
+  test("GraftExtensions installs all nine custom functions") {
     // ExpressionInfo validates its arguments eagerly, so applying the
     // extensions exercises the whole injectFunction surface.
     val ext = new org.apache.spark.sql.SparkSessionExtensions
     new GraftExtensions().apply(ext)
-    // A new session carries none of the temp functions register() adds to
-    // this one, so what it resolves came from the extensions.
     val fresh = spark.newSession()
     val names = Seq("vec_dot", "sorted_intersect_size", "sorted_jaccard_ge",
-      "minhash_sig", "trigram_codes", "topk_sum", "lsh_bucket")
+      "minhash_sig", "trigram_codes", "topk_sum", "lsh_bucket", "freq_sketch",
+      "rolling_kgram_hash")
     assert(names.filterNot(fresh.catalog.functionExists) == Nil)
     assert(fresh.sql("SELECT lsh_bucket(array_repeat(1.0D, 64), 4)").head().getInt(0) ==
       graft.functions.LshBucket.bucket(
@@ -119,6 +109,25 @@ class ExpressionsSpec extends AnyFunSuite {
     val e = intercept[org.apache.spark.sql.AnalysisException](
       fresh.sql("SELECT lsh_bucket(array(1.0D))").collect())
     assert(e.getCondition == "WRONG_NUM_ARGS.WITHOUT_SUGGESTION")
+  }
+
+  test("building a key leaves every function as the extension installed it") {
+    // q_dedup_cosine_wide's build reads vectors through vec_dot and lsh_bucket
+    SparkEntry.queries("q_dedup_cosine_wide")(spark, sf0001)
+    val e = intercept[org.apache.spark.sql.AnalysisException](
+      spark.sql("SELECT vec_dot(array(1d))").collect())
+    assert(e.getCondition == "WRONG_NUM_ARGS.WITHOUT_SUGGESTION")
+    val described = spark.sql("DESCRIBE FUNCTION vec_dot").collect().map(_.getString(0))
+    assert(described.contains("Usage: vec_dot(a, b) - dot product of two double arrays"),
+      described.mkString("\n"))
+    // resolvable through SQL in a session no key has been built in
+    val fresh = spark.newSession()
+    assert(fresh.sql("SELECT rolling_kgram_hash('abcdef', 3)").head().getSeq[Long](0) ==
+      graft.functions.RollingKgramHash.hashes(
+        org.apache.spark.unsafe.types.UTF8String.fromString("abcdef"), 3).toSeq)
+    val sketch = fresh.sql(
+      "SELECT freq_sketch(x, 8)['a'].est FROM VALUES ('a'), ('b'), ('a') AS t(x)")
+    assert(sketch.head().getLong(0) == 2L)
   }
 
   /** 64-d vectors as `v ARRAY<DOUBLE>` rows, read through a shuffle so
@@ -135,7 +144,6 @@ class ExpressionsSpec extends AnyFunSuite {
     }
 
   test("lsh_bucket == the lshBucketExpr chain, bit-exact, interpreted and codegen") {
-    graft.functions.LshBucket.register(spark)
     assert(spark.conf.get("spark.sql.ansi.enabled") == "true")
     val rnd = new scala.util.Random(42)
     val special = Seq(-0.0, 0.0, Double.NaN, Double.PositiveInfinity,

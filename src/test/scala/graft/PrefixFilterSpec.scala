@@ -137,7 +137,6 @@ class PrefixFilterSpec extends AnyFunSuite {
     // label alone is a coarse cluster that grows linearly with the corpus;
     // composing it with the sign-LSH bucket must strictly shrink the
     // worst block and the total pair count
-    graft.functions.LshBucket.register(spark)
     val e = spark.read.parquet(s"$sf0001/embeddings.parquet")
       .selectExpr("vec_id", "label",
         "transform(embedding, x -> CAST(x AS DOUBLE)) AS v")

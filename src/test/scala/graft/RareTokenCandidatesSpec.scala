@@ -43,7 +43,6 @@ class RareTokenCandidatesSpec extends AnyFunSuite {
     df.select("da", "db").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
 
   test("containment pairs: rarest-token candidates lose nothing vs the naive join") {
-    graft.functions.SortedIntersectSize.register(spark)
     val contain = expr("sorted_intersect_size(ta, tb)") === size(col("ta"))
     val got = pairSet(
       Dedup.langBlockedTokenPairs(spark, sf0001, ordered = false).where(contain))
@@ -54,7 +53,6 @@ class RareTokenCandidatesSpec extends AnyFunSuite {
   }
 
   test("graph edges: prefix-filter candidates lose nothing at both thresholds") {
-    graft.functions.SortedIntersectSize.register(spark)
     for (k <- Seq(28, 30)) {
       val ge = expr(s"sorted_intersect_size(ta, tb) >= $k")
       val got = pairSet(
@@ -130,7 +128,6 @@ class RareTokenCandidatesSpec extends AnyFunSuite {
     // each size (JIT + the postings memo — both sizes then time the
     // candidates join + verify equally), bound the ratio at half of
     // quadratic so scheduler noise can't flake the complexity claim.
-    graft.functions.SortedIntersectSize.register(spark)
     val n = 2000
     val small = synthCorpus(n)
     val big = synthCorpus(n * 4)

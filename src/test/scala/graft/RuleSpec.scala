@@ -12,7 +12,6 @@ class RuleSpec extends AnyFunSuite {
   import TestSpark._
 
   private def pairs = {
-    functions.SortedJaccardGe.register(spark)
     val docs = spark.read.parquet(s"$sf0001/documents.parquet")
       .selectExpr("doc_id", "lang",
         "array_sort(array_distinct(split(text, ' '))) AS toks")

@@ -49,7 +49,6 @@ class TopKSumSpec extends AnyFunSuite {
   }
 
   test("topk_sum equals the window top-k sum on sf0.001 orders") {
-    TopKSum.register(spark)
     val o = spark.read.parquet(s"$sf0001/orders.parquet")
     val viaAgg = o.groupBy("o_orderpriority")
       .agg(expr("topk_sum(o_totalprice, 10)").as("s"))
