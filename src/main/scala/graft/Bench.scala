@@ -61,24 +61,35 @@ object Bench {
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
     // Per key, for the detail file only: generated classes compiled and
     // their compile time over the key's `runs` calls (a warm call that
-    // compiles is a generated-class cache miss), and the 1-min load
-    // right before the key.
-    val perKey = scala.collection.mutable.LinkedHashMap.empty[String, (Long, Double, Double)]
+    // compiles is a generated-class cache miss), the 1-min load right
+    // before the key, and the wall time of one full-output (noop sink)
+    // write after the counts. A count() lets the optimizer drop the output
+    // sort and any projection the row count does not need, so output-side
+    // work, first code generation for it included, shows only in
+    // `output_s`.
+    val perKey = scala.collection.mutable.LinkedHashMap.empty[String, (Long, Double, Double, Double)]
+    def timed(name: String)(action: => Unit): Double = {
+      val t0 = System.nanoTime()
+      try action
+      catch { case NonFatal(e) =>
+        errors.getOrElseUpdate(name,
+          s"${e.getClass.getName}: ${Option(e.getMessage).getOrElse("").take(200)}")
+        ()
+      }
+      (System.nanoTime() - t0) / 1e9
+    }
     val samples = names.map { name =>
       val load = loadavg()
       val (c0, ns0) = (CodegenMetrics.METRIC_COMPILATION_TIME.getCount, CodeGenerator.compileTime)
       val times = (1 to runs).map { _ =>
-        val t0 = System.nanoTime()
-        try { SparkEntry.queries(name)(spark, sfDir).count() }
-        catch { case NonFatal(e) =>
-          errors.getOrElseUpdate(name,
-            s"${e.getClass.getName}: ${Option(e.getMessage).getOrElse("").take(200)}")
-          ()
-        }
-        (System.nanoTime() - t0) / 1e9
+        timed(name) { SparkEntry.queries(name)(spark, sfDir).count() }
       }.sorted
-      perKey(name) = (CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0,
-        (CodeGenerator.compileTime - ns0) / 1e6, load)
+      val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
+      val compileMs = (CodeGenerator.compileTime - ns0) / 1e6
+      val output = timed(name) {
+        SparkEntry.queries(name)(spark, sfDir).write.format("noop").mode("overwrite").save()
+      }
+      perKey(name) = (compiled, compileMs, load, output)
       name -> times
     }
     def median(v: Seq[Double]): Double = v(v.size / 2)
@@ -105,8 +116,8 @@ object Bench {
         .mkString("{", ",", "}")
       s"""{"metric":"total","value":${fmt(total)},"unit":"sec","runs":$runs,"noise":${fmt(noise)},"load_before":${fmt(loadBefore)},"load_after":${fmt(loadAfter)},"n_queries":${results.size},"n_errors":${errors.size},"errors":$errs,"q_omitted":$omitted,"queries":$qs,$extra"sf":"$sfDir"}"""
     }
-    val keys = perKey.map { case (k, (n, ms, load)) =>
-      s""""$k":{"compiles":$n,"compile_ms":${fmt(ms)},"load_before":${fmt(load)}}"""
+    val keys = perKey.map { case (k, (n, ms, load, out)) =>
+      s""""$k":{"compiles":$n,"compile_ms":${fmt(ms)},"load_before":${fmt(load)},"output_s":${fmt(out)}}"""
     }.mkString("{", ",", "}")
     val full = line(results, 0, errFull, s""""keys":$keys,""")
     // Anchor the detail file to an explicit base (user.dir = the sbt

@@ -7,8 +7,9 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import graft.functions._
 
 /** The one installation point for the engine's custom Catalyst
-  * functions, optimizer rules and planner strategies — the supported way
-  * to extend a cluster-wide session without touching application code:
+  * functions, optimizer and adaptive rules, and planner strategies — the
+  * supported way to extend a cluster-wide session without touching
+  * application code:
   *
   *   spark.sql.extensions=graft.GraftExtensions
   *
@@ -89,5 +90,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // source answer from the O(keyspace) state table. Analysis-time —
     // after pruning the source shape no longer matches (ViewRewrite doc).
     ext.injectPostHocResolutionRule(s => new graft.plans.ViewRewriteRule(s))
+    // Adaptive physical rule: a small output sort gathers into one task
+    // instead of sampling and range-shuffling (GatherSmallSort's scaladoc).
+    ext.injectQueryStagePrepRule(_ => graft.plans.GatherSmallSort)
   }
 }

@@ -35,6 +35,7 @@ class ExtensionInstallGuardSpec extends AnyFunSuite {
     val clean = Seq(
       "ext.injectFunction((FunctionIdentifier(\"vec_dot\"), info, builder))",
       "ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)",
+      "ext.injectQueryStagePrepRule(_ => graft.plans.GatherSmallSort)",
       "graft.plans.ViewRewrite.register(\"q_view_rewrite\", base, root, v)",
       "spark.sparkContext.register(acc, name)",
       "// spark.udf.register(\"f\", g)\nval n = 1",

@@ -731,14 +731,14 @@ class PlanSpec extends AnyFunSuite {
     assert(!fin.contains("CartesianProduct"), fin.take(2000))
   }
 
-  test("q_multimodal_wave is map-only: decode + window stats shuffle only to sort") {
+  test("q_multimodal_wave is map-only: decode + window stats gather once to sort") {
     val p = plan("q_multimodal_wave")
     // construct -> decode UDF -> explode windows -> array stats are all
-    // per-row; the ONLY exchange is the output ordering's range partition
-    assert(!p.contains("Exchange hashpartitioning"),
-      s"audio windows must not hash-shuffle:\n${p.take(2000)}")
+    // per-row, and the output ordering gathers its small input into one
+    // task (plans.GatherSmallSort): no exchange of any kind
+    assert(!p.contains("Exchange"), s"audio windows must not shuffle:\n${p.take(2000)}")
     assert(!p.contains("Join"), p.take(2000))
-    assert("Exchange rangepartitioning".r.findAllIn(p).size == 1, p.take(2000))
+    assert("""Sort \[[^\n]*\n\s*\+- Coalesce 1\n""".r.findFirstIn(p).nonEmpty, p.take(2000))
   }
 
   test("q_multimodal_hashrobust: one decode pass, one doc_id join, no cartesian") {
