@@ -23,7 +23,6 @@ import org.apache.spark.sql.functions._
   *   root/meta/v-NNNNN/lexicon/   (tok, df, tf_total)         parquet
   *   root/meta/v-NNNNN/globals/   (n_docs, total_tokens)      parquet, 1 row
   *   root/meta/v-NNNNN/deletes/   (doc_id) tombstones         parquet, opt
-  *   root/meta/v-NNNNN/batch      stream ledger (appendBatch)  text, opt
   *   root/meta/current            alias file → the committed version
   * }}}
   *
@@ -54,8 +53,6 @@ import org.apache.spark.sql.functions._
   */
 object InvertedIndex {
 
-  private val SegRe = "seg-(\\d{5,})".r
-
   /** Tokenize + count: (tok, doc_id, tf, positions) with 1-based token
     * positions, sorted for determinism. The family's whitespace
     * tokenization, shared with every q_text_* oracle.
@@ -71,19 +68,6 @@ object InvertedIndex {
     docs.select(col("doc_id"),
       size(split(col("text"), " ")).cast("bigint").as("dl"))
 
-  private def segDirs(root: Path): Seq[(Int, Path)] =
-    if (!Files.isDirectory(root)) Seq.empty
-    else {
-      val listing = Files.list(root)
-      try listing.iterator.asScala.flatMap { p =>
-        p.getFileName.toString match {
-          case SegRe(n) => Some((n.toInt, p))
-          case _        => None
-        }
-      }.toSeq.sortBy(_._1)
-      finally listing.close()
-    }
-
   private def metaRoot(root: String): String = s"$root/meta"
 
   private def currentMeta(root: String): String =
@@ -91,11 +75,12 @@ object InvertedIndex {
       throw new IllegalStateException(
         s"inverted index at $root has no committed meta version"))
 
-  private def liveSegments(root: String): Seq[String] = {
-    val dir = currentMeta(root)
-    Files.readAllLines(Paths.get(dir, "segments")).asScala.toSeq
+  private def segmentsOf(metaDir: String): Seq[String] =
+    Files.readAllLines(Paths.get(metaDir, "segments")).asScala.toSeq
       .map(_.trim).filter(_.nonEmpty)
-  }
+
+  private def liveSegments(root: String): Seq[String] =
+    segmentsOf(currentMeta(root))
 
   /** Append `docs` (immutable, ids disjoint from everything already
     * indexed — the nightly-ingest contract) as one new segment and
@@ -103,15 +88,14 @@ object InvertedIndex {
     * globals fold incrementally: old state ∪ delta, merged by key —
     * O(vocab + 1) rows rewritten, the corpus itself is never rescanned.
     *
-    * `batch` stamps the stream ledger ([[appendBatch]]) into the
-    * published version; plain nightly appends leave it None and the
-    * previous stamp carries forward.
+    * `batch` commits a stream batchId with the published version
+    * ([[appendBatch]]); plain nightly appends leave it None.
     */
   def append(spark: SparkSession, root: String, docs: DataFrame,
       batch: Option[Long] = None): Unit = {
     val rootP = Paths.get(root)
     Files.createDirectories(rootP)
-    val segName = nextSegNames(rootP, 1).head
+    val segName = AliasedIndex.nextNames(rootP, "seg").head
     stageSegment(rootP, docs, segName)
     publishSegment(spark, root, segName, batch)
   }
@@ -135,19 +119,12 @@ object InvertedIndex {
     if (deltas.isEmpty) return
     val rootP = Paths.get(root)
     Files.createDirectories(rootP)
-    val names = nextSegNames(rootP, deltas.size)
+    // numbered past orphans, so a crashed append never blocks the retry
+    val names = AliasedIndex.nextNames(rootP, "seg", deltas.size)
     graft.Par.run(deltas.zip(names).map { case (d, n) =>
       () => stageSegment(rootP, d, n)
     }: _*)
     names.foreach(publishSegment(spark, root, _, batch = None))
-  }
-
-  /** Reserve the next `n` segment names — numbering past orphans (max+1
-    * over everything on disk) so a crashed append never blocks the retry
-    * with a name collision. */
-  private def nextSegNames(rootP: Path, n: Int): Seq[String] = {
-    val base = segDirs(rootP).lastOption.fold(0)(_._1)
-    (1 to n).map(i => f"seg-${base + i}%05d")
   }
 
   /** Stage `docs` as segment `segName`: write into a hidden temp dir,
@@ -180,7 +157,7 @@ object InvertedIndex {
     val deltaGlob = Tables.parquet(spark, s"$root/$segName/docstats")
       .agg(count(lit(1)).as("n_docs"),
         coalesce(sum("dl"), lit(0L)).as("total_tokens"))
-    AliasedIndex.publish(metaRoot(root)) { dir =>
+    AliasedIndex.publish(metaRoot(root), batch = batch) { dir =>
       val (lex, glob, segs) = prev match {
         case None => (deltaLex, deltaGlob, Seq(segName))
         case Some(p) =>
@@ -191,8 +168,7 @@ object InvertedIndex {
             oldGlob.unionByName(deltaGlob)
               .agg(sum("n_docs").as("n_docs"),
                 sum("total_tokens").as("total_tokens")),
-            Files.readAllLines(Paths.get(p, "segments")).asScala.toSeq
-              .map(_.trim).filter(_.nonEmpty) :+ segName)
+            segmentsOf(p) :+ segName)
       }
       // lexicon / globals / tombstone-carry are independent jobs into
       // disjoint subdirs of the same staging version — overlap them
@@ -203,40 +179,25 @@ object InvertedIndex {
         // in the old segments, so dropping the list would resurrect them
         () => prev.flatMap(p => deletes(spark, p)).foreach(
           _.repartition(1).write.parquet(s"$dir/deletes")))
-      // the stream ledger carries identically — dropping it would let a
-      // replayed micro-batch re-append after an interleaved nightly run
-      batch.orElse(prev.flatMap(ledger)).foreach(b =>
-        Files.write(Paths.get(dir, "batch"), b.toString.getBytes("UTF-8")))
       Files.write(Paths.get(dir, "segments"),
         segs.mkString("\n").getBytes("UTF-8"))
     }
   }
 
-  /** The highest stream batchId whose append committed, read from the
-    * given meta version dir. */
-  private def ledger(metaDir: String): Option[Long] = {
-    val p = Paths.get(metaDir, "batch")
-    if (Files.exists(p)) Files.readString(p).trim.toLongOption else None
-  }
-
   /** Exactly-once micro-batch append: `foreachBatch` is at-least-once —
     * a crash between the meta publish and the checkpoint commit replays
     * the same batchId with the same rows, and a second segment of them
-    * would double every df/tf the lexicon carries. The ledger commits
-    * INSIDE the meta version the publish flips, so a replay whose fold
-    * already published is skipped (returns false), and one whose fold
-    * didn't re-runs onto the OLD committed meta — its crashed attempt's
-    * segment is an invisible orphan ([[vacuum]] reclaims). Either way
-    * the batch lands exactly once.
+    * would double every df/tf the lexicon carries. The batchId commits
+    * with the meta version ([[AliasedIndex]]'s ledger), so a replay
+    * whose fold already published is skipped (returns false), and one
+    * whose fold didn't re-runs onto the OLD committed meta — its crashed
+    * attempt's segment is an invisible orphan ([[vacuum]] reclaims).
+    * Either way the batch lands exactly once.
     */
   def appendBatch(spark: SparkSession, root: String, docs: DataFrame,
-      batchId: Long): Boolean = {
-    require(batchId >= 0, s"negative batchId $batchId")
-    val done = AliasedIndex.resolve(metaRoot(root))
-      .flatMap(ledger).exists(_ >= batchId)
-    if (done) false
+      batchId: Long): Boolean =
+    if (AliasedIndex.replayed(metaRoot(root), batchId)) false
     else { append(spark, root, docs, batch = Some(batchId)); true }
-  }
 
   /** Continuous index maintenance: every micro-batch of `stream` (the
     * `(doc_id, text)` doc shape) appends one segment through
@@ -248,17 +209,9 @@ object InvertedIndex {
     * serve time.
     */
   def maintainContinuous(stream: DataFrame, root: String,
-      checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery = {
-    require(stream.isStreaming, "maintainContinuous needs a streaming DataFrame")
-    stream.writeStream
-      .queryName(s"graft-index-${Paths.get(root).getFileName}")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        appendBatch(batch.sparkSession, root, batch, batchId)
-        ()
-      }
-      .start()
-  }
+      checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
+    AliasedIndex.maintain(stream, "index", root, checkpointDir)((batch, batchId) =>
+      appendBatch(batch.sparkSession, root, batch, batchId))
 
   /** Full build = append onto an empty root. */
   def build(spark: SparkSession, root: String, docs: DataFrame): Unit = {
@@ -279,8 +232,7 @@ object InvertedIndex {
     val live = liveSegments(root)
     require(live.nonEmpty, s"nothing to compact at $root")
     val prevDir = currentMeta(root)
-    val next = segDirs(rootP).lastOption.fold(1)(_._1 + 1)
-    val segName = f"seg-$next%05d"
+    val segName = AliasedIndex.nextNames(rootP, "seg").head
     AliasedIndex.stage(rootP, segName) { staging =>
       // independent merged-segment files — overlap, as in append
       graft.Par.run(
@@ -295,8 +247,6 @@ object InvertedIndex {
           .write.parquet(s"$dir/lexicon"),
         () => Tables.parquet(spark, s"$prevDir/globals")
           .write.parquet(s"$dir/globals"))
-      ledger(prevDir).foreach(b =>
-        Files.write(Paths.get(dir, "batch"), b.toString.getBytes("UTF-8")))
       Files.write(Paths.get(dir, "segments"), segName.getBytes("UTF-8"))
     }
   }
@@ -306,13 +256,8 @@ object InvertedIndex {
     * resolved the alias after the last two publishes — same contract as
     * [[AliasedIndex]] version GC.
     */
-  def vacuum(root: String): Seq[String] = {
-    val live = liveSegments(root).toSet
-    segDirs(Paths.get(root)).collect {
-      case (_, p) if !live.contains(p.getFileName.toString) =>
-        AliasedIndex.deleteRecursively(p); p.getFileName.toString
-    }
-  }
+  def vacuum(root: String): Seq[String] =
+    AliasedIndex.sweep(Paths.get(root), "seg", liveSegments(root).toSet)
 
   /** Delete documents: tombstone, stats-exact. Lucene's model is
     * "exclude now, purge on merge" with stats decaying only at merge;
@@ -364,8 +309,6 @@ object InvertedIndex {
           deletes(spark, prevDir).fold(dels)(_.unionByName(dels).distinct())
             .repartition(1).write.parquet(s"$dir/deletes")
         })
-      ledger(prevDir).foreach(b =>
-        Files.write(Paths.get(dir, "batch"), b.toString.getBytes("UTF-8")))
       Files.copy(Paths.get(prevDir, "segments"), Paths.get(dir, "segments"))
     }
   }

@@ -162,7 +162,8 @@ class DedupGate(val storeRoot: String, thresh: Double = 0.8,
     // marker remains to clean up.
     if (java.nio.file.Files.isDirectory(tmp)) {
       batchIds().filter(_ <= upTo).foreach { id =>
-        deleteTree(java.nio.file.Paths.get(storeRoot, s"batch=$id"))
+        graft.sinks.AliasedIndex.deleteRecursively(
+          java.nio.file.Paths.get(storeRoot, s"batch=$id"))
       }
       java.nio.file.Files.move(tmp,
         java.nio.file.Paths.get(storeRoot, s"batch=$upTo"))
@@ -183,13 +184,6 @@ class DedupGate(val storeRoot: String, thresh: Double = 0.8,
       finally s.close()
     }
   }
-
-  private def deleteTree(p: java.nio.file.Path): Unit =
-    if (java.nio.file.Files.exists(p)) {
-      val s = java.nio.file.Files.walk(p)
-      try s.iterator().asScala.toSeq.reverse.foreach(java.nio.file.Files.delete)
-      finally s.close()
-    }
 }
 
 object DedupGate {

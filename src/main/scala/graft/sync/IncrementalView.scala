@@ -210,12 +210,10 @@ object IncrementalView {
 
   /** The highest stream batchId folded into the published state (the
     * ledger [[refreshBatch]] consults), committed atomically with it. */
-  def lastBatch(root: String): Option[Long] =
-    AliasedIndex.resolve(root).map(cur => Paths.get(cur, "batch"))
-      .filter(Files.exists(_)).map(p => Files.readString(p).trim.toLong)
+  def lastBatch(root: String): Option[Long] = AliasedIndex.lastBatch(root)
 
-  /** Fold a stream micro-batch EXACTLY ONCE: the batchId ledger is
-    * committed inside the same version dir as the state, so a replayed
+  /** Fold a stream micro-batch EXACTLY ONCE: the batchId commits with the
+    * state version ([[AliasedIndex]]'s ledger), so a replayed
     * batch (foreachBatch is at-least-once — a crash between the fold and
     * the checkpoint commit re-runs the same batchId with the same rows)
     * is skipped when its fold already published, and re-folds onto the
@@ -229,15 +227,13 @@ object IncrementalView {
     * stream segments is fine: it carries the ledger forward.
     */
   def refreshBatch(spark: SparkSession, root: String, delta: DataFrame,
-      v: ViewDef, batchId: Long): Boolean = {
-    require(batchId >= 0, s"negative batchId $batchId")
-    if (lastBatch(root).exists(_ >= batchId)) false
+      v: ViewDef, batchId: Long): Boolean =
+    if (AliasedIndex.replayed(root, batchId)) false
     else {
       doRefresh(spark, root, delta, v, lit(1L), wmCol = None,
         batch = Some(batchId))
       true
     }
-  }
 
   /** Continuous maintenance: fold each micro-batch of `stream` into the
     * view through [[refreshBatch]]'s exactly-once ledger. The streaming
@@ -246,17 +242,9 @@ object IncrementalView {
     * of a watermark column.
     */
   def maintainContinuous(stream: DataFrame, root: String, v: ViewDef,
-      checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery = {
-    require(stream.isStreaming, "maintainContinuous needs a streaming DataFrame")
-    stream.writeStream
-      .queryName(s"graft-view-${Paths.get(root).getFileName}")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        refreshBatch(batch.sparkSession, root, batch, v, batchId)
-        ()
-      }
-      .start()
-  }
+      checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
+    AliasedIndex.maintain(stream, "view", root, checkpointDir)((batch, batchId) =>
+      refreshBatch(batch.sparkSession, root, batch, v, batchId))
 
   /** The published state table: keys + partial columns, one row per key
     * ever seen. Spec/diagnostic surface; user queries go through
@@ -412,20 +400,16 @@ object IncrementalView {
       // from a view otherwise maintained by refreshTracked) must carry the
       // committed mark forward: publishing a version without it would make
       // the next tracked pull see "no watermark" and re-fold the entire
-      // source onto folded state — silent double-counting. The stream
-      // batch ledger carries identically, or a signed repair between
-      // stream segments would reset it and invite a replayed batch back.
+      // source onto folded state — silent double-counting. (The stream
+      // batch ledger carries in the publish itself.)
       val carriedWm = wmMax.orElse(currentWatermark(root))
-      val carriedBatch = batch.orElse(lastBatch(root))
-      AliasedIndex.publish(root) { dir =>
+      AliasedIndex.publish(root, batch = batch) { dir =>
         // deterministic bytes: sort each hash-partition by key before the
         // write, so identical folds produce identical state files (the
         // serve path orders anyway; this pins the at-rest layout too)
         checked.sortWithinPartitions(keyCols: _*)
           .write.parquet(Paths.get(dir, "state").toString)
         carriedWm.foreach(l => Files.writeString(Paths.get(dir, "watermark"), l))
-        carriedBatch.foreach(b =>
-          Files.writeString(Paths.get(dir, "batch"), b.toString))
       }
     }
   }
